@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sidemantic_spark.core.graph import SemanticGraph
 from sidemantic_spark.core.model import Metric, Model
-from sidemantic_spark.sql.generator import QuerySpec, SqlGenerator
+from sidemantic_spark.sql.generator import QuerySpec, Resolved, SqlGenerator
 
 
 class SparkSemanticLayer:
@@ -32,7 +32,6 @@ class SparkSemanticLayer:
         self.generator.allow_non_additive_unsafe = allow_non_additive_unsafe
         self.default_limit = default_limit
         self.max_limit = max_limit
-        self.enforce_visibility = True
         self._registered_sources: set[str] = set()
         # content-keyed result cache: key -> (persisted DataFrame,
         # monotonic stamp); LRU-bounded + optional TTL (reference
@@ -49,6 +48,16 @@ class SparkSemanticLayer:
         self._flight_lock = _threading.Lock()
         self._inflight: dict[str, dict] = {}
         self.query_log: list[str] = []  # instrumentation headers, recommender input
+
+    @property
+    def enforce_visibility(self) -> bool:
+        """Reject hidden (``public: false``) fields on every compile
+        path; a view of the generator's flag, which owns the check."""
+        return self.generator.enforce_visibility
+
+    @enforce_visibility.setter
+    def enforce_visibility(self, value: bool) -> None:
+        self.generator.enforce_visibility = value
 
     # -- registry ----------------------------------------------------
 
@@ -286,66 +295,36 @@ class SparkSemanticLayer:
         saved_query: str | None = None,
         post_process: str | None = None,
     ) -> str:
-        if explore is not None or saved_query is not None:
-            kwargs = self._resolve_contracts({
-                "metrics": metrics, "dimensions": dimensions, "filters": filters,
-                "order_by": order_by, "limit": limit, "offset": offset,
-                "ungrouped": ungrouped, "with_totals": with_totals,
-                "segments": segments, "parameters": parameters,
-                "table_calcs": table_calcs, "user": user, "timezone": timezone,
-                "explore": explore, "saved_query": saved_query,
-                "post_process": post_process,
-            })
-            return self.compile(**kwargs)
+        sql, _r = self._compile({
+            "metrics": metrics, "dimensions": dimensions, "filters": filters,
+            "order_by": order_by, "limit": limit, "offset": offset,
+            "ungrouped": ungrouped, "with_totals": with_totals,
+            "segments": segments, "parameters": parameters,
+            "table_calcs": table_calcs, "user": user, "timezone": timezone,
+            "explore": explore, "saved_query": saved_query,
+            "post_process": post_process,
+        })
+        return sql
+
+    def _compile(
+        self, kwargs: dict, explain: bool = False
+    ) -> tuple[str, Resolved | None]:
+        """The one compile path behind ``compile`` and ``explain_plan``.
+        With ``explain`` it also returns the resolution the SQL was
+        generated from."""
+        kwargs = self._resolve_contracts(kwargs)
+        table_calcs = kwargs.pop("table_calcs", None)
+        post_process = kwargs.pop("post_process", None)
         if post_process is not None and "{inner}" not in post_process:
             raise ValueError(
                 "post_process SQL must contain the {inner} placeholder "
                 "for the compiled semantic query"
             )
-        self.graph.resolve_inheritance()
-        self._warn_deprecations(metrics or [], dimensions or [])
-        self.generator.enforce_visibility = self.enforce_visibility
-        if self.enforce_visibility:
-            from sidemantic_spark.core.security import enforce_field_visibility
-
-            enforce_field_visibility(self.graph, {
-                "metrics": metrics or [],
-                "dimensions": dimensions or [],
-                "filters": filters or [],
-                "order_by": order_by or [],
-            }, scope_models=self.generator.resolve_scope_models(
-                metrics, dimensions, filters, order_by,
-            ))
-        if limit is None and not with_totals:
-            # a configured default_limit must never page out the
-            # grand-total row (reference
-            # test_with_totals_ignores_configured_default_limit)
-            limit = self.default_limit
-        # graph-level parameter defaults, overridden per query
-        defaults = {
-            p.name: p.default_value
-            for p in self.graph.parameters.values()
-            if p.default_value is not None
-        }
-        if defaults:
-            parameters = {**defaults, **(parameters or {})}
-        if self.max_limit is not None and not with_totals:
-            limit = min(limit, self.max_limit) if limit is not None else self.max_limit
-        spec = QuerySpec(
-            metrics=list(metrics or []),
-            dimensions=list(dimensions or []),
-            filters=list(filters or []),
-            order_by=list(order_by or []),
-            limit=limit,
-            offset=offset,
-            ungrouped=ungrouped,
-            with_totals=with_totals,
-            segments=list(segments or []),
-            parameters=dict(parameters or {}),
-            user=user,
-            timezone=timezone,
-        )
-        sql = self.generator.generate(spec)
+        spec = self._spec(kwargs)
+        if explain:
+            sql, r = self.generator.generate_resolved(spec)
+        else:
+            sql, r = self.generator.generate(spec), None
         if table_calcs:
             from sidemantic_spark.sql.table_calcs import apply_table_calcs
 
@@ -364,7 +343,32 @@ class SparkSemanticLayer:
         self.query_log.append(sql.split("\n", 1)[0])
         if len(self.query_log) > 10000:
             del self.query_log[:5000]
-        return sql
+        return sql, r
+
+    def _spec(self, kwargs: dict) -> QuerySpec:
+        """The ``QuerySpec`` for compile kwargs, with the layer's
+        ``default_limit``/``max_limit`` and the graph's parameter
+        defaults applied."""
+        self.graph.resolve_inheritance()
+        spec = QuerySpec(**{k: v for k, v in kwargs.items() if v is not None})
+        self._warn_deprecations(spec.metrics, spec.dimensions)
+        if not spec.with_totals:
+            # a configured default_limit must never page out the
+            # grand-total row (reference
+            # test_with_totals_ignores_configured_default_limit)
+            if spec.limit is None:
+                spec.limit = self.default_limit
+            if self.max_limit is not None and (
+                spec.limit is None or spec.limit > self.max_limit
+            ):
+                spec.limit = self.max_limit
+        # graph-level parameter defaults, overridden per query
+        spec.parameters = {
+            **{p.name: p.default_value for p in self.graph.parameters.values()
+               if p.default_value is not None},
+            **spec.parameters,
+        }
+        return spec
 
     @property
     def preaggs(self):
@@ -516,12 +520,12 @@ class SparkSemanticLayer:
             if model.deprecation is not None and mname not in seen_models:
                 seen_models.add(mname)
                 _warnings.warn(model.deprecation.notice(f"model {mname!r}"),
-                               DeprecationWarning, stacklevel=3)
+                               DeprecationWarning, stacklevel=5)
             metric = model.metric(field_name)
             if metric is not None and metric.deprecation is not None:
                 _warnings.warn(
                     metric.deprecation.notice(f"metric {mname}.{field_name!r}"),
-                    DeprecationWarning, stacklevel=3)
+                    DeprecationWarning, stacklevel=5)
 
     def check_freshness(self, model_name: str | None = None) -> dict:
         """Evaluate freshness policies (reference core/freshness.py):
@@ -610,32 +614,13 @@ class SparkSemanticLayer:
         """Structured explain IR (reference ``core/query_plan.py:43``
         QueryPlan / ``sql/planner.py:23``): resolved models and join
         path, fan-out analysis, pre-aggregation candidates with
-        per-candidate accept/reject reasons, and the compiled SQL."""
+        per-candidate accept/reject reasons, and the compiled SQL.
+        Everything reported is read from the one resolution that SQL was
+        generated from: after segments, parameters, the ``{model}``
+        placeholder, default time dimensions and the layer's limits."""
         from sidemantic_spark.preagg.router import explain_route
-        from sidemantic_spark.sql.generator import QuerySpec
 
-        if kwargs.get("explore") is not None or kwargs.get("saved_query") is not None:
-            kwargs = self._resolve_contracts({
-                "explore": kwargs.get("explore"),
-                "saved_query": kwargs.get("saved_query"),
-                **{k: v for k, v in kwargs.items() if k not in ("explore", "saved_query")},
-            })
-        self.graph.resolve_inheritance()
-        spec = QuerySpec(
-            metrics=list(kwargs.get("metrics") or []),
-            dimensions=list(kwargs.get("dimensions") or []),
-            filters=list(kwargs.get("filters") or []),
-            order_by=list(kwargs.get("order_by") or []),
-            limit=kwargs.get("limit"),
-            offset=kwargs.get("offset"),
-            ungrouped=bool(kwargs.get("ungrouped")),
-            with_totals=bool(kwargs.get("with_totals")),
-            segments=list(kwargs.get("segments") or []),
-            parameters=dict(kwargs.get("parameters") or {}),
-            user=kwargs.get("user"),
-            timezone=kwargs.get("timezone"),
-        )
-        r = self.generator._resolve(spec)
+        sql, r = self._compile(kwargs, explain=True)
         # fan-out: any hop that duplicates rows of a model carrying
         # metrics (ref sql/generator.py:2500-2548 _has_fanout_joins)
         metric_models = {rm.model for rm in r.metrics}
@@ -651,7 +636,6 @@ class SparkSemanticLayer:
         fanout_hops = [
             h for h in r.hops if h.duplicates_left() or h.duplicates_right()
         ] if fanout_models else []
-        sql = self.compile(**kwargs)
         used = None
         for line in sql.split("\n", 2)[:2]:
             for tok in line.split():
@@ -687,6 +671,7 @@ class SparkSemanticLayer:
                 "outer": list(r.outer_filters),
                 "having": list(r.having),
             },
+            "limit": r.spec.limit,
             "preagg": explain_route(self.generator, r),
             "used_preagg": used,
             "compiled_sql": sql,

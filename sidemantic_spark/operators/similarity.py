@@ -503,9 +503,9 @@ def embedding_near_dup_pairs(
     any dimensionality (dim=1024 would otherwise force ~820 MB
     broadcasts per side). Both paths compute the identical JVM cosine
     fold on the identical double arrays, so results are bit-identical
-    (equivalence pinned in tests and proven row-identical in
-    scripts/proto_emb_broadcast.py) — PROVIDED ``id_col`` is unique:
-    with duplicate ids the broadcast path emits one row per duplicate
+    (equivalence pinned in tests and proven row-identical in the study
+    of OPTIMIZATION_r12.md §18) — PROVIDED ``id_col`` is unique: with
+    duplicate ids the broadcast path emits one row per duplicate
     match while the long path's pair-groupBy collapses them.
 
     NOTE (r12 study, do not re-spend): a minhash-style BUCKET-LOCAL
@@ -517,7 +517,7 @@ def embedding_near_dup_pairs(
     pair, which dwarfs the join it removes; an Arrow-kernel expansion
     would change the cosine summation order vs the JVM fold the SQL
     oracle replicates (ROUND(x,6) knife-edge risk). See
-    scripts/proto_emb_bucketlocal.py and OPTIMIZATION_r12.md §17.
+    OPTIMIZATION_r12.md §17.
     """
     from sidemantic_spark.operators.dedup import (
         _bounded_count,

@@ -28,8 +28,10 @@ pre-aggregations.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import re
+import threading
 from dataclasses import dataclass, field
 
 from sidemantic_spark.core.graph import (
@@ -129,16 +131,48 @@ class Resolved:
     component_metrics: dict[str, list[tuple[str, Metric]]]  # model -> metrics needing raw cols
 
 
+# FIFO bound shared by the generator's and the semantic-SQL rewriter's
+# compile caches: long-running servers (pgwire/HTTP) must not grow them
+# without limit
+COMPILE_CACHE_MAX = 512
+
+
+class CompileCache(dict):
+    """FIFO-bounded compile cache. Every key starts with
+    ``SqlGenerator.state_key()``, so its first element is the graph
+    generation the entry was compiled at. Writes take a lock: server
+    threads compile concurrently, and eviction is check-then-act."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self._lock = threading.Lock()
+
+    def put(self, key, value):
+        with self._lock:
+            if key not in self and len(self) >= COMPILE_CACHE_MAX:
+                del self[next(iter(self))]
+            self[key] = value
+        return value
+
+    def drop_after(self, generation: int) -> None:
+        """Drop the entries compiled at a generation above ``generation``."""
+        with self._lock:
+            for k in [k for k in self if k[0] > generation]:
+                del self[k]
+
+
 class SqlGenerator:
     def __init__(self, graph: SemanticGraph) -> None:
         self.graph = graph
-        self._cache: dict = {}
+        self._cache = CompileCache()
         self.use_preaggs = True
         self.preagg_strict = False
-        # set by the owning layer: visibility enforcement must also
-        # cover AUTO-INCLUDED fields (default time dimensions), which
-        # the layer's pre-check over user-provided refs cannot see
-        self.enforce_visibility = False
+        # reject hidden (``public: false``) fields on every compile: the
+        # refs the caller wrote (checked in generate(), cache hits
+        # included) and the fields the pre-passes auto-include (hidden
+        # segments, default time dimensions). The owning layer's
+        # ``enforce_visibility`` is a view of this flag.
+        self.enforce_visibility = True
         # fan-out strategy (reference preference hierarchy,
         # sql/generator.py:3056-3390):
         #   "auto"      — symmetric aggregates whenever every metric
@@ -157,23 +191,25 @@ class SqlGenerator:
         # the semi-additive rewrite and aggregate naively over every
         # snapshot — over-counts by construction, caller opts in
         self.allow_non_additive_unsafe = False
-        # multi-fact combine for all-conformed dims: UNION ALL + one
-        # re-aggregation (default) vs the null-safe FULL OUTER chain —
-        # equivalent results, fewer exchanges; the flag keeps the join
-        # shape reachable (A/B measurement, fallback)
-        self.multifact_union_combine = True
 
     # ------------------------------------------------------------------
     # public entry
     # ------------------------------------------------------------------
     def generate(self, spec: QuerySpec) -> str:
+        self._check_visibility(spec)
         key = self._cache_key(spec)
         hit = self._cache.get(key)
         if hit is not None:
             return hit
-        sql = self._generate(spec)
-        self._cache[key] = sql
-        return sql
+        return self._cache.put(key, self._generate(spec))
+
+    def generate_resolved(self, spec: QuerySpec) -> tuple[str, Resolved]:
+        """Compile ``spec`` and return the SQL together with the
+        resolution it was generated from (after the pre-passes). A cache
+        hit carries no resolution, so this always compiles."""
+        self._check_visibility(spec)
+        r = self._prepare(spec)
+        return self._generate_resolved(r), r
 
     def generate_view(
         self,
@@ -205,18 +241,31 @@ class SqlGenerator:
         kind = "CREATE TEMPORARY VIEW" if temporary else "CREATE VIEW"
         return f"{kind} {view_name} AS\n{body}"
 
-    def _cache_key(self, spec: QuerySpec):
+    def state_key(self) -> tuple:
+        """The graph generation plus every generator flag that shapes
+        compiled SQL: the prefix of each compile-cache key, here and in
+        the semantic-SQL rewriter, so an entry compiled under one state
+        never serves another (reference
+        test_sql_rewrite_cache_isolated_by_visibility_state)."""
         return (
             self.graph.generation,
             self.use_preaggs,
             self.preagg_strict,
             self.fanout_strategy,
             self.allow_non_additive_unsafe,
-            self.multifact_union_combine,
-            # the auto-include visibility check runs inside _generate, so
-            # a cache hit from an enforcement-off compile must not serve
-            # an enforcement-on call
             self.enforce_visibility,
+        )
+
+    def rewind_generation(self, generation: int) -> None:
+        """Set the graph generation back to ``generation`` after a burst
+        of graph edits that left the graph as it was, dropping the cache
+        entries compiled in between: their generation numbers will be
+        reused for different graph states."""
+        self._cache.drop_after(generation)
+        self.graph.generation = generation
+
+    def _cache_key(self, spec: QuerySpec):
+        return self.state_key() + (
             tuple(spec.metrics),
             tuple(spec.dimensions),
             tuple(spec.filters),
@@ -226,6 +275,7 @@ class SqlGenerator:
             spec.ungrouped,
             spec.with_totals,
             tuple(spec.segments),
+            tuple(spec.inner_models),
             # JSON-canonicalized: parameter/user values may be
             # lists/objects, which are unhashable inside a key tuple
             json.dumps(spec.parameters, sort_keys=True, default=str),
@@ -234,7 +284,29 @@ class SqlGenerator:
             spec.timezone,
         )
 
+    def _check_visibility(self, spec: QuerySpec) -> None:
+        """Reject hidden fields referenced in any clause of ``spec``
+        (ref ``core/security.py`` enforce_field_visibility)."""
+        if not self.enforce_visibility:
+            return
+        from sidemantic_spark.core.security import enforce_field_visibility
+
+        enforce_field_visibility(self.graph, {
+            "metrics": spec.metrics,
+            "dimensions": spec.dimensions,
+            "filters": spec.filters,
+            "order_by": spec.order_by,
+        }, scope_models=self.resolve_scope_models(
+            spec.metrics, spec.dimensions, spec.filters, spec.order_by,
+        ))
+
     def _generate(self, spec: QuerySpec) -> str:
+        return self._generate_resolved(self._prepare(spec))
+
+    def _prepare(self, spec: QuerySpec) -> Resolved:
+        """Validate ``spec``, run the pre-passes (parameters and segments,
+        the ``{model}`` placeholder, default time dimensions) and resolve
+        the result."""
         if spec.ungrouped and spec.with_totals:
             raise QueryCompileError(
                 "with_totals cannot be combined with ungrouped "
@@ -249,8 +321,9 @@ class SqlGenerator:
         spec = self._apply_parameters_and_segments(spec)
         spec = self._resolve_model_placeholder(spec)
         spec = self._apply_default_time_dims(spec)
-        r = self._resolve(spec)
+        return self._resolve(spec)
 
+    def _generate_resolved(self, r: Resolved) -> str:
         special = [rm for rm in r.metrics if rm.metric.type in ("conversion", "retention", "cohort")]
         if special:
             if len(r.metrics) != 1:
@@ -333,8 +406,6 @@ class SqlGenerator:
                 "filters use the {model} placeholder but the query has "
                 "no model-qualified metric/dimension to anchor it"
             )
-        import dataclasses
-
         return dataclasses.replace(spec, filters=[
             f.replace("{model}.", f"{anchor}.").replace("{model}", anchor)
             for f in spec.filters
@@ -392,19 +463,8 @@ class SqlGenerator:
                 )
             filters.append(seg.sql.replace("{model}", model_name))
         if filters != list(spec.filters) or spec.segments:
-            spec = QuerySpec(
-                metrics=spec.metrics,
-                dimensions=spec.dimensions,
-                filters=filters,
-                order_by=spec.order_by,
-                limit=spec.limit,
-                offset=spec.offset,
-                ungrouped=spec.ungrouped,
-                with_totals=spec.with_totals,
-                segments=[],
-                parameters={},
-                user=spec.user,
-                timezone=spec.timezone,
+            spec = dataclasses.replace(
+                spec, filters=filters, segments=[], parameters={},
             )
         return spec
 
@@ -452,20 +512,7 @@ class SqlGenerator:
             added.append(f"{model_name}.{model.default_time_dimension}__{grain}")
         if not added:
             return spec
-        return QuerySpec(
-            metrics=spec.metrics,
-            dimensions=list(spec.dimensions) + added,
-            filters=spec.filters,
-            order_by=spec.order_by,
-            limit=spec.limit,
-            offset=spec.offset,
-            ungrouped=spec.ungrouped,
-            with_totals=spec.with_totals,
-            segments=spec.segments,
-            parameters=spec.parameters,
-            user=spec.user,
-            timezone=spec.timezone,
-        )
+        return dataclasses.replace(spec, dimensions=list(spec.dimensions) + added)
 
     # ------------------------------------------------------------------
     # resolution
@@ -916,8 +963,6 @@ class SqlGenerator:
                     except QueryCompileError:
                         pass
                     else:
-                        import dataclasses
-
                         return owner, dataclasses.replace(
                             underlying, name=metric.name
                         )
@@ -937,8 +982,6 @@ class SqlGenerator:
                 # the raw column instead of nesting over the measure's
                 # aggregate); otherwise treat as a derived formula over
                 # sibling metrics.
-                import dataclasses
-
                 text = metric.expr or metric.sql
                 if _AGG_TOKEN_RE.search(text):
                     known = set(self.graph.models)
@@ -2389,9 +2432,7 @@ class SqlGenerator:
         dim_outs = [rd.out for rd in r.dims]
         with_totals = r.spec.with_totals and bool(dim_outs)
         keys = dim_outs + (["_is_total"] if with_totals else [])
-        if self.multifact_union_combine and all(
-            o in shared_outs for o in dim_outs
-        ):
+        if all(o in shared_outs for o in dim_outs):
             # Every dim is conformed onto every fact, so each fact
             # subquery emits at most ONE row per (dims, _is_total) key.
             # The null-safe FULL OUTER chain is then equivalent to a

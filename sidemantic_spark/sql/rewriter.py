@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 from sidemantic_spark.preagg.matcher import grain_derivable
 from sidemantic_spark.sql.generator import (
     _SQL_KEYWORDS,
+    CompileCache,
     QueryCompileError,
     QuerySpec,
 )
@@ -366,8 +367,7 @@ def _find_balanced_paren(text: str) -> int | None:
 class SemanticSqlRewriter:
     def __init__(self, layer) -> None:
         self.layer = layer
-        self._cache: dict = {}
-        self._CACHE_MAX = 512  # FIFO bound for long-running servers
+        self._cache = CompileCache()
         # generation bumps caused by ephemeral register/cleanup this
         # compile; cancelled in rewrite()'s finally so the compile
         # caches stay hot across ad-hoc/expr-dim queries
@@ -413,22 +413,8 @@ class SemanticSqlRewriter:
             else _json.dumps(user, sort_keys=True, default=str)
         )
         gen = self.layer.generator
-        key = (
-            self.layer.graph.generation,
-            self.wrapper_rules_enabled,
-            # the generator-state flags that shape compiled SQL: a
-            # cached rewrite from an enforcement-off (or preaggs-on)
-            # compile must not serve after the flag flips (reference
-            # test_sql_rewrite_cache_isolated_by_visibility_state)
-            gen.use_preaggs,
-            gen.preagg_strict,
-            gen.fanout_strategy,
-            getattr(gen, "allow_non_additive_unsafe", False),
-            getattr(self.layer, "enforce_visibility", False),
-            user_key,
-            sql,
-        )
         with self._compile_lock:
+            key = gen.state_key() + (self.wrapper_rules_enabled, user_key, sql)
             self._user = user
             self._eph_gen_bumps = 0
             gen0 = self.layer.graph.generation
@@ -448,15 +434,11 @@ class SemanticSqlRewriter:
                         )
                     )
                 )
-                if len(self._cache) >= self._CACHE_MAX:
-                    # FIFO-bound: long-running servers (pgwire/HTTP)
-                    # must not grow the compile cache without limit
-                    self._cache.pop(next(iter(self._cache)))
-                self._cache[key] = (
+                self._cache.put(key, (
                     out, list(self._applied_rules),
                     list(self._rejected_rules),
                     list(self._pushed_filters),
-                )
+                ))
                 return out
             finally:
                 self._user = None
@@ -509,16 +491,7 @@ class SemanticSqlRewriter:
                         self.layer.graph.generation - gen0
                         == self._eph_gen_bumps
                     ):
-                        # generator-cache entries created DURING the
-                        # transient window are keyed at generations
-                        # whose state no longer exists — purge them, or
-                        # a later persistent bump reaching the same
-                        # counter value would serve them against a
-                        # different graph (ABA)
-                        gcache = self.layer.generator._cache
-                        for k in [k for k in gcache if k[0] > gen0]:
-                            gcache.pop(k, None)
-                        self.layer.graph.generation = gen0
+                        gen.rewind_generation(gen0)
                     self._eph_gen_bumps = 0
 
     def explain(self, sql: str) -> dict:
@@ -574,25 +547,6 @@ class SemanticSqlRewriter:
         # stamp the transport user onto every compiled spec so access
         # checks and row policies fire identically to layer.query(user=)
         spec.user = self._user
-        # field visibility enforces on the SQL path exactly as on the
-        # structured path (layer.compile) — without this, a hidden
-        # metric compiles straight through `layer.sql` (reference
-        # test_sql_and_raw_deny_hidden_fields_when_visibility_enforced).
-        # Assign the layer flag UNCONDITIONALLY: only setting True would
-        # latch enforcement on after the layer flag is turned off.
-        enforce = getattr(self.layer, "enforce_visibility", False)
-        self.layer.generator.enforce_visibility = enforce
-        if enforce:
-            from sidemantic_spark.core.security import enforce_field_visibility
-
-            enforce_field_visibility(self.layer.graph, {
-                "metrics": spec.metrics,
-                "dimensions": spec.dimensions,
-                "filters": spec.filters,
-                "order_by": spec.order_by,
-            }, scope_models=self.layer.generator.resolve_scope_models(
-                spec.metrics, spec.dimensions, spec.filters, spec.order_by,
-            ))
         return self.layer.generator.generate(spec)
 
 
@@ -841,7 +795,8 @@ class SemanticSqlRewriter:
     # -- wrapper-shape optimization rules ------------------------------
     #
     # The reference measures these at 1.05-1.2x over naive wrapper SQL
-    # (scripts/benchmark_semantic_sql_planner.py). On Spark, Catalyst
+    # (its semantic-SQL planner benchmark; ours is
+    # scripts/benchmark_rewriter.py). On Spark, Catalyst
     # collapses projections/filters natively, so we keep only the rules
     # that change the *semantic* plan (which grain is grouped, which
     # rollup table can serve the query, order+limit vs window top-N)

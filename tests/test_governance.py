@@ -849,7 +849,7 @@ def test_explore_qualifies_relative_filter_and_order_expressions(layer, duck):
 def test_sql_path_enforces_visibility_and_cache_isolation(spark, sf_dir):
     """Hidden fields are denied through layer.sql/rewrite exactly as on
     the structured path, and the rewrite cache is isolated by the
-    visibility state (reference
+    visibility state and every other generator flag (reference
     test_sql_and_raw_deny_hidden_fields_when_visibility_enforced +
     test_sql_rewrite_cache_isolated_by_visibility_state)."""
     from sidemantic_spark.core.security import SecurityError
@@ -870,6 +870,41 @@ def test_sql_path_enforces_visibility_and_cache_isolation(spark, sf_dir):
             vlayer.rewrite("SELECT orders.revenue FROM orders")
     finally:
         met.public = True
+
+    # every other generator flag in the cache key: after a flip, the
+    # same text must not return the SQL cached before the flip
+    from sidemantic_spark.preagg.matcher import PreAggregation
+    from sidemantic_spark.sql.generator import QueryCompileError
+
+    gen = vlayer.generator
+    vlayer.graph.get_model("orders").pre_aggregations = [PreAggregation(
+        name="by_status", measures=["revenue"], dimensions=["status"],
+    )]
+    vlayer.graph._invalidate()
+    routed = "SELECT orders.status, orders.revenue FROM orders"
+    assert "used_preagg=" in vlayer.rewrite(routed)
+    gen.use_preaggs = False
+    assert "used_preagg=" not in vlayer.rewrite(routed)
+    gen.use_preaggs = True
+
+    unroutable = "SELECT orders.priority, orders.revenue FROM orders"
+    assert vlayer.rewrite(unroutable)
+    gen.preagg_strict = True
+    with pytest.raises(QueryCompileError, match="preagg_strict"):
+        vlayer.rewrite(unroutable)
+    gen.preagg_strict = False
+
+    fanout = "SELECT lineitem.returnflag, orders.revenue FROM orders"
+    assert "plan=grouped-dedup" in vlayer.rewrite(fanout)
+    gen.fanout_strategy = "symmetric"
+    assert "plan=grouped-symmetric" in vlayer.rewrite(fanout)
+    gen.fanout_strategy = "auto"
+
+    snapshot = "SELECT lineitem.last_qty_per_part FROM lineitem"
+    assert "plan=semi-additive" in vlayer.rewrite(snapshot)
+    gen.allow_non_additive_unsafe = True
+    assert "plan=semi-additive" not in vlayer.rewrite(snapshot)
+    gen.allow_non_additive_unsafe = False
 
 
 def test_filter_allowlist_rejects_aliased_subquery_scan(layer):

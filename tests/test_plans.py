@@ -209,6 +209,46 @@ def test_explain_plan_fanout_and_join_path(layer):
     assert ex["filters"]["pushdown"].get("orders")
 
 
+def test_explain_plan_agrees_with_compile(spark, sf_dir):
+    """explain_plan reports the resolution of the exact SQL it returns:
+    segments, the {model} placeholder, graph parameter defaults and the
+    layer's limits apply as in compile, and hidden fields are refused
+    by both."""
+    from sidemantic_spark.core.model import Parameter
+    from sidemantic_spark.core.security import SecurityError
+
+    lyr = build_layer(spark, sf_dir)
+    q = {"metrics": ["orders.revenue"], "dimensions": ["orders.status"]}
+
+    ex = lyr.explain_plan(**q, segments=["orders.urgent"])
+    assert ex["compiled_sql"] == lyr.compile(**q, segments=["orders.urgent"])
+    assert ex["filters"]["pushdown"] == {"orders": ["o_orderpriority = '1-URGENT'"]}
+
+    placeholder = ["{model}.status = 'F'"]
+    ex = lyr.explain_plan(**q, filters=placeholder)
+    assert ex["compiled_sql"] == lyr.compile(**q, filters=placeholder)
+    assert ex["filters"]["pushdown"] == {"orders": ["o_orderstatus = 'F'"]}
+    assert ex["filters"]["outer"] == []
+
+    lyr.default_limit, lyr.max_limit = 50, 7
+    lyr.graph.add_parameter(Parameter(name="st", type="string", default_value="O"))
+    templated = ["orders.status = {{ st }}"]
+    ex = lyr.explain_plan(**q, filters=templated)
+    assert ex["compiled_sql"] == lyr.compile(**q, filters=templated)
+    assert ex["limit"] == 7
+    assert ex["filters"]["pushdown"] == {"orders": ["o_orderstatus = 'O'"]}
+
+    revenue = lyr.graph.get_model("orders").metric("revenue")
+    revenue.public = False
+    try:
+        with pytest.raises(SecurityError, match="not public"):
+            lyr.compile(**q)
+        with pytest.raises(SecurityError, match="not public"):
+            lyr.explain_plan(**q)
+    finally:
+        revenue.public = True
+
+
 def test_semi_additive_agg_plan_is_sort_free(layer):
     """The decomposable-agg semi-additive strategy (chosen when the
     metric has no per-entity groupings, i.e. low-cardinality marker

@@ -1631,16 +1631,103 @@ def test_rewrite_persistent_mutations_keep_their_bump(spark, sf_dir):
     assert lyr.graph.generation == gen1  # already registered: no drift
 
 
-def test_rewrite_cache_is_bounded(spark, sf_dir):
+def test_rewrite_cache_is_bounded(spark, sf_dir, monkeypatch):
     from sidemantic_spark.models.tpch import build_layer
+    from sidemantic_spark.sql import generator
     from sidemantic_spark.sql.rewriter import SemanticSqlRewriter
 
     lyr = build_layer(spark, sf_dir)
     rw = SemanticSqlRewriter(lyr)
-    rw._CACHE_MAX = 4
+    monkeypatch.setattr(generator, "COMPILE_CACHE_MAX", 4)
     for i in range(8):
         rw.rewrite(f"SELECT orders.status, orders.revenue FROM orders LIMIT {i + 1}")
     assert len(rw._cache) <= 4
+
+
+def test_generator_cache_is_bounded(spark, sf_dir, monkeypatch):
+    """The generator's compile cache keeps the rewriter's FIFO bound:
+    600 distinct compiles leave at most COMPILE_CACHE_MAX entries, and a
+    recently compiled spec is still served from the cache."""
+    from sidemantic_spark.models.tpch import build_layer
+    from sidemantic_spark.sql.generator import COMPILE_CACHE_MAX, SqlGenerator
+
+    lyr = build_layer(spark, sf_dir)
+    compiles = []
+    real = SqlGenerator._generate
+    monkeypatch.setattr(
+        SqlGenerator, "_generate",
+        lambda self, spec: compiles.append(spec) or real(self, spec),
+    )
+    q = {"metrics": ["orders.revenue"], "dimensions": ["orders.status"]}
+    for i in range(600):
+        lyr.compile(**q, filters=[f"orders.revenue > {i}"])
+    assert len(compiles) == 600
+    assert len(lyr.generator._cache) <= COMPILE_CACHE_MAX == 512
+    last = lyr.compile(**q, filters=["orders.revenue > 599"])
+    assert len(compiles) == 600  # served from the cache
+    assert last == real(lyr.generator, lyr._spec({**q, "filters": ["orders.revenue > 599"]}))
+
+
+def test_compile_cache_concurrent_writes_stay_bounded(monkeypatch):
+    """Server threads share the compile caches: concurrent puts past the
+    bound and generation rewinds never raise and never leave more
+    entries than the bound."""
+    import sys
+    import threading
+
+    from sidemantic_spark.sql import generator
+
+    monkeypatch.setattr(generator, "COMPILE_CACHE_MAX", 8)
+    cache = generator.CompileCache()
+    errors = []
+
+    def write(worker):
+        try:
+            for i in range(2000):
+                cache.put((i % 5, worker, i), i)
+                if worker == 0 and i % 50 == 0:
+                    cache.drop_after(2)
+        except Exception as exc:  # noqa: BLE001 - any raise is the failure
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=write, args=(w,)) for w in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:3]
+    assert len(cache) <= 8
+
+
+def test_explicit_inner_join_survives_cache_and_prepasses(spark, sf_dir):
+    """An explicit INNER JOIN changes the compiled SQL, so the same
+    selection with and without it must not share a generator-cache
+    entry (in either order), and auto-including a default time dimension
+    must not drop the join."""
+    from sidemantic_spark.models.tpch import build_layer
+
+    joined = ("SELECT orders.status, orders.revenue FROM orders "
+              "JOIN customer ON orders.o_custkey = customer.c_custkey")
+    plain = "SELECT orders.status, orders.revenue FROM orders"
+    for first, second in ((joined, plain), (plain, joined)):
+        lyr = build_layer(spark, sf_dir)
+        lyr.rewrite(first)
+        assert ("JOIN customer" in lyr.rewrite(second)) == (second is joined)
+
+    orders = lyr.graph.get_model("orders")
+    orders.default_time_dimension = "order_date"
+    lyr.graph._invalidate()
+    sql = lyr.rewrite(
+        "SELECT orders.revenue FROM orders "
+        "JOIN customer ON orders.o_custkey = customer.c_custkey"
+    )
+    assert "order_date" in sql and "JOIN customer" in sql
 
 
 def test_using_join_with_left_prefix(spark):
