@@ -238,18 +238,19 @@ def profile_minhash(spark, sf_dir: str) -> dict:
 
     from sidemantic_spark.models.tpch import register_tables
     from sidemantic_spark.operators import dedup as dd
+    from sidemantic_spark.operators import gate
 
     register_tables(spark, sf_dir)
     df = spark.table("documents")
     rec: dict = {}
 
-    n_docs = dd._bounded_count(df, max(dd._SPREAD_CAP, 100_000))
+    n_docs = gate.probe(df, limit=gate.SMALL_ROWS).rows
     rec["n_docs_probe"] = n_docs
-    # auto resolves to bucket-local at EVERY size since ea1d538 (the
-    # broadcast verify is explicit-opt-in only); the label is kept for
-    # record continuity
+    # the default verify is bucket-local at EVERY size since ea1d538
+    # (the broadcast verify is explicit-opt-in only); the label is kept
+    # for record continuity
     rec["verify_path"] = "bucket-local"
-    d = dd._spread(df, n_docs)
+    d = gate.spread(df, n_docs)
     feat = d.select(
         F.col("doc_id").alias("__id"), dd._norm(F.col("text")).alias("__norm")
     ).select(
@@ -470,7 +471,7 @@ def main() -> None:
     # second decade (VERDICT r9 ask #1): the heavy dedup trio at sf10
     # (100x rows). Per-decade wall ratio flat-or-falling = the
     # operators hold their scaling curve across the broadcast->
-    # long-format verify gate (500k docs > broadcast_doc_cap: the
+    # long-format verify gate (500k docs > gate.SMALL_ROWS: the
     # corpus-scale paths run for real here, not just in plan tests)
     sf10_results: dict[str, dict] = {}
     minhash_profiles: dict[str, dict] = {}
@@ -515,7 +516,7 @@ def main() -> None:
         print(f"# minhash profile: {minhash_profiles}", file=sys.stderr)
         # like-for-like decade: originally this forced bucket-local at
         # sf1 because the auto gate used to switch paths at 100k docs.
-        # Since ea1d538 auto IS bucket-local at every size, so this row
+        # Since ea1d538 the default IS bucket-local at every size, so this row
         # now re-samples the same code path — kept as a second sf1
         # sample for record continuity (the spread between it and the
         # main sf1 row is a useful box-noise read).

@@ -29,46 +29,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sidemantic_spark.operators import gate
+
 # Mersenne prime 2^31-1: affine permutation products of two 31-bit
 # values stay < 2^62, inside bigint range (Spark 4 runs ANSI mode, so a
 # long overflow is an error, not a wrap).
 _P = (1 << 31) - 1
-
-# ngram small-corpus gate (<=: single checkpointed gram pass +
-# broadcast verify). Module-level so tests can exercise the
-# corpus-scale path on small inputs by patching it.
-_NGRAM_SMALL_CAP = 100_000
-# corpus-scale verify prune: broadcast-semi-join the candidate id set
-# into the verify side's gram pass when it fits this many ids
-# (2M longs ~ 16 MB raw, well inside the 64 MB broadcast budget)
-_NGRAM_PRUNE_ID_CAP = 2_000_000
-
-
-_SPREAD_CAP = 100_000
-
-
-def _bounded_count(df: DataFrame, cap: int) -> int:
-    """Row count bounded at cap+1: CollectLimit short-circuits the scan
-    once cap+1 rows exist, so the probe costs O(cap) rows even on a
-    100 TB input (the operator-level analogue of AQE's size probes)."""
-    return df.select(F.lit(1)).limit(cap + 1).count()
-
-
-def _spread(df: DataFrame, n_rows: int) -> DataFrame:
-    """Repartition to the session's parallelism when the bounded row
-    count says the corpus is small: tiny corpora usually arrive as one
-    or two scan partitions (single small files), the downstream
-    signature/banding stages are CPU-bound, and shuffling <= 100k tiny
-    rows is negligible next to the utilization it buys. Above the cap
-    the file scan is already split-parallel and an unconditional
-    corpus-wide shuffle of raw text would be the actual scale hazard,
-    so wide inputs pass through untouched. The count arrives from the
-    caller so one probe job can feed both this gate and the
-    broadcast-verify gate (no DataFrame->RDD conversion, no extra
-    jobs)."""
-    if n_rows <= _SPREAD_CAP:
-        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return df
 
 
 def _norm(text: Column) -> Column:
@@ -874,8 +840,7 @@ def minhash_lsh_pairs(
     bands: int = 16,
     k: int = 5,
     jaccard_threshold: float = 0.5,
-    broadcast_verify: bool | None = None,
-    broadcast_doc_cap: int = 100_000,
+    broadcast_verify: bool = False,
     collapse_exact_dups: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash banding, verified with
@@ -886,17 +851,16 @@ def minhash_lsh_pairs(
     (band_idx, band_hash) is uniform under hashing, so the heavy
     self-join only materializes true bucket collisions.
 
-    ``broadcast_verify`` picks the verify strategy. None (auto, the
-    default) resolves to the bucket-local verify
+    ``broadcast_verify`` picks the verify strategy. ``False`` (the
+    default) is the bucket-local verify
     (:func:`bucket_local_jaccard_pairs`): one kernel pass, a join-free
-    plan, and measured faster than the broadcast verify at every scale
-    tried (r12: sf0.1 best 1.89 s vs 2.24-2.71 s on 32 cores, 2.2 vs
-    3.7 s on 8; sf1 3.38 vs 7.18 s) — it is also the only
-    100 TB-safe shape. ``True`` opts into the small-corpus broadcast
-    verify (the shingle frame must fit a broadcast: ~100k docs x ~200
-    shingles x 8B = ~160 MB; the feature frame is locally checkpointed
-    so the kernel still runs once); ``False`` forces bucket-local
-    explicitly.
+    plan, the only 100 TB-safe shape, and measured faster than the
+    broadcast verify at every scale tried (r12: sf0.1 best 1.89 s vs
+    2.24-2.71 s on 32 cores, 2.2 vs 3.7 s on 8; sf1 3.38 vs 7.18 s).
+    ``True`` opts into the small-corpus broadcast verify: the caller
+    asserts the shingle frame fits a broadcast (~100k docs x ~200
+    shingles x 8B = ~160 MB); the feature frame is locally checkpointed
+    so the kernel still runs once.
 
     ``collapse_exact_dups`` (None = auto by a one-scan duplication-ratio
     probe) pre-collapses identical normalized texts before any LSH
@@ -916,28 +880,18 @@ def minhash_lsh_pairs(
     if collapse_exact_dups is None:
         # ONE full-scan probe feeds both gates: the collapse gate needs
         # a full map-side-combined aggregate anyway, so the exact row
-        # count rides along and the separate bounded-count job is gone
-        # (r12 measurement: the two-probe sequence was ~0.7 s of the
-        # ~2.7 s sf0.1 operator)
-        n_docs, n_distinct = _probe_stats(df, text_col)
-        collapse_exact_dups = (
-            n_docs > 0 and (n_docs - n_distinct) / n_docs >= 0.15
-        )
+        # count for the spread gate rides along (r12 measurement: a
+        # separate bounded-count job was ~0.7 s of the ~2.7 s sf0.1
+        # operator)
+        size = gate.probe(df, distinct=F.xxhash64(_norm(F.col(text_col))))
+        collapse_exact_dups = size.dup_heavy
     else:
-        # explicit collapse decision: the spread gate only needs the
-        # cheap bounded count (CollectLimit short-circuits at the cap)
-        n_docs = _bounded_count(df, _SPREAD_CAP)
-    df = _spread(df, n_docs)
+        size = gate.probe(df, limit=gate.SMALL_ROWS)
+    df = gate.spread(df, size.rows)
     if collapse_exact_dups:
         return _minhash_lsh_pairs_collapsed(
             df, text_col, id_col, num_hashes, bands, k,
-            jaccard_threshold,
-            # auto verify -> bucket-local: one kernel pass, join-free,
-            # and measured faster than the broadcast verify at every
-            # scale tried (r12: sf0.1 best 1.89 s vs 2.24-2.71 s at 32
-            # cores, 2.2 vs 3.7 s at 8; sf1 3.38 vs 7.18 s)
-            (broadcast_verify if broadcast_verify is not None else False),
-            broadcast_doc_cap,
+            jaccard_threshold, broadcast_verify,
         )
     # normalize in its own projection (see _shingles note), then ONE
     # Arrow kernel computes shingle hashes AND the signature (the JVM
@@ -950,13 +904,6 @@ def minhash_lsh_pairs(
         "__id",
         _sig_and_shingles_udf(num_hashes, k)(F.col("__norm")).alias("__f"),
     )
-    if broadcast_verify is None:
-        # auto -> bucket-local: ONE kernel pass, join-free, and measured
-        # faster than the broadcast verify at every scale tried (r12:
-        # sf0.1 best 1.89 s vs 2.24-2.71 s at 32 cores, 2.2 vs 3.7 s at
-        # 8 cores; sf1 3.38 vs 7.18 s in SCALE_CHECK_r12) — the
-        # broadcast path stays available for explicit callers
-        broadcast_verify = False
     band_keys = F.explode(
         F.transform(
             F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -996,7 +943,7 @@ def minhash_lsh_pairs(
     # ReuseExchange cannot deduplicate the two broadcast builds
     # (PythonUDF canonicalization defeats it — the r11 plan ran the
     # Arrow kernel THREE times: banding + both verify sides), and the
-    # caller opting into broadcast_verify already asserts the corpus
+    # caller opting into broadcast_verify asserts the corpus
     # features fit executor memory, so the checkpoint is bounded by the
     # same budget as the broadcasts it feeds.
     feat = feat.localCheckpoint(eager=False)
@@ -1065,32 +1012,6 @@ def _within_group_pairs(groups: DataFrame, group_cap: int) -> DataFrame:
     )
 
 
-def _dup_ratio_collapse_gate(df: DataFrame, text_col: str) -> bool:
-    """Auto gate for the exact-dup collapse prepass: approx distinct of
-    the normalized text in one map-side partially-aggregated scan. HLL
-    runs over the 64-bit text hash, not the string (cheaper on long
-    docs); hash collisions and the ~2% HLL error are gating-only —
-    correctness never depends on this probe."""
-    n, u = _probe_stats(df, text_col)
-    return n > 0 and (n - u) / n >= 0.15
-
-
-def _probe_stats(df: DataFrame, text_col: str) -> tuple[int, int]:
-    """ONE full-scan probe job feeding every auto gate: exact row count
-    plus approx-distinct of the normalized text (map-side combined, one
-    tiny result row). The collapse gate needs the full scan anyway, so
-    the exact count comes for free and callers drop their separate
-    bounded-count probe job (r12: the two-probe sequence cost ~0.7 s of
-    a ~2.7 s operator at sf0.1 — guide §1.2, fewer driver jobs)."""
-    r = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(
-            F.xxhash64(_norm(F.col(text_col)))
-        ).alias("u"),
-    ).first()
-    return int(r["n"]), int(r["u"])
-
-
 def _minhash_lsh_pairs_collapsed(
     df: DataFrame,
     text_col: str,
@@ -1099,8 +1020,7 @@ def _minhash_lsh_pairs_collapsed(
     bands: int,
     k: int,
     jaccard_threshold: float,
-    broadcast_verify: bool | None,
-    broadcast_doc_cap: int,
+    broadcast_verify: bool,
     group_cap: int = 256,
 ) -> DataFrame:
     """Exact-dup-collapsed MinHash (see :func:`minhash_lsh_pairs`).
@@ -1350,11 +1270,10 @@ def connected_components(
             # createDataFrame carries no size statistics, so a consumer
             # joining against it (semantic_dedup's keep-flag join) gets
             # a SortMergeJoin — two exchanges + sorts — for a frame
-            # whose exact row count is sitting right here on the
-            # driver. Hint broadcast when provably small (1M (long,
-            # long) rows ~ 16 MB); the distributed path below stays
-            # hint-free because its size is unknown.
-            if len(labels) <= 1_000_000:
+            # whose exact row count is already known here. Hint
+            # broadcast when it fits the byte budget; the distributed
+            # path below stays hint-free because its size is unknown.
+            if len(labels) * 2 * gate.fixed_width(pairs, id_a) <= gate.BUDGET_BYTES:
                 out = F.broadcast(out)
             return out
     # iteration shuffle width: localCheckpoint materializes the
@@ -1572,7 +1491,7 @@ def simhash_near_dups(
         F.array_distinct(F.split(F.col("__norm"), " ")), lambda t: F.xxhash64(t)
     )
     sig = (
-        _spread(df, _bounded_count(df, _SPREAD_CAP))
+        gate.spread(df, gate.probe(df, limit=gate.SMALL_ROWS).rows)
         .select(F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm"))
         .select("__id", token_hashes.alias("__th"))
         .select("__id", _simhash_sig_udf()(F.col("__th")).alias("__sig"))
@@ -1665,18 +1584,17 @@ def ngram_jaccard_pairs(
     """
     if collapse_exact_dups is None:
         # ONE full-scan probe feeds all three gates (spread, collapse,
-        # verify-strategy): the collapse gate is a full
-        # map-side-combined aggregate anyway, so the exact row count
-        # rides along and the two separate bounded-count jobs this
-        # operator used to run are gone (guide §1.2)
-        n_docs, n_distinct = _probe_stats(df, text_col)
-        collapse_exact_dups = (
-            n_docs > 0 and (n_docs - n_distinct) / n_docs >= 0.15
+        # small corpus): the collapse gate is a full map-side-combined
+        # aggregate anyway, so the row count and text bytes ride along
+        # (guide §1.2)
+        size = gate.probe(
+            df, (text_col,), distinct=F.xxhash64(_norm(F.col(text_col)))
         )
+        collapse_exact_dups = size.dup_heavy
     else:
-        n_docs = _bounded_count(df, max(_SPREAD_CAP, _NGRAM_SMALL_CAP))
-    df = _spread(df, n_docs)
-    small = n_docs <= _NGRAM_SMALL_CAP
+        size = gate.probe(df, (text_col,), limit=gate.SMALL_ROWS)
+    df = gate.spread(df, size.rows)
+    small = size.small
     # gram hashes via the Arrow batch kernel (bit-identical to the
     # engine's xxhash64 over space-joined grams; the interpreted-HOF
     # per-gram string build it replaces was the operator's hottest
@@ -1700,8 +1618,8 @@ def ngram_jaccard_pairs(
         # single gram-kernel pass: the inverted index and BOTH broadcast
         # verify sides read the checkpointed frame (the r11 plan ran the
         # Arrow kernel three times — ReuseExchange cannot deduplicate
-        # PythonUDF subtrees). Bounded by the same <=100k-doc gate that
-        # authorizes the broadcast verify; above it the long-format
+        # PythonUDF subtrees). Bounded by the same small-corpus gate
+        # that authorizes the broadcast verify; above it the long-format
         # verify keeps the two-pass lazy DAG (a corpus-scale checkpoint
         # would blow the storage budget).
         docs = docs.localCheckpoint(eager=False)
@@ -1742,10 +1660,8 @@ def ngram_jaccard_pairs(
     )
     cand = pairs_from_bucket_keys(banded, bucket_cap=cap)
     if small:
-        # size-gated exact verify shared with minhash_lsh_pairs;
-        # `small` comes from the shared probe above (no extra count
-        # job): the checkpointed gram frame above feeds the index and
-        # both broadcast verify sides — one kernel pass total
+        # the checkpointed gram frame above feeds the index and both
+        # broadcast verify sides — one kernel pass total
         verified = _exact_jaccard_verify(
             cand, docs, "__grams", threshold, broadcast_verify=True
         )
@@ -1766,7 +1682,7 @@ def ngram_jaccard_pairs(
         # kernel pass then grams only docs that actually appear in a
         # candidate pair. Pruning cannot change results — the verify
         # join is inner on __id, so non-candidate docs never
-        # contribute. Above the id cap the prune is skipped (an
+        # contribute. Over the byte budget the prune is skipped (an
         # unconditional broadcast would be the scale hazard) and the
         # checkpoint alone keeps the candidate pipeline single-pass.
         cand = cand.localCheckpoint(eager=False)
@@ -1774,7 +1690,7 @@ def ngram_jaccard_pairs(
             F.explode(F.array("id_a", "id_b")).alias("__id")
         ).distinct()
         feats_src = normed
-        if _bounded_count(cand_ids, _NGRAM_PRUNE_ID_CAP) <= _NGRAM_PRUNE_ID_CAP:
+        if gate.probe(cand_ids, ("__id",)).fits:
             feats_src = normed.join(F.broadcast(cand_ids), "__id", "left_semi")
         feats = feats_src.select(
             "__id", _word_gram_hashes_udf(n)(F.col("__norm")).alias("__grams")

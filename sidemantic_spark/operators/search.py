@@ -33,6 +33,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sidemantic_spark.operators import gate
+
 # Tokenizer shared with the SQL oracles: lowercase, split on
 # non-alphanumeric runs, drop empties. Constructs restricted to what
 # both Java regex (Spark) and DuckDB's regex support.
@@ -59,25 +61,15 @@ def _term_tf(terms_col: Column, term: str) -> Column:
     return F.size(F.filter(terms_col, lambda x: x == F.lit(term)))
 
 
-# gate for the single-tokenize checkpoint below — same bound that
-# authorizes the dedup family's broadcast verify (~100k docs of token
-# arrays fit the executor storage budget; above it the two-pass lazy
-# DAG is the only 100 TB-safe shape: checkpointing a corpus-sized
-# token table would blow storage)
-_CKPT_DOC_CAP = 100_000
-
-
-def _maybe_checkpoint_tokens(base: DataFrame, df: DataFrame) -> DataFrame:
+def _maybe_checkpoint_tokens(base: DataFrame, df: DataFrame, text_col: str) -> DataFrame:
     """Small corpora: materialize the tokenized frame once with a lazy
     localCheckpoint so the corpus-stats aggregate and the scoring probe
     share ONE tokenize pass (the interpreted higher-order-function
     tokenizer is the scan's hottest expression, and the two subtrees
-    cannot share work — expression IDs defeat reuse). The
-    CollectLimit-bounded probe short-circuits, so the gate itself never
-    scans a large corpus."""
-    from sidemantic_spark.operators.dedup import _bounded_count
-
-    if _bounded_count(df, _CKPT_DOC_CAP) <= _CKPT_DOC_CAP:
+    cannot share work — expression IDs defeat reuse). Above the
+    small-corpus gate the two-pass lazy DAG is the only 100 TB-safe
+    shape; the row-limited probe never scans a large corpus."""
+    if gate.probe(df, (text_col,), limit=gate.SMALL_ROWS).small:
         return base.localCheckpoint(eager=False)
     return base
 
@@ -153,7 +145,7 @@ def bm25_topk(
         # probe): one tokenize pass instead of two when the corpus is
         # small enough to checkpoint. The materialized path reads it
         # once — checkpointing there would only add cost.
-        base = _maybe_checkpoint_tokens(base, df)
+        base = _maybe_checkpoint_tokens(base, df, text_col)
 
     if stats is not None:
         # materialized path: prune the stats table to the query terms
@@ -229,7 +221,7 @@ def tfidf_topk(
     )
     # same double-read shape as bm25_topk's inline path: one tokenize
     # pass for small corpora
-    base = _maybe_checkpoint_tokens(base, df)
+    base = _maybe_checkpoint_tokens(base, df, text_col)
     stats = base.agg(
         F.count(F.lit(1)).alias("_n"),
         *[

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sidemantic_spark.operators import gate
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -472,7 +474,6 @@ def embedding_near_dup_pairs(
     min_cosine: float = 0.95,
     dim: int = 64,
     broadcast_verify: bool | None = None,
-    broadcast_vec_cap: int = 100_000,
 ) -> DataFrame:
     """Corpus-wide near-duplicate pairs by cosine: banded
     random-hyperplane LSH candidates, exact-cosine verified.
@@ -489,24 +490,22 @@ def embedding_near_dup_pairs(
     expansion, verify at full parallelism.
 
     ``broadcast_verify`` picks the verify strategy (same pattern as the
-    minhash/ngram family): None (auto) resolves by a bounded-count
-    probe — an EAGER Spark job at plan-construction time (CollectLimit,
-    O(cap) rows even on a 100 TB input; pass an explicit True/False to
-    skip it). Under the cap, both vector sides attach with two MAP-ONLY
-    broadcast joins (r12: interleaved noop best 0.99 vs 1.17 s, the
-    verify's explode + id-join + pair-groupBy exchanges drop out of the
-    plan); above the cap the long-format verify stays — one vector
-    scan, no broadcast assumption, the only 100 TB-safe shape.
-    ``broadcast_vec_cap`` states the cap at the default dim=64 (100k x
-    64 doubles ~ 51 MB per side, the dedup family's broadcast budget);
-    the auto gate scales it by 64/dim so the same BYTE budget holds at
-    any dimensionality (dim=1024 would otherwise force ~820 MB
-    broadcasts per side). Both paths compute the identical JVM cosine
-    fold on the identical double arrays, so results are bit-identical
-    (equivalence pinned in tests and proven row-identical in the study
-    of OPTIMIZATION_r12.md §18) — PROVIDED ``id_col`` is unique: with
-    duplicate ids the broadcast path emits one row per duplicate
-    match while the long path's pair-groupBy collapses them.
+    minhash/ngram family): None (auto) resolves by a row-limited probe
+    — an EAGER Spark job at plan-construction time that reads no column
+    (pass an explicit True/False to skip it). When the vector side fits
+    the operators' byte budget (``operators.gate.BUDGET_BYTES``; a row
+    is the id, ``dim`` doubles and the norm, so ~127k rows at dim=64),
+    both vector sides attach with two MAP-ONLY broadcast joins (r12:
+    interleaved noop best 0.99 vs 1.17 s, the verify's explode +
+    id-join + pair-groupBy exchanges drop out of the plan); above it
+    the long-format verify stays — one vector scan, no broadcast
+    assumption, the only 100 TB-safe shape. Both paths compute the
+    identical JVM cosine fold on the identical double arrays, so
+    results are bit-identical (equivalence pinned in tests and proven
+    row-identical in the study of OPTIMIZATION_r12.md §18) — PROVIDED
+    ``id_col`` is unique: with duplicate ids the broadcast path emits
+    one row per duplicate match while the long path's pair-groupBy
+    collapses them.
 
     NOTE (r12 study, do not re-spend): a minhash-style BUCKET-LOCAL
     verify (vectors riding the banding shuffle, in-bucket JVM-cosine
@@ -519,10 +518,7 @@ def embedding_near_dup_pairs(
     oracle replicates (ROUND(x,6) knife-edge risk). See
     OPTIMIZATION_r12.md §17.
     """
-    from sidemantic_spark.operators.dedup import (
-        _bounded_count,
-        pairs_from_bucket_keys,
-    )
+    from sidemantic_spark.operators.dedup import pairs_from_bucket_keys
 
     planes = _det_planes(dim, bands * bits_per_band)
     emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -551,15 +547,9 @@ def embedding_near_dup_pairs(
         F.col(id_col).alias("__id"), emb.alias("__emb")
     ).withColumn("__nrm", _norm(F.col("__emb")))
     if broadcast_verify is None:
-        # dim-scaled row cap: broadcast_vec_cap rows is the budget at
-        # the default dim=64 (~51 MB of packed doubles per side); wider
-        # vectors shrink the ROW cap so the BYTE budget stays fixed
-        # (ADVICE r12: dim=1024 under a flat 100k-row cap would force
-        # ~820 MB broadcasts per side). At dim<=64 the cap is unchanged,
-        # so bench/contract behavior is identical.
-        cap = min(broadcast_vec_cap, (broadcast_vec_cap * 64) // max(dim, 1))
-        # CollectLimit-bounded probe: O(cap) rows even on a 100 TB input
-        broadcast_verify = _bounded_count(df, cap) <= cap
+        # per-row bytes of one broadcast side: id + dim doubles + norm
+        row_bytes = gate.fixed_width(df, id_col) + 8 * dim + 8
+        broadcast_verify = gate.probe(df, row_bytes=row_bytes).fits
     if broadcast_verify:
         # small-corpus path: both vector sides broadcast, the verify is
         # two MAP-ONLY joins — the long-format explode + id-join +
@@ -623,7 +613,6 @@ def semantic_dedup(
     dim: int = 64,
     max_iter: int = 20,
     broadcast_verify: bool | None = None,
-    broadcast_vec_cap: int = 100_000,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): build
     the cosine near-duplicate pair graph over the embedding column,
@@ -645,6 +634,9 @@ def semantic_dedup(
     Returns one row per input vector: (id_col, cluster_id, keep) with
     cluster_id = min id of the vector's semantic cluster (its own id
     when it has no near-duplicates) and keep = (id == cluster_id).
+
+    ``broadcast_verify`` is passed to :func:`embedding_near_dup_pairs`
+    (None = one probe job against ``operators.gate.BUDGET_BYTES``).
     """
     from sidemantic_spark.operators.dedup import connected_components
 
@@ -656,11 +648,7 @@ def semantic_dedup(
         bits_per_band=bits_per_band,
         min_cosine=min_cosine,
         dim=dim,
-        # forwarded (ADVICE r12): callers can skip the eager auto-gate
-        # probe job or tune the broadcast budget; None keeps the auto
-        # probe
         broadcast_verify=broadcast_verify,
-        broadcast_vec_cap=broadcast_vec_cap,
     )
     comps = connected_components(pairs, max_iter=max_iter).withColumnRenamed(
         "doc_id", "__node"

@@ -281,6 +281,18 @@ def test_ngram_jaccard_pairs(spark):
     assert (1, 3) not in found
 
 
+def _ngram_rows_and_plan(frame):
+    out = dedup.ngram_jaccard_pairs(frame, n=5, threshold=0.6)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    return sorted(map(tuple, out.collect())), plan
+
+
+def _is_corpus_path(plan):
+    # the long-format verify explodes each candidate pair into its two
+    # ids; the small path verifies with two broadcast joins instead
+    return "explode(array(id_a" in plan
+
+
 def test_ngram_corpus_path_matches_small_path(docs, monkeypatch):
     """r13: above the small-corpus gate the verify side no longer
     re-runs the gram kernel over the whole corpus — the candidate
@@ -290,23 +302,49 @@ def test_ngram_corpus_path_matches_small_path(docs, monkeypatch):
     inner on __id, so pruning non-candidates cannot change rows), and
     the corpus-path plan must carry exactly ONE full-corpus gram
     kernel (the pruned verify pass reads the broadcast-filtered
-    scan)."""
+    scan). The prune itself is byte-gated: string ids that exceed the
+    budget skip it (same rows), and documents whose text exceeds the
+    budget take the corpus path below the row bound."""
+    from sidemantic_spark.operators import gate
+
     frame = docs.limit(300).select("doc_id", "text")
-    small = sorted(
-        map(tuple, dedup.ngram_jaccard_pairs(
-            frame, n=5, threshold=0.6
-        ).collect())
+    # zero-padded ids sort like the numbers, so pairs map back 1:1;
+    # 256 bytes each puts even the 18 verified ids over 8 * 300 bytes
+    str_frame = frame.select(
+        F.format_string("%0256d", "doc_id").alias("doc_id"), "text"
     )
-    monkeypatch.setattr(dedup, "_NGRAM_SMALL_CAP", 10)
-    big_df = dedup.ngram_jaccard_pairs(frame, n=5, threshold=0.6)
-    plan = big_df._jdf.queryExecution().executedPlan().toString()
-    big = sorted(map(tuple, big_df.collect()))
-    assert big == small and big
+    long_frame = frame.select("doc_id", F.concat_ws(" ", *["text"] * 4).alias("text"))
+    small, splan = _ngram_rows_and_plan(frame)
+    long_small, _ = _ngram_rows_and_plan(long_frame)
+    assert small and long_small and not _is_corpus_path(splan)
+
+    monkeypatch.setattr(gate, "SMALL_ROWS", 10)
+    # 300 int64 ids fit; their 256-byte string form does not
+    monkeypatch.setattr(gate, "BUDGET_BYTES", 8 * 300)
+    big, plan = _ngram_rows_and_plan(frame)
+    assert big == small
+    assert _is_corpus_path(plan)
     # one kernel node on the index side; the verify side's kernel sits
     # above the semi-pruned scan (2 total, but the checkpointed
     # candidate subtree shows as a scan, not a third kernel)
     assert plan.count("ArrowEvalPython") <= 2, plan
     assert "ExistingRDD" in plan or "LogicalRDD" in plan or "Scan ExistingRDD" in plan, plan
+    assert "LeftSemi" in plan, plan
+
+    str_rows, str_plan = _ngram_rows_and_plan(str_frame)
+    assert [(int(a), int(b), j) for a, b, j in str_rows] == small
+    assert _is_corpus_path(str_plan)
+    assert "LeftSemi" not in str_plan, str_plan
+
+    # long documents: 300 rows are far under the row bound, but ~4x the
+    # text of `frame` puts them over a budget `frame` fits in
+    monkeypatch.setattr(gate, "SMALL_ROWS", 100_000)
+    monkeypatch.setattr(gate, "BUDGET_BYTES", 150_000)
+    _, fits_plan = _ngram_rows_and_plan(frame)
+    assert not _is_corpus_path(fits_plan)
+    long_big, long_plan = _ngram_rows_and_plan(long_frame)
+    assert _is_corpus_path(long_plan)
+    assert long_big == long_small
 
 
 def test_ngram_prefix_filter_bit_identical_to_full_posting(docs):
@@ -1312,6 +1350,24 @@ def test_bm25_tf_saturation(spark):
     scores = {r["doc_id"]: r["score"] for r in bm25_topk(docs, "hash", k=10).collect()}
     assert scores[2] > scores[1]
     assert scores[2] < 3 * scores[1]
+
+
+def test_bm25_token_checkpoint_parity(docs, monkeypatch):
+    """The inline BM25 path checkpoints the tokenized corpus only when
+    it passes the small-corpus gate; top-k rows are identical with the
+    checkpoint forced on and forced off."""
+    from sidemantic_spark.operators import gate
+    from sidemantic_spark.operators.search import bm25_topk
+
+    frame = docs.select("doc_id", "text")
+    results = {}
+    for small_rows in (100_000, 0):
+        monkeypatch.setattr(gate, "SMALL_ROWS", small_rows)
+        out = bm25_topk(frame, "fast hash join", k=25)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        results[small_rows] = ("ExistingRDD" in plan, out.collect())
+    assert results[100_000][0] and not results[0][0]
+    assert results[100_000][1] == results[0][1] and results[0][1]
 
 
 def test_bm25_index_refresh_contract(spark):

@@ -786,15 +786,16 @@ def test_minhash_bucket_local_verify_plan_and_adversarial_parity(spark):
     assert a == b and len(a) == 320 * 319 // 2
 
 
-def test_embedding_verify_broadcast_gate_plan_and_parity(spark):
+def test_embedding_verify_broadcast_gate_plan_and_parity(spark, monkeypatch):
     """r12: embedding_near_dup_pairs' auto verify broadcasts both
-    vector sides when the corpus fits the dedup family's broadcast
-    budget (two MAP-ONLY joins — the long-format explode + id-join +
-    pair-groupBy exchanges leave the plan); above the cap (or forced)
-    the long-format verify stays. Both paths run the identical JVM
-    cosine fold on the identical arrays, so rows are bit-identical."""
+    vector sides when the vector side fits the operators' byte budget
+    (two MAP-ONLY joins — the long-format explode + id-join +
+    pair-groupBy exchanges leave the plan); above the budget (or
+    forced) the long-format verify stays. Both paths run the identical
+    JVM cosine fold on the identical arrays, so rows are bit-identical."""
     from pyspark.sql import functions as F
 
+    from sidemantic_spark.operators import gate
     from sidemantic_spark.operators.similarity import embedding_near_dup_pairs
 
     vecs = spark.range(300).select(
@@ -832,9 +833,16 @@ def test_embedding_verify_broadcast_gate_plan_and_parity(spark):
     b = sorted(map(tuple, embedding_near_dup_pairs(
         vecs, broadcast_verify=False, **kw).collect()))
     assert a == b and len(a) > 0
-    # auto (None) resolves to broadcast under the cap: same rows again
-    c = sorted(map(tuple, embedding_near_dup_pairs(vecs, **kw).collect()))
-    assert c == a
+    # auto (None) sizes the vector side at id + 64 doubles + norm =
+    # 528 bytes a row: 300 rows fit a budget of exactly 300 * 528 bytes
+    # (broadcast plan) and not one byte less (long plan), same rows
+    for budget, broadcast in ((300 * 528, True), (300 * 528 - 1, False)):
+        monkeypatch.setattr(gate, "BUDGET_BYTES", budget)
+        auto = embedding_near_dup_pairs(vecs, **kw)
+        aplan = auto._jdf.queryExecution().executedPlan().toString()
+        assert (aplan.count("BroadcastHashJoin") == 2) is broadcast, aplan
+        assert ("explode(array(id_a" in aplan) is not broadcast, aplan
+        assert sorted(map(tuple, auto.collect())) == a
     # r13 norm hoist: the per-PAIR verify projection computes exactly
     # one interpreted fold (the dot product) — each vector's norm fold
     # is hoisted to the per-vector side (a vector in k candidate pairs
