@@ -149,9 +149,9 @@ def main() -> None:
     register_tables(spark, sf_dir)
     queries["dedup_minhash_lsh"](spark, sf_dir).count()
     queries["dedup_minhash_lsh"](spark, sf_dir).count()
-    # long-format verify shape (corpus-scale path) still gets codegen'd
+    # a second corpus and threshold through the same bucket-local plan
     _w = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    _ml(_w, jaccard_threshold=0.5, broadcast_verify=False).count()
+    _ml(_w, jaccard_threshold=0.5).count()
     queries["basic_agg"](spark, sf_dir).count()
     queries["text_profile"](spark, sf_dir).count()
 

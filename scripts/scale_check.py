@@ -246,9 +246,8 @@ def profile_minhash(spark, sf_dir: str) -> dict:
 
     n_docs = gate.probe(df, limit=gate.SMALL_ROWS).rows
     rec["n_docs_probe"] = n_docs
-    # the default verify is bucket-local at EVERY size since ea1d538
-    # (the broadcast verify is explicit-opt-in only); the label is kept
-    # for record continuity
+    # minhash has one verify path, bucket-local at every size; the
+    # label is kept for record continuity
     rec["verify_path"] = "bucket-local"
     d = gate.spread(df, n_docs)
     feat = d.select(
@@ -256,20 +255,8 @@ def profile_minhash(spark, sf_dir: str) -> dict:
     ).select(
         "__id", dd._sig_and_shingles_udf(64, 5)(F.col("__norm")).alias("__f")
     )
-    with_sig = feat.select("__id", F.col("__f.sig").alias("__sig"))
-    banded = with_sig.select(
-        "__id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(15)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(F.slice(F.col("__sig"), b * 4 + 1, 4)).alias(
-                        "bhash"
-                    ),
-                ),
-            )
-        ).alias("bk"),
+    banded = feat.select(
+        "__id", dd._band_keys(F.col("__f.sig"), 16, 4)
     ).select("__id", "bk.band", "bk.bhash")
 
     t0 = _t.perf_counter()
@@ -516,10 +503,10 @@ def main() -> None:
         print(f"# minhash profile: {minhash_profiles}", file=sys.stderr)
         # like-for-like decade: originally this forced bucket-local at
         # sf1 because the auto gate used to switch paths at 100k docs.
-        # Since ea1d538 the default IS bucket-local at every size, so this row
-        # now re-samples the same code path — kept as a second sf1
-        # sample for record continuity (the spread between it and the
-        # main sf1 row is a useful box-noise read).
+        # Minhash now has one verify path (bucket-local at every size),
+        # so this row re-samples the main sf1 row's code path — kept as
+        # a second sf1 sample for record continuity (the spread between
+        # it and the main sf1 row is a useful box-noise read).
         from sidemantic_spark.models.tpch import register_tables
         from sidemantic_spark.operators.dedup import minhash_lsh_pairs
 
@@ -529,13 +516,9 @@ def main() -> None:
         # sf10 profile in a churned session; unwarmed it measured
         # 17.6s vs 3.2-4.2s settled, identical code+data)
         _session_gc(spark)
-        minhash_lsh_pairs(
-            docs_sf1, jaccard_threshold=0.4, broadcast_verify=False
-        ).count()
+        minhash_lsh_pairs(docs_sf1, jaccard_threshold=0.4).count()
         bl = _timed(
-            lambda s, d: minhash_lsh_pairs(
-                docs_sf1, jaccard_threshold=0.4, broadcast_verify=False
-            ),
+            lambda s, d: minhash_lsh_pairs(docs_sf1, jaccard_threshold=0.4),
             spark, sf1, heavy_repeats,
         )
         mh10 = sf10_results.get("dedup_minhash_lsh", {})

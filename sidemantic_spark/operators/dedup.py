@@ -14,8 +14,9 @@ Design notes for 100 TB scale:
   standard near-dup join; band buckets are uniformly distributed by the
   hash, so skew only appears for *actually identical* band signatures,
   which is the signal itself.
-- Candidate pairs are verified with exact Jaccard over the shingle
-  sets (array_intersect/array_union), again JVM-side.
+- MinHash candidates are verified with exact shingle-set Jaccard
+  inside each capped LSH bucket (one Arrow kernel per bucket, no join);
+  n-gram candidates with array_intersect JVM-side.
 - SimHash is a per-row aggregate over token hashes (F.aggregate), one
   map stage; near-dup banding splits the 64-bit signature into 4
   16-bit chunks (Hamming distance <= 3 guarantee by pigeonhole).
@@ -832,6 +833,69 @@ def pairs_from_bucket_keys(
     )
 
 
+def pair_sides(
+    pairs: DataFrame, side: DataFrame, cols: tuple[str, ...], broadcast: bool
+) -> DataFrame:
+    """Attach both sides of each candidate pair: (id_a, id_b) pairs and
+    an (__id, *cols) side frame give (id_a, id_b, <c>_a, <c>_b) for
+    each ``c`` in ``cols``. Two physical forms; the caller's gate picks:
+
+    - ``broadcast``: two MAP-ONLY broadcast joins — no side column
+      rides any shuffle. The side subtree is evaluated twice, but both
+      evaluations are broadcast builds (driver-side, once), not
+      per-pair work. The caller's gate bounds ``side`` by the byte
+      budget.
+    - long format (corpus scale): each pair explodes to one row per
+      side id, joins ``side`` ONCE on id, and a groupBy(pair)
+      reassembles the two sides. This scans/computes ``side`` exactly
+      once (two per-side shuffle joins would evaluate its subtree twice
+      — HOF lambda exprIds and PythonUDFs defeat exchange reuse) and
+      assumes nothing about its size: the only 100 TB-safe shape.
+
+    ``__id`` must be unique in ``side``: with duplicate ids the
+    broadcast form emits one row per match while the long form's
+    groupBy collapses them.
+    """
+    if broadcast:
+        for s in ("a", "b"):
+            pairs = pairs.join(
+                F.broadcast(
+                    side.select(
+                        F.col("__id").alias(f"id_{s}"),
+                        *[F.col(c).alias(f"{c}_{s}") for c in cols],
+                    )
+                ),
+                f"id_{s}",
+            )
+        return pairs
+    long = pairs.select(
+        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("__id")
+    )
+    return long.join(side, "__id").groupBy("id_a", "id_b").agg(
+        *[
+            F.max(F.when(F.col("__id") == F.col(f"id_{s}"), F.col(c))).alias(f"{c}_{s}")
+            for c in cols
+            for s in ("a", "b")
+        ]
+    )
+
+
+def _band_keys(sig: Column, bands: int, rows_per_band: int) -> Column:
+    """``bk``: a MinHash signature's LSH bucket keys, one
+    (band, bhash) struct per band, exploded to one row per band."""
+    return F.explode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda b: F.struct(
+                b.alias("band"),
+                F.xxhash64(
+                    F.slice(sig, b * rows_per_band + 1, rows_per_band)
+                ).alias("bhash"),
+            ),
+        )
+    ).alias("bk")
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -840,134 +904,83 @@ def minhash_lsh_pairs(
     bands: int = 16,
     k: int = 5,
     jaccard_threshold: float = 0.5,
-    broadcast_verify: bool = False,
-    collapse_exact_dups: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash banding, verified with
     exact shingle-set Jaccard.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, deduplicated across
-    bands. Rows per doc after explode = ``bands``; the join key
-    (band_idx, band_hash) is uniform under hashing, so the heavy
-    self-join only materializes true bucket collisions.
+    bands. The verify runs INSIDE each capped (band, bhash) bucket
+    (:func:`bucket_local_jaccard_pairs`): the shingle sets ride the
+    banding shuffle, so the operator is one kernel pass and one wide
+    shuffle with no join — the only 100 TB-safe shape, and measured
+    faster than a broadcast verify at every scale tried (r12: sf0.1
+    best 1.89 s vs 2.24-2.71 s on 32 cores, 2.2 vs 3.7 s on 8; sf1
+    3.38 vs 7.18 s).
 
-    ``broadcast_verify`` picks the verify strategy. ``False`` (the
-    default) is the bucket-local verify
-    (:func:`bucket_local_jaccard_pairs`): one kernel pass, a join-free
-    plan, the only 100 TB-safe shape, and measured faster than the
-    broadcast verify at every scale tried (r12: sf0.1 best 1.89 s vs
-    2.24-2.71 s on 32 cores, 2.2 vs 3.7 s on 8; sf1 3.38 vs 7.18 s).
-    ``True`` opts into the small-corpus broadcast verify: the caller
-    asserts the shingle frame fits a broadcast (~100k docs x ~200
-    shingles x 8B = ~160 MB); the feature frame is locally checkpointed
-    so the kernel still runs once.
-
-    ``collapse_exact_dups`` (None = auto by a one-scan duplication-ratio
-    probe) pre-collapses identical normalized texts before any LSH
-    work: signatures/banding/verify run once per distinct CONTENT, and
-    verified group pairs expand back to member doc pairs map-side.
-    Exact duplicates share every shingle, so they land in identical
-    buckets and always verify at jaccard exactly 1.0 — collapsing them
-    is semantics-preserving while cutting kernel, banding-shuffle, and
+    One full-scan probe (``operators.gate.probe``: rows plus
+    approximate distinct normalized texts) picks the path. On a
+    duplicate-heavy corpus (``Probe.dup_heavy``) identical normalized
+    texts collapse before any LSH work: signatures, banding and verify
+    run once per distinct CONTENT, the id-sorted member arrays ride the
+    banding shuffle, and verified group pairs expand back to member doc
+    pairs map-side — still zero joins. Exact duplicates share every
+    shingle, so they land in identical buckets and always verify at
+    jaccard exactly 1.0 (the shingle set is never empty: short docs
+    shingle to the whole text); collapsing them is
+    semantics-preserving while cutting kernel, banding-shuffle and
     verify cost by the duplication factor (web-crawl corpora at real
     scale are commonly 30-60% exact dups; the adversarial 10-deep
-    clique build measured ~26 s -> ~4 s at 50k docs). On low-dup
-    corpora the auto gate skips the prepass, keeping the original
-    single-wide-shuffle plan; explicit True/False skips the probe scan
-    (callers at known corpus shapes should pass it).
+    clique build measured ~26 s -> ~4 s at 50k docs). Groups key on
+    the text itself, not a hash (no collision risk), and cap at 256
+    id-sorted members, mirroring the per-bucket cap (an over-cap
+    identical doc sits beyond the id-sorted cap prefix of EVERY one of
+    its buckets); cross-group caps bind at group grain — 256 distinct
+    CONTENTS per bucket instead of 256 docs — so dup-heavy corpora lose
+    strictly fewer true pairs to capping. Low-dup corpora skip the
+    prepass and keep the single-wide-shuffle plan. Tests force either
+    path by patching ``gate.Probe.dup_heavy``.
     """
-    rows_per_band = num_hashes // bands
-    if collapse_exact_dups is None:
-        # ONE full-scan probe feeds both gates: the collapse gate needs
-        # a full map-side-combined aggregate anyway, so the exact row
-        # count for the spread gate rides along (r12 measurement: a
-        # separate bounded-count job was ~0.7 s of the ~2.7 s sf0.1
-        # operator)
-        size = gate.probe(df, distinct=F.xxhash64(_norm(F.col(text_col))))
-        collapse_exact_dups = size.dup_heavy
-    else:
-        size = gate.probe(df, limit=gate.SMALL_ROWS)
+    # ONE full-scan probe feeds both gates: the collapse gate needs a
+    # full map-side-combined aggregate anyway, so the exact row count
+    # for the spread gate rides along (r12 measurement: a separate
+    # bounded-count job was ~0.7 s of the ~2.7 s sf0.1 operator)
+    size = gate.probe(df, distinct=F.xxhash64(_norm(F.col(text_col))))
     df = gate.spread(df, size.rows)
-    if collapse_exact_dups:
-        return _minhash_lsh_pairs_collapsed(
-            df, text_col, id_col, num_hashes, bands, k,
-            jaccard_threshold, broadcast_verify,
-        )
-    # normalize in its own projection (see _shingles note), then ONE
-    # Arrow kernel computes shingle hashes AND the signature (the JVM
-    # HOF shingle stage was the operator's dominant cost — see
-    # _sig_and_shingles_udf)
-    feat = df.select(
-        F.col(id_col).alias("__id"),
-        _norm(F.col(text_col)).alias("__norm"),
-    ).select(
-        "__id",
-        _sig_and_shingles_udf(num_hashes, k)(F.col("__norm")).alias("__f"),
+    # normalize in its own projection (see _shingles note)
+    normed = df.select(
+        F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm")
     )
-    band_keys = F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.xxhash64(
-                    F.slice(F.col("__f.sig"), b * rows_per_band + 1, rows_per_band)
-                ).alias("bhash"),
-            ),
+    keep, members_col = ["__id"], None
+    if size.dup_heavy:
+        group_cap = 256
+        groups = _collapse_groups(normed, group_cap)
+        within = _within_group_pairs(groups, group_cap)
+        normed = groups.select(
+            F.element_at("__members", 1).alias("__id"),
+            F.col("__members").alias("__mem"),
+            "__norm",
         )
-    ).alias("bk")
-    if not broadcast_verify:
-        # corpus-scale path: verify INSIDE the capped buckets. The
-        # shingle sets (PACKED int32 blobs — see _sig_and_shingles_udf
-        # pack_sh) ride the banding shuffle once per band and the whole
-        # operator is ONE kernel pass + ONE wide shuffle — the
-        # pair-grain verify measured ~30 GB of array shuffle at 500k
-        # docs (see bucket_local_jaccard_pairs)
-        feat_p = df.select(
-            F.col(id_col).alias("__id"),
-            _norm(F.col(text_col)).alias("__norm"),
-        ).select(
-            "__id",
-            _sig_and_shingles_udf(num_hashes, k, pack_sh=True)(
-                F.col("__norm")
-            ).alias("__f"),
-        )
-        banded_sets = feat_p.select(
-            "__id",
-            F.col("__f.sh").alias("__sh"),
-            band_keys,
-        ).select("__id", "__sh", "bk.band", "bk.bhash")
-        return bucket_local_jaccard_pairs(banded_sets, jaccard_threshold)
-    # small-corpus path (explicit opt-in): band keys carry ONLY
-    # (id, band, bhash) and the verify is two map-only broadcast joins.
-    # The feature frame materializes once with a lazy localCheckpoint:
-    # ReuseExchange cannot deduplicate the two broadcast builds
-    # (PythonUDF canonicalization defeats it — the r11 plan ran the
-    # Arrow kernel THREE times: banding + both verify sides), and the
-    # caller opting into broadcast_verify asserts the corpus
-    # features fit executor memory, so the checkpoint is bounded by the
-    # same budget as the broadcasts it feeds.
-    feat = feat.localCheckpoint(eager=False)
-    shingled = feat.select("__id", F.col("__f.sh").alias("__sh"))
-    with_sig = feat.select("__id", F.col("__f.sig").alias("__sig"))
-    banded = with_sig.select(
-        "__id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.slice(F.col("__sig"), b * rows_per_band + 1, rows_per_band)
-                    ).alias("bhash"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("__id", "bk.band", "bk.bhash")
-
-    cand = pairs_from_bucket_keys(banded)
-    return _exact_jaccard_verify(
-        cand, shingled, "__sh", jaccard_threshold, broadcast_verify
+        keep, members_col = ["__id", "__mem"], "__mem"
+    # ONE Arrow kernel computes shingle hashes AND the signature (the
+    # JVM HOF shingle stage was the operator's dominant cost); the sets
+    # ship as packed int32 blobs (see _sig_and_shingles_udf pack_sh)
+    feat = normed.select(
+        *keep,
+        _sig_and_shingles_udf(num_hashes, k, pack_sh=True)(
+            F.col("__norm")
+        ).alias("__f"),
     )
+    banded_sets = feat.select(
+        *keep,
+        F.col("__f.sh").alias("__sh"),
+        _band_keys(F.col("__f.sig"), bands, num_hashes // bands),
+    ).select(*keep, "__sh", "bk.band", "bk.bhash")
+    pairs = bucket_local_jaccard_pairs(
+        banded_sets, jaccard_threshold, members_col=members_col
+    )
+    if members_col is None or jaccard_threshold > 1.0:
+        return pairs
+    return within.unionByName(pairs)
 
 
 def _collapse_groups(normed: DataFrame, group_cap: int) -> DataFrame:
@@ -1012,208 +1025,6 @@ def _within_group_pairs(groups: DataFrame, group_cap: int) -> DataFrame:
     )
 
 
-def _minhash_lsh_pairs_collapsed(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    k: int,
-    jaccard_threshold: float,
-    broadcast_verify: bool,
-    group_cap: int = 256,
-) -> DataFrame:
-    """Exact-dup-collapsed MinHash (see :func:`minhash_lsh_pairs`).
-
-    One extra narrow shuffle keyed by the NORMALIZED TEXT groups
-    identical contents; all LSH work then runs at group (distinct
-    content) grain with the id-sorted member arrays riding the
-    dataflow. Output = within-group pairs (identical content -> exact
-    jaccard 1.0; the shingle set is never empty, short docs shingle to
-    the whole text) UNION cross-group pairs expanded from verified
-    representative pairs. Grouping keys on the text itself, not a
-    hash — no collision risk. Groups cap at ``group_cap`` id-sorted
-    members, mirroring the uncollapsed path's per-bucket cap (an
-    over-cap identical doc there sits beyond the id-sorted cap prefix
-    of EVERY one of its buckets); Spark's WindowGroupLimit rewrite caps
-    map-side, so even a corpus of one repeated text ships a bounded
-    row count per partition. Cross-group candidate caps now bind at
-    group grain — 256 distinct CONTENTS per bucket instead of 256
-    docs — so dup-heavy corpora lose strictly fewer true pairs to
-    capping than the uncollapsed path."""
-    rows_per_band = num_hashes // bands
-    normed = df.select(
-        F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm")
-    )
-    groups = _collapse_groups(normed, group_cap)
-    within = _within_group_pairs(groups, group_cap)
-    feat = groups.select(
-        "__members",
-        _sig_and_shingles_udf(num_hashes, k)(F.col("__norm")).alias("__f"),
-    )
-    band_keys = F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.xxhash64(
-                    F.slice(F.col("__f.sig"), b * rows_per_band + 1, rows_per_band)
-                ).alias("bhash"),
-            ),
-        )
-    ).alias("bk")
-    if not broadcast_verify:
-        # corpus-scale path: group-grain bucket-local verify, member
-        # arrays ride the banding shuffle, still zero joins in the
-        # plan; sets ship as packed int32 blobs (see
-        # _sig_and_shingles_udf pack_sh)
-        feat_p = groups.select(
-            "__members",
-            _sig_and_shingles_udf(num_hashes, k, pack_sh=True)(
-                F.col("__norm")
-            ).alias("__f"),
-        )
-        banded_sets = feat_p.select(
-            F.element_at("__members", 1).alias("__id"),
-            F.col("__members").alias("__mem"),
-            F.col("__f.sh").alias("__sh"),
-            band_keys,
-        ).select("__id", "__mem", "__sh", "bk.band", "bk.bhash")
-        cross = bucket_local_jaccard_pairs(
-            banded_sets, jaccard_threshold, members_col="__mem"
-        )
-    else:
-        # small-corpus path (explicit opt-in): rep-grain candidates +
-        # broadcast verify, then two broadcast joins attach member
-        # arrays for expansion (the group frame is strictly smaller
-        # than the shingle frame that is already broadcast by the
-        # verify). Lazy localCheckpoint = single kernel pass across the
-        # banding and both broadcast verify builds (see
-        # minhash_lsh_pairs — ReuseExchange cannot dedup PythonUDF
-        # subtrees), bounded by the caller's broadcast opt-in.
-        rep_feat = feat.select(
-            F.element_at("__members", 1).alias("__id"),
-            F.col("__f.sh").alias("__sh"),
-            F.col("__f.sig").alias("__sig"),
-        ).localCheckpoint(eager=False)
-        banded = rep_feat.select(
-            "__id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        F.xxhash64(
-                            F.slice(
-                                F.col("__sig"),
-                                b * rows_per_band + 1,
-                                rows_per_band,
-                            )
-                        ).alias("bhash"),
-                    ),
-                )
-            ).alias("bk"),
-        ).select("__id", "bk.band", "bk.bhash")
-        verified = _exact_jaccard_verify(
-            pairs_from_bucket_keys(banded),
-            rep_feat.select("__id", "__sh"),
-            "__sh",
-            jaccard_threshold,
-            True,
-        )
-        members = groups.select(
-            F.element_at("__members", 1).alias("__rep"), "__members"
-        )
-        cross = _expand_member_pairs(
-            verified.join(
-                F.broadcast(
-                    members.select(
-                        F.col("__rep").alias("id_a"),
-                        F.col("__members").alias("__ma"),
-                    )
-                ),
-                "id_a",
-            ).join(
-                F.broadcast(
-                    members.select(
-                        F.col("__rep").alias("id_b"),
-                        F.col("__members").alias("__mb"),
-                    )
-                ),
-                "id_b",
-            )
-        )
-    if jaccard_threshold > 1.0:
-        return cross
-    return within.unionByName(cross)
-
-
-def _exact_jaccard_verify(
-    cand: DataFrame,
-    feats: DataFrame,
-    set_col: str,
-    threshold: float,
-    broadcast_verify: bool,
-) -> DataFrame:
-    """Exact set-Jaccard verification of candidate pairs against a
-    (__id, set_col) feature frame; two physical strategies:
-
-    - broadcast (small corpora): both feature sides broadcast, the
-      whole verify is map-only — zero array bytes on any shuffle. The
-      feature subtree is evaluated twice, but both evaluations are
-      broadcast builds (driver-side, once), not per-pair work.
-    - long-format (corpus scale): each pair explodes to (pair, side-id)
-      rows, joins the feature frame ONCE on id, and a groupBy(pair)
-      reassembles the two sets. This scans/computes the features
-      exactly once (two separate per-side shuffle joins would
-      re-evaluate the feature subtree — HOF lambda exprIds defeat
-      exchange reuse — and a corpus-sized build side cannot broadcast).
-      No signature-estimate pre-filter: the estimate costs about as
-      much as the native array_intersect it would guard, and its
-      separate join stage measured +30s of per-plan codegen/JIT
-      overhead while pruning <1% on template-heavy corpora.
-    """
-    def jac_of(a, b):
-        # |A ∪ B| = |A| + |B| - |A ∩ B|: both callers' sets are
-        # np.unique'd per doc (no internal duplicates), so the identity
-        # is exact in integers and ROUND(c/u, 6) is bit-identical to
-        # the array_union form — while the per-pair work drops from two
-        # hash-set builds (intersect + union, each allocating a result
-        # array) to one intersect plus integer size arithmetic.
-        inter = F.size(F.array_intersect(a, b))
-        return inter.cast("double") / (
-            (F.size(a) + F.size(b) - inter).cast("double")
-        )
-
-    if broadcast_verify:
-        side_a = feats.select(
-            F.col("__id").alias("id_a"), F.col(set_col).alias("__set_a")
-        )
-        side_b = feats.select(
-            F.col("__id").alias("id_b"), F.col(set_col).alias("__set_b")
-        )
-        both = cand.join(F.broadcast(side_a), "id_a").join(
-            F.broadcast(side_b), "id_b"
-        )
-    else:
-        long = cand.select(
-            "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("__id")
-        )
-        both = long.join(feats, "__id").groupBy("id_a", "id_b").agg(
-            F.max(
-                F.when(F.col("__id") == F.col("id_a"), F.col(set_col))
-            ).alias("__set_a"),
-            F.max(
-                F.when(F.col("__id") == F.col("id_b"), F.col(set_col))
-            ).alias("__set_b"),
-        )
-    return both.select(
-        "id_a",
-        "id_b",
-        F.round(jac_of(F.col("__set_a"), F.col("__set_b")), 6).alias("jaccard"),
-    ).where(F.col("jaccard") >= threshold)
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -1228,10 +1039,9 @@ def connected_components(
     cluster_id = the smallest id in the component — the canonical
     "keep the lowest id, drop the rest" dedup decision.
 
-    SIZE-GATED EXECUTION (same pattern as the minhash broadcast
-    verify): a `pairs.limit(small_edge_limit + 1)` probe — CollectLimit
-    short-circuits the scan, so the probe is cheap even when pairs is
-    huge — decides between
+    SIZE-GATED EXECUTION: a `pairs.limit(small_edge_limit + 1)` probe
+    — CollectLimit short-circuits the scan, so the probe is cheap even
+    when pairs is huge — decides between
       * <= small_edge_limit edges: driver-side union-find with path
         compression over the already-collected rows (near-dup pair
         sets are tiny relative to their corpus; 2M (long,long) edges
@@ -1547,7 +1357,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     prefix_filter: bool = True,
-    collapse_exact_dups: bool | None = None,
 ) -> DataFrame:
     """Exact word n-gram Jaccard similarity for pairs sharing at least
     one n-gram (inverted-index join — shuffle on n-gram hash).
@@ -1572,27 +1381,23 @@ def ngram_jaccard_pairs(
     ``n`` or pre-filter with :func:`minhash_lsh_pairs`; this operator
     is the exact verifier of the dedup family.
 
-    ``collapse_exact_dups`` (None = auto, same one-scan probe as
-    :func:`minhash_lsh_pairs`) pre-collapses identical normalized
-    texts: gram kernels, posting lists, and verification run once per
-    distinct CONTENT, within-group pairs emit at exactly 1.0 (gram
-    sets are never empty — short docs gram to the whole text), and
-    verified group pairs expand over the member arrays. Beyond the
-    speedup, this REMOVES the documented exactness edge where 10-deep
-    exact-dup cliques saturate cap-bound posting buckets: exact dups
-    now occupy ONE posting each.
+    On a duplicate-heavy corpus (``Probe.dup_heavy``, the same
+    one-scan probe as :func:`minhash_lsh_pairs`) identical normalized
+    texts collapse first: gram kernels, posting lists, and verification
+    run once per distinct CONTENT, within-group pairs emit at exactly
+    1.0 (gram sets are never empty — short docs gram to the whole
+    text), and verified group pairs expand over the member arrays.
+    Beyond the speedup, this REMOVES the documented exactness edge
+    where 10-deep exact-dup cliques saturate cap-bound posting buckets:
+    exact dups now occupy ONE posting each.
     """
-    if collapse_exact_dups is None:
-        # ONE full-scan probe feeds all three gates (spread, collapse,
-        # small corpus): the collapse gate is a full map-side-combined
-        # aggregate anyway, so the row count and text bytes ride along
-        # (guide §1.2)
-        size = gate.probe(
-            df, (text_col,), distinct=F.xxhash64(_norm(F.col(text_col)))
-        )
-        collapse_exact_dups = size.dup_heavy
-    else:
-        size = gate.probe(df, (text_col,), limit=gate.SMALL_ROWS)
+    # ONE full-scan probe feeds all three gates (spread, collapse,
+    # small corpus): the collapse gate is a full map-side-combined
+    # aggregate anyway, so the row count and text bytes ride along
+    # (guide §1.2)
+    size = gate.probe(
+        df, (text_col,), distinct=F.xxhash64(_norm(F.col(text_col)))
+    )
     df = gate.spread(df, size.rows)
     small = size.small
     # gram hashes via the Arrow batch kernel (bit-identical to the
@@ -1601,7 +1406,7 @@ def ngram_jaccard_pairs(
     # stage — see _word_gram_hashes_udf)
     normed = df.select(F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm"))
     members_map = None
-    if collapse_exact_dups:
+    if size.dup_heavy:
         group_cap = 2048 if (prefix_filter and 0.0 < threshold <= 1.0) else 1024
         groups = _collapse_groups(normed, group_cap)
         within = _within_group_pairs(groups, group_cap)
@@ -1662,9 +1467,7 @@ def ngram_jaccard_pairs(
     if small:
         # the checkpointed gram frame above feeds the index and both
         # broadcast verify sides — one kernel pass total
-        verified = _exact_jaccard_verify(
-            cand, docs, "__grams", threshold, broadcast_verify=True
-        )
+        feats = docs
     else:
         # corpus-scale path (r13): the verify's feature side used to
         # re-run the gram kernel over the ENTIRE corpus — PythonUDF
@@ -1695,9 +1498,23 @@ def ngram_jaccard_pairs(
         feats = feats_src.select(
             "__id", _word_gram_hashes_udf(n)(F.col("__norm")).alias("__grams")
         )
-        verified = _exact_jaccard_verify(
-            cand, feats, "__grams", threshold, broadcast_verify=False
-        )
+    # exact verify; no signature-estimate pre-filter: the estimate
+    # costs about as much as the native array_intersect it would guard,
+    # and its separate join stage measured +30s of per-plan codegen/JIT
+    # overhead while pruning <1% on template-heavy corpora
+    sides = pair_sides(cand, feats, ("__grams",), broadcast=small)
+    ga, gb = F.col("__grams_a"), F.col("__grams_b")
+    # |A ∪ B| = |A| + |B| - |A ∩ B|: the kernel's gram sets are
+    # np.unique'd per doc, so the identity is exact in integers and
+    # ROUND(c/u, 6) is bit-identical to the array_union form — with one
+    # hash-set build per pair instead of two
+    inter = F.size(F.array_intersect(ga, gb))
+    jaccard = inter.cast("double") / (
+        (F.size(ga) + F.size(gb) - inter).cast("double")
+    )
+    verified = sides.select(
+        "id_a", "id_b", F.round(jaccard, 6).alias("jaccard")
+    ).where(F.col("jaccard") >= threshold)
     if members_map is None:
         return verified
     # expand verified GROUP pairs over the member arrays; the group

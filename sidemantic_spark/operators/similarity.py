@@ -182,6 +182,13 @@ def _hyperplane_band_buckets_udf(planes: list[list[float]], bands: int, bits_per
         if len(vs) == 0:
             return pd.Series([], dtype=object)
         V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+        if V.shape[1] != P.shape[0]:
+            # hashing a prefix would silently lose near-dup pairs, and
+            # the caller's byte gate sized each row by ``dim``
+            raise ValueError(
+                f"embeddings have {V.shape[1]} dimensions but dim={P.shape[0]}; "
+                "pass the vectors' length as dim"
+            )
         acc = np.zeros((V.shape[0], P.shape[1]), dtype=np.float64)
         for d in range(P.shape[0]):
             # dimension-ordered accumulation: same rounding as the
@@ -473,7 +480,6 @@ def embedding_near_dup_pairs(
     bits_per_band: int = 4,
     min_cosine: float = 0.95,
     dim: int = 64,
-    broadcast_verify: bool | None = None,
 ) -> DataFrame:
     """Corpus-wide near-duplicate pairs by cosine: banded
     random-hyperplane LSH candidates, exact-cosine verified.
@@ -489,23 +495,25 @@ def embedding_near_dup_pairs(
     MinHash — one shuffle on (band, bucket), capped in-bucket pair
     expansion, verify at full parallelism.
 
-    ``broadcast_verify`` picks the verify strategy (same pattern as the
-    minhash/ngram family): None (auto) resolves by a row-limited probe
-    — an EAGER Spark job at plan-construction time that reads no column
-    (pass an explicit True/False to skip it). When the vector side fits
-    the operators' byte budget (``operators.gate.BUDGET_BYTES``; a row
-    is the id, ``dim`` doubles and the norm, so ~127k rows at dim=64),
-    both vector sides attach with two MAP-ONLY broadcast joins (r12:
-    interleaved noop best 0.99 vs 1.17 s, the verify's explode +
-    id-join + pair-groupBy exchanges drop out of the plan); above it
-    the long-format verify stays — one vector scan, no broadcast
-    assumption, the only 100 TB-safe shape. Both paths compute the
-    identical JVM cosine fold on the identical double arrays, so
-    results are bit-identical (equivalence pinned in tests and proven
-    row-identical in the study of OPTIMIZATION_r12.md §18) — PROVIDED
-    ``id_col`` is unique: with duplicate ids the broadcast path emits
-    one row per duplicate match while the long path's pair-groupBy
-    collapses them.
+    The verify attaches both vector sides with
+    :func:`operators.dedup.pair_sides`, in the form one row-limited
+    probe picks (an EAGER Spark job at plan-construction time that
+    reads no column). When the vector side fits the operators' byte
+    budget (``operators.gate.BUDGET_BYTES``; a row is the id, ``dim``
+    doubles and the norm, so ~127k rows at dim=64), both sides
+    broadcast: two MAP-ONLY joins (r12: interleaved noop best 0.99 vs
+    1.17 s, the verify's explode + id-join + pair-groupBy exchanges
+    drop out of the plan). Above it the long-format verify runs — one
+    vector scan, no broadcast assumption, the only 100 TB-safe shape.
+    Both forms compute the identical JVM cosine fold on the identical
+    double arrays, so results are bit-identical (pinned in tests and
+    proven row-identical in the study of OPTIMIZATION_r12.md §18) —
+    PROVIDED ``id_col`` is unique. Tests reach either form by patching
+    ``gate.BUDGET_BYTES``.
+
+    ``dim`` must be the vectors' length: it sizes the hyperplanes and
+    the byte gate, and the banding kernel raises ``ValueError`` naming
+    both numbers for vectors of any other length.
 
     NOTE (r12 study, do not re-spend): a minhash-style BUCKET-LOCAL
     verify (vectors riding the banding shuffle, in-bucket JVM-cosine
@@ -518,7 +526,7 @@ def embedding_near_dup_pairs(
     oracle replicates (ROUND(x,6) knife-edge risk). See
     OPTIMIZATION_r12.md §17.
     """
-    from sidemantic_spark.operators.dedup import pairs_from_bucket_keys
+    from sidemantic_spark.operators.dedup import pair_sides, pairs_from_bucket_keys
 
     planes = _det_planes(dim, bands * bits_per_band)
     emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -546,56 +554,21 @@ def embedding_near_dup_pairs(
     vecs = df.select(
         F.col(id_col).alias("__id"), emb.alias("__emb")
     ).withColumn("__nrm", _norm(F.col("__emb")))
-    if broadcast_verify is None:
-        # per-row bytes of one broadcast side: id + dim doubles + norm
-        row_bytes = gate.fixed_width(df, id_col) + 8 * dim + 8
-        broadcast_verify = gate.probe(df, row_bytes=row_bytes).fits
-    if broadcast_verify:
-        # small-corpus path: both vector sides broadcast, the verify is
-        # two MAP-ONLY joins — the long-format explode + id-join +
-        # pair-groupBy exchanges drop out of the plan entirely
-        both = cand.join(
-            F.broadcast(
-                vecs.select(
-                    F.col("__id").alias("id_a"),
-                    F.col("__emb").alias("va"),
-                    F.col("__nrm").alias("__na"),
-                )
-            ),
-            "id_a",
-        ).join(
-            F.broadcast(
-                vecs.select(
-                    F.col("__id").alias("id_b"),
-                    F.col("__emb").alias("vb"),
-                    F.col("__nrm").alias("__nb"),
-                )
-            ),
-            "id_b",
-        )
-    else:
-        # long-format verify (one scan of the embedding column, no
-        # broadcast assumption — see minhash_lsh_pairs)
-        long = cand.select(
-            "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("__id")
-        )
-        both = (
-            long.join(vecs, "__id")
-            .groupBy("id_a", "id_b")
-            .agg(
-                F.max(F.when(F.col("__id") == F.col("id_a"), F.col("__emb"))).alias("va"),
-                F.max(F.when(F.col("__id") == F.col("id_b"), F.col("__emb"))).alias("vb"),
-                F.max(F.when(F.col("__id") == F.col("id_a"), F.col("__nrm"))).alias("__na"),
-                F.max(F.when(F.col("__id") == F.col("id_b"), F.col("__nrm"))).alias("__nb"),
-            )
-        )
+    # per-row bytes of one broadcast side: id + dim doubles + norm
+    row_bytes = gate.fixed_width(df, id_col) + 8 * dim + 8
+    both = pair_sides(
+        cand,
+        vecs,
+        ("__emb", "__nrm"),
+        broadcast=gate.probe(df, row_bytes=row_bytes).fits,
+    )
     return (
         both.select(
             "id_a",
             "id_b",
             F.round(
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("__na") * F.col("__nb")),
+                _dot(F.col("__emb_a"), F.col("__emb_b"))
+                / (F.col("__nrm_a") * F.col("__nrm_b")),
                 6,
             ).alias("cosine_sim"),
         )
@@ -612,7 +585,6 @@ def semantic_dedup(
     bits_per_band: int = 4,
     dim: int = 64,
     max_iter: int = 20,
-    broadcast_verify: bool | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): build
     the cosine near-duplicate pair graph over the embedding column,
@@ -635,8 +607,9 @@ def semantic_dedup(
     cluster_id = min id of the vector's semantic cluster (its own id
     when it has no near-duplicates) and keep = (id == cluster_id).
 
-    ``broadcast_verify`` is passed to :func:`embedding_near_dup_pairs`
-    (None = one probe job against ``operators.gate.BUDGET_BYTES``).
+    Each stage picks its own path by its size gate (the verify form of
+    :func:`embedding_near_dup_pairs`, driver-side or distributed
+    ``connected_components``); no argument forces one.
     """
     from sidemantic_spark.operators.dedup import connected_components
 
@@ -648,7 +621,6 @@ def semantic_dedup(
         bits_per_band=bits_per_band,
         min_cosine=min_cosine,
         dim=dim,
-        broadcast_verify=broadcast_verify,
     )
     comps = connected_components(pairs, max_iter=max_iter).withColumnRenamed(
         "doc_id", "__node"

@@ -84,26 +84,6 @@ def test_minhash_on_documents(docs):
         assert 0.2 <= r.jaccard <= 1.0
 
 
-def test_minhash_verify_strategies_agree(docs):
-    """The map-only broadcast verify (small corpora) and the
-    long-format shuffle verify (corpus scale) must emit identical
-    (pair, jaccard) sets."""
-    d = docs.limit(300)
-    bc = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_lsh_pairs(
-            d, jaccard_threshold=0.2, broadcast_verify=True
-        ).collect()
-    }
-    lf = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_lsh_pairs(
-            d, jaccard_threshold=0.2, broadcast_verify=False
-        ).collect()
-    }
-    assert bc == lf and len(bc) > 0
-
-
 def test_bucket_verify_kernel_matches_brute_force(spark):
     """Direct unit test of the r12 vectorized bucket-verify kernel
     (unique+matmul for k<=64 members, searchsorted pair loop above)
@@ -163,13 +143,14 @@ def test_bucket_verify_kernel_matches_brute_force(spark):
     assert res["c"][0].tolist() == []
 
 
-def test_minhash_exact_dup_collapse_matches_uncollapsed(spark):
+def test_minhash_exact_dup_collapse_matches_uncollapsed(spark, monkeypatch):
     """The exact-dup collapse prepass (r12: signatures/banding/verify
     at distinct-content grain, member expansion after verify) must emit
-    EXACTLY the uncollapsed pipeline's (pair, jaccard) rows, on both
-    verify strategies, over a corpus mixing 3-deep identical cliques,
-    cross-clique near-dups, and unique docs."""
-    from pyspark.sql import functions as F
+    EXACTLY the uncollapsed pipeline's (pair, jaccard) rows over a
+    corpus mixing 3-deep identical cliques, cross-clique near-dups, and
+    unique docs. The collapse gate is forced both ways by patching
+    ``gate.Probe.dup_heavy``."""
+    from sidemantic_spark.operators import gate
 
     base = [
         "the quick brown fox jumps over the lazy dog in the yard",
@@ -186,39 +167,37 @@ def test_minhash_exact_dup_collapse_matches_uncollapsed(spark):
             did += 1
     # interleave unique ids so member ids of a clique are NOT contiguous
     df = spark.createDataFrame(rows, ["doc_id", "text"])
+
+    def pairs():
+        return sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.minhash_lsh_pairs(df, jaccard_threshold=0.3).collect()
+        )
+
+    # the auto gate collapses this 67%-dup corpus
+    auto = pairs()
     outs = {}
     for collapse in (True, False):
-        for bc in (True, False):
-            outs[(collapse, bc)] = sorted(
-                (r.id_a, r.id_b, r.jaccard)
-                for r in dedup.minhash_lsh_pairs(
-                    df, jaccard_threshold=0.3,
-                    broadcast_verify=bc, collapse_exact_dups=collapse,
-                ).collect()
-            )
-    ref = outs[(False, True)]
-    assert all(v == ref for v in outs.values())
+        monkeypatch.setattr(gate.Probe, "dup_heavy", property(lambda p, c=collapse: c))
+        outs[collapse] = pairs()
+    ref = outs[False]
+    assert outs[True] == ref and auto == ref
     # identical copies pair at exactly 1.0; cliques of 3 contribute
     # C(3,2)=3 within pairs each
     ones = [p for p in ref if p[2] == 1.0]
     assert len(ones) >= 5 * 3
-    # the auto gate collapses this 67%-dup corpus and agrees too
-    auto = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.minhash_lsh_pairs(
-            df, jaccard_threshold=0.3
-        ).collect()
-    )
-    assert auto == ref
 
 
-def test_ngram_exact_dup_collapse_matches_uncollapsed(spark):
+def test_ngram_exact_dup_collapse_matches_uncollapsed(spark, monkeypatch):
     """Same r12 collapse prepass for the n-gram inverted index: gram
     kernels and posting lists run per distinct content, so 10-deep
     exact-dup cliques can no longer saturate cap-bound posting buckets
     (the documented exactness edge of the prefix-filtered path).
     Output must match the uncollapsed path exactly, with and without
-    the prefix filter."""
+    the prefix filter (collapse forced by patching
+    ``gate.Probe.dup_heavy``)."""
+    from sidemantic_spark.operators import gate
+
     base = [
         "alpha beta gamma delta epsilon zeta eta theta iota kappa",
         "alpha beta gamma delta epsilon zeta eta theta iota lambda",  # near-dup
@@ -231,25 +210,25 @@ def test_ngram_exact_dup_collapse_matches_uncollapsed(spark):
         for j, t in enumerate(base)
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
+
+    def pairs(pf=True):
+        return sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.ngram_jaccard_pairs(
+                df, n=3, threshold=0.5, prefix_filter=pf
+            ).collect()
+        )
+
+    auto = pairs()
     outs = {}
     for collapse in (True, False):
+        monkeypatch.setattr(gate.Probe, "dup_heavy", property(lambda p, c=collapse: c))
         for pf in (True, False):
-            outs[(collapse, pf)] = sorted(
-                (r.id_a, r.id_b, r.jaccard)
-                for r in dedup.ngram_jaccard_pairs(
-                    df, n=3, threshold=0.5,
-                    prefix_filter=pf, collapse_exact_dups=collapse,
-                ).collect()
-            )
+            outs[(collapse, pf)] = pairs(pf)
     ref = outs[(False, True)]
-    assert all(v == ref for v in outs.values())
+    assert all(v == ref for v in outs.values()) and auto == ref
     ones = [p for p in ref if p[2] == 1.0]
     assert len(ones) >= 4 * 6  # C(4,2)=6 within pairs per 4-deep clique
-    auto = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in dedup.ngram_jaccard_pairs(df, n=3, threshold=0.5).collect()
-    )
-    assert auto == ref
 
 
 def test_simhash_near_dups(spark):
@@ -317,6 +296,12 @@ def test_ngram_corpus_path_matches_small_path(docs, monkeypatch):
     small, splan = _ngram_rows_and_plan(frame)
     long_small, _ = _ngram_rows_and_plan(long_frame)
     assert small and long_small and not _is_corpus_path(splan)
+    # small path: the verify is two broadcast joins, and the gram
+    # kernel runs once, inside the checkpoint that the index and both
+    # verify sides read as scans
+    assert splan.count("BroadcastHashJoin") == 2, splan
+    assert "ArrowEvalPython" not in splan, splan
+    assert splan.count("Scan ExistingRDD") == 3, splan
 
     monkeypatch.setattr(gate, "SMALL_ROWS", 10)
     # 300 int64 ids fit; their 256-byte string form does not
@@ -483,6 +468,22 @@ def test_embedding_near_dup_pairs_shape(embs):
     for r in pairs.collect():
         assert r.id_a < r.id_b
         assert r.cosine_sim >= 0.5
+
+
+def test_embedding_near_dup_pairs_rejects_wrong_dim(spark):
+    """Vectors longer than ``dim`` used to be hashed on their first
+    ``dim`` coordinates (near-dup pairs silently lost) and under-counted
+    by the byte gate; the banding kernel now fails naming both numbers."""
+    from pyspark.errors import PythonException
+
+    vecs = spark.range(20).select(
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(1), F.lit(128)), lambda i: (i + F.col("id")).cast("float")
+        ).alias("embedding"),
+    )
+    with pytest.raises(PythonException, match=r"embeddings have 128 dimensions but dim=64"):
+        similarity.embedding_near_dup_pairs(vecs, min_cosine=0.5).collect()
 
 
 def test_multimodal_decode_plumbing(docs):

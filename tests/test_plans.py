@@ -735,16 +735,21 @@ FROM plan_mf_details;
     assert "CROSS JOIN" not in sql
 
 
-def test_minhash_bucket_local_verify_plan_and_adversarial_parity(spark):
-    """Round-10 scale fix (VERDICT r9 ask #1): the corpus-scale minhash
-    verify runs INSIDE the capped buckets — the physical plan must have
-    NO join at all (the pair-grain verify shipped ~30 GB of shingle
-    arrays through a pair groupBy at 500k docs), and on an adversarial
-    64-deep exact-duplicate clique the bucket-local path must return
-    exactly the broadcast path's rows."""
+def test_minhash_bucket_local_verify_plan_and_adversarial_parity(spark, monkeypatch):
+    """Round-10 scale fix (VERDICT r9 ask #1): the minhash verify runs
+    INSIDE the capped buckets — the physical plan must have NO join at
+    all (the pair-grain verify shipped ~30 GB of shingle arrays through
+    a pair groupBy at 500k docs), and on an adversarial 64-deep
+    exact-duplicate clique both the plain and the collapsed path
+    (forced by patching ``gate.Probe.dup_heavy``) must return every
+    pair."""
     from pyspark.sql import functions as F
 
+    from sidemantic_spark.operators import gate
     from sidemantic_spark.operators.dedup import minhash_lsh_pairs
+
+    def force_collapse(flag):
+        monkeypatch.setattr(gate.Probe, "dup_heavy", property(lambda p: flag))
 
     docs = spark.range(320).select(
         F.col("id").alias("doc_id"),
@@ -754,10 +759,9 @@ def test_minhash_bucket_local_verify_plan_and_adversarial_parity(spark):
             (F.col("id") % 5).cast("string"),
         ).alias("text"),
     )
-    plan = minhash_lsh_pairs(
-        docs, jaccard_threshold=0.4, broadcast_verify=False,
-        collapse_exact_dups=False,
-    )._jdf.queryExecution().executedPlan().toString()
+    force_collapse(False)
+    plain = minhash_lsh_pairs(docs, jaccard_threshold=0.4)
+    plan = plain._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan  # no pair-grain or id-grain join
     assert "Window" in plan  # row_number bucket cap
     # Spark 4 rewrites rank<=k into WindowGroupLimit with a PARTIAL
@@ -769,30 +773,25 @@ def test_minhash_bucket_local_verify_plan_and_adversarial_parity(spark):
     # (member arrays ride the banding shuffle; expansion is a map), and
     # the group cap must also be a map-side WindowGroupLimit so a
     # one-text corpus ships a bounded row count per partition
-    cplan = minhash_lsh_pairs(
-        docs, jaccard_threshold=0.4, broadcast_verify=False,
-        collapse_exact_dups=True,
-    )._jdf.queryExecution().executedPlan().toString()
+    force_collapse(True)
+    collapsed = minhash_lsh_pairs(docs, jaccard_threshold=0.4)
+    cplan = collapsed._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in cplan, cplan
     assert cplan.count("WindowGroupLimit") >= 2, cplan
-    # exactly one wide shuffle before the dedup of verified survivors:
-    # the banding exchange (AQE wraps others around the tiny tail)
-    a = sorted(map(tuple, minhash_lsh_pairs(
-        docs, jaccard_threshold=0.4, broadcast_verify=True).collect()))
-    b = sorted(map(tuple, minhash_lsh_pairs(
-        docs, jaccard_threshold=0.4, broadcast_verify=False).collect()))
     # the 5 variants differ by one trailing char, so ALL 320 docs form
     # one near-dup clique: every pair survives, on both paths
-    assert a == b and len(a) == 320 * 319 // 2
+    a = sorted(map(tuple, plain.collect()))
+    b = sorted(map(tuple, collapsed.collect()))
+    assert len(a) == 320 * 319 // 2 and a == b
 
 
 def test_embedding_verify_broadcast_gate_plan_and_parity(spark, monkeypatch):
-    """r12: embedding_near_dup_pairs' auto verify broadcasts both
-    vector sides when the vector side fits the operators' byte budget
-    (two MAP-ONLY joins — the long-format explode + id-join +
-    pair-groupBy exchanges leave the plan); above the budget (or
-    forced) the long-format verify stays. Both paths run the identical
-    JVM cosine fold on the identical arrays, so rows are bit-identical."""
+    """r12: embedding_near_dup_pairs' verify broadcasts both vector
+    sides when the vector side fits the operators' byte budget (two
+    MAP-ONLY joins — the long-format explode + id-join + pair-groupBy
+    exchanges leave the plan); above the budget the long-format verify
+    stays. Both paths run the identical JVM cosine fold on the
+    identical arrays, so rows are bit-identical."""
     from pyspark.sql import functions as F
 
     from sidemantic_spark.operators import gate
@@ -812,37 +811,27 @@ def test_embedding_verify_broadcast_gate_plan_and_parity(spark, monkeypatch):
         ).alias("embedding"),
     )
     kw = dict(min_cosine=0.9, bands=4, bits_per_band=4, dim=64)
-    bplan = (
-        embedding_near_dup_pairs(vecs, broadcast_verify=True, **kw)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    # the gate sizes the vector side at id + 64 doubles + norm = 528
+    # bytes a row: 300 rows fit a budget of exactly 300 * 528 bytes
+    # (broadcast plan) and not one byte less (long plan), same rows
+    rows, plans = {}, {}
+    for budget, broadcast in ((300 * 528, True), (300 * 528 - 1, False)):
+        monkeypatch.setattr(gate, "BUDGET_BYTES", budget)
+        out = embedding_near_dup_pairs(vecs, **kw)
+        plans[broadcast] = out._jdf.queryExecution().executedPlan().toString()
+        rows[broadcast] = sorted(map(tuple, out.collect()))
+    bplan, lplan = plans[True], plans[False]
     # verify = two broadcast joins; no sort-merge/shuffled-hash join
     # and no pair-grain groupBy re-assembly anywhere in the plan
     assert bplan.count("BroadcastHashJoin") == 2, bplan
     assert "SortMergeJoin" not in bplan and "ShuffledHashJoin" not in bplan
-    lplan = (
-        embedding_near_dup_pairs(vecs, broadcast_verify=False, **kw)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    assert "explode(array(id_a" not in bplan, bplan
     # the long path re-assembles pairs with a groupBy — its signature
     # is the explode of the two pair sides feeding an id-keyed join
     # (join strategy itself is AQE's pick at this size)
-    assert "Generate explode" in lplan, lplan
-    a = sorted(map(tuple, embedding_near_dup_pairs(
-        vecs, broadcast_verify=True, **kw).collect()))
-    b = sorted(map(tuple, embedding_near_dup_pairs(
-        vecs, broadcast_verify=False, **kw).collect()))
-    assert a == b and len(a) > 0
-    # auto (None) sizes the vector side at id + 64 doubles + norm =
-    # 528 bytes a row: 300 rows fit a budget of exactly 300 * 528 bytes
-    # (broadcast plan) and not one byte less (long plan), same rows
-    for budget, broadcast in ((300 * 528, True), (300 * 528 - 1, False)):
-        monkeypatch.setattr(gate, "BUDGET_BYTES", budget)
-        auto = embedding_near_dup_pairs(vecs, **kw)
-        aplan = auto._jdf.queryExecution().executedPlan().toString()
-        assert (aplan.count("BroadcastHashJoin") == 2) is broadcast, aplan
-        assert ("explode(array(id_a" in aplan) is not broadcast, aplan
-        assert sorted(map(tuple, auto.collect())) == a
+    assert lplan.count("BroadcastHashJoin") != 2, lplan
+    assert "explode(array(id_a" in lplan, lplan
+    assert rows[True] == rows[False] and len(rows[True]) > 0
     # r13 norm hoist: the per-PAIR verify projection computes exactly
     # one interpreted fold (the dot product) — each vector's norm fold
     # is hoisted to the per-vector side (a vector in k candidate pairs

@@ -1,13 +1,15 @@
 """Every ``scripts/*.py`` path cited by the library, the tests, the bench
 harness, the contract entry module or the README names a file that
-exists, and every library name the scripts and the bench harness use
-exists, so deleting a script or renaming a library name cannot leave a
-dangling reference in code the test suite never runs."""
+exists, and every library name and keyword argument the scripts and the
+bench harness use exists, so deleting a script or renaming a library name
+or parameter cannot leave a dangling reference in code the test suite
+never runs."""
 
 from __future__ import annotations
 
 import ast
 import importlib
+import inspect
 import re
 from pathlib import Path
 
@@ -37,10 +39,9 @@ def test_cited_scripts_exist():
     assert not missing, f"cited scripts that do not exist: {missing}"
 
 
-def _library_references(path: Path) -> set[str]:
-    """Dotted ``sidemantic_spark`` names that ``path`` imports, plus every
-    ``alias.attr`` read through a name bound by one of those imports."""
-    tree = ast.parse(path.read_text(encoding="utf-8"))
+def _imports(tree: ast.AST) -> tuple[set[str], dict[str, str]]:
+    """Dotted ``sidemantic_spark`` names a module imports, and the local
+    names those imports bind."""
     refs: set[str] = set()
     aliases: dict[str, str] = {}
     for node in ast.walk(tree):
@@ -56,17 +57,52 @@ def _library_references(path: Path) -> set[str]:
             for a in node.names:
                 refs.add(f"{node.module}.{a.name}")
                 aliases[a.asname or a.name] = f"{node.module}.{a.name}"
+    return refs, aliases
+
+
+def _dotted(node: ast.AST, aliases: dict[str, str]) -> str | None:
+    """The library name ``node`` reads: an imported name, or
+    ``alias.attr`` through one."""
+    if isinstance(node, ast.Name):
+        return aliases.get(node.id)
+    if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+        if node.value.id in aliases:
+            return f"{aliases[node.value.id]}.{node.attr}"
+    return None
+
+
+def _library_references(path: Path) -> set[str]:
+    """Dotted ``sidemantic_spark`` names that ``path`` imports, plus every
+    ``alias.attr`` read through a name bound by one of those imports."""
+    tree = ast.parse(path.read_text(encoding="utf-8"))
+    refs, aliases = _imports(tree)
     for node in ast.walk(tree):
-        if (
-            isinstance(node, ast.Attribute)
-            and isinstance(node.value, ast.Name)
-            and node.value.id in aliases
-        ):
-            refs.add(f"{aliases[node.value.id]}.{node.attr}")
+        if isinstance(node, ast.Attribute):
+            dotted = _dotted(node, aliases)
+            if dotted:
+                refs.add(dotted)
     return refs
 
 
-def _resolves(dotted: str) -> bool:
+def _library_calls(path: Path) -> list[tuple[str, int, list[str]]]:
+    """(dotted callee, line, keyword names) of every call ``path`` makes
+    to a ``sidemantic_spark`` name; ``**kwargs`` spreads are skipped."""
+    tree = ast.parse(path.read_text(encoding="utf-8"))
+    _, aliases = _imports(tree)
+    calls = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            dotted = _dotted(node.func, aliases)
+            kws = [k.arg for k in node.keywords if k.arg is not None]
+            if dotted and kws:
+                calls.append((dotted, node.lineno, kws))
+    return calls
+
+
+_MISSING = object()
+
+
+def _resolve(dotted: str):
     parts = dotted.split(".")
     obj = importlib.import_module(parts[0])
     for i, part in enumerate(parts[1:], start=2):
@@ -76,17 +112,40 @@ def _resolves(dotted: str) -> bool:
         try:
             obj = importlib.import_module(".".join(parts[:i]))
         except ModuleNotFoundError:
-            return False
-    return True
+            return _MISSING
+    return obj
+
+
+def _script_users() -> list[Path]:
+    return sorted((ROOT / "scripts").glob("*.py")) + [ROOT / "bench.py"]
 
 
 def test_script_library_names_exist():
-    users = sorted((ROOT / "scripts").glob("*.py")) + [ROOT / "bench.py"]
-    refs = {f.name: _library_references(f) for f in users}
+    refs = {f.name: _library_references(f) for f in _script_users()}
     assert any(refs.values()), "no sidemantic_spark reference found: the scan is broken"
     missing = {
-        name: sorted(r for r in found if not _resolves(r))
+        name: sorted(r for r in found if _resolve(r) is _MISSING)
         for name, found in refs.items()
     }
     missing = {name: found for name, found in missing.items() if found}
     assert not missing, f"library names used by scripts that do not exist: {missing}"
+
+
+def test_script_library_keywords_exist():
+    """Every keyword a script or the bench harness passes to a library
+    callable is a parameter of that callable (callables taking
+    ``**kwargs`` accept anything and are skipped)."""
+    checked, bad = 0, []
+    for f in _script_users():
+        for dotted, line, kws in _library_calls(f):
+            obj = _resolve(dotted)
+            try:
+                params = inspect.signature(obj).parameters
+            except (TypeError, ValueError):
+                continue
+            if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+                continue
+            checked += 1
+            bad += [f"{f.name}:{line} {dotted}({k}=)" for k in kws if k not in params]
+    assert checked, "no keyword call to a library callable found: the scan is broken"
+    assert not bad, f"keywords the library callables do not take: {bad}"
