@@ -1540,21 +1540,7 @@ def _fanout_symmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM(DISTINCT key*S + v) - SUM(DISTINCT key*S) with DECIMAL-lifted
     keys (the reference's raw-bigint spark variant can overflow).
     Alternative strategy to the entity-grain dedup plan, same result."""
-    layer = _layer(spark, sf_dir)
-    gen = layer.generator
-    gen.fanout_strategy = "symmetric"
-    try:
-        sql = layer.compile(
-            metrics=["orders.revenue", "orders.order_count"],
-            dimensions=["lineitem.returnflag"],
-        )
-        assert "plan=grouped-symmetric" in sql, sql[:200]
-        return layer.query(
-            metrics=["orders.revenue", "orders.order_count"],
-            dimensions=["lineitem.returnflag"],
-        )
-    finally:
-        gen.fanout_strategy = "auto"
+    return _forced_fanout(spark, sf_dir, "symmetric")
 
 
 def _fanout_dedup_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1562,21 +1548,18 @@ def _fanout_dedup_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     routes here too; the explicit force keeps this entry pinned to the
     dedup plan even if routing changes — raw-row semantics, exact
     decimal sums)."""
+    return _forced_fanout(spark, sf_dir, "dedup")
+
+
+def _forced_fanout(spark: SparkSession, sf_dir: str, strategy: str) -> DataFrame:
+    """orders metrics by a lineitem dimension (a fan-out join), compiled
+    with a per-request ``fanout_strategy``."""
     layer = _layer(spark, sf_dir)
-    gen = layer.generator
-    gen.fanout_strategy = "dedup"
-    try:
-        sql = layer.compile(
-            metrics=["orders.revenue", "orders.order_count"],
-            dimensions=["lineitem.returnflag"],
-        )
-        assert "plan=grouped-dedup" in sql, sql[:200]
-        return layer.query(
-            metrics=["orders.revenue", "orders.order_count"],
-            dimensions=["lineitem.returnflag"],
-        )
-    finally:
-        gen.fanout_strategy = "auto"
+    kw = dict(metrics=["orders.revenue", "orders.order_count"],
+              dimensions=["lineitem.returnflag"], fanout_strategy=strategy)
+    sql = layer.compile(**kw)
+    assert f"plan=grouped-{strategy}" in sql, sql[:200]
+    return layer.query(**kw)
 
 
 def _yardstick_at_modifiers(spark: SparkSession, sf_dir: str) -> DataFrame:

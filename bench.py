@@ -475,18 +475,14 @@ def main() -> None:
         opt = rw.rewrite(rollup_sql)
         assert "bench_daily" in opt, "lifted wrapper must route to the rollup"
         rw.wrapper_rules_enabled = False
-        layer.generator.use_preaggs = False
-        naive = rw.rewrite(rollup_sql)
+        naive = rw.rewrite(rollup_sql, use_preaggs=False)
         rw.wrapper_rules_enabled = True
-        layer.generator.use_preaggs = True
         med(opt, 1), med(naive, 1)
         rewrite_speedups["time_rollup"] = round(ratio(naive, opt), 3)
 
         kw = dict(metrics=["orders.revenue"], dimensions=["orders.status"])
         opt = layer.compile(**kw)
-        layer.generator.use_preaggs = False
-        naive = layer.compile(**kw)
-        layer.generator.use_preaggs = True
+        naive = layer.compile(**kw, use_preaggs=False)
         med(opt, 1), med(naive, 1)
         rewrite_speedups["preagg_route"] = round(ratio(naive, opt), 3)
     except Exception as exc:  # never fail the bench over the extra metric

@@ -166,9 +166,7 @@ def main() -> None:
     kw = dict(metrics=["orders.revenue"], dimensions=["orders.status"])
     opt_sql = layer.compile(**kw)
     assert "used_preagg=" in opt_sql
-    layer.generator.use_preaggs = False
-    naive_sql = layer.compile(**kw)
-    layer.generator.use_preaggs = True
+    naive_sql = layer.compile(**kw, use_preaggs=False)
     opt_rows = sorted(map(tuple, spark.sql(opt_sql).collect()))
     naive_rows = sorted(map(tuple, spark.sql(naive_sql).collect()))
     assert opt_rows == naive_rows, "preagg_route: rows differ"

@@ -214,14 +214,22 @@ class SparkSemanticLayer:
         from sidemantic_spark.core.transport_security import rewrite_transport_sql
 
         self.register_sources()
-        return self.spark.sql(rewrite_transport_sql(self, semantic_sql, user=user))
+        return self._execute(
+            rewrite_transport_sql(self, semantic_sql, user=user),
+            lambda: self.rewrite(semantic_sql, user=user, use_preaggs=False),
+        )
 
-    def rewrite(self, semantic_sql: str, user: dict | None = None) -> str:
+    def rewrite(self, semantic_sql: str, user: dict | None = None,
+                use_preaggs: bool = True, preagg_strict: bool = False,
+                fanout_strategy: str = "auto") -> str:
+        """Semantic SQL text -> Spark SQL under the per-request modes."""
         from sidemantic_spark.sql.rewriter import SemanticSqlRewriter
 
         if not hasattr(self, "_rewriter"):
             self._rewriter = SemanticSqlRewriter(self)
-        return self._rewriter.rewrite(semantic_sql, user=user)
+        return self._rewriter.rewrite(
+            semantic_sql, user=user, use_preaggs=use_preaggs,
+            preagg_strict=preagg_strict, fanout_strategy=fanout_strategy)
 
     def get_catalog_metadata(self, schema: str = "public") -> dict:
         """Postgres information_schema-shaped export of the graph
@@ -294,17 +302,12 @@ class SparkSemanticLayer:
         explore: str | None = None,
         saved_query: str | None = None,
         post_process: str | None = None,
+        use_preaggs: bool = True,
+        preagg_strict: bool = False,
+        fanout_strategy: str = "auto",
     ) -> str:
-        sql, _r = self._compile({
-            "metrics": metrics, "dimensions": dimensions, "filters": filters,
-            "order_by": order_by, "limit": limit, "offset": offset,
-            "ungrouped": ungrouped, "with_totals": with_totals,
-            "segments": segments, "parameters": parameters,
-            "table_calcs": table_calcs, "user": user, "timezone": timezone,
-            "explore": explore, "saved_query": saved_query,
-            "post_process": post_process,
-        })
-        return sql
+        # every parameter above, by name: the signature is the one list
+        return self._compile({k: v for k, v in locals().items() if k != "self"})[0]
 
     def _compile(
         self, kwargs: dict, explain: bool = False
@@ -432,21 +435,35 @@ class SparkSemanticLayer:
         return self._query_uncached(sql, kwargs)
 
     def _query_uncached(self, sql: str, kwargs: dict) -> DataFrame:
+        return self._execute(
+            sql, lambda: self.compile(**{**kwargs, "use_preaggs": False})
+        )
+
+    def _execute(self, sql: str, compile_raw) -> DataFrame:
+        """Run compiled SQL — the one execution path of ``query`` and
+        ``sql``. When it reads a declared pre-aggregation table (rollup
+        or ``original_sql`` staging) that is not built yet, run
+        ``compile_raw()`` instead: the same request compiled with
+        ``use_preaggs=False``. Every other error propagates unchanged."""
+        from pyspark.errors import AnalysisException
+
         try:
-            df = self.spark.sql(sql)
-        except Exception as exc:  # missing rollup/staged table -> raw fallback
-            if "TABLE_OR_VIEW_NOT_FOUND" in str(exc) and (
-                "used_preagg=" in sql or "_preagg_" in str(exc)
+            return self.spark.sql(sql)
+        except AnalysisException as exc:
+            # `name` or `schema`.`name`, as the SQL wrote it
+            rel = (exc.getMessageParameters() or {}).get("relationName", "")
+            # physical_name's format, unvalidated: a model name it rejects
+            # names no table, and must not replace this error; a snapshot,
+            # since the rewriter adds and pops models on other threads
+            if exc.getCondition() != "TABLE_OR_VIEW_NOT_FOUND" or (
+                rel.rsplit(".", 1)[-1].strip("`").lower() not in {
+                    f"{m.name}_preagg_{pa.name}".lower()
+                    for m in list(self.graph.models.values())
+                    for pa in m.pre_aggregations
+                }
             ):
-                old = self.generator.use_preaggs
-                self.generator.use_preaggs = False
-                try:
-                    df = self.spark.sql(self.compile(**kwargs))
-                finally:
-                    self.generator.use_preaggs = old
-            else:
                 raise
-        return df
+        return self.spark.sql(compile_raw())
 
     def _cache_get(self, key: str, count: bool = True):
         import time as _time
@@ -663,7 +680,7 @@ class SparkSemanticLayer:
                         "symmetric": "symmetric_aggregates",
                         "dedup": "entity_grain_dedup",
                         "auto": "auto_entity_grain_dedup",
-                    }[self.generator.fanout_strategy] if fanout_hops else None
+                    }[r.spec.fanout_strategy] if fanout_hops else None
                 ),
             },
             "filters": {

@@ -170,17 +170,15 @@ class PreAggManager:
             # bucket metadata (wrong joins under bucket-based Exchange
             # elimination) — rematerialize through the bucketed writer
             return self.materialize(model_name, preagg_name) and None
-        spark = self.layer.spark
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            inner = self.rollup_sql(model, pa)
-            df = spark.sql(
-                f"SELECT * FROM (\n{inner}\n) WHERE __part >= CAST({since_sql} AS DATE)"
-            )
-            df.write.mode("overwrite").partitionBy("__part").parquet(self.path_for(model, pa))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+        inner = self.rollup_sql(model, pa)
+        df = self.layer.spark.sql(
+            f"SELECT * FROM (\n{inner}\n) WHERE __part >= CAST({since_sql} AS DATE)"
+        )
+        # a writer option, not the session conf: a concurrent overwrite
+        # elsewhere keeps its own (static) mode
+        df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("__part").parquet(self.path_for(model, pa))
         self.register_one(model, pa)
 
 

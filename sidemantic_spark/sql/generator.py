@@ -93,6 +93,40 @@ class QuerySpec:
     # theirs is selected, and joined INNER so the reference's
     # join-existence semantics hold (ref test_sql_rewriter.py:296)
     inner_models: list[str] = field(default_factory=list)
+    use_preaggs: bool = True  # route to a matching pre-aggregation
+    preagg_strict: bool = False  # raise when no pre-aggregation serves
+    # fan-out plan (reference preference hierarchy, sql/generator.py:
+    # 3056-3390): "symmetric" forces symmetric aggregates
+    # (core/symmetric_aggregate.py:20, spark :91-96); "dedup" forces the
+    # entity-grain DISTINCT plan (raw-row semantics, exact decimal sums);
+    # "auto" picks the DISTINCT plan too (why: _grouped_sql)
+    fanout_strategy: str = "auto"
+
+    def __post_init__(self) -> None:
+        if self.fanout_strategy not in FANOUT_STRATEGIES:
+            raise ValueError(f"unknown fanout_strategy {self.fanout_strategy!r}"
+                             f"; expected one of {FANOUT_STRATEGIES}")
+
+    def sub(self, **shape) -> "QuerySpec":
+        """A sub-query of this request: ``shape`` plus REQUEST_FIELDS."""
+        return QuerySpec(**{f: getattr(self, f) for f in REQUEST_FIELDS}, **shape)
+
+
+FANOUT_STRATEGIES = ("auto", "symmetric", "dedup")
+# the fields every sub-query of a request inherits (security namespace,
+# time zone and the per-request modes), as opposed to its shape
+REQUEST_FIELDS = (
+    "user", "timezone", "use_preaggs", "preagg_strict", "fanout_strategy",
+)
+
+
+def _key_part(value):
+    # hashable cache-key part: lists -> tuples, dicts -> sorted JSON
+    if isinstance(value, list):
+        return tuple(value)
+    if isinstance(value, dict):
+        return json.dumps(value, sort_keys=True, default=str)
+    return value
 
 
 _AS_RE = re.compile(r"^(.*?)\s+[Aa][Ss]\s+([A-Za-z_][A-Za-z0-9_]*)\s*$")
@@ -165,27 +199,12 @@ class SqlGenerator:
     def __init__(self, graph: SemanticGraph) -> None:
         self.graph = graph
         self._cache = CompileCache()
-        self.use_preaggs = True
-        self.preagg_strict = False
         # reject hidden (``public: false``) fields on every compile: the
         # refs the caller wrote (checked in generate(), cache hits
         # included) and the fields the pre-passes auto-include (hidden
         # segments, default time dimensions). The owning layer's
         # ``enforce_visibility`` is a view of this flag.
         self.enforce_visibility = True
-        # fan-out strategy (reference preference hierarchy,
-        # sql/generator.py:3056-3390):
-        #   "auto"      — symmetric aggregates whenever every metric
-        #                 decomposes to a symmetric form (narrow
-        #                 (dims, symkey+value) rows ride the shuffle),
-        #                 falling back to the entity-grain DISTINCT plan
-        #                 (which shuffles the full (pk, dims, raws) row
-        #                 width — correct but the weakest shape at 100x)
-        #   "symmetric" — force symmetric aggregates
-        #                 (core/symmetric_aggregate.py:20, spark :91-96)
-        #   "dedup"     — force the entity-grain DISTINCT plan
-        #                 (raw-row semantics, exact decimal sums)
-        self.fanout_strategy = "auto"
         # escape hatch (reference semantic_layer.py allow_non_additive_
         # unsafe; tests/metrics/test_non_additive_guard.py:163): skip
         # the semi-additive rewrite and aggregate naively over every
@@ -249,9 +268,6 @@ class SqlGenerator:
         test_sql_rewrite_cache_isolated_by_visibility_state)."""
         return (
             self.graph.generation,
-            self.use_preaggs,
-            self.preagg_strict,
-            self.fanout_strategy,
             self.allow_non_additive_unsafe,
             self.enforce_visibility,
         )
@@ -265,23 +281,9 @@ class SqlGenerator:
         self.graph.generation = generation
 
     def _cache_key(self, spec: QuerySpec):
-        return self.state_key() + (
-            tuple(spec.metrics),
-            tuple(spec.dimensions),
-            tuple(spec.filters),
-            tuple(spec.order_by),
-            spec.limit,
-            spec.offset,
-            spec.ungrouped,
-            spec.with_totals,
-            tuple(spec.segments),
-            tuple(spec.inner_models),
-            # JSON-canonicalized: parameter/user values may be
-            # lists/objects, which are unhashable inside a key tuple
-            json.dumps(spec.parameters, sort_keys=True, default=str),
-            None if spec.user is None
-            else json.dumps(spec.user, sort_keys=True, default=str),
-            spec.timezone,
+        # every spec field, so a new field can never be left out
+        return self.state_key() + tuple(
+            _key_part(getattr(spec, f.name)) for f in dataclasses.fields(spec)
         )
 
     def _check_visibility(self, spec: QuerySpec) -> None:
@@ -367,13 +369,13 @@ class SqlGenerator:
         if len(metric_models) > 1:
             return self._multifact_sql(r, metric_models)
 
-        if self.use_preaggs:
+        if r.spec.use_preaggs:
             from sidemantic_spark.preagg.router import try_route
 
             routed = try_route(self, r)
             if routed is not None:
                 return routed
-            if self.preagg_strict:
+            if r.spec.preagg_strict:
                 raise QueryCompileError(
                     "preagg_strict: no pre-aggregation can serve this query"
                 )
@@ -1364,7 +1366,7 @@ class SqlGenerator:
         source = model.table or (f"({model.sql})" if model.sql else None)
         if source is None and model.source_uri:
             source = model.name  # registered as a temp view by layer.register_sources
-        if self.use_preaggs:
+        if r.spec.use_preaggs:
             # an original_sql pre-aggregation stages the model's base
             # query as a physical table (ref core/pre_aggregation.py:162);
             # scan it instead of re-running the derived SQL — the layer's
@@ -1684,8 +1686,7 @@ class SqlGenerator:
                     "complete_sql)"
                 )
         if (unsafe or complete_fanout) and r.metrics:
-            strategy = self.fanout_strategy
-            if strategy == "symmetric" and not complete_fanout:
+            if r.spec.fanout_strategy == "symmetric" and not complete_fanout:
                 return self._symmetric_grouped_sql(r)
             # auto prefers the entity-grain DISTINCT plan: Spark executes
             # multiple DISTINCT aggregates (symmetric needs >=2 per sum
@@ -1695,8 +1696,9 @@ class SqlGenerator:
             # than the single DISTINCT-(pk, dims, raws) shuffle it is
             # meant to avoid — measured 3x slower cold at sf0.1
             # (5.5s vs 1.8s, local[8]) with `Expand` in the plan.
-            # Symmetric stays forceable (fanout_strategy='symmetric') for
-            # engines/queries where a pre-dedup stage is the bottleneck.
+            # Symmetric stays forceable per request (fanout_strategy=
+            # 'symmetric') for engines/queries where a pre-dedup stage is
+            # the bottleneck.
             return self._dedup_grouped_sql(r)
         return self._plain_grouped_sql(r)
 
@@ -2417,7 +2419,7 @@ class SqlGenerator:
                     m in reachable for m, _f, _g in find_refs(f, known)
                 )
             ]
-            sub = QuerySpec(
+            sub = r.spec.sub(
                 metrics=fact_metrics,
                 dimensions=dim_refs,
                 filters=fact_filters,
@@ -2660,7 +2662,7 @@ class SqlGenerator:
             f"{rd.model}.{rd.name}" + (f"__{rd.grain}" if rd.grain else "") + f" AS {rd.out}"
             for rd in r.dims
         ]
-        inner_spec = QuerySpec(
+        inner_spec = r.spec.sub(
             metrics=inner_metric_refs,
             dimensions=inner_dim_refs,
             filters=list(r.spec.filters),

@@ -17,6 +17,7 @@ should go straight to ``spark.sql``.
 
 from __future__ import annotations
 
+import dataclasses
 import re
 from dataclasses import dataclass, field
 
@@ -26,6 +27,7 @@ from sidemantic_spark.sql.generator import (
     CompileCache,
     QueryCompileError,
     QuerySpec,
+    _key_part,
 )
 
 _CLAUSES = ["WHERE", "GROUP BY", "HAVING", "QUALIFY", "ORDER BY", "LIMIT", "OFFSET"]
@@ -379,12 +381,12 @@ class SemanticSqlRewriter:
         # the naive island-only rewrite (wrapper executed verbatim), the
         # baseline the reference's planner benchmark compares against
         self.wrapper_rules_enabled = True
-        # security namespace threaded into every compiled QuerySpec so
-        # transport SQL (pgwire/HTTP/MCP) gets the same row policies as
-        # the structured query API (ref tests/test_mcp_security.py)
-        self._user: dict | None = None
+        # the request's user and modes, stamped onto every
+        # compiled QuerySpec so transport SQL (pgwire/HTTP/MCP) gets the
+        # row policies of the structured API (ref tests/test_mcp_security.py)
+        self._request: dict = {}
         # one compile at a time: the threaded HTTP/pgwire servers share
-        # this rewriter, and _user is per-compile state — without the
+        # this rewriter, and _request is per-compile state — without the
         # lock, thread B's user could be stamped onto thread A's spec
         # (cross-user row scoping) and cached under A's key forever
         import threading
@@ -402,20 +404,19 @@ class SemanticSqlRewriter:
 
     # -- public -------------------------------------------------------
 
-    def rewrite(self, sql: str, user: dict | None = None) -> str:
-        """Semantic SQL text -> executable Spark SQL."""
-        import json as _json
-
-        # JSON-canonicalized: user attribute values may be lists/objects
-        # (unhashable as tuples); None stays distinct from {}
-        user_key = (
-            None if user is None
-            else _json.dumps(user, sort_keys=True, default=str)
-        )
+    def rewrite(self, sql: str, user: dict | None = None,
+                use_preaggs: bool = True, preagg_strict: bool = False,
+                fanout_strategy: str = "auto") -> str:
+        """Semantic SQL text -> executable Spark SQL, every semantic
+        island compiled with ``user`` and the per-request modes."""
+        request = dict(user=user, use_preaggs=use_preaggs,
+                       preagg_strict=preagg_strict, fanout_strategy=fanout_strategy)
+        QuerySpec(**request)  # raises on an unknown fanout_strategy
         gen = self.layer.generator
         with self._compile_lock:
-            key = gen.state_key() + (self.wrapper_rules_enabled, user_key, sql)
-            self._user = user
+            key = gen.state_key() + (self.wrapper_rules_enabled, sql,
+                                     *map(_key_part, request.values()))
+            self._request = request
             self._eph_gen_bumps = 0
             gen0 = self.layer.graph.generation
             try:
@@ -441,7 +442,7 @@ class SemanticSqlRewriter:
                 ))
                 return out
             finally:
-                self._user = None
+                self._request = {}
                 if self._ephemeral_models:
                     for name in self._ephemeral_models:
                         self.layer.graph.models.pop(name, None)
@@ -544,10 +545,9 @@ class SemanticSqlRewriter:
     # -- internals ----------------------------------------------------
 
     def _generate(self, spec):
-        # stamp the transport user onto every compiled spec so access
-        # checks and row policies fire identically to layer.query(user=)
-        spec.user = self._user
-        return self.layer.generator.generate(spec)
+        # stamp the request onto every compiled spec so access checks,
+        # row policies and modes apply exactly as in layer.query(...)
+        return self.layer.generator.generate(dataclasses.replace(spec, **self._request))
 
 
     def _rewrite_node(self, sql: str) -> str:

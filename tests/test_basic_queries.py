@@ -734,14 +734,10 @@ def test_with_totals_on_fanout_and_multifact_plans(layer, spark):
     assert abs(float(tot["revenue"]) - sum(float(r["revenue"]) for r in det)) < 1e-6
 
     # symmetric plan
-    layer.generator.fanout_strategy = "symmetric"
-    try:
-        rows = layer.query(
-            metrics=["customer.customer_count"],
-            dimensions=["orders.status"], with_totals=True).collect()
-        assert sum(1 for r in rows if r["_is_total"]) == 1
-    finally:
-        layer.generator.fanout_strategy = "auto"
+    rows = layer.query(
+        metrics=["customer.customer_count"], dimensions=["orders.status"],
+        with_totals=True, fanout_strategy="symmetric").collect()
+    assert sum(1 for r in rows if r["_is_total"]) == 1
 
 
 def test_or_group_parens_preserved_in_pushdown(layer, duck):

@@ -224,11 +224,8 @@ def test_fanout_strategies_agree(fuzz_layer, ms, ds):
     side)."""
     results = {}
     for strat in ("auto", "dedup", "symmetric"):
-        fuzz_layer.generator.fanout_strategy = strat
-        try:
-            rows = fuzz_layer.query(metrics=ms, dimensions=ds).collect()
-        finally:
-            fuzz_layer.generator.fanout_strategy = "auto"
+        rows = fuzz_layer.query(
+            metrics=ms, dimensions=ds, fanout_strategy=strat).collect()
         canon = sorted(
             (tuple(round(float(v), 6) if isinstance(v, (int, float)) or
                    hasattr(v, "quantize") else v for v in r) for r in rows),

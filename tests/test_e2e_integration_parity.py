@@ -328,7 +328,7 @@ def test_preagg_sql_generation(e2e_db, tmp_path):
     """ref :829 — with preaggs enabled the compiled SQL references the
     rollup's physical name. (Divergence noted loud: the reference
     defaults use_preaggregations=False and flips it on per layer; this
-    repo routes by default and exposes generator.use_preaggs as the
+    repo routes by default and takes use_preaggs=False per call as the
     off-switch — same control, inverted default, covered by the next
     test.)"""
     from sidemantic_spark.preagg.matcher import PreAggregation
@@ -375,9 +375,9 @@ def test_preagg_routing_disabled(e2e_db):
             )
         ],
     ))
-    layer.generator.use_preaggs = False
     sql = layer.compile(
-        metrics=["orders.revenue"], dimensions=["orders.status"]
+        metrics=["orders.revenue"], dimensions=["orders.status"],
+        use_preaggs=False,
     )
     assert "orders_preagg_" not in sql
     assert "orders_cte" in sql

@@ -871,8 +871,10 @@ def test_sql_path_enforces_visibility_and_cache_isolation(spark, sf_dir):
     finally:
         met.public = True
 
-    # every other generator flag in the cache key: after a flip, the
-    # same text must not return the SQL cached before the flip
+    # every per-request mode and generator flag in the cache keys: after
+    # a flip, the same request must not return the SQL cached before it,
+    # on the compile path and on the rewrite path; flipping back must
+    # not return the flipped SQL either
     from sidemantic_spark.preagg.matcher import PreAggregation
     from sidemantic_spark.sql.generator import QueryCompileError
 
@@ -882,23 +884,35 @@ def test_sql_path_enforces_visibility_and_cache_isolation(spark, sf_dir):
     )]
     vlayer.graph._invalidate()
     routed = "SELECT orders.status, orders.revenue FROM orders"
+    routed_kw = dict(metrics=["orders.revenue"], dimensions=["orders.status"])
     assert "used_preagg=" in vlayer.rewrite(routed)
-    gen.use_preaggs = False
-    assert "used_preagg=" not in vlayer.rewrite(routed)
-    gen.use_preaggs = True
+    assert "used_preagg=" in vlayer.compile(**routed_kw)
+    assert "used_preagg=" not in vlayer.rewrite(routed, use_preaggs=False)
+    assert "used_preagg=" not in vlayer.compile(**routed_kw, use_preaggs=False)
+    assert "used_preagg=" in vlayer.rewrite(routed)
+    assert "used_preagg=" in vlayer.compile(**routed_kw)
 
     unroutable = "SELECT orders.priority, orders.revenue FROM orders"
+    unroutable_kw = dict(
+        metrics=["orders.revenue"], dimensions=["orders.priority"])
     assert vlayer.rewrite(unroutable)
-    gen.preagg_strict = True
+    assert vlayer.compile(**unroutable_kw)
     with pytest.raises(QueryCompileError, match="preagg_strict"):
-        vlayer.rewrite(unroutable)
-    gen.preagg_strict = False
+        vlayer.rewrite(unroutable, preagg_strict=True)
+    with pytest.raises(QueryCompileError, match="preagg_strict"):
+        vlayer.compile(**unroutable_kw, preagg_strict=True)
 
     fanout = "SELECT lineitem.returnflag, orders.revenue FROM orders"
+    fanout_kw = dict(
+        metrics=["orders.revenue"], dimensions=["lineitem.returnflag"])
     assert "plan=grouped-dedup" in vlayer.rewrite(fanout)
-    gen.fanout_strategy = "symmetric"
-    assert "plan=grouped-symmetric" in vlayer.rewrite(fanout)
-    gen.fanout_strategy = "auto"
+    assert "plan=grouped-dedup" in vlayer.compile(**fanout_kw)
+    assert "plan=grouped-symmetric" in vlayer.rewrite(
+        fanout, fanout_strategy="symmetric")
+    assert "plan=grouped-symmetric" in vlayer.compile(
+        **fanout_kw, fanout_strategy="symmetric")
+    assert "plan=grouped-dedup" in vlayer.rewrite(fanout)
+    assert "plan=grouped-dedup" in vlayer.compile(**fanout_kw)
 
     snapshot = "SELECT lineitem.last_qty_per_part FROM lineitem"
     assert "plan=semi-additive" in vlayer.rewrite(snapshot)

@@ -104,26 +104,23 @@ def test_fanout_dedup_sum(layer, duck):
     # measured 3x slower cold at sf0.1 — see generator routing comment)
     assert "plan=grouped-dedup" in sql
     # the symmetric plan stays reachable and equivalent
-    gen = layer.generator
-    gen.fanout_strategy = "symmetric"
-    try:
-        sql2 = layer.compile(
-            metrics=["orders.revenue"], dimensions=["lineitem.returnflag"]
-        )
-        assert "plan=grouped-symmetric" in sql2
-        df2 = layer.query(
-            metrics=["orders.revenue", "orders.order_count"],
-            dimensions=["lineitem.returnflag"],
-        )
-        assert sorted(
-            (r["returnflag"], float(r["revenue"]), r["order_count"])
-            for r in df2.collect()
-        ) == sorted(
-            (r["returnflag"], float(r["revenue"]), r["order_count"])
-            for r in df.collect()
-        )
-    finally:
-        gen.fanout_strategy = "auto"
+    sql2 = layer.compile(
+        metrics=["orders.revenue"], dimensions=["lineitem.returnflag"],
+        fanout_strategy="symmetric",
+    )
+    assert "plan=grouped-symmetric" in sql2
+    df2 = layer.query(
+        metrics=["orders.revenue", "orders.order_count"],
+        dimensions=["lineitem.returnflag"],
+        fanout_strategy="symmetric",
+    )
+    assert sorted(
+        (r["returnflag"], float(r["revenue"]), r["order_count"])
+        for r in df2.collect()
+    ) == sorted(
+        (r["returnflag"], float(r["revenue"]), r["order_count"])
+        for r in df.collect()
+    )
 
 
 def test_fanout_dedup_filtered_metric_with_same_dim(layer, duck):
@@ -250,26 +247,19 @@ def test_symmetric_aggregates_match_dedup_plan(layer, duck):
     SUM(DISTINCT hash(pk)*S) recovers the fan-out-safe sum/count/avg
     (ref core/symmetric_aggregate.py:20-162; DECIMAL(38,6)-lifted keys
     instead of the reference's overflow-prone bigint spark branch)."""
-    gen = layer.generator
-    gen.fanout_strategy = "symmetric"
-    try:
-        sql = layer.compile(
-            metrics=["orders.revenue", "orders.order_count", "orders.avg_order_value"],
-            dimensions=["orders.status"],
-            filters=["lineitem.ship_date IS NOT NULL"],
-        )
-        assert "plan=grouped-symmetric" in sql
-        assert "SUM(DISTINCT __symkey" in sql
-        rows = {
-            r["status"]: (float(r["revenue"]), r["order_count"], float(r["avg_order_value"]))
-            for r in layer.query(
-                metrics=["orders.revenue", "orders.order_count", "orders.avg_order_value"],
-                dimensions=["orders.status"],
-                filters=["lineitem.ship_date IS NOT NULL"],
-            ).collect()
-        }
-    finally:
-        gen.fanout_strategy = "auto"
+    kw = dict(
+        metrics=["orders.revenue", "orders.order_count", "orders.avg_order_value"],
+        dimensions=["orders.status"],
+        filters=["lineitem.ship_date IS NOT NULL"],
+        fanout_strategy="symmetric",
+    )
+    sql = layer.compile(**kw)
+    assert "plan=grouped-symmetric" in sql
+    assert "SUM(DISTINCT __symkey" in sql
+    rows = {
+        r["status"]: (float(r["revenue"]), r["order_count"], float(r["avg_order_value"]))
+        for r in layer.query(**kw).collect()
+    }
     expected = {
         s: (float(rev), cnt, float(avg))
         for s, rev, cnt, avg in duck.execute("""
@@ -321,24 +311,19 @@ def test_symmetric_aggregates_outer_join_misses(spark):
             Metric(name="cnt", agg="count"),
         ],
     ))
-    lay.generator.fanout_strategy = "symmetric"
-    try:
-        sql = lay.compile(
-            metrics=["sy_ords.total", "sy_ords.cnt"],
-            dimensions=["sy_items.flag"],
-        )
-        assert "plan=grouped-symmetric" in sql
-        assert "COUNT(DISTINCT __symkey)" in sql
-        assert "COALESCE(SUM(DISTINCT __symkey" in sql
-        rows = {
-            r["flag"]: (int(r["total"]), r["cnt"])
-            for r in lay.query(
-                metrics=["sy_ords.total", "sy_ords.cnt"],
-                dimensions=["sy_items.flag"],
-            ).collect()
-        }
-    finally:
-        lay.generator.fanout_strategy = "auto"
+    kw = dict(
+        metrics=["sy_ords.total", "sy_ords.cnt"],
+        dimensions=["sy_items.flag"],
+        fanout_strategy="symmetric",
+    )
+    sql = lay.compile(**kw)
+    assert "plan=grouped-symmetric" in sql
+    assert "COUNT(DISTINCT __symkey)" in sql
+    assert "COALESCE(SUM(DISTINCT __symkey" in sql
+    rows = {
+        r["flag"]: (int(r["total"]), r["cnt"])
+        for r in lay.query(**kw).collect()
+    }
     # A: orders 10 (duplicated by items 1+2) and 11, one miss (98)
     # B, C: only misses — the all-miss group is 0/0, not NULL
     assert rows == {"A": (150, 2), "B": (0, 0), "C": (0, 0)}

@@ -343,12 +343,11 @@ def test_preagg_partition_pruning(spark, sf_dir, tmp_path):
     assert pf, plan
     assert "__part" in pf[0]
     # and values still match the unrouted query
-    layer.generator.use_preaggs = False
     base = {(r[0], round(float(r[1]), 2)) for r in layer.query(
         metrics=["orders.revenue"], dimensions=["orders.status"],
         filters=["orders.order_date >= TIMESTAMP '1997-06-01'"],
+        use_preaggs=False,
     ).collect()}
-    layer.generator.use_preaggs = True
     routed = {(r[0], round(float(r[1]), 2)) for r in df.collect()}
     assert routed == base
 

@@ -103,12 +103,10 @@ def test_wrapped_month_query_switches_to_rollup_table(layer, duck):
     assert "orders_preagg_daily" in opt
     rw = layer._rewriter
     rw.wrapper_rules_enabled = False
-    layer.generator.use_preaggs = False
     try:
-        naive = rw.rewrite(rollup_sql)
+        naive = rw.rewrite(rollup_sql, use_preaggs=False)
     finally:
         rw.wrapper_rules_enabled = True
-        layer.generator.use_preaggs = True
     assert "orders_preagg_daily" not in naive
     # both plans must return the same answer as the raw-table oracle
     for sql in (opt, naive):
@@ -205,12 +203,9 @@ def test_uncovered_dimension_falls_back(layer):
 
 
 def test_strict_mode(layer):
-    layer.generator.preagg_strict = True
-    try:
-        with pytest.raises(QueryCompileError, match="preagg_strict"):
-            layer.compile(metrics=["orders.max_order_value"], dimensions=["orders.status"])
-    finally:
-        layer.generator.preagg_strict = False
+    with pytest.raises(QueryCompileError, match="preagg_strict"):
+        layer.compile(metrics=["orders.max_order_value"],
+                      dimensions=["orders.status"], preagg_strict=True)
 
 
 def test_ratio_metric_from_rollup(layer, duck):
@@ -671,9 +666,7 @@ def test_time_filter_finer_than_rollup_grain_not_routed(spark, sf_dir, tmp_path)
     )
     assert "used_preagg" in layer.compile(**kw2)
     routed = layer.query(**kw2).collect()[0][0]
-    layer.generator.use_preaggs = False
-    raw = layer.query(**kw2).collect()[0][0]
-    layer.generator.use_preaggs = True
+    raw = layer.query(**kw2, use_preaggs=False).collect()[0][0]
     assert routed == raw
     # coarser explicit grain (year) routes too
     assert "used_preagg" in layer.compile(
@@ -853,11 +846,7 @@ def test_ungrouped_routes_to_pk_carrying_rollup(detail_layer):
     assert "HAVING" not in sql.upper()
     assert "SUM(revenue__sum)" not in sql  # raw column, not re-aggregated
     routed = [tuple(r) for r in detail_layer.spark.sql(sql).collect()]
-    detail_layer.generator.use_preaggs = False
-    try:
-        raw = [tuple(r) for r in detail_layer.query(**kw).collect()]
-    finally:
-        detail_layer.generator.use_preaggs = True
+    raw = [tuple(r) for r in detail_layer.query(**kw, use_preaggs=False).collect()]
     assert [(r[0], r[1], float(r[2])) for r in routed] == \
            [(r[0], r[1], float(r[2])) for r in raw]
 
@@ -1002,32 +991,26 @@ def test_ungrouped_strict_without_pk_rollup_raises(detail_layer):
     model = detail_layer.graph.get_model("ug_orders")
     pas = model.pre_aggregations
     model.pre_aggregations = [pa for pa in pas if pa.name == "by_status"]
-    detail_layer.generator.preagg_strict = True
     try:
         with _pytest.raises(QueryCompileError, match="preagg_strict"):
             detail_layer.compile(
                 metrics=["ug_orders.revenue"],
                 dimensions=["ug_orders.order_id", "ug_orders.status"],
-                ungrouped=True,
+                ungrouped=True, preagg_strict=True,
             )
     finally:
-        detail_layer.generator.preagg_strict = False
         model.pre_aggregations = pas
 
 
 def test_ungrouped_metrics_raw_values_match_oracle(layer, duck):
     """Generator-level: ungrouped + metrics selects per-row raw values
     (reference sql/generator.py:3869-3872), verified against DuckDB."""
-    layer.generator.use_preaggs = False
-    try:
-        df = layer.query(
-            metrics=["orders.revenue", "orders.order_count"],
-            dimensions=["orders.status"],
-            filters=["orders.status = 'P'"],
-            ungrouped=True,
-        )
-    finally:
-        layer.generator.use_preaggs = True
+    df = layer.query(
+        metrics=["orders.revenue", "orders.order_count"],
+        dimensions=["orders.status"],
+        filters=["orders.status = 'P'"],
+        ungrouped=True, use_preaggs=False,
+    )
     assert_df_matches_oracle(
         df,
         duck,
@@ -1412,11 +1395,8 @@ def test_preagg_routing_identity_fuzz(layer, spark):
         kwargs = dict(metrics=ms, dimensions=ds,
                       filters=[f] if f else [])
         routed = sorted(map(tuple, layer.query(**kwargs).collect()), key=repr)
-        layer.generator.use_preaggs = False
-        try:
-            raw = sorted(map(tuple, layer.query(**kwargs).collect()), key=repr)
-        finally:
-            layer.generator.use_preaggs = True
+        raw = sorted(map(tuple, layer.query(
+            **kwargs, use_preaggs=False).collect()), key=repr)
         assert routed == raw, (ms, ds, f)
 
     check()
@@ -1443,16 +1423,12 @@ def test_preagg_same_dim_two_grains(spark, sf_dir):
         metrics=["orders.revenue"],
         dimensions=["orders.order_date__month", "orders.order_date__year"],
     )
-    layer.generator.use_preaggs = True
     sql = layer.compile(**kwargs)
     assert "used_preagg" in sql.splitlines()[0]
     assert "DATE_TRUNC('month'" in sql and "DATE_TRUNC('year'" in sql
     routed = sorted(map(tuple, layer.query(**kwargs).collect()), key=repr)
-    layer.generator.use_preaggs = False
-    try:
-        raw = sorted(map(tuple, layer.query(**kwargs).collect()), key=repr)
-    finally:
-        layer.generator.use_preaggs = True
+    raw = sorted(map(tuple, layer.query(
+        **kwargs, use_preaggs=False).collect()), key=repr)
     assert routed == raw
 
 
