@@ -16,9 +16,10 @@ import os
 
 import yaml
 
-from sidemantic_spark.adapters.base import BaseAdapter
+from sidemantic_spark.adapters.base import BaseAdapter, inverse
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
 
+# AtScale calculation_method / data_type -> ours; exports use the first listed
 _CALC_MAP = {
     "sum": "sum",
     "count": "count",
@@ -54,9 +55,9 @@ _SQL_WORDS = {
 }
 
 _DTYPE_MAP = {
-    "int": "numeric", "bigint": "numeric", "integer": "numeric",
-    "float": "numeric", "double": "numeric",
-    "date": "time", "datetime": "time", "timestamp": "time",
+    "double": "numeric", "int": "numeric", "bigint": "numeric",
+    "integer": "numeric", "float": "numeric",
+    "datetime": "time", "date": "time", "timestamp": "time",
     "boolean": "boolean", "bool": "boolean",
 }
 
@@ -333,14 +334,8 @@ class AtScaleAdapter(BaseAdapter):
 # export (reference adapters/atscale_sml.py export contract)
 # ----------------------------------------------------------------------
 
-_CALC_OUT = {
-    "sum": "sum", "count": "count", "count_distinct": "count distinct",
-    "avg": "average", "min": "min", "max": "max", "median": "median",
-    "stddev": "stddev", "stddev_pop": "stddev_pop",
-    "variance": "var_samp", "variance_pop": "var_pop",
-}
-_DTYPE_OUT = {"numeric": "double", "time": "datetime",
-              "boolean": "boolean", "categorical": "string"}
+_CALC_OUT = inverse(_CALC_MAP)
+_DTYPE_OUT = inverse(_DTYPE_MAP)
 
 
 def export_atscale(graph) -> list[dict]:

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import re
 
-import yaml
+from sidemantic_spark.core.model import Metric
 
 
 class AdapterError(Exception):
@@ -22,7 +22,9 @@ class BaseAdapter:
 
         with open(path) as fh:
             text = fh.read()
-        docs = [d for d in yaml_safe_load_all(text) if d]
+        self.parse_docs(layer, [d for d in yaml_safe_load_all(text) if d])
+
+    def parse_docs(self, layer, docs: list[dict]) -> None:
         for doc in docs:
             self.parse(layer, doc)
 
@@ -53,6 +55,7 @@ def strip_cube_placeholders(sql: str | None, cube_name: str) -> str | None:
     return out
 
 
+# Cube / Snowflake aggregation type -> ours; exports use the first listed
 AGG_TYPES = {
     "count": "count",
     "sum": "sum",
@@ -68,20 +71,32 @@ AGG_TYPES = {
 }
 
 
+def inverse(table: dict) -> dict:
+    """Export table from an import table: our name -> the first spelling
+    listed for it. Names without a spelling get no entry, so an exporter
+    leaves them out instead of writing what its importer cannot read."""
+    out: dict = {}
+    for spelling, ours in table.items():
+        out.setdefault(ours, spelling)
+    return out
+
+
 # ----------------------------------------------------------------------
 # shared export helpers (reference adapters/base.py:9 export contract)
 # ----------------------------------------------------------------------
 
-_AGG_FN = {
-    "sum": "SUM", "avg": "AVG", "min": "MIN", "max": "MAX",
-    "median": "MEDIAN", "stddev": "STDDEV", "stddev_pop": "STDDEV_POP",
-    "variance": "VARIANCE", "variance_pop": "VAR_POP",
+# SQL aggregate -> ours (any case); ``COUNT(DISTINCT x)`` is count_distinct
+SQL_AGGS = {
+    "SUM": "sum", "COUNT": "count", "COUNT_DISTINCT": "count_distinct",
+    "APPROX_COUNT_DISTINCT": "approx_count_distinct",
+    "AVG": "avg", "AVERAGE": "avg", "MIN": "min", "MAX": "max",
+    "MEDIAN": "median", "STDDEV": "stddev", "STDDEV_POP": "stddev_pop",
+    "VARIANCE": "variance", "VAR_POP": "variance_pop",
 }
-
+_SQL_AGG_OUT = inverse(SQL_AGGS)
 
 _AGG_SPLIT_RE = re.compile(
-    r"^\s*(sum|count|count_distinct|approx_count_distinct|avg|average|min|max|"
-    r"median|stddev)\s*\(\s*(distinct\s+)?(.*?)\s*\)\s*$",
+    rf"^\s*({'|'.join(SQL_AGGS)})\s*\(\s*(distinct\s+)?(.*?)\s*\)\s*$",
     re.I | re.S,
 )
 
@@ -111,12 +126,26 @@ def split_simple_aggregate(expr: str) -> tuple[str, str] | None:
     if close_i != len(s) - 1:
         return None
     inner = m.group(3)
-    agg = {"average": "avg"}.get(m.group(1).lower(), m.group(1).lower())
+    agg = SQL_AGGS[m.group(1).upper()]
     if m.group(2):
         if agg != "count":
             return None
         agg = "count_distinct"
     return agg, inner.strip()
+
+
+def sql_metric(name: str, expr: str, **kw):
+    """Metric from a measure's SQL expression (Rill, Superset): one
+    aggregate call is a simple metric, anything else a derived formula.
+    Metric's auto-extraction reads our agg names; ``SQL_AGGS`` adds the
+    SQL-only ones (``VAR_POP``)."""
+    metric = Metric(name=name, sql=expr, **kw)
+    split = split_simple_aggregate(expr) if metric.sql_is_complete else None
+    if split is not None:
+        return Metric(name=name, agg=split[0], sql=split[1], **kw)
+    if metric.agg is None:
+        return Metric(name=name, type="derived", expr=expr, **kw)
+    return metric
 
 
 def simple_agg_sql(metric) -> str | None:
@@ -126,13 +155,9 @@ def simple_agg_sql(metric) -> str | None:
     Returns None for non-simple metrics."""
     if not metric.is_simple:
         return None
-    if metric.agg == "count":
-        return f"COUNT({metric.sql})" if metric.sql else "COUNT(*)"
     if metric.agg == "count_distinct":
         return f"COUNT(DISTINCT {metric.sql or '*'})"
-    if metric.agg == "approx_count_distinct":
-        return f"APPROX_COUNT_DISTINCT({metric.sql or '*'})"
-    fn = _AGG_FN.get(metric.agg)
+    fn = _SQL_AGG_OUT.get(metric.agg)
     return f"{fn}({metric.sql or '*'})" if fn else None
 
 

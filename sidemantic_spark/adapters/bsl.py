@@ -29,9 +29,10 @@ from __future__ import annotations
 import ast
 import re
 
-from sidemantic_spark.adapters.base import BaseAdapter
+from sidemantic_spark.adapters.base import BaseAdapter, inverse
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
 
+# ibis column method -> ours; exports use the first listed
 _AGG_METHOD_MAP = {
     "sum": "sum",
     "mean": "avg",
@@ -358,11 +359,7 @@ class BslAdapter(BaseAdapter):
 # export (reference adapters/bsl.py export contract)
 # ----------------------------------------------------------------------
 
-_AGG_METHOD_OUT = {
-    "sum": "sum", "avg": "mean", "min": "min", "max": "max",
-    "count_distinct": "nunique", "median": "median",
-    "stddev": "std", "variance": "var",
-}
+_AGG_METHOD_OUT = inverse(_AGG_METHOD_MAP)
 
 
 def export_bsl(graph) -> dict:

@@ -27,6 +27,7 @@ from sidemantic_spark.adapters.base import (
     AGG_TYPES,
     AdapterError,
     BaseAdapter,
+    inverse,
     strip_cube_placeholders,
 )
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship, Segment
@@ -45,6 +46,7 @@ _REL_MAP = {
     "has_one": "one_to_one",
 }
 
+# Cube dimension type -> ours; exports use the first listed
 _DIM_TYPES = {
     "time": "time",
     "string": "categorical",
@@ -795,10 +797,8 @@ def _qualify_scope(sql: str, cube_name: str) -> str:
 # export (reference adapters/base.py:9 parse/export contract)
 # ----------------------------------------------------------------------
 
-_DIM_TYPES_OUT = {"categorical": "string", "numeric": "number",
-                  "boolean": "boolean", "time": "time"}
-_AGG_OUT = {"count_distinct": "count_distinct",
-            "approx_count_distinct": "count_distinct_approx"}
+_DIM_TYPES_OUT = inverse(_DIM_TYPES)
+_AGG_OUT = inverse(AGG_TYPES)
 
 
 def export_cube(graph) -> dict:
@@ -835,7 +835,7 @@ def export_cube(graph) -> dict:
             if m.type == "derived":
                 measures.append({"name": m.name, "type": "number", "sql": m.expr})
                 continue
-            if m.type == "cumulative" and m.agg:
+            if m.type == "cumulative" and m.agg in _AGG_OUT:
                 # round-trip to Cube rolling_window: trailing from the
                 # window, to_date from grain_to_date, leading/offset
                 # restored from import meta (cube_rolling_window)
@@ -848,15 +848,15 @@ def export_cube(graph) -> dict:
                 rw.update((m.meta or {}).get("cube_rolling_window") or {})
                 if not rw:
                     rw["trailing"] = "unbounded"
-                out = {"name": m.name, "type": _AGG_OUT.get(m.agg, m.agg),
+                out = {"name": m.name, "type": _AGG_OUT[m.agg],
                        "rolling_window": rw}
                 if m.sql:
                     out["sql"] = m.sql
                 measures.append(out)
                 continue
-            if not m.is_simple:
-                continue  # window-metric types have no cube equivalent
-            out = {"name": m.name, "type": _AGG_OUT.get(m.agg, m.agg)}
+            if not m.is_simple or m.agg not in _AGG_OUT:
+                continue  # window-metric types and aggregations Cube has no type for
+            out = {"name": m.name, "type": _AGG_OUT[m.agg]}
             if m.sql:
                 out["sql"] = m.sql
             if m.filters:

@@ -72,13 +72,13 @@ class FidelityReport:
 
 
 def reimport_text(spark, text: str, fmt: str):
-    """Parse exported ``text`` back into a fresh layer — the same
-    plumbing each format's own import path uses."""
-    import tempfile
+    """Parse exported ``text`` back into a fresh layer, reading it the
+    way ``EXPORTERS`` says the format was serialised."""
+    import json
 
     import yaml
 
-    from sidemantic_spark.adapters import ADAPTERS
+    from sidemantic_spark.adapters import ADAPTERS, EXPORTERS
     from sidemantic_spark.core.layer import SparkSemanticLayer
 
     layer = SparkSemanticLayer(spark)
@@ -88,22 +88,13 @@ def reimport_text(spark, text: str, fmt: str):
         load_yaml(layer, text)
         return layer
     adapter = ADAPTERS[fmt]()
-    if fmt in ("lookml", "malloy", "holistics"):
+    form = EXPORTERS[fmt][2]
+    if form == "text":
         adapter.parse_text(layer, text)
-    elif fmt == "tmdl":
-        with tempfile.NamedTemporaryFile("w", suffix=".tmdl", delete=False) as fh:
-            fh.write(text)
-        adapter.parse_file(layer, fh.name)
-    elif fmt == "gooddata":
-        import json
-
+    elif form == "json":
         adapter.parse(layer, json.loads(text))
-    elif fmt == "atscale":
-        adapter.parse_docs(layer, [d for d in yaml.safe_load_all(text) if d])
     else:
-        for doc in yaml.safe_load_all(text):
-            if doc is not None:
-                adapter.parse(layer, doc)
+        adapter.parse_docs(layer, [d for d in yaml.safe_load_all(text) if d])
     return layer
 
 

@@ -26,12 +26,16 @@ from __future__ import annotations
 
 import json
 import re
+import warnings
 
-from sidemantic_spark.adapters.base import BaseAdapter
+from sidemantic_spark.adapters.base import BaseAdapter, inverse
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
 
+# MAQL aggregate -> ours (any case; MAQL COUNT counts distinct values)
+_MAQL_AGGS = {"SUM": "sum", "COUNT": "count_distinct", "AVG": "avg",
+              "MIN": "min", "MAX": "max", "MEDIAN": "median"}
 _MAQL_AGG_RE = re.compile(
-    r"^\s*SELECT\s+(SUM|COUNT|AVG|MIN|MAX|MEDIAN)\s*\(\s*\{(?:fact|label|attribute)/([\w.]+)\}\s*"
+    rf"^\s*SELECT\s+({'|'.join(_MAQL_AGGS)})\s*\(\s*\{{(?:fact|label|attribute)/([\w.]+)\}}\s*"
     r"(?:,\s*\{(?:label|attribute)/[\w.]+\}\s*)?\)\s*$",
     re.I,
 )
@@ -66,20 +70,26 @@ def _first(obj: dict, *keys):
     return None
 
 
+# GoodData dataType -> ours (any case); exports use the first listed
+_DATA_TYPES = {
+    "BOOLEAN": "boolean", "BOOL": "boolean",
+    "NUMERIC": "numeric", "INT": "numeric", "INTEGER": "numeric",
+    "BIGINT": "numeric", "SMALLINT": "numeric", "TINYINT": "numeric",
+    "DECIMAL": "numeric", "FLOAT": "numeric", "DOUBLE": "numeric",
+    "REAL": "numeric",
+    "DATE": "time", "DATETIME": "time", "TIMESTAMP": "time",
+    "TIMESTAMP_TZ": "time", "TIMESTAMP WITH TIME ZONE": "time",
+    "TIME": "time",
+}
+
+
 def _dim_type(data_type) -> tuple[str, str | None]:
     """GoodData dataType -> (semantic type, granularity)."""
     dt = str(data_type or "").upper()
-    if dt in ("BOOLEAN", "BOOL"):
-        return "boolean", None
-    if dt in ("INT", "INTEGER", "BIGINT", "SMALLINT", "TINYINT",
-              "DECIMAL", "NUMERIC", "FLOAT", "DOUBLE", "REAL"):
-        return "numeric", None
-    if dt == "DATE":
-        return "time", "day"
-    if dt in ("DATETIME", "TIMESTAMP", "TIMESTAMP_TZ",
-              "TIMESTAMP WITH TIME ZONE", "TIME"):
-        return "time", "hour"
-    return "categorical", None
+    dtype = _DATA_TYPES.get(dt, "categorical")
+    if dtype != "time":
+        return dtype, None
+    return dtype, "day" if dt == "DATE" else "hour"
 
 
 def _table_path(value) -> str | None:
@@ -271,7 +281,11 @@ class GoodDataAdapter(BaseAdapter):
             return None
         src = fact.get("sourceColumn") or fid
         declared = fact.get("aggregation") or fact.get("agg")
-        agg = _FACT_AGGS.get(str(declared).lower(), "sum") if declared else "sum"
+        agg = _FACT_AGGS.get(str(declared).lower()) if declared else "sum"
+        if agg is None:
+            warnings.warn(f"GoodData fact {fid!r}: unknown aggregation "
+                          f"{declared!r}, skipped", stacklevel=2)
+            return None
         return Metric(name=fid, agg=agg, sql=src,
                       label=fact.get("title"),
                       description=fact.get("description"))
@@ -287,7 +301,11 @@ class GoodDataAdapter(BaseAdapter):
         src = agg_def.get("sourceColumn") or aid
         ref = agg_def.get("sourceFactReference") or agg_def.get("source_fact_reference") or {}
         operation = ref.get("operation") if isinstance(ref, dict) else None
-        agg = _FACT_AGGS.get(str(operation).lower(), "sum") if operation else "sum"
+        agg = _FACT_AGGS.get(str(operation).lower()) if operation else "sum"
+        if agg is None:
+            warnings.warn(f"GoodData aggregated fact {aid!r}: unknown "
+                          f"operation {operation!r}, skipped", stacklevel=2)
+            return None
         source_fact = None
         if isinstance(ref, dict):
             source_fact = _ident(ref.get("reference"))
@@ -335,8 +353,7 @@ class GoodDataAdapter(BaseAdapter):
                 continue
             m = _MAQL_AGG_RE.match(maql)
             if m:
-                agg = {"sum": "sum", "count": "count_distinct", "avg": "avg",
-                       "min": "min", "max": "max", "median": "median"}[m.group(1).lower()]
+                agg = _MAQL_AGGS[m.group(1).upper()]
                 ref = m.group(2)
                 owner = self._owner_of(layer, ref)
                 if owner:
@@ -480,8 +497,8 @@ def export_gooddata(graph) -> dict:
         if rtype == "many_to_one" and len(fks) == 1:
             edges.setdefault(owner, []).append((tgt, fks[0]))
 
-    maql_agg = {"count_distinct": "COUNT", "avg": "AVG", "min": "MIN",
-                "max": "MAX", "median": "MEDIAN", "sum": "SUM"}
+    maql_agg = inverse(_MAQL_AGGS)
+    data_type = inverse(_DATA_TYPES)
     datasets = []
     analytics_metrics = []
     for model in graph.models.values():
@@ -496,9 +513,7 @@ def export_gooddata(graph) -> dict:
             src = d.sql or d.name
             if src != d.name:
                 attr["sourceColumn"] = src
-            attr["sourceColumnDataType"] = {
-                "time": "DATE", "numeric": "NUMERIC", "boolean": "BOOLEAN",
-            }.get(d.type, "STRING")
+            attr["sourceColumnDataType"] = data_type.get(d.type, "STRING")
             if d.label:
                 attr["title"] = d.label
             attributes.append({"attribute": attr})

@@ -22,17 +22,18 @@ from __future__ import annotations
 
 import re
 
-from sidemantic_spark.adapters.base import AdapterError, BaseAdapter
+from sidemantic_spark.adapters.base import AdapterError, BaseAdapter, inverse
 from sidemantic_spark.core.consumption import Explore
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
 
+# Hex dimension type / measure func -> ours; exports use the first listed
 _DIM_TYPES = {
     "number": "numeric",
     "string": "categorical",
     "boolean": "boolean",
+    "timestamp": "time",
     "date": "time",
     "datetime": "time",
-    "timestamp": "time",
     "timestamp_tz": "time",
     "timestamp_ntz": "time",
 }
@@ -235,9 +236,8 @@ class HexAdapter(BaseAdapter):
 # export (reference adapters/hex.py export contract)
 # ----------------------------------------------------------------------
 
-_DIM_TYPES_OUT = {"numeric": "number", "categorical": "string",
-                  "boolean": "boolean", "time": "timestamp"}
-_FUNCS_OUT = {v: k for k, v in _FUNCS.items()}
+_DIM_TYPES_OUT = inverse(_DIM_TYPES)
+_FUNCS_OUT = inverse(_FUNCS)
 
 
 def export_hex(graph) -> list[dict]:

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import re
 
-from sidemantic_spark.adapters.base import BaseAdapter
+from sidemantic_spark.adapters.base import BaseAdapter, inverse
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
 
 _MODEL_RE = re.compile(r"^Model\s+(\w+)\s*\{", re.M)
@@ -24,6 +24,7 @@ _SQL_DEF_RE = re.compile(r"@sql\s*(.*?);;", re.S)
 _R_REF_RE = re.compile(r"r\(\s*(\w+)\.(\w+)\s*\)")
 _REL_EXPR_RE = re.compile(r"rel\(\s*rel_expr:\s*(\w+)\.(\w+)\s*([-=<>!]+)\s*(\w+)\.(\w+)\s*,\s*active:\s*(\w+)\s*\)")
 
+# Holistics aggregation_type / type -> ours; exports use the first listed
 _AGG_MAP = {
     "count": "count",
     "count_distinct": "count_distinct",
@@ -33,8 +34,8 @@ _AGG_MAP = {
     "min": "min",
     "max": "max",
     "median": "median",
-    "stdev": "stddev",
     "stddev": "stddev",
+    "stdev": "stddev",
     "var": "variance",
     "variance": "variance",
 }
@@ -408,11 +409,8 @@ class HolisticsAdapter(BaseAdapter):
 # export (reference adapters/holistics.py export contract)
 # ----------------------------------------------------------------------
 
-_TYPE_OUT = {"numeric": "number", "categorical": "text",
-             "boolean": "truefalse", "time": "datetime"}
-_AGG_OUT = {"sum": "sum", "count": "count", "count_distinct": "count_distinct",
-            "avg": "avg", "min": "min", "max": "max", "median": "median",
-            "stddev": "stddev", "variance": "var"}
+_TYPE_OUT = inverse(_TYPE_MAP)
+_AGG_OUT = inverse(_AGG_MAP)
 
 
 def _defn(sql: str) -> str:

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import re
 
-from sidemantic_spark.adapters.base import AdapterError, BaseAdapter
+from sidemantic_spark.adapters.base import AdapterError, BaseAdapter, inverse
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship, Segment
 
 _PLURAL = {
@@ -49,6 +49,7 @@ _PLURAL = {
     "aggregate_table": "aggregate_tables",
 }
 
+# LookML dimension / measure type -> ours; exports use the first listed
 _DIM_TYPES = {
     "string": "categorical",
     "number": "numeric",
@@ -1482,17 +1483,9 @@ _FISCAL_TRUNC_TIMEFRAMES = {"fiscal_quarter": "quarter", "fiscal_year": "year"}
 # parse/export/validate per adapters/base.py:9)
 # ---------------------------------------------------------------------------
 
-_DIM_TYPE_OUT = {"categorical": "string", "numeric": "number", "boolean": "yesno"}
-_AGG_OUT = {
-    "count": "count",
-    "sum": "sum",
-    "avg": "average",
-    "min": "min",
-    "max": "max",
-    "count_distinct": "count_distinct",
-    "approx_count_distinct": "count_distinct",
-    "median": "median",
-}
+_DIM_TYPE_OUT = inverse(_DIM_TYPES)
+# LookML has no approximate distinct count: write the exact one
+_AGG_OUT = {**inverse(_MEASURE_AGGS), "approx_count_distinct": "count_distinct"}
 
 _EQ_FILTER_RE = re.compile(r"^\s*(?:[\w]+\.)?(\w+)\s*=\s*'([^']*)'\s*$")
 

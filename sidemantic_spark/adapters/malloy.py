@@ -26,20 +26,21 @@ _SQL_RE = re.compile(r"\w+\.sql\(\s*(?:\"\"\"|'''|\"|')(.*?)(?:\"\"\"|'''|\"|')\
 _FIELD_RE = re.compile(r"^\s*`?([\w ]+?)`?\s+is\s+(.+)$")
 _JOIN_WITH_RE = re.compile(r"^\s*(\w+)\s+with\s+(\w+)\s*$")
 _JOIN_ON_RE = re.compile(r"^\s*(\w+)\s+on\s+(.+)$")
-_AGG_CALL_RE = re.compile(r"^(count|sum|avg|min|max|stddev|median)\s*\((.*)\)\s*(\{.*\})?\s*$", re.S)
+# Malloy aggregates, named as ours (count_distinct has its own regexes)
+_AGGS = ("count", "sum", "avg", "min", "max", "stddev", "median")
+_AGG_CALL_RE = re.compile(rf"^({'|'.join(_AGGS)})\s*\((.*)\)\s*(\{{.*\}})?\s*$", re.S)
 _COUNT_DISTINCT_RE = re.compile(r"^count\s*\(\s*distinct\s+(.+?)\s*\)\s*(\{.*\})?\s*$", re.S)
 _CD_FUNC_RE = re.compile(r"^count_distinct\s*\(\s*(.+?)\s*\)\s*(\{.*\})?\s*$", re.S)
-_WHERE_SUFFIX_RE = re.compile(r"\{\s*where:\s*(.+?)\s*\}\s*$", re.S)
 # Malloy's canonical dot-method aggregate: `amount.sum()` /
 # `items.amount.avg()` (reference adapters/malloy.py +
 # tests/adapters/malloy/test_audit_regressions.py)
 _DOT_AGG_RE = re.compile(
     r"^([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*)\."
-    r"(sum|avg|min|max|median|stddev|count)\s*\(\s*\)$"
+    rf"({'|'.join(_AGGS)})\s*\(\s*\)$"
 )
 _EMBEDDED_AGG_RE = re.compile(
     r"(?:[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*\.)?"
-    r"(?:count|sum|avg|min|max|median|stddev)\s*\("
+    rf"(?:{'|'.join(_AGGS)})\s*\("
 )
 _TIMEFRAME_DIM_RE = re.compile(
     r"^(\w+)\.(year|quarter|month|week|day|hour|minute|second)$"
@@ -938,9 +939,7 @@ def export_malloy(graph, connection: str = "spark") -> str:
                 lines.append(f"    {d.name} is {expr}")
         mets = []
         for m in model.metrics:
-            if m.is_simple and m.agg in ("sum", "avg", "min", "max",
-                                         "stddev", "median", "count",
-                                         "count_distinct"):
+            if m.is_simple and (m.agg in _AGGS or m.agg == "count_distinct"):
                 if m.agg == "count" and not m.sql:
                     body = "count()"
                 elif m.agg == "count_distinct":

@@ -47,7 +47,7 @@ from __future__ import annotations
 
 import re
 
-from sidemantic_spark.adapters.base import BaseAdapter, resolve_dbt_ref
+from sidemantic_spark.adapters.base import BaseAdapter, inverse, resolve_dbt_ref
 from sidemantic_spark.core.model import (
     Dimension,
     Metric,
@@ -56,7 +56,7 @@ from sidemantic_spark.core.model import (
     Segment,
 )
 
-# MetricFlow aggregation -> ours (case-insensitive; ref ``:540-563``)
+# MetricFlow agg -> ours (any case; ref ``:540-563``); exports use the first listed
 _AGG_MAP = {
     "sum": "sum",
     "count": "count",
@@ -733,9 +733,9 @@ def export_metricflow(graph) -> dict:
                 metrics_out.append({"name": m.name, "type": "cumulative",
                                     "type_params": tp})
                 continue
-            if not m.is_simple:
-                continue
-            out = {"name": m.name, "agg": _EXPORT_AGG.get(m.agg, m.agg or "sum")}
+            if not m.is_simple or m.agg not in _EXPORT_AGG:
+                continue  # MetricFlow has no agg for it
+            out = {"name": m.name, "agg": _EXPORT_AGG[m.agg]}
             if m.sql:
                 out["expr"] = m.sql
             if m.non_additive_dimension:
@@ -803,4 +803,4 @@ def export_metricflow(graph) -> dict:
     return doc
 
 
-_EXPORT_AGG = {"avg": "average"}
+_EXPORT_AGG = inverse(_AGG_MAP)

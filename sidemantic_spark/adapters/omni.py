@@ -26,7 +26,7 @@ import re
 
 import yaml
 
-from sidemantic_spark.adapters.base import BaseAdapter
+from sidemantic_spark.adapters.base import BaseAdapter, inverse
 from sidemantic_spark.adapters.lookml import (
     _distinct_quantile_sql,
     _keyed_distinct_agg_sql,
@@ -46,6 +46,7 @@ _REL_TYPES = {
 _JOIN_TYPES = {"always_left": "left", "inner": "inner",
                "full_outer": "full", "full": "full"}
 
+# Omni dimension / measure type -> ours; exports use the first listed
 _DIM_TYPES = {
     "string": "categorical",
     "number": "numeric",
@@ -433,11 +434,8 @@ class OmniAdapter(BaseAdapter):
 # export (reference adapters/omni.py export contract)
 # ----------------------------------------------------------------------
 
-_DIM_TYPES_OUT = {"categorical": "string", "numeric": "number",
-                  "boolean": "boolean", "time": "timestamp"}
-_AGGS_OUT = {"count": "count", "sum": "sum", "avg": "average",
-             "min": "min", "max": "max", "count_distinct": "count_distinct",
-             "median": "median"}
+_DIM_TYPES_OUT = inverse(_DIM_TYPES)
+_AGGS_OUT = inverse(_AGGS)
 
 _EQ_FILTER_RE = re.compile(
     r"^(\w+)\.(\w+)\s*(=|!=)\s*(?:'([^']*)'|(-?\d+(?:\.\d+)?))$"

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import re
 
-from sidemantic_spark.adapters.base import BaseAdapter, split_simple_aggregate
+from sidemantic_spark.adapters.base import BaseAdapter, split_simple_aggregate, sql_metric
 from sidemantic_spark.core.model import Dimension, Metric, Model
 
 _GRAIN_MAP = {
@@ -226,11 +226,7 @@ class RillAdapter(BaseAdapter):
             # aggregation which must keep simple decomposition
             return Metric(name=name, type="derived", expr=expr,
                           meta=meta, **common)
-        metric = Metric(name=name, sql=expr, meta=meta, **common)
-        if metric.agg is None:  # auto-extraction failed: formula
-            metric = Metric(name=name, type="derived", expr=expr,
-                            meta=meta, **common)
-        return metric
+        return sql_metric(name, expr, meta=meta, **common)
 
     @staticmethod
     def _parse_security(sec) -> object | None:

@@ -32,8 +32,9 @@ semantic-view-yaml-spec):
 from __future__ import annotations
 
 import re
+import warnings
 
-from sidemantic_spark.adapters.base import AGG_TYPES, BaseAdapter, split_simple_aggregate
+from sidemantic_spark.adapters.base import AGG_TYPES, BaseAdapter, inverse, split_simple_aggregate
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship, Segment
 
 _BARE_COL_RE = re.compile(r"(?<![\w.'{])([A-Za-z_][A-Za-z0-9_]*)(?![\w.(}])(?!\s*\()")
@@ -61,9 +62,6 @@ def _qualify_model_placeholder(expr: str) -> str:
             lambda m: m.group(1) if m.group(1).lower() in _SQL_WORDS
             else "{model}." + m.group(1), seg))
     return "".join(parts)
-
-
-_split_simple_aggregate = split_simple_aggregate
 
 
 class SnowflakeAdapter(BaseAdapter):
@@ -180,8 +178,13 @@ class SnowflakeAdapter(BaseAdapter):
         for m in (tbl.get("facts") or []) + (tbl.get("measures") or []):
             if not m.get("name"):
                 continue
-            agg = AGG_TYPES.get(
-                str(m.get("default_aggregation") or "sum").lower(), "sum")
+            declared = m.get("default_aggregation") or "sum"
+            agg = AGG_TYPES.get(str(declared).lower())
+            if agg is None:
+                warnings.warn(f"Snowflake fact {m['name']!r}: unknown "
+                              f"default_aggregation {declared!r}, skipped",
+                              stacklevel=2)
+                continue
             mets.append(Metric(
                 name=m["name"], agg=agg,
                 sql=m.get("expr") or m["name"],
@@ -263,7 +266,7 @@ class SnowflakeAdapter(BaseAdapter):
                                  "using_relationships")),
         )
         if scoped:
-            simple = _split_simple_aggregate(m["expr"])
+            simple = split_simple_aggregate(m["expr"])
             if simple is not None:
                 agg, inner = simple
                 if agg in AGG_TYPES or agg == "count_distinct":
@@ -297,6 +300,7 @@ def _field_meta(definition: dict, keys: tuple[str, ...]) -> dict | None:
 def export_snowflake(graph) -> dict:
     """Graph -> Cortex Analyst semantic-model YAML (dict): tables with
     dimensions/time_dimensions/measures + top-level relationships."""
+    agg_out = inverse(AGG_TYPES)
     tables = []
     rels_out = []
     for model in graph.models.values():
@@ -345,15 +349,12 @@ def export_snowflake(graph) -> dict:
                     **({"description": m.description} if m.description else {}),
                 })
                 continue
-            if not m.is_simple or m.agg not in (
-                "sum", "count", "avg", "min", "max", "count_distinct",
-                "approx_count_distinct", "median", "stddev",
-            ):
+            if not m.is_simple or m.agg not in agg_out:
                 continue
             measures.append({
                 "name": m.name,
                 "expr": m.sql or m.name,
-                "default_aggregation": m.agg,
+                "default_aggregation": agg_out[m.agg],
                 **({"description": m.description} if m.description else {}),
                 **({"synonyms": list(m.synonyms)} if m.synonyms else {}),
             })

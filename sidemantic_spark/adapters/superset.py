@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import json
 
-from sidemantic_spark.adapters.base import BaseAdapter
+from sidemantic_spark.adapters.base import BaseAdapter, split_simple_aggregate, sql_metric
 from sidemantic_spark.core.model import Dimension, Metric, Model
 
 _METRIC_TYPES = {"count": "count", "count_distinct": "count_distinct",
@@ -85,8 +85,6 @@ class SupersetAdapter(BaseAdapter):
             )
             agg = _METRIC_TYPES.get(str(m.get("metric_type") or "").lower())
             if agg:
-                from sidemantic_spark.adapters.base import split_simple_aggregate
-
                 # the expression is the source of truth: a single outer
                 # aggregate splits into agg + inner (this also handles the
                 # COUNT(DISTINCT x) spelling of count_distinct)
@@ -105,10 +103,7 @@ class SupersetAdapter(BaseAdapter):
                     metrics.append(Metric(name=mname, sql=expr,
                                           sql_is_complete=True, **common))
                 continue
-            metric = Metric(name=mname, sql=expr, **common)
-            if metric.agg is None:
-                metric = Metric(name=mname, type="derived", expr=expr, **common)
-            metrics.append(metric)
+            metrics.append(sql_metric(mname, expr, **common))
 
         # dataset-level metadata: catalog qualifier, folders, and the
         # extra.currency_code_column key (extra serializes as JSON)

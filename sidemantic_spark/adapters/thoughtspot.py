@@ -15,9 +15,10 @@ import re
 
 import yaml
 
-from sidemantic_spark.adapters.base import BaseAdapter
+from sidemantic_spark.adapters.base import BaseAdapter, inverse
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
 
+# TML aggregation / date bucket / data_type -> ours; exports use the first listed
 _AGG_MAP = {
     "SUM": "sum",
     "COUNT": "count",
@@ -36,8 +37,8 @@ _BUCKET_GRAIN = {
 }
 
 _DTYPE_MAP = {
-    "INT32": "numeric", "INT64": "numeric", "FLOAT": "numeric",
-    "DOUBLE": "numeric", "DATE": "time", "DATETIME": "time",
+    "DOUBLE": "numeric", "INT32": "numeric", "INT64": "numeric",
+    "FLOAT": "numeric", "DATETIME": "time", "DATE": "time",
     "TIMESTAMP": "time", "BOOL": "boolean", "BOOLEAN": "boolean",
     "VARCHAR": "categorical",
 }
@@ -405,10 +406,9 @@ class ThoughtSpotAdapter(BaseAdapter):
 # export (reference adapters/thoughtspot.py export contract)
 # ----------------------------------------------------------------------
 
-_AGG_OUT = {v: k for k, v in _AGG_MAP.items()}
-_BUCKET_OUT = {v: k for k, v in _BUCKET_GRAIN.items()}
-_DTYPE_OUT = {"numeric": "DOUBLE", "time": "DATETIME",
-              "boolean": "BOOL", "categorical": "VARCHAR"}
+_AGG_OUT = inverse(_AGG_MAP)
+_BUCKET_OUT = inverse(_BUCKET_GRAIN)
+_DTYPE_OUT = inverse(_DTYPE_MAP)
 
 
 def export_thoughtspot(graph) -> list[dict]:

@@ -18,38 +18,40 @@ from __future__ import annotations
 import os
 import re
 
-from sidemantic_spark.adapters.base import BaseAdapter
+from sidemantic_spark.adapters.base import BaseAdapter, inverse
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
 
+# TMDL dataType / DAX function -> ours (any case); exports use the first listed
 _TYPE_MAP = {
+    "dateTime": "time",
     "date": "time",
-    "datetime": "time",
     "boolean": "boolean",
+    "double": "numeric",
     "int64": "numeric",
     "decimal": "numeric",
-    "double": "numeric",
     "string": "categorical",
 }
+_TYPE_BY_LOWER = {k.lower(): v for k, v in _TYPE_MAP.items()}
 
+_DAX_AGG_MAP = {
+    "SUM": "sum", "COUNT": "count", "AVERAGE": "avg", "MIN": "min",
+    "MAX": "max", "DISTINCTCOUNT": "count_distinct", "COUNTROWS": "count",
+    "MEDIAN": "median",
+}
 _DAX_AGG_RE = re.compile(
-    r"^\s*(SUM|COUNT|AVERAGE|MIN|MAX|DISTINCTCOUNT|COUNTROWS|MEDIAN)\s*\(\s*"
+    rf"^\s*({'|'.join(_DAX_AGG_MAP)})\s*\(\s*"
     r"(?:'([^']+)'|(\w+))?\s*(?:\[([^\]]+)\])?\s*\)\s*$",
     re.I,
 )
-_DAX_AGG_MAP = {
-    "sum": "sum", "count": "count", "average": "avg", "min": "min",
-    "max": "max", "distinctcount": "count_distinct", "countrows": "count",
-    "median": "median",
-}
 # X-iterators over a row expression: SUMX('T', 'T'[a] * 'T'[b])
+_DAX_X_MAP = {
+    "SUMX": "sum", "AVERAGEX": "avg", "MINX": "min", "MAXX": "max",
+    "COUNTX": "count", "MEDIANX": "median",
+}
 _DAX_X_RE = re.compile(
-    r"^\s*(SUMX|AVERAGEX|MINX|MAXX|COUNTX|MEDIANX)\s*\(\s*(?:'([^']+)'|(\w+))\s*,\s*(.+)\)\s*$",
+    rf"^\s*({'|'.join(_DAX_X_MAP)})\s*\(\s*(?:'([^']+)'|(\w+))\s*,\s*(.+)\)\s*$",
     re.I | re.S,
 )
-_DAX_X_MAP = {
-    "sumx": "sum", "averagex": "avg", "minx": "min", "maxx": "max",
-    "countx": "count", "medianx": "median",
-}
 _DAX_DIVIDE_RE = re.compile(
     r"^\s*DIVIDE\s*\(", re.I
 )
@@ -151,10 +153,13 @@ class TmdlAdapter(BaseAdapter):
             if os.path.exists(rel_file):
                 self._parse_relationships(layer, open(rel_file).read())
         else:
-            text = open(path).read()
-            self._parse_tables(layer, text)
-            if "relationship " in text:
-                self._parse_relationships(layer, text)
+            with open(path) as fh:
+                self.parse_text(layer, fh.read())
+
+    def parse_text(self, layer, text: str) -> None:
+        self._parse_tables(layer, text)
+        if "relationship " in text:
+            self._parse_relationships(layer, text)
 
     # -- tables ------------------------------------------------------
 
@@ -179,7 +184,7 @@ class TmdlAdapter(BaseAdapter):
                 if cm:
                     cname = _unquote(cm.group(1))
                     props, i = self._props(lines, i + 1)
-                    dtype = _TYPE_MAP.get((props.get("datatype") or "string").lower(), "categorical")
+                    dtype = _TYPE_BY_LOWER.get((props.get("datatype") or "string").lower(), "categorical")
                     src = props.get("sourcecolumn") or cname
                     dname = _sanitize(cname)
                     dims.append(Dimension(
@@ -434,12 +439,12 @@ class TmdlAdapter(BaseAdapter):
         """``SUM('T'[col])`` / ``SUMX('T', expr)`` -> (agg, value_sql)."""
         m = _DAX_AGG_RE.match(dax)
         if m:
-            agg = _DAX_AGG_MAP[m.group(1).lower()]
+            agg = _DAX_AGG_MAP[m.group(1).upper()]
             col = m.group(4)
             return agg, (_sanitize(col) if col and agg != "count" else None)
         m = _DAX_X_RE.match(dax)
         if m:
-            agg = _DAX_X_MAP[m.group(1).lower()]
+            agg = _DAX_X_MAP[m.group(1).upper()]
             return agg, _dax_cols_to_sql(m.group(4).strip())
         return None
 
@@ -502,10 +507,8 @@ class TmdlAdapter(BaseAdapter):
 # export (reference adapters/tmdl.py export contract)
 # ----------------------------------------------------------------------
 
-_TYPE_OUT = {"time": "dateTime", "numeric": "double",
-             "boolean": "boolean", "categorical": "string"}
-_DAX_OUT = {"sum": "SUM", "avg": "AVERAGE", "min": "MIN", "max": "MAX",
-            "count_distinct": "DISTINCTCOUNT", "median": "MEDIAN"}
+_TYPE_OUT = inverse(_TYPE_MAP)
+_DAX_OUT = inverse(_DAX_AGG_MAP)
 
 
 def export_tmdl(graph) -> str:

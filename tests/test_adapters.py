@@ -2360,14 +2360,11 @@ def test_holistics_export_roundtrip(spark):
 def test_export_graph_all_formats_nonempty(spark):
     """Every advertised exporter emits non-trivial output for the tpch
     graph (the `convert` CLI path)."""
-    from sidemantic_spark.adapters import export_graph
+    from sidemantic_spark.adapters import EXPORTERS, export_graph
     from sidemantic_spark.models.tpch import build_layer
 
     layer = build_layer(spark, None)
-    for fmt in ["native", "cube", "metricflow", "lookml", "rill",
-                "superset", "hex", "omni", "snowflake", "bsl", "osi",
-                "gooddata", "atscale", "thoughtspot", "malloy", "tmdl",
-                "holistics"]:
+    for fmt in EXPORTERS:
         text = export_graph(layer.graph, fmt)
         assert isinstance(text, str) and "orders" in text, fmt
 
@@ -2377,6 +2374,7 @@ def test_fidelity_report_all_formats(spark):
     formats report no losses for the representable core; formats without
     window metrics or relationships report them as dropped rather than
     silently losing them."""
+    from sidemantic_spark.adapters import EXPORTERS
     from sidemantic_spark.adapters.fidelity import roundtrip_fidelity
     from sidemantic_spark.models.tpch import build_layer
 
@@ -2406,9 +2404,7 @@ def test_fidelity_report_all_formats(spark):
     assert any(n.construct == "metric" for n in rep.notes)
 
     # every exporter's report builds without error
-    for fmt in ["metricflow", "lookml", "superset", "hex", "omni",
-                "snowflake", "bsl", "osi", "gooddata", "atscale",
-                "thoughtspot", "malloy", "tmdl", "holistics"]:
+    for fmt in sorted(set(EXPORTERS) - {"native", "rill", "cube"}):
         rep = roundtrip_fidelity(layer.graph, fmt, spark)
         assert rep.format == fmt
         # no format may silently drop a whole model from the tpch graph
@@ -5859,6 +5855,52 @@ def test_gooddata_snake_case_aliases():
         "date_dimensions": [{"dateDimension": {"name": "closed"}}],
     }})
     assert any("closed" in n for n in layer2.graph.models)
+
+
+def _bare_layer():
+    from sidemantic_spark.core.graph import SemanticGraph
+
+    layer = SparkSemanticLayer.__new__(SparkSemanticLayer)
+    layer.graph = SemanticGraph()
+    layer.spark = None
+    return layer
+
+
+def test_unknown_aggregation_is_skipped_not_summed():
+    """A declared aggregation the format's table has no entry for skips
+    the metric with a warning naming both; it is never read as SUM. An
+    absent aggregation keeps the SUM default."""
+    from sidemantic_spark.adapters import GoodDataAdapter, SnowflakeAdapter
+
+    layer = _bare_layer()
+    with pytest.warns(UserWarning) as caught:
+        GoodDataAdapter().parse(layer, {"ldm": {"datasets": [{"dataset": {
+            "id": "orders",
+            "facts": [{"id": "amount", "aggregation": "bogus"},
+                      {"id": "qty"}],
+        }}]}})
+    assert len(caught) == 1
+    assert "'amount'" in str(caught[0].message)
+    assert "'bogus'" in str(caught[0].message)
+    orders = layer.graph.models["orders"]
+    assert orders.metric("amount") is None
+    assert orders.metric("qty").agg == "sum"
+
+    layer = _bare_layer()
+    with pytest.warns(UserWarning) as caught:
+        SnowflakeAdapter().parse(layer, {"tables": [{
+            "name": "orders",
+            "base_table": {"table": "orders"},
+            "facts": [{"name": "amount", "expr": "amount",
+                       "default_aggregation": "bogus"},
+                      {"name": "qty", "expr": "qty"}],
+        }]})
+    assert len(caught) == 1
+    assert "'amount'" in str(caught[0].message)
+    assert "'bogus'" in str(caught[0].message)
+    orders = layer.graph.models["orders"]
+    assert orders.metric("amount") is None
+    assert orders.metric("qty").agg == "sum"
 
 
 def test_lookml_include_scoping_drops_stale_refinement(tmp_path):

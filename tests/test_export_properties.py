@@ -18,8 +18,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from sidemantic_spark.adapters import EXPORTERS
 from sidemantic_spark.core.layer import SparkSemanticLayer
-from sidemantic_spark.core.model import Dimension, Metric, Model
+from sidemantic_spark.core.model import SIMPLE_AGGS, Dimension, Metric, Model
 
 # identifiers: snake_case, not SQL-ish keywords, distinct enough to
 # avoid collisions with the structural names we add
@@ -35,15 +36,11 @@ ident = st.from_regex(r"[a-z][a-z0-9_]{2,14}", fullmatch=True).filter(
 )
 
 DIM_TYPES = st.sampled_from(["categorical", "numeric", "boolean", "time"])
-# aggs every format's export maps (median/stddev excluded: several
-# formats legitimately drop them, which is fidelity, not a bug)
+# aggs every format's export maps; the rest are left out by some
+# formats, which test_agg_roundtrip_every_format checks cell by cell
 AGGS = st.sampled_from(["sum", "count", "count_distinct", "avg", "min", "max"])
 
-FORMATS = [
-    "native", "cube", "metricflow", "lookml", "rill", "superset", "hex",
-    "omni", "snowflake", "bsl", "osi", "gooddata", "atscale",
-    "thoughtspot", "malloy", "tmdl", "holistics",
-]
+FORMATS = sorted(EXPORTERS)
 # formats with no join surface at all
 NO_JOINS = {"rill", "superset"}
 
@@ -124,6 +121,74 @@ def test_export_roundtrip_preserves_core(fmt, layer):
                     for rr in layer2.graph.models[side].relationships
                 )
                 assert kept, (fmt, mname, r.name)
+
+
+# an export may write a different agg only where the format has none
+# for ours: (format, our agg) -> the agg it re-imports as
+SUBSTITUTIONS = {
+    ("lookml", "approx_count_distinct"): "count_distinct",
+    ("gooddata", "count"): "count_distinct",
+}
+# formats whose export carries no dimension type: every non-time
+# dimension re-imports as categorical
+UNTYPED_DIMS = {"bsl", "malloy", "metricflow", "osi", "rill"}
+
+
+def _one_model(dim_type="categorical", metric=None):
+    layer = SparkSemanticLayer(None)
+    layer.add_model(Model(
+        name="orders", table="orders", primary_key="order_id",
+        dimensions=[Dimension(name="status", type=dim_type, sql="src")],
+        metrics=[metric] if metric else [],
+    ))
+    return layer.graph
+
+
+def _uncommented(text: str) -> list[str]:
+    return [ln for ln in text.splitlines() if not ln.lstrip().startswith("#")]
+
+
+@pytest.mark.parametrize("fmt", sorted(set(EXPORTERS) - {"native"}))
+def test_agg_roundtrip_every_format(fmt):
+    """Each of our aggs over a bare column re-imports as the same agg, as
+    a complete-SQL measure, or as a declared substitution, or the export
+    leaves the metric out entirely. It never re-imports as another agg
+    or as a derived formula: an exporter writes only names its own
+    importer reads back."""
+    from sidemantic_spark.adapters import export_graph
+    from sidemantic_spark.adapters.fidelity import reimport_text
+
+    without = _uncommented(export_graph(_one_model(), fmt))
+    bad = []
+    for agg in sorted(SIMPLE_AGGS):
+        text = export_graph(_one_model(metric=Metric(name="m", agg=agg, sql="amount")), fmt)
+        om = reimport_text(None, text, fmt).graph.models["orders"].metric("m")
+        if om is None:
+            ok = _uncommented(text) == without
+        else:
+            ok = om.type != "derived" and (
+                om.agg == agg or om.sql_is_complete
+                or SUBSTITUTIONS.get((fmt, agg)) == om.agg)
+        if not ok:
+            bad.append((agg, om and (om.type, om.agg)))
+    assert bad == []
+
+
+@pytest.mark.parametrize("fmt", sorted(set(EXPORTERS) - {"native"}))
+def test_dimension_type_roundtrip_every_format(fmt):
+    from sidemantic_spark.adapters import export_graph
+    from sidemantic_spark.adapters.fidelity import reimport_text
+
+    for dim_type in ("categorical", "numeric", "boolean", "time"):
+        # a measure: some formats skip a model that has none
+        text = export_graph(_one_model(dim_type, Metric(name="n", agg="count")), fmt)
+        model = reimport_text(None, text, fmt).graph.models["orders"]
+        # AtScale datasets list physical columns: the dimension comes
+        # back under its source column
+        dim = model.dimension("src" if fmt == "atscale" else "status")
+        want = ("categorical" if fmt in UNTYPED_DIMS and dim_type != "time"
+                else dim_type)
+        assert dim.type == want, (fmt, dim_type, dim.type)
 
 
 def test_yaml_env_var_substitution(spark, monkeypatch):
