@@ -812,7 +812,7 @@ def export_cube(graph) -> dict:
         else:
             cube["sql_table"] = model.table or model.name
         dims = []
-        pk = set(model.pk_list())
+        pk = model.pk_list()
         for d in model.dimensions:
             dim = {"name": d.name, "sql": d.sql or d.name,
                    "type": _DIM_TYPES_OUT.get(d.type, "string")}
@@ -821,9 +821,9 @@ def export_cube(graph) -> dict:
             if d.description:
                 dim["description"] = d.description
             dims.append(dim)
-        for col in pk - {d.name for d in model.dimensions}:
-            dims.append({"name": col, "sql": col, "type": "number",
-                         "primary_key": True})
+        dim_names = {d.name for d in model.dimensions}
+        dims += [{"name": col, "sql": col, "type": "number", "primary_key": True}
+                 for col in pk if col not in dim_names]
         if dims:
             cube["dimensions"] = dims
         measures = []

@@ -441,7 +441,7 @@ class TmdlAdapter(BaseAdapter):
         if m:
             agg = _DAX_AGG_MAP[m.group(1).upper()]
             col = m.group(4)
-            return agg, (_sanitize(col) if col and agg != "count" else None)
+            return agg, (_sanitize(col) if col else None)
         m = _DAX_X_RE.match(dax)
         if m:
             agg = _DAX_X_MAP[m.group(1).upper()]

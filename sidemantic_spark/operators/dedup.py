@@ -1030,7 +1030,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    small_edge_limit: int = 2_000_000,
 ) -> DataFrame:
     """Duplicate clusters from near-dup pairs: connected components by
     iterative min-label propagation.
@@ -1039,87 +1038,59 @@ def connected_components(
     cluster_id = the smallest id in the component — the canonical
     "keep the lowest id, drop the rest" dedup decision.
 
-    SIZE-GATED EXECUTION: a `pairs.limit(small_edge_limit + 1)` probe
-    — CollectLimit short-circuits the scan, so the probe is cheap even
-    when pairs is huge — decides between
-      * <= small_edge_limit edges: driver-side union-find with path
-        compression over the already-collected rows (near-dup pair
-        sets are tiny relative to their corpus; 2M (long,long) edges
-        is ~32 MB). The distributed loop on a small graph is pure
-        scheduler overhead — O(log d) sequential Spark jobs of
-        near-empty stages.
-      * larger: the distributed loop below. Each round combines
-        neighbor-min propagation (one join + one groupBy, shuffles
-        keyed by id, map-side combinable) with a POINTER-JUMPING step
-        (label <- label[label], one self-join on the label frame), the
-        doubling trick from PRAM/MapReduce CC (cf. Kiveris et al.,
-        "Connected Components in MapReduce and Beyond"): paths to the
-        component min halve every round, so convergence is
-        O(log diameter) rounds instead of O(diameter). The convergence
-        check rides the same checkpointed frame as a `changed` flag
-        column — no separate old-vs-new join job per round. At 100 TB
-        the per-round shuffle is (ids + labels) only, never the
-        documents.
-    Pass small_edge_limit=0 to force the distributed path (tests do).
+    SIZE-GATED EXECUTION: :func:`gate.fetch` collects the edges as one
+    Arrow table when they fit ``gate.BUDGET_BYTES`` (4M (long, long)
+    edges at 64 MiB; the scan stops at the limit even when pairs is
+    huge). Then
+      * edges that fit: driver-side union-find with path compression
+        (near-dup pair sets are tiny relative to their corpus; the
+        distributed loop on a small graph is pure scheduler overhead —
+        O(log d) sequential Spark jobs of near-empty stages).
+      * larger: the distributed loop below, at the session's shuffle
+        width. Each round combines neighbor-min propagation (one join
+        + one groupBy, shuffles keyed by id, map-side combinable) with
+        a POINTER-JUMPING step (label <- label[label], one self-join on
+        the label frame), the doubling trick from PRAM/MapReduce CC
+        (cf. Kiveris et al., "Connected Components in MapReduce and
+        Beyond"): paths to the component min halve every round, so
+        convergence is O(log diameter) rounds instead of O(diameter).
+        The convergence check rides the same checkpointed frame as a
+        `changed` flag column — no separate old-vs-new join job per
+        round. At 100 TB the per-round shuffle is (ids + labels) only,
+        never the documents.
     """
-    sess = pairs.sparkSession
-    if small_edge_limit > 0:
-        # Arrow probe, not .collect(): 2M pyspark Rows would be
-        # hundreds of MB of Python objects on the driver; the Arrow
-        # table is ~16 bytes/edge and iterates as plain scalars
-        probe = pairs.select(id_a, id_b).limit(small_edge_limit + 1).toArrow()
-        if probe.num_rows <= small_edge_limit:
-            id_type = dict(pairs.dtypes)[id_a]
-            edge_iter = zip(
-                probe.column(0).to_pylist(), probe.column(1).to_pylist()
-            )
-            labels = _union_find(edge_iter)
-            out = sess.createDataFrame(
-                labels, f"doc_id {id_type}, cluster_id {id_type}"
-            )
-            # createDataFrame carries no size statistics, so a consumer
-            # joining against it (semantic_dedup's keep-flag join) gets
-            # a SortMergeJoin — two exchanges + sorts — for a frame
-            # whose exact row count is already known here. Hint
-            # broadcast when it fits the byte budget; the distributed
-            # path below stays hint-free because its size is unknown.
-            if len(labels) * 2 * gate.fixed_width(pairs, id_a) <= gate.BUDGET_BYTES:
-                out = F.broadcast(out)
-            return out
-    # iteration shuffle width: localCheckpoint materializes the
-    # NON-adaptive plan, so AQE never coalesces the per-round
-    # join/groupBy exchanges — under a default 200-partition session
-    # every round schedules 200-task stages of near-empty (id, label)
-    # rows and the loop is pure scheduler overhead.  Pin the width to
-    # cluster parallelism for the loop's duration and restore after
-    # (conf is session-scoped; concurrent queries in the same session
-    # during the loop would see the narrower width).  The pin MUST
-    # precede persist(): persist() compiles the cached subtree's
-    # PHYSICAL plan eagerly at call time, so a persist under the old
-    # width bakes old-width exchanges into every round (measured: the
-    # whole loop ran 200-task stages despite the pin).
-    width_key = "spark.sql.shuffle.partitions"
-    old_width = sess.conf.get(width_key, None)
-    sess.conf.set(width_key, str(sess.sparkContext.defaultParallelism))
+    table = gate.fetch(pairs, (id_a, id_b))
+    if table is not None:
+        # Arrow, not Rows: millions of pyspark Row objects would swamp
+        # the driver; Arrow columns iterate as plain scalars
+        id_type = dict(pairs.dtypes)[id_a]
+        labels = _union_find(zip(*(c.to_pylist() for c in table.columns)))
+        out = pairs.sparkSession.createDataFrame(
+            labels, f"doc_id {id_type}, cluster_id {id_type}"
+        )
+        # createDataFrame carries no size statistics, so a consumer's
+        # join (semantic_dedup's keep flags) would sort-merge a frame
+        # whose exact row count is known here: hint broadcast when it
+        # fits the gate. The distributed path's size is unknown.
+        width = 2 * gate.fixed_width(pairs, id_a)
+        if gate.Probe(len(labels), len(labels) * width).fits:
+            out = F.broadcast(out)
+        return out
+    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    edges = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+    # scanned once per round — keep it materialized across iterations
+    edges = edges.persist()
     try:
-        edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        edges = edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
-        # scanned once per round — keep it materialized across iterations
-        edges = edges.persist()
         labels = (
             edges.select(F.col("src").alias("node"))
             .distinct()
             .withColumn("label", F.col("node"))
         )
         changed, labels = _cc_loop(edges, labels_init=labels, max_iter=max_iter)
-        edges.unpersist()
     finally:
-        if old_width is None:
-            sess.conf.unset(width_key)
-        else:
-            sess.conf.set(width_key, old_width)
+        edges.unpersist()
     if changed != 0:
         # silently returning non-minimal labels would yield multiple
         # "representatives" per true cluster downstream (semantic_dedup

@@ -1,15 +1,19 @@
 """The one size gate of the data-pipeline operators: every choice between
 a small-input and a corpus-scale path (broadcast or shuffle, checkpoint
-or recompute, spread or pass through) reads a :func:`probe` against the
-two constants below; tests reach the corpus paths by patching them."""
+or recompute, spread or pass through, collect to the driver or not)
+reads a :func:`probe` or a :func:`fetch` against the two constants
+below; tests reach the corpus paths by patching them."""
 
 from __future__ import annotations
 
-from typing import NamedTuple
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # Most bytes an operator may broadcast or locally checkpoint (the
 # benchmarks' spark.sql.autoBroadcastJoinThreshold is the same 64 MB).
@@ -49,6 +53,10 @@ def fixed_width(df: DataFrame, col: str) -> int:
     return df._jdf.schema().apply(col).dataType().defaultSize()
 
 
+def _row_limit(width: int) -> int:
+    return BUDGET_BYTES // max(width, 1)
+
+
 def probe(
     df: DataFrame,
     cols: tuple[str, ...] = (),
@@ -79,7 +87,7 @@ def probe(
         rows = int(r[0])
         return Probe(rows, rows * width + sum(v or 0 for v in r[2:]), int(r[1]))
     if limit is None:
-        limit = BUDGET_BYTES // max(width, 1)
+        limit = _row_limit(width)
     head = df.select(*(cols or [F.lit(1)])).limit(limit + 1)
     if sums:
         r = head.agg(F.count(F.lit(1)), *sums).collect()[0]
@@ -89,6 +97,18 @@ def probe(
     if rows > limit:
         return Probe(rows, None)
     return Probe(rows, rows * width + var_bytes)
+
+
+def fetch(df: DataFrame, cols: tuple[str, ...]) -> pa.Table | None:
+    """``cols`` of ``df`` as one Arrow table on the driver, or None when
+    they exceed :data:`BUDGET_BYTES`. ONE job shaped like the bounded
+    :func:`probe`: it stops after the rows of the columns' fixed width
+    (20 bytes a string) that fit, plus one; the table's bytes decide."""
+    limit = _row_limit(sum(fixed_width(df, c) for c in cols))
+    table = df.select(*cols).limit(limit + 1).toArrow()
+    if table.num_rows > limit or table.nbytes > BUDGET_BYTES:
+        return None
+    return table
 
 
 def spread(df: DataFrame, rows: int) -> DataFrame:

@@ -607,9 +607,10 @@ def semantic_dedup(
     cluster_id = min id of the vector's semantic cluster (its own id
     when it has no near-duplicates) and keep = (id == cluster_id).
 
-    Each stage picks its own path by its size gate (the verify form of
-    :func:`embedding_near_dup_pairs`, driver-side or distributed
-    ``connected_components``); no argument forces one.
+    Each stage picks its own path by ``operators.gate`` (the verify form
+    of :func:`embedding_near_dup_pairs`; driver-side or distributed
+    ``connected_components`` and its labels' broadcast into the keep
+    join); no argument forces one.
     """
     from sidemantic_spark.operators.dedup import connected_components
 

@@ -93,8 +93,8 @@ def normalize_rows(cols, rows):
 
 def _canon_strict(v):
     """Driver-grade canonical form: exact floats (full repr), Decimal as
-    string, dates lifted to naive datetimes. Mirrors
-    scripts/ordered_compare.py."""
+    string, dates lifted to naive datetimes. Mirrors the ordered check
+    of scripts/strict_compare.py."""
     import datetime
     import decimal
 

@@ -1897,6 +1897,30 @@ def test_cube_export_roundtrip(spark):
     assert {d.name for d in o2.dimensions} >= {d.name for d in o1.dimensions}
 
 
+def test_cube_export_is_hash_seed_independent():
+    """A composite key's extra columns come out in key order, not set
+    order: the tpch graph exported under two hash seeds (which order
+    lineitem's two key columns differently as a set) is byte-identical."""
+    import subprocess
+    import sys
+
+    code = (
+        "from sidemantic_spark.adapters import export_graph\n"
+        "from sidemantic_spark.models.tpch import build_layer\n"
+        "print(export_graph(build_layer(None).graph, 'cube'), end='')\n"
+    )
+    root = os.path.join(os.path.dirname(__file__), "..")
+    outs = [
+        subprocess.run(
+            [sys.executable, "-c", code], cwd=root, check=True,
+            capture_output=True, text=True,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout
+        for seed in ("0", "1")
+    ]
+    assert "l_linenumber" in outs[0] and outs[0] == outs[1]
+
+
 def test_metricflow_export_roundtrip(spark):
     import yaml
 
@@ -2324,9 +2348,13 @@ def test_malloy_export_roundtrip(spark):
 
 def test_tmdl_export_roundtrip(spark, tmp_path):
     from sidemantic_spark.adapters import TmdlAdapter, export_graph
+    from sidemantic_spark.core.model import Metric
     from sidemantic_spark.models.tpch import build_layer
 
     layer = build_layer(spark, None)
+    # DAX COUNT over a column skips blanks: it is not COUNTROWS
+    layer.graph.models["orders"].add_metric(
+        Metric(name="commented_orders", agg="count", sql="o_comment"))
     text = export_graph(layer.graph, "tmdl")
     p = tmp_path / "model.tmdl"
     p.write_text(text)
@@ -2335,6 +2363,9 @@ def test_tmdl_export_roundtrip(spark, tmp_path):
     assert set(layer2.graph.models) == set(layer.graph.models)
     o2 = layer2.graph.models["orders"]
     assert o2.metric("order_count").agg == "count"
+    assert o2.metric("order_count").sql is None
+    assert o2.metric("commented_orders").agg == "count"
+    assert o2.metric("commented_orders").sql == "o_comment"
     assert o2.metric("max_order_value").agg == "max"
     assert o2.metric("max_order_value").sql == "o_totalprice"
     assert o2.dimension("status").sql == "o_orderstatus"

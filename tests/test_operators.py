@@ -725,47 +725,101 @@ def test_vocab_topk(spark):
     assert got == [("apple", 2, 3), ("banana", 2, 2), ("cherry", 1, 1)]
 
 
-def test_connected_components_clusters(spark):
-    rows = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (5, 99)]
-    pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-    expected = {
-        1: 1, 2: 1, 3: 1,
-        10: 10, 11: 10,
-        20: 20, 21: 20, 22: 20,
-        5: 5, 99: 5,
-    }
-    # default gate -> driver-side union-find
-    got = {
-        r.doc_id: r.cluster_id for r in dedup.connected_components(pairs).collect()
-    }
-    assert got == expected
-    # forced distributed pointer-jumping loop must agree exactly
-    got_dist = {
+_CC_EDGES = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (5, 99)]
+_CC_LABELS = {
+    1: 1, 2: 1, 3: 1,
+    10: 10, 11: 10,
+    20: 20, 21: 20, 22: 20,
+    5: 5, 99: 5,
+}
+
+
+@pytest.fixture
+def cc_loop_widths(monkeypatch):
+    """Spy on the distributed loop: one entry per call, the session's
+    shuffle width as the loop saw it."""
+    seen = []
+    loop = dedup._cc_loop
+
+    def spy(edges, **kw):
+        seen.append(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return loop(edges, **kw)
+
+    monkeypatch.setattr(dedup, "_cc_loop", spy)
+    return seen
+
+
+def _cc(pairs, **kw):
+    return {
         r.doc_id: r.cluster_id
-        for r in dedup.connected_components(pairs, small_edge_limit=0).collect()
+        for r in dedup.connected_components(pairs, **kw).collect()
     }
-    assert got_dist == expected
 
 
-def test_connected_components_nonconvergence_raises(spark):
+def test_connected_components_clusters(spark, monkeypatch, cc_loop_widths):
+    from sidemantic_spark.operators import gate
+
+    pairs = spark.createDataFrame(_CC_EDGES, "id_a long, id_b long")
+    # default gate -> driver-side union-find
+    assert _cc(pairs) == _CC_LABELS and cc_loop_widths == []
+    # a budget no edge fits -> the distributed pointer-jumping loop
+    # must agree exactly
+    monkeypatch.setattr(gate, "BUDGET_BYTES", 0)
+    assert _cc(pairs) == _CC_LABELS and len(cc_loop_widths) == 1
+
+
+def test_connected_components_clusters_string_ids(spark, monkeypatch, cc_loop_widths):
+    """String ids are sized in bytes: the same six edges fit a budget of
+    six fixed-width (20-byte) string pairs while the ids are short, and
+    go to the distributed loop once the ids are long, at an unchanged
+    row count. Both paths return the same labels."""
+    from sidemantic_spark.operators import gate
+
+    monkeypatch.setattr(gate, "BUDGET_BYTES", len(_CC_EDGES) * 2 * 20)
+    for pad, loops in ((0, 0), (64, 1)):
+        # zero-padded ids keep the lexicographic min the numeric min
+        sid = {i: f"d{i:03d}".ljust(pad, "x") for i in _CC_LABELS}
+        pairs = spark.createDataFrame(
+            [(sid[a], sid[b]) for a, b in _CC_EDGES], "id_a string, id_b string"
+        )
+        assert _cc(pairs) == {sid[n]: sid[c] for n, c in _CC_LABELS.items()}
+        assert len(cc_loop_widths) == loops
+
+
+def test_connected_components_loop_runs_at_session_width(spark, monkeypatch, cc_loop_widths):
+    """The distributed loop writes no session conf: it runs at the
+    width the session was given, which is what any concurrent query in
+    the same session sees too."""
+    from sidemantic_spark.operators import gate
+
+    key = "spark.sql.shuffle.partitions"
+    width = str(spark.sparkContext.defaultParallelism + 3)
+    pairs = spark.createDataFrame(_CC_EDGES, "id_a long, id_b long")
+    monkeypatch.setattr(gate, "BUDGET_BYTES", 0)
+    old = spark.conf.get(key)
+    spark.conf.set(key, width)
+    try:
+        assert _cc(pairs) == _CC_LABELS
+    finally:
+        spark.conf.set(key, old)
+    assert cc_loop_widths == [width]
+
+
+def test_connected_components_nonconvergence_raises(spark, monkeypatch):
     """A chain whose diameter exceeds max_iter must fail loudly — a
     silent partial result would surface multiple keep=true
     representatives per true cluster downstream. (Forces the
-    distributed path; the union-find gate has no iteration cap.)"""
-    import pytest as _pytest
+    distributed path by patching the gate's budget; the union-find
+    path has no iteration cap.)"""
+    from sidemantic_spark.operators import gate
 
     chain = [(i, i + 1) for i in range(8)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, max_iter=2, small_edge_limit=0)
+    monkeypatch.setattr(gate, "BUDGET_BYTES", 0)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(pairs, max_iter=2)
     # and a sufficient max_iter converges to the single min label
-    got = {
-        r.doc_id: r.cluster_id
-        for r in dedup.connected_components(
-            pairs, max_iter=10, small_edge_limit=0
-        ).collect()
-    }
-    assert set(got.values()) == {0}
+    assert set(_cc(pairs, max_iter=10).values()) == {0}
 
 
 def test_cosine_topk_join_batch_vs_duckdb(embs, duck):

@@ -25,9 +25,6 @@ CONF_WRITES_ALLOWED = {
         "session set-up: applies the project file's runtime spark conf",
     ("sidemantic_spark/models/tpch.py", "register_tables"):
         "table set-up: read nanosecond parquet timestamps as longs",
-    ("sidemantic_spark/operators/dedup.py", "connected_components"):
-        "pins the label-propagation loop's shuffle width; kept until its "
-        "small-corpus path is rewritten",
     ("sidemantic_spark/streaming/stream_layer.py", "to_memory_sink"):
         "pins the replay's state-store width: Spark has no per-query "
         "width for state stores",
