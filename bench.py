@@ -43,8 +43,8 @@ HEADLINE = [
 # like-for-like while newly added / perf-worked entries still get a
 # recorded number.
 EXTRA = [
-    "fanout_dedup_plan",     # forced entity-grain DISTINCT plan (r04)
-    "fanout_symmetric_aggs",  # forced symmetric plan
+    "fanout_dedup_plan",     # the entity-grain DISTINCT plan (r04)
+    "fanout_symmetric_aggs",  # same plan; the symmetric one was removed
     "dedup_ngram_jaccard",    # perf-worked r04
     "dedup_clusters",         # pointer-jumping CC (r04)
     "sim_semantic_dedup",     # LSH graph + CC (r04)

@@ -220,8 +220,7 @@ class SparkSemanticLayer:
         )
 
     def rewrite(self, semantic_sql: str, user: dict | None = None,
-                use_preaggs: bool = True, preagg_strict: bool = False,
-                fanout_strategy: str = "auto") -> str:
+                use_preaggs: bool = True, preagg_strict: bool = False) -> str:
         """Semantic SQL text -> Spark SQL under the per-request modes."""
         from sidemantic_spark.sql.rewriter import SemanticSqlRewriter
 
@@ -229,7 +228,7 @@ class SparkSemanticLayer:
             self._rewriter = SemanticSqlRewriter(self)
         return self._rewriter.rewrite(
             semantic_sql, user=user, use_preaggs=use_preaggs,
-            preagg_strict=preagg_strict, fanout_strategy=fanout_strategy)
+            preagg_strict=preagg_strict)
 
     def get_catalog_metadata(self, schema: str = "public") -> dict:
         """Postgres information_schema-shaped export of the graph
@@ -304,7 +303,6 @@ class SparkSemanticLayer:
         post_process: str | None = None,
         use_preaggs: bool = True,
         preagg_strict: bool = False,
-        fanout_strategy: str = "auto",
     ) -> str:
         # every parameter above, by name: the signature is the one list
         return self._compile({k: v for k, v in locals().items() if k != "self"})[0]
@@ -638,21 +636,13 @@ class SparkSemanticLayer:
         from sidemantic_spark.preagg.router import explain_route
 
         sql, r = self._compile(kwargs, explain=True)
-        # fan-out: any hop that duplicates rows of a model carrying
-        # metrics (ref sql/generator.py:2500-2548 _has_fanout_joins)
-        metric_models = {rm.model for rm in r.metrics}
-        joined = {r.base}
-        fanned: set[str] = set()
-        for h in r.hops:
-            if h.duplicates_left():
-                fanned |= joined
-            if h.duplicates_right():
-                fanned.add(h.to_model)
-            joined.add(h.to_model)
-        fanout_models = sorted(fanned & metric_models)
+        # fan-out: the join duplicates rows of a model carrying metrics,
+        # by the generator's own rule (ref sql/generator.py:2500-2548
+        # _has_fanout_joins)
+        dup = self.generator._dup_map(r)
         fanout_hops = [
             h for h in r.hops if h.duplicates_left() or h.duplicates_right()
-        ] if fanout_models else []
+        ] if any(dup.get(rm.model, False) for rm in r.metrics) else []
         used = None
         for line in sql.split("\n", 2)[:2]:
             for tok in line.split():
@@ -675,13 +665,7 @@ class SparkSemanticLayer:
             "fanout": {
                 "detected": bool(fanout_hops),
                 "hops": [f"{h.from_model}->{h.to_model}" for h in fanout_hops],
-                "strategy": (
-                    {
-                        "symmetric": "symmetric_aggregates",
-                        "dedup": "entity_grain_dedup",
-                        "auto": "auto_entity_grain_dedup",
-                    }[r.spec.fanout_strategy] if fanout_hops else None
-                ),
+                "strategy": "auto_entity_grain_dedup" if fanout_hops else None,
             },
             "filters": {
                 "pushdown": {k: list(v) for k, v in r.pushdown.items()},

@@ -147,7 +147,7 @@ def _component_names(gen, r) -> list[str] | None:
     Derived metrics containing ``all(...)`` window totals are likewise
     refused: ``all`` is a SQL keyword so ``_metric_reagg_sql`` would
     leave the call un-substituted and emit invalid ``all((SUM(x__sum)))``
-    SQL (mirrors the symmetric-agg and dedup guards)."""
+    SQL (mirrors the fan-out dedup plan's guard)."""
     known = set(gen.graph.models)
     comp_names: list[str] = []
     for rm in r.metrics:

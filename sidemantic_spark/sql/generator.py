@@ -95,28 +95,16 @@ class QuerySpec:
     inner_models: list[str] = field(default_factory=list)
     use_preaggs: bool = True  # route to a matching pre-aggregation
     preagg_strict: bool = False  # raise when no pre-aggregation serves
-    # fan-out plan (reference preference hierarchy, sql/generator.py:
-    # 3056-3390): "symmetric" forces symmetric aggregates
-    # (core/symmetric_aggregate.py:20, spark :91-96); "dedup" forces the
-    # entity-grain DISTINCT plan (raw-row semantics, exact decimal sums);
-    # "auto" picks the DISTINCT plan too (why: _grouped_sql)
-    fanout_strategy: str = "auto"
-
-    def __post_init__(self) -> None:
-        if self.fanout_strategy not in FANOUT_STRATEGIES:
-            raise ValueError(f"unknown fanout_strategy {self.fanout_strategy!r}"
-                             f"; expected one of {FANOUT_STRATEGIES}")
 
     def sub(self, **shape) -> "QuerySpec":
         """A sub-query of this request: ``shape`` plus REQUEST_FIELDS."""
         return QuerySpec(**{f: getattr(self, f) for f in REQUEST_FIELDS}, **shape)
 
 
-FANOUT_STRATEGIES = ("auto", "symmetric", "dedup")
 # the fields every sub-query of a request inherits (security namespace,
 # time zone and the per-request modes), as opposed to its shape
 REQUEST_FIELDS = (
-    "user", "timezone", "use_preaggs", "preagg_strict", "fanout_strategy",
+    "user", "timezone", "use_preaggs", "preagg_strict",
 )
 
 
@@ -1686,19 +1674,15 @@ class SqlGenerator:
                     "complete_sql)"
                 )
         if (unsafe or complete_fanout) and r.metrics:
-            if r.spec.fanout_strategy == "symmetric" and not complete_fanout:
-                return self._symmetric_grouped_sql(r)
-            # auto prefers the entity-grain DISTINCT plan: Spark executes
-            # multiple DISTINCT aggregates (symmetric needs >=2 per sum
-            # metric plus COUNT(DISTINCT pk)) via an Expand operator that
+            # one fan-out plan, the entity-grain DISTINCT: the reference's
+            # symmetric aggregates (SUM(DISTINCT hash(pk)*S + v) -
+            # SUM(DISTINCT hash(pk)*S)) need >=2 DISTINCT aggregates per
+            # sum metric, which Spark runs through an Expand that
             # REPLICATES every input row once per distinct aggregate
-            # before the shuffle, so the symmetric plan moves MORE bytes
-            # than the single DISTINCT-(pk, dims, raws) shuffle it is
-            # meant to avoid — measured 3x slower cold at sf0.1
-            # (5.5s vs 1.8s, local[8]) with `Expand` in the plan.
-            # Symmetric stays forceable per request (fanout_strategy=
-            # 'symmetric') for engines/queries where a pre-dedup stage is
-            # the bottleneck.
+            # before the shuffle, so they move MORE bytes than the single
+            # DISTINCT-(pk, dims, raws) shuffle they are meant to avoid —
+            # measured 3x slower cold at sf0.1 (5.5s vs 1.8s, local[8])
+            # with `Expand` in the plan (SCALING.md "Fan-out correction")
             return self._dedup_grouped_sql(r)
         return self._plain_grouped_sql(r)
 
@@ -2077,209 +2061,6 @@ class SqlGenerator:
         final += self._order_limit(r)
         extra = [("__joined", joined), ("__dedup", dedup)]
         return self._assemble(r, ctes, final, plan="grouped-dedup", extra_ctes=extra)
-
-    # shift must exceed the largest |measure value|; hash space 10^14
-    # keeps key*shift inside DECIMAL(38,6) with collision odds ~n^2/10^14
-    _SYM_HASH_MOD = 100_000_000_000_000  # 10^14
-    _SYM_SHIFT = 10_000_000_000  # 10^10
-
-    def _symmetric_grouped_sql(self, r: Resolved) -> str:
-        """Symmetric-aggregate fan-out correction (reference
-        ``core/symmetric_aggregate.py:20-162``, spark hash branch
-        ``:91-96``): ``SUM(DISTINCT hash(pk)*S + v) - SUM(DISTINCT
-        hash(pk)*S)`` recovers the per-entity sum without a dedup
-        stage. The reference's spark branch multiplies a raw xxhash64
-        by 1e12 inside BIGINT (overflow risk, SURVEY.md §7 phase 2);
-        here the key is bounded with pmod and lifted to DECIMAL(38,6)
-        so ANSI mode cannot overflow. AVG uses the NULL-aware distinct
-        pk denominator; unfiltered COUNT becomes COUNT(DISTINCT
-        __symkey) so it shares one distinct-argument group (one Expand
-        projection) with the sums — the null-propagating key keeps
-        outer-join misses out of the count, and a key collision is the
-        same already-accepted event that corrupts the symmetric sums;
-        min/max/count_distinct are fan-out-safe as-is."""
-        if r.spec.ungrouped:
-            raise QueryCompileError("ungrouped queries cannot be fan-out corrected")
-        for rm in r.metrics:
-            for _o, comp in self._expand_components(rm):
-                if comp.sql_is_complete:
-                    raise QueryCompileError(
-                        f"opaque complete-SQL metric {comp.name!r} cannot be "
-                        "combined with fan-out-corrected metrics (reference "
-                        "guard sql/generator.py:3721-3742)"
-                    )
-        fact = r.metrics[0].model
-        ctes = [
-            self._model_cte(r, m, include_pk=(m == fact)) for m in r.models
-        ]
-        fact_model = self.graph.get_model(fact)
-        pk_cols = [f"__pk{i}" for i in range(len(fact_model.pk_list()))]
-        pk_concat = (
-            f"{fact}_cte.{pk_cols[0]}"
-            if len(pk_cols) == 1
-            else "CONCAT_WS('||', " + ", ".join(f"CAST({fact}_cte.{c} AS STRING)" for c in pk_cols) + ")"
-        )
-
-        proj = [f"{pk_concat} AS __pkc"]
-        # hash the pk in its native type: the CAST AS STRING this used
-        # to do materialized a string per joined row just to feed
-        # xxhash64 (which hashes any atomic type directly); the key
-        # cancels in SUM(DISTINCT __symkey + v) - SUM(DISTINCT
-        # __symkey), so the hash input representation never reaches the
-        # result (composite pks are already CONCAT_WS strings).
-        # NULL-PROPAGATING: an outer-join miss row (NULL pk) yields a
-        # NULL key instead of xxhash64's non-null empty-input hash, so
-        # COUNT(DISTINCT __symkey) below skips misses exactly like
-        # COUNT(DISTINCT __pkc) did, and the sum pair drops the miss
-        # sentinel from BOTH sums instead of cancelling it (same
-        # difference; the all-miss group is restored to the reference's
-        # 0 by the COALESCE on the sum form). Composite pks are
-        # CONCAT_WS strings, never NULL, so the CASE never fires there.
-        proj.append(
-            f"CASE WHEN {pk_concat} IS NOT NULL THEN "
-            f"CAST(pmod(xxhash64({pk_concat}), "
-            f"{self._SYM_HASH_MOD}) AS DECIMAL(38,6)) * {self._SYM_SHIFT} "
-            "END AS __symkey"
-        )
-        for rd in r.dims:
-            proj.append(f"{rd.model}_cte.{rd.out} AS {rd.out}")
-        for comp_out, comp in r.component_metrics.get(fact, []):
-            if comp.sql:
-                proj.append(f"{fact}_cte.{comp_out}_raw AS {comp_out}_raw")
-        for rm in r.metrics:
-            for _o, comp in self._expand_components(rm):
-                for flt in comp.filters:
-                    for m, fld, _g in find_refs(flt, set(self.graph.models)):
-                        if m == fact:
-                            proj.append(f"{fact}_cte.{fld} AS {fld}")
-                        else:
-                            raise QueryCompileError(
-                                "metric filters on non-fact models are not supported "
-                                "under symmetric aggregation"
-                            )
-
-        joined = "SELECT\n        " + ",\n        ".join(dict.fromkeys(proj))
-        joined += "\n    FROM " + self._join_clause(r)
-        where = [self._rewrite_outer_filter(f) for f in r.outer_filters]
-        if where:
-            joined += "\n    WHERE " + "\n      AND ".join(f"({w})" for w in where)
-
-        def sym_value(out: str, metric: Metric) -> str | None:
-            for model_name, comps in r.component_metrics.items():
-                for comp_out, comp in comps:
-                    if comp_out == out or comp.name == metric.name:
-                        return f"{comp_out}_raw" if comp.sql else None
-            return None
-
-        def sym_agg(metric: Metric, depth: int = 0) -> str:
-            if metric.is_simple:
-                value = sym_value(metric.name, metric)
-                if metric.filters:
-                    cond = " AND ".join(
-                        f"({self._rewrite_dedup_filter(f, r)})" for f in metric.filters
-                    )
-                    value = f"CASE WHEN {cond} THEN {value} END" if value else None
-                    if metric.agg == "count" and value is None:
-                        return f"COUNT(DISTINCT CASE WHEN {cond} THEN __pkc END)"
-                if metric.agg == "sum":
-                    v = f"COALESCE(CAST({value} AS DECIMAL(38,6)), 0)"
-                    # COALESCE restores the reference's 0 for a group
-                    # holding ONLY outer-join misses: with the
-                    # null-propagating __symkey both DISTINCT sums skip
-                    # miss rows (the reference's non-null miss sentinel
-                    # cancelled to 0 instead); every other group has a
-                    # non-null key, so the diff is non-null and the
-                    # COALESCE is a no-op
-                    sql = (f"COALESCE(SUM(DISTINCT __symkey + {v}) - "
-                           "SUM(DISTINCT __symkey), 0)")
-                elif metric.agg == "avg":
-                    num = sym_agg(Metric(name=metric.name, agg="sum", sql=metric.sql,
-                                         filters=metric.filters), depth + 1)
-                    den = f"COUNT(DISTINCT CASE WHEN {value} IS NOT NULL THEN __pkc END)"
-                    sql = f"CAST(({num}) AS DOUBLE) / NULLIF({den}, 0)"
-                elif metric.agg == "count":
-                    if value is None:
-                        # count distinct KEYS, not pks: SUM(DISTINCT
-                        # __symkey ...) and COUNT(DISTINCT __symkey)
-                        # share one distinct-argument set, so Spark's
-                        # RewriteDistinctAggregates plans 2 Expand
-                        # projections instead of 3 — a third of the
-                        # pre-shuffle row replication (measured sf0.1:
-                        # 2.49 s -> 1.72 s noop). A key collision
-                        # miscounting an entity is the SAME event that
-                        # already corrupts the symmetric sums (two pks
-                        # sharing a key merge in SUM(DISTINCT) too), so
-                        # this adds no new failure class; misses stay
-                        # excluded because __symkey null-propagates.
-                        sql = "COUNT(DISTINCT __symkey)"
-                    else:
-                        sql = f"COUNT(DISTINCT CASE WHEN {value} IS NOT NULL THEN __pkc END)"
-                elif metric.agg in ("min", "max", "count_distinct",
-                                    "approx_count_distinct"):
-                    sql = metric.agg_sql(value)
-                else:
-                    raise QueryCompileError(
-                        f"metric {metric.name!r} ({metric.agg}) has no symmetric form"
-                    )
-                if metric.fill_nulls_with is not None:
-                    sql = f"COALESCE({sql}, {metric.fill_nulls_with})"
-                return sql
-            if metric.type == "ratio":
-                _m1, num = self._lookup_metric(_qualify(metric.numerator, fact))
-                _m2, den = self._lookup_metric(_qualify(metric.denominator, fact))
-                return (f"CAST(({sym_agg(num, depth + 1)}) AS DOUBLE) / "
-                        f"NULLIF(CAST(({sym_agg(den, depth + 1)}) AS DOUBLE), 0)")
-            if metric.type == "derived":
-                if _ALL_RE.search(metric.expr or ""):
-                    raise QueryCompileError(
-                        f"metric {metric.name!r}: all() window totals are not "
-                        "supported under symmetric aggregation"
-                    )
-                sql = metric.expr
-                for name in _identifiers(metric.expr):
-                    try:
-                        _m, child = self._lookup_metric(_qualify(name, fact))
-                    except QueryCompileError:
-                        continue
-                    sql = re.sub(rf"\b{re.escape(name)}\b",
-                                 f"({sym_agg(child, depth + 1)})", sql)
-                return sql
-            raise QueryCompileError(
-                f"metric {metric.name!r}: unsupported under symmetric aggregation"
-            )
-
-        dim_outs = [rd.out for rd in r.dims]
-        select_parts = list(dim_outs)
-        for rm in r.metrics:
-            select_parts.append(f"{sym_agg(rm.metric)} AS {rm.out}")
-        if r.spec.with_totals and dim_outs:
-            # same grand-total marker as the grouped/dedup plans
-            select_parts.append(
-                f"CAST(GROUPING({dim_outs[0]}) AS BOOLEAN) AS _is_total"
-            )
-        final = "SELECT\n    " + ",\n    ".join(select_parts)
-        final += "\nFROM __joined"
-        if dim_outs:
-            if r.spec.with_totals:
-                final += "\nGROUP BY GROUPING SETS ((" + ", ".join(dim_outs) + "), ())"
-            else:
-                final += "\nGROUP BY " + ", ".join(dim_outs)
-        if r.having:
-            def value_of(out, metric):
-                return sym_value(out, metric)
-            having = []
-            for h in r.having:
-                def sub(m, fld, g):
-                    model = self.graph.get_model(m)
-                    metric = model.metric(fld)
-                    if metric is not None:
-                        return f"({sym_agg(metric)})"
-                    return fld
-                having.append(replace_refs(h, set(self.graph.models), sub))
-            final += "\nHAVING " + "\n  AND ".join(f"({h})" for h in having)
-        final += self._order_limit(r)
-        extra = [("__joined", joined)]
-        return self._assemble(r, ctes, final, plan="grouped-symmetric", extra_ctes=extra)
 
     def _metric_sql_dedup(self, rm: RMetric, value_of, r: Resolved, depth: int = 0) -> str:
         metric = rm.metric

@@ -405,13 +405,11 @@ class SemanticSqlRewriter:
     # -- public -------------------------------------------------------
 
     def rewrite(self, sql: str, user: dict | None = None,
-                use_preaggs: bool = True, preagg_strict: bool = False,
-                fanout_strategy: str = "auto") -> str:
+                use_preaggs: bool = True, preagg_strict: bool = False) -> str:
         """Semantic SQL text -> executable Spark SQL, every semantic
         island compiled with ``user`` and the per-request modes."""
         request = dict(user=user, use_preaggs=use_preaggs,
-                       preagg_strict=preagg_strict, fanout_strategy=fanout_strategy)
-        QuerySpec(**request)  # raises on an unknown fanout_strategy
+                       preagg_strict=preagg_strict)
         gen = self.layer.generator
         with self._compile_lock:
             key = gen.state_key() + (self.wrapper_rules_enabled, sql,

@@ -217,18 +217,46 @@ def test_wrapped_semantic_sql_matches_direct(fuzz_layer, spark, m, d1, d2, wrapp
         ["orders.status", "orders.priority", "customer.mktsegment"]),
         min_size=1, max_size=2, unique=True),
 )
-def test_fanout_strategies_agree(fuzz_layer, ms, ds):
-    """auto / symmetric / dedup fan-out plans are physical choices, not
-    semantic ones: every strategy must return identical rows for any
-    fan-out-prone combo (dims from the many side, metrics from the one
-    side)."""
-    results = {}
-    for strat in ("auto", "dedup", "symmetric"):
-        rows = fuzz_layer.query(
-            metrics=ms, dimensions=ds, fanout_strategy=strat).collect()
-        canon = sorted(
-            (tuple(round(float(v), 6) if isinstance(v, (int, float)) or
-                   hasattr(v, "quantize") else v for v in r) for r in rows),
-            key=repr)
-        results[strat] = canon
-    assert results["auto"] == results["dedup"] == results["symmetric"], (ms, ds)
+def test_fanout_plan_matches_entity_grain_oracle(fuzz_layer, duck, ms, ds):
+    """Fan-out-prone combos (dims from the many side, metrics from the
+    one side) return, per metric, the metric's aggregate over the
+    DISTINCT (pk, dims, value) rows of the same join, computed in
+    DuckDB. The join is rooted at the first dimension's model, as the
+    compiler roots it; LEFT joins keep every base row."""
+    rows = fuzz_layer.query(metrics=ms, dimensions=ds).collect()
+    dcols = [d.split(".", 1)[1] for d in ds]
+    mcols = [m.split(".", 1)[1] for m in ms]
+    join = ("customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey"
+            if ds[0].startswith("customer.") else
+            "orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey")
+    dim_sql = {"orders.status": "o.o_orderstatus",
+               "orders.priority": "o.o_orderpriority",
+               "customer.mktsegment": "c.c_mktsegment"}
+    # metric -> (entity pk, value, aggregate over the distinct rows)
+    metric_sql = {
+        "customer.customer_count": ("c.c_custkey", "c.c_custkey", "COUNT"),
+        "customer.total_acctbal": (
+            "c.c_custkey", "CAST(c.c_acctbal AS DECIMAL(18,2))", "SUM"),
+        "orders.revenue": (
+            "o.o_orderkey", "CAST(o.o_totalprice AS DECIMAL(18,2))", "SUM"),
+    }
+    dims = ", ".join(f"{dim_sql[d]} AS {c}" for d, c in zip(ds, dcols))
+    groups = ", ".join(dcols)
+    expected: dict = {}
+    for i, m in enumerate(ms):
+        pk, value, agg = metric_sql[m]
+        for *key, v in duck.execute(f"""
+            SELECT {groups}, {agg}(__v) FROM (
+                SELECT DISTINCT {pk} AS __pk, {dims}, {value} AS __v
+                FROM {join}) GROUP BY {groups}
+        """).fetchall():
+            expected.setdefault(tuple(key), [None] * len(ms))[i] = v
+
+    def canon(v):
+        return None if v is None else round(float(v), 6)
+
+    got = {tuple(r[c] for c in dcols): [canon(r[c]) for c in mcols]
+           for r in rows}
+    assert len(got) == len(rows), (ms, ds)
+    assert got == {k: [canon(v) for v in vs] for k, vs in expected.items()}, \
+        (ms, ds)

@@ -907,12 +907,6 @@ def test_sql_path_enforces_visibility_and_cache_isolation(spark, sf_dir):
         metrics=["orders.revenue"], dimensions=["lineitem.returnflag"])
     assert "plan=grouped-dedup" in vlayer.rewrite(fanout)
     assert "plan=grouped-dedup" in vlayer.compile(**fanout_kw)
-    assert "plan=grouped-symmetric" in vlayer.rewrite(
-        fanout, fanout_strategy="symmetric")
-    assert "plan=grouped-symmetric" in vlayer.compile(
-        **fanout_kw, fanout_strategy="symmetric")
-    assert "plan=grouped-dedup" in vlayer.rewrite(fanout)
-    assert "plan=grouped-dedup" in vlayer.compile(**fanout_kw)
 
     snapshot = "SELECT lineitem.last_qty_per_part FROM lineitem"
     assert "plan=semi-additive" in vlayer.rewrite(snapshot)

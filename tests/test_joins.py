@@ -99,28 +99,8 @@ def test_fanout_dedup_sum(layer, duck):
     sql = layer.compile(
         metrics=["orders.revenue"], dimensions=["lineitem.returnflag"]
     )
-    # auto prefers the entity-grain DISTINCT plan (symmetric's multiple
-    # DISTINCT aggregates Expand-replicate every row pre-shuffle;
-    # measured 3x slower cold at sf0.1 — see generator routing comment)
+    # the one fan-out plan (why: the generator's _grouped_sql comment)
     assert "plan=grouped-dedup" in sql
-    # the symmetric plan stays reachable and equivalent
-    sql2 = layer.compile(
-        metrics=["orders.revenue"], dimensions=["lineitem.returnflag"],
-        fanout_strategy="symmetric",
-    )
-    assert "plan=grouped-symmetric" in sql2
-    df2 = layer.query(
-        metrics=["orders.revenue", "orders.order_count"],
-        dimensions=["lineitem.returnflag"],
-        fanout_strategy="symmetric",
-    )
-    assert sorted(
-        (r["returnflag"], float(r["revenue"]), r["order_count"])
-        for r in df2.collect()
-    ) == sorted(
-        (r["returnflag"], float(r["revenue"]), r["order_count"])
-        for r in df.collect()
-    )
 
 
 def test_fanout_dedup_filtered_metric_with_same_dim(layer, duck):
@@ -242,20 +222,16 @@ def test_dims_only_distinct(layer, duck):
     )
 
 
-def test_symmetric_aggregates_match_dedup_plan(layer, duck):
-    """fanout_strategy='symmetric': SUM(DISTINCT hash(pk)*S + v) -
-    SUM(DISTINCT hash(pk)*S) recovers the fan-out-safe sum/count/avg
-    (ref core/symmetric_aggregate.py:20-162; DECIMAL(38,6)-lifted keys
-    instead of the reference's overflow-prone bigint spark branch)."""
+def test_fanout_sum_count_avg_under_lineitem_filter(layer, duck):
+    """A filter on the many side fans the orders metrics out; the
+    entity-grain plan still returns each order once per group for sum,
+    count and avg (ref tests/metrics/test_symmetric_aggs.py)."""
     kw = dict(
         metrics=["orders.revenue", "orders.order_count", "orders.avg_order_value"],
         dimensions=["orders.status"],
         filters=["lineitem.ship_date IS NOT NULL"],
-        fanout_strategy="symmetric",
     )
-    sql = layer.compile(**kw)
-    assert "plan=grouped-symmetric" in sql
-    assert "SUM(DISTINCT __symkey" in sql
+    assert "plan=grouped-dedup" in layer.compile(**kw)
     rows = {
         r["status"]: (float(r["revenue"]), r["order_count"], float(r["avg_order_value"]))
         for r in layer.query(**kw).collect()
@@ -276,57 +252,6 @@ def test_symmetric_aggregates_match_dedup_plan(layer, duck):
         assert abs(got[0] - exp[0]) < 1e-3, (s, got, exp)
         assert got[1] == exp[1]
         assert abs(got[2] - exp[2]) < 1e-3
-
-
-def test_symmetric_aggregates_outer_join_misses(spark):
-    """Symmetric plan vs LEFT-join misses, pinning the r12 shared
-    distinct-group rewrite (COUNT(DISTINCT __symkey) riding the sums'
-    Expand projection, null-propagating key, COALESCE'd sum diff):
-    miss rows (fk with no matching pk) must stay OUT of the count, a
-    group holding ONLY misses must yield sum 0 / count 0 (reference
-    sentinel-cancellation semantics), and a mixed group must ignore its
-    miss rows."""
-    from sidemantic_spark.core.layer import SparkSemanticLayer
-    from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
-
-    spark.createDataFrame(
-        [(1, "A", 10), (2, "A", 10), (3, "A", 11), (6, "A", 98),
-         (4, "B", 99), (5, "C", 77)],
-        "id long, flag string, order_id long",
-    ).createOrReplaceTempView("symm_items")
-    spark.createDataFrame(
-        [(10, 100), (11, 50)], "id long, amount long"
-    ).createOrReplaceTempView("symm_orders")
-    lay = SparkSemanticLayer(spark)
-    lay.add_model(Model(
-        name="sy_items", table="symm_items", primary_key="id",
-        dimensions=[Dimension(name="flag")],
-        relationships=[Relationship(
-            name="sy_ords", type="many_to_one", foreign_key="order_id")],
-    ))
-    lay.add_model(Model(
-        name="sy_ords", table="symm_orders", primary_key="id",
-        metrics=[
-            Metric(name="total", agg="sum", sql="amount"),
-            Metric(name="cnt", agg="count"),
-        ],
-    ))
-    kw = dict(
-        metrics=["sy_ords.total", "sy_ords.cnt"],
-        dimensions=["sy_items.flag"],
-        fanout_strategy="symmetric",
-    )
-    sql = lay.compile(**kw)
-    assert "plan=grouped-symmetric" in sql
-    assert "COUNT(DISTINCT __symkey)" in sql
-    assert "COALESCE(SUM(DISTINCT __symkey" in sql
-    rows = {
-        r["flag"]: (int(r["total"]), r["cnt"])
-        for r in lay.query(**kw).collect()
-    }
-    # A: orders 10 (duplicated by items 1+2) and 11, one miss (98)
-    # B, C: only misses — the all-miss group is 0/0, not NULL
-    assert rows == {"A": (150, 2), "B": (0, 0), "C": (0, 0)}
 
 
 def test_dedup_pre_collapse_outer_join_misses(spark):

@@ -209,6 +209,47 @@ def test_explain_plan_fanout_and_join_path(layer):
     assert ex["filters"]["pushdown"].get("orders")
 
 
+def test_explain_plan_fanout_follows_the_compiler(spark):
+    """A one_to_one hop after a duplicated model carries the duplication
+    on: explain_plan reports the fan-out the compiler corrects for."""
+    from sidemantic_spark.core.layer import SparkSemanticLayer
+    from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
+
+    spark.createDataFrame(
+        [(1, "A", 10), (2, "A", 10), (3, "B", 11)],
+        "id long, flag string, order_id long",
+    ).createOrReplaceTempView("xf_items")
+    spark.createDataFrame([(10,), (11,)], "id long").createOrReplaceTempView(
+        "xf_orders")
+    spark.createDataFrame(
+        [(10, 100), (11, 50)], "id long, amount long",
+    ).createOrReplaceTempView("xf_ext")
+    lay = SparkSemanticLayer(spark)
+    lay.add_model(Model(
+        name="xf_items", table="xf_items", primary_key="id",
+        dimensions=[Dimension(name="flag")],
+        relationships=[Relationship(
+            name="xf_orders", type="many_to_one", foreign_key="order_id")],
+    ))
+    lay.add_model(Model(
+        name="xf_orders", table="xf_orders", primary_key="id",
+        relationships=[Relationship(
+            name="xf_ext", type="one_to_one", foreign_key="id")],
+    ))
+    lay.add_model(Model(
+        name="xf_ext", table="xf_ext", primary_key="id",
+        metrics=[Metric(name="total", agg="sum", sql="amount")],
+    ))
+    kw = dict(metrics=["xf_ext.total"], dimensions=["xf_items.flag"])
+    ex = lay.explain_plan(**kw)
+    assert "plan=grouped-dedup" in ex["compiled_sql"]
+    assert ex["fanout"]["detected"]
+    assert "xf_items->xf_orders" in ex["fanout"]["hops"]
+    assert ex["fanout"]["strategy"] == "auto_entity_grain_dedup"
+    rows = {r["flag"]: r["total"] for r in lay.query(**kw).collect()}
+    assert rows == {"A": 100, "B": 50}
+
+
 def test_explain_plan_agrees_with_compile(spark, sf_dir):
     """explain_plan reports the resolution of the exact SQL it returns:
     segments, the {model} placeholder, graph parameter defaults and the

@@ -1,6 +1,5 @@
 """A request's settings live in its ``QuerySpec``: the per-request modes
-(``use_preaggs``, ``preagg_strict``, ``fanout_strategy``) are per-call
-keywords, every sub-query a plan compiles (window inner query,
+(``use_preaggs``, ``preagg_strict``) are per-call keywords, every sub-query a plan compiles (window inner query,
 multi-fact per-fact query) inherits the request's ``user``, ``timezone``
 and modes, and ``query()`` / ``sql()`` share one missing-rollup
 fallback that fires only for a declared pre-aggregation's table.
@@ -109,31 +108,34 @@ def test_window_and_multifact_apply_row_security_for_user(secured):
 
 
 # ---------------------------------------------------------------------------
-# the modes are per call, validated, and part of the one cache key
+# the modes are per call and part of the one cache key
 # ---------------------------------------------------------------------------
 
 def test_unknown_fanout_strategy_raises(layer):
+    """A fan-out join has one plan, so the removed ``fanout_strategy``
+    keyword is unknown to every compile entry point."""
     kw = dict(metrics=["orders.revenue"], dimensions=["lineitem.returnflag"],
-              fanout_strategy="bogus")
-    with pytest.raises(ValueError, match="fanout_strategy"):
+              fanout_strategy="dedup")
+    with pytest.raises(TypeError, match="fanout_strategy"):
         layer.compile(**kw)
-    with pytest.raises(ValueError, match="fanout_strategy"):
+    with pytest.raises(TypeError, match="fanout_strategy"):
         layer.explain_plan(**kw)
-    with pytest.raises(ValueError, match="fanout_strategy"):
+    with pytest.raises(TypeError, match="fanout_strategy"):
         layer.rewrite("SELECT orders.revenue FROM orders",
-                      fanout_strategy="bogus")
-    # semantic SQL takes the three modes only, no other spec field
+                      fanout_strategy="dedup")
+    # semantic SQL takes the two modes only, no other spec field
     with pytest.raises(TypeError):
         layer.rewrite("SELECT orders.revenue FROM orders", timezone=TZ)
 
 
 def test_explain_plan_reports_the_request_strategy(layer):
     kw = dict(metrics=["orders.revenue"], dimensions=["lineitem.returnflag"])
-    assert layer.explain_plan(**kw)["fanout"]["strategy"] == \
-        "auto_entity_grain_dedup"
-    plan = layer.explain_plan(**kw, fanout_strategy="symmetric")
-    assert plan["fanout"]["strategy"] == "symmetric_aggregates"
-    assert "plan=grouped-symmetric" in plan["compiled_sql"]
+    plan = layer.explain_plan(**kw)
+    assert plan["fanout"]["strategy"] == "auto_entity_grain_dedup"
+    assert "plan=grouped-dedup" in plan["compiled_sql"]
+    assert layer.explain_plan(
+        metrics=["orders.revenue"], dimensions=["orders.status"],
+    )["fanout"]["strategy"] is None
 
 
 def test_cache_key_covers_every_spec_field(layer):
@@ -142,14 +144,14 @@ def test_cache_key_covers_every_spec_field(layer):
     gen = layer.generator
     base = QuerySpec(metrics=["orders.revenue"])
     other = {"limit": 7, "offset": 7, "user": {"k": [1]}, "timezone": "UTC",
-             "parameters": {"k": [1]}, "fanout_strategy": "symmetric"}
+             "parameters": {"k": [1]}}
     keys = {gen._cache_key(base)}
     for f in dataclasses.fields(QuerySpec):
         value = getattr(base, f.name)
         new = other.get(f.name, not value if isinstance(value, bool) else ["x"])
         keys.add(gen._cache_key(dataclasses.replace(base, **{f.name: new})))
     assert len(keys) == len(dataclasses.fields(QuerySpec)) + 1
-    for mode in ("use_preaggs", "preagg_strict", "fanout_strategy"):
+    for mode in ("use_preaggs", "preagg_strict"):
         assert not hasattr(SqlGenerator(layer.graph), mode)
 
 
@@ -233,19 +235,13 @@ def test_routed_query_missing_base_table_raises_without_fallback(
     assert len(compiles) == 1  # no fallback compile
 
 
-def test_fallback_and_forced_fanout_do_not_leak_across_threads(
-        unbuilt, monkeypatch):
-    """Thread A is held inside its missing-rollup fallback while B
-    compiles a routable query, then B is held inside a forced symmetric
-    compile while A compiles with the default strategy: each gets the
-    plan its own request asked for."""
+def test_fallback_does_not_leak_across_threads(unbuilt, monkeypatch):
+    """Thread A is held inside its missing-rollup fallback while another
+    request compiles a routable query: that request still routes, and A
+    still gets the base-table rows it fell back to."""
     spark = unbuilt.spark
-    gen = unbuilt.generator
     routable = dict(metrics=["orders.revenue"], dimensions=["orders.status"])
-    fanout = dict(metrics=["orders.revenue", "orders.order_count"],
-                  dimensions=["lineitem.returnflag"])
     a_in_fallback, release_a = threading.Event(), threading.Event()
-    b_in_symmetric, release_b = threading.Event(), threading.Event()
     out: dict = {}
 
     class HoldFallback:
@@ -259,44 +255,23 @@ def test_fallback_and_forced_fanout_do_not_leak_across_threads(
                 assert release_a.wait(30)
             return spark.sql(text, *a, **kw)
 
-    symmetric = gen._symmetric_grouped_sql
-
-    def hold_symmetric(r):
-        if threading.current_thread().name == "B":
-            b_in_symmetric.set()
-            assert release_b.wait(30)
-        return symmetric(r)
-
     monkeypatch.setattr(unbuilt, "spark", HoldFallback())
-    monkeypatch.setattr(gen, "_symmetric_grouped_sql", hold_symmetric)
 
     def run_a():
         out["a_rows"] = sorted(map(tuple, unbuilt.query(**routable).collect()))
-        out["a_fanout"] = unbuilt.compile(**fanout)
-
-    def run_b():
-        out["b_fanout"] = unbuilt.compile(**fanout, fanout_strategy="symmetric")
 
     a = threading.Thread(target=run_a, name="A")
-    b = threading.Thread(target=run_b, name="B")
     try:
         a.start()
         assert a_in_fallback.wait(30)
-        # A's fallback is in flight: B's request still routes
+        # A's fallback is in flight: another request still routes
         assert "used_preagg=orders_preagg_never_built" in \
             unbuilt.compile(**routable)
-        b.start()
-        assert b_in_symmetric.wait(30)
         release_a.set()
         a.join(60)
-        release_b.set()
-        b.join(60)
     finally:
         release_a.set()
-        release_b.set()
-    assert not a.is_alive() and not b.is_alive()
-    assert "plan=grouped-symmetric" in out["b_fanout"]
-    assert "plan=grouped-dedup" in out["a_fanout"]
+    assert not a.is_alive()
     assert len(out["a_rows"]) == 3
 
 

@@ -1,10 +1,10 @@
 """No request mutates shared state (AST guard, same style as
 ``test_exception_boundaries.py``).
 
-- The per-request modes ``use_preaggs``, ``preagg_strict`` and
-  ``fanout_strategy`` are ``QuerySpec`` fields passed per call. Nothing
-  assigns them as attributes: a leftover assignment to the generator's
-  old ``use_preaggs`` attribute would silently do nothing.
+- The per-request modes (``REQUEST_FIELDS`` apart from the ``user`` and
+  ``timezone`` context) are ``QuerySpec`` fields passed per call.
+  Nothing assigns them as attributes: a leftover assignment to the
+  generator's old ``use_preaggs`` attribute would silently do nothing.
 - Session conf writes (``conf.set`` / ``conf.unset``) in the library
   happen only at the set-up sites below. Anything else changes the
   session for every concurrent request.
@@ -13,9 +13,11 @@
 import ast
 import os
 
+from sidemantic_spark.sql.generator import REQUEST_FIELDS
+
 ROOT = os.path.join(os.path.dirname(__file__), "..")
 
-MODES = {"use_preaggs", "preagg_strict", "fanout_strategy"}
+MODES = set(REQUEST_FIELDS) - {"user", "timezone"}
 SCANNED = ("sidemantic_spark", "tests", "scripts", "bench.py",
            "__spark_entry__.py")
 
