@@ -169,9 +169,11 @@ def cmd_convert(args) -> int:
 
 
 def cmd_explain(args) -> int:
-    """Structured query plan: join path, fan-out strategy, filter
-    pushdown split, preagg candidates with accept/reject reasons
-    (reference `explain` CLI; our layer.explain_plan)."""
+    """Structured query plan: join path, fan-out strategy (the plan
+    the compiler chose), filter pushdown split, and the rollup router's
+    own record of the compile — eligibility, the refusing gate, each
+    candidate's accept/reject reasons, the rollup used (reference
+    `explain` CLI; our layer.explain_plan)."""
     import json as _json
 
     layer = _load_layer(args)

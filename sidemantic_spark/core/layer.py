@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sidemantic_spark.core.graph import SemanticGraph
 from sidemantic_spark.core.model import Metric, Model
-from sidemantic_spark.sql.generator import QuerySpec, Resolved, SqlGenerator
+from sidemantic_spark.sql.generator import QuerySpec, Resolved, SqlGenerator, read_header
 
 
 class SparkSemanticLayer:
@@ -628,14 +628,22 @@ class SparkSemanticLayer:
     def explain_plan(self, **kwargs) -> dict:
         """Structured explain IR (reference ``core/query_plan.py:43``
         QueryPlan / ``sql/planner.py:23``): resolved models and join
-        path, fan-out analysis, pre-aggregation candidates with
-        per-candidate accept/reject reasons, and the compiled SQL.
-        Everything reported is read from the one resolution that SQL was
-        generated from: after segments, parameters, the ``{model}``
-        placeholder, default time dimensions and the layer's limits."""
-        from sidemantic_spark.preagg.router import explain_route
-
+        path, fan-out analysis, the pre-aggregation route and the
+        compiled SQL. Everything reported is read from the one
+        compilation that SQL came from: after segments, parameters, the
+        ``{model}`` placeholder, default time dimensions and the
+        layer's limits. ``preagg`` is the router's own record of that
+        compile (``eligible``, the refusing ``reason``, each
+        candidate's accept/reject reasons, the ``used`` rollup); a
+        compile that never consulted the router (``use_preaggs=False``,
+        window, multi-fact, semi-additive and conversion plans) reports
+        it as not attempted."""
         sql, r = self._compile(kwargs, explain=True)
+        # the generator's header; a table_calcs wrapper puts its own
+        # header line first
+        header: dict[str, str] = {}
+        for line in sql.split("\n", 2)[:2]:
+            header.update(read_header(line))
         # fan-out: the join duplicates rows of a model carrying metrics,
         # by the generator's own rule (ref sql/generator.py:2500-2548
         # _has_fanout_joins)
@@ -643,11 +651,6 @@ class SparkSemanticLayer:
         fanout_hops = [
             h for h in r.hops if h.duplicates_left() or h.duplicates_right()
         ] if any(dup.get(rm.model, False) for rm in r.metrics) else []
-        used = None
-        for line in sql.split("\n", 2)[:2]:
-            for tok in line.split():
-                if tok.startswith("used_preagg="):
-                    used = tok.split("=", 1)[1]
         return {
             "base_model": r.base,
             "models": list(r.models),
@@ -665,7 +668,10 @@ class SparkSemanticLayer:
             "fanout": {
                 "detected": bool(fanout_hops),
                 "hops": [f"{h.from_model}->{h.to_model}" for h in fanout_hops],
-                "strategy": "auto_entity_grain_dedup" if fanout_hops else None,
+                # the plan the generator chose: fan-out-safe metrics
+                # keep the plain grouped plan
+                "strategy": "auto_entity_grain_dedup"
+                if header.get("plan") == "grouped-dedup" else None,
             },
             "filters": {
                 "pushdown": {k: list(v) for k, v in r.pushdown.items()},
@@ -673,8 +679,14 @@ class SparkSemanticLayer:
                 "having": list(r.having),
             },
             "limit": r.spec.limit,
-            "preagg": explain_route(self.generator, r),
-            "used_preagg": used,
+            "preagg": r.route or {
+                "eligible": False,
+                "reason": "not attempted: this compile does not consult the "
+                          "rollup router",
+                "candidates": [],
+                "used": None,
+            },
+            "used_preagg": header.get("used_preagg"),
             "compiled_sql": sql,
         }
 

@@ -132,43 +132,32 @@ def match_preagg(
     model: Model,
     metric_names: list[str],
     dims: list[tuple[str, str | None]],  # (dim name, grain or None)
-    filter_dims: list[str],
+    filter_dims: list[tuple],  # (name, grain, aligned grains) per filter field
     raw_columns: list[str] | None = None,  # join keys the rollup must store
+    report: list[dict] | None = None,
+    rollups: list[PreAggregation] | None = None,
 ) -> PreAggMatch | None:
-    """Best matching rollup for a single-model query, or None."""
-    candidates: list[PreAggMatch] = []
-    for pa in getattr(model, "pre_aggregations", []) or []:
-        m = _try_match(model, pa, metric_names, dims, filter_dims, raw_columns or [])
-        if m is not None:
-            candidates.append(m)
-    if not candidates:
-        return None
-    candidates.sort(key=lambda c: (c.specificity, c.preagg.name))
-    return candidates[0]
-
-
-def explain_candidates(
-    model: Model,
-    metric_names: list[str],
-    dims: list[tuple[str, str | None]],
-    filter_dims: list[str],
-    raw_columns: list[str] | None = None,
-) -> list[dict]:
-    """Per-candidate accept/reject report for explain output (reference
-    ``core/query_plan.py:43`` QueryPlan preagg candidates+checks)."""
-    out: list[dict] = []
-    for pa in getattr(model, "pre_aggregations", []) or []:
+    """Best matching rollup for a single-model query, or None: the most
+    specific of ``rollups`` (default: all of the model's) that
+    ``_try_match`` accepts.  Each rollup is visited once; with
+    ``report``, its verdict is appended there as it is visited (the
+    reference's ``core/query_plan.py:43`` candidates and checks)."""
+    matches: list[PreAggMatch] = []
+    if rollups is None:
+        rollups = getattr(model, "pre_aggregations", None) or []
+    for pa in rollups:
         reasons: list[str] = []
-        m = _try_match(
-            model, pa, metric_names, dims, filter_dims, raw_columns or [], reasons
-        )
-        out.append({
-            "name": pa.physical_name(model.name),
-            "ok": m is not None,
-            "reasons": reasons,
-            "specificity": m.specificity if m else None,
-        })
-    return out
+        m = _try_match(model, pa, metric_names, dims, filter_dims, raw_columns or [], reasons)
+        if report is not None:
+            report.append({
+                "name": pa.physical_name(model.name),
+                "ok": m is not None,
+                "reasons": reasons,
+                "specificity": m.specificity if m else None,
+            })
+        if m is not None:
+            matches.append(m)
+    return min(matches, key=lambda c: (c.specificity, c.preagg.name), default=None)
 
 
 def _try_match(
@@ -176,13 +165,11 @@ def _try_match(
     pa: PreAggregation,
     metric_names: list[str],
     dims: list[tuple[str, str | None]],
-    filter_dims: list[str],
+    filter_dims: list[tuple],
     raw_columns: list[str],
-    reasons: list[str] | None = None,
+    reasons: list[str],
 ) -> PreAggMatch | None:
-    def why(msg: str) -> None:
-        if reasons is not None:
-            reasons.append(msg)
+    why = reasons.append
 
     if pa.type not in ("rollup", "rollup_join", "lambda"):
         why(f"type {pa.type!r} is never routed for metric queries")
@@ -228,13 +215,7 @@ def _try_match(
     # unfiltered rollup dims that the query doesn't group by are fine —
     # re-aggregation collapses them; but query filters must hit stored
     # dims
-    for entry in filter_dims:
-        # entries are (name, grain, aligned_grains) from the router, or
-        # a plain name from legacy callers
-        if isinstance(entry, tuple):
-            fname, fgrain, aligned = entry
-        else:
-            fname, fgrain, aligned = entry, None, None
+    for fname, fgrain, aligned in filter_dims:
         fdim = model.dimension(fname)
         if fdim is not None and fdim.type == "time":
             if pa.time_dimension != fname:

@@ -23,13 +23,12 @@ from __future__ import annotations
 
 import hashlib
 import math
-import re
 from collections import Counter, defaultdict
 from dataclasses import dataclass
 
 from sidemantic_spark.preagg.matcher import PreAggregation
+from sidemantic_spark.sql.generator import read_header
 
-_META_RE = re.compile(r"--\s*sidemantic_spark\s+(.+)")
 _GRAIN_ORDER = ["second", "minute", "hour", "day", "week", "month", "quarter", "year"]
 
 
@@ -110,14 +109,7 @@ class PreAggregationRecommender:
         self.parse_query_log([sql])
 
     def _extract_pattern(self, query: str) -> QueryPattern | None:
-        m = _META_RE.search(query)
-        if not m:
-            return None
-        parts: dict[str, str] = {}
-        for tok in m.group(1).split():
-            if "=" in tok:
-                k, v = tok.split("=", 1)
-                parts[k] = v
+        parts = read_header(query)
         if parts.get("used_preagg"):
             return None  # already served by a rollup
         models = [x for x in parts.get("models", "").split(",") if x]

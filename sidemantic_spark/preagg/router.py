@@ -65,80 +65,101 @@ def _aligned_grains(conj: str) -> set[str]:
 
 
 def try_route(gen, r) -> str | None:
-    """Serve the resolved query from a rollup if one matches."""
+    """Serve the resolved query from a rollup if one matches.
+
+    This pass is the only routing decision, and it records itself on
+    ``r.route`` as it goes: ``eligible`` (every gate passed and the
+    rollups were matched), ``reason`` (the gate that refused),
+    ``candidates`` (each visited rollup's verdict, from the matcher's
+    one visit) and ``used`` (the rollup the SQL scans).
+    ``explain_plan`` reports that record."""
+    r.route = {"eligible": False, "reason": None, "candidates": [], "used": None}
     if r.spec.with_totals:
-        return None
-    if r.spec.ungrouped:
-        # drill-to-detail routes only to a PK-carrying rollup of the
-        # base model (no joins, no timezone re-bucketing, no security —
-        # the same gates as the grouped path below)
-        if r.spec.timezone or r.hops:
-            return None
-        if getattr(gen.graph.get_model(r.base), "security", None) is not None:
-            return None
-        return _try_ungrouped_route(gen, r)
+        return _refuse(r, "with_totals queries never route")
     if r.spec.timezone:
         # rollups are materialized with UTC-truncated buckets; serving a
         # timezone query from one would silently return UTC day/month
         # boundaries — bucket live in the requested zone instead
         # (ref tests/dates/test_query_timezone.py:63-120)
-        return None
+        return _refuse(r, "timezone queries bucket live: rollups store UTC buckets")
+    if r.spec.ungrouped and r.hops:
+        # drill-to-detail routes only to a PK-carrying rollup of the
+        # base model
+        return _refuse(r, "ungrouped queries route only without joins")
     # rollups are materialized WITHOUT user context: static
     # model.row_filters are baked in at materialization (manager.py:166),
     # but a user-dependent SecurityPolicy cannot be — serving a scoped
     # query from an unscoped rollup would leak other tenants' aggregates,
     # and the routed plan would also skip the access gate. The join
     # route's REMOTE side scans the raw source and applies its policy
-    # live (:297-301), so only the rollup-owning fact model disqualifies
-    # (ref tests/core/test_security_enforcement.py:239)
+    # live (_build_join_sql), so only the rollup-owning fact model
+    # disqualifies (ref tests/core/test_security_enforcement.py:239)
+    owners = sorted({rm.model for rm in r.metrics} if r.hops else {r.base})
+    for name in owners:
+        if getattr(gen.graph.get_model(name), "security", None) is not None:
+            return _refuse(r, f"model {name!r} has a security policy; "
+                              "rollups are materialized without user context")
+    if not any(getattr(gen.graph.get_model(n), "pre_aggregations", None) for n in owners):
+        return _refuse(r, "the queried model declares no pre-aggregations")
+    if r.spec.ungrouped:
+        return _try_ungrouped_route(gen, r)
     if r.hops:
-        fact_models = {rm.model for rm in r.metrics}
-        if any(getattr(gen.graph.get_model(m), "security", None) is not None
-               for m in fact_models):
-            return None
         return _try_join_route(gen, r)
-    if getattr(gen.graph.get_model(r.base), "security", None) is not None:
-        return None
     model = gen.graph.get_model(r.base)
-    if not getattr(model, "pre_aggregations", None):
-        return None
-
     comp_names = _component_names(gen, r)
     if comp_names is None:
         return None
-
-    dims = [(rd.name, rd.grain) for rd in r.dims]
-    filter_dims: list = []
-    known = set(gen.graph.models)
-    for f in r.spec.filters:
-        for conj in split_conjuncts(f):
-            refs = find_refs(conj, known)
-            time_count = sum(
-                1 for m, fld, _g in refs
-                if m == r.base
-                and (d := model.dimension(fld)) is not None
-                and d.type == "time"
-            )
-            if time_count > 1:
-                return None  # unanalyzable multi-time-comparison conjunct
-            for m, fld, g in refs:
-                if m != r.base:
-                    return None
-                if model.metric(fld) is not None:
-                    continue
-                d = model.dimension(fld)
-                if d is not None and d.type == "time":
-                    filter_dims.append((fld, g, _aligned_grains(conj)))
-                else:
-                    filter_dims.append((fld, None, None))
-    match = match_preagg(model, comp_names, dims, filter_dims)
-    if match is None:
+    filter_dims = _filter_dims(gen, r, model, _conjuncts(r))
+    if filter_dims is None:
         return None
-    return _build_sql(gen, r, match)
+    dims = [(rd.name, rd.grain) for rd in r.dims]
+    r.route["eligible"] = True
+    match = match_preagg(model, comp_names, dims, filter_dims, report=r.route["candidates"])
+    return None if match is None else _build_sql(gen, r, match)
+
+
+def _refuse(r, reason: str) -> None:
+    """Record why the route was refused; the caller returns None."""
+    r.route["reason"] = reason
+    return None
+
+
+def _conjuncts(r) -> list[str]:
+    return [conj for f in r.spec.filters for conj in split_conjuncts(f)]
+
+
+def _filter_dims(gen, r, model, conjuncts: list[str]) -> list[tuple] | None:
+    """The ``(name, grain, aligned_grains)`` filter dims the matcher
+    checks for ``conjuncts`` over ``model``'s own fields (metric
+    references are skipped), or None — with the reason recorded — when
+    a conjunct references another model or compares more than one time
+    field (an unanalyzable range)."""
+    known = set(gen.graph.models)
+    out: list[tuple] = []
+    for conj in conjuncts:
+        refs = find_refs(conj, known)
+        other = next((m for m, _f, _g in refs if m != model.name), None)
+        if other is not None:
+            return _refuse(r, f"filter references joined model {other!r}")
+        times = [
+            fld for _m, fld, _g in refs
+            if (d := model.dimension(fld)) is not None and d.type == "time"
+        ]
+        if len(times) > 1:
+            return _refuse(r, f"filter {conj!r} compares more than one time field")
+        for _m, fld, g in refs:
+            if model.metric(fld) is not None:
+                continue
+            if fld in times:
+                out.append((fld, g, _aligned_grains(conj)))
+            else:
+                out.append((fld, None, None))
+    return out
 
 
 def _component_names(gen, r) -> list[str] | None:
-    """Expand ratio/derived metrics into their simple components; a
+    """Expand ratio/derived metrics into their simple components, or
+    refuse (None, reason recorded) when a metric is not routable: a
     windowed/special metric disqualifies routing.  Metric-level filters
     that reference only the OWNING model are fine — the materialization
     bakes them into the stored partials (reference
@@ -151,16 +172,17 @@ def _component_names(gen, r) -> list[str] | None:
     known = set(gen.graph.models)
     comp_names: list[str] = []
     for rm in r.metrics:
+        name = f"{rm.model}.{rm.metric.name}"
         if rm.metric.type in ("cumulative", "time_comparison", "conversion", "retention", "cohort"):
-            return None
+            return _refuse(r, f"metric {name!r} is a {rm.metric.type} metric")
         if rm.metric.non_additive_dimension:
-            return None
+            return _refuse(r, f"metric {name!r} is semi-additive")
         if _has_window_total(gen, rm.model, rm.metric):
-            return None
+            return _refuse(r, f"metric {name!r} uses an all(...) window total")
         for _out, comp in gen._expand_components(rm):
             for flt in comp.filters:
                 if any(m != rm.model for m, _f, _g in find_refs(flt, known)):
-                    return None
+                    return _refuse(r, f"metric {name!r} has a filter on another model")
             if comp.name not in comp_names:
                 comp_names.append(comp.name)
     return comp_names
@@ -191,38 +213,13 @@ def _has_window_total(gen, model_name: str, metric: Metric, depth: int = 0) -> b
     return False
 
 
-def _pk_covering_rollups(model) -> list:
-    """Rollups whose dimension set stores the model's FULL primary key
-    (every pk column appears as a stored dimension, matched by name or
-    by the dimension's expression).  Such a rollup has exactly one row
-    per base row, so it preserves detail."""
-    pks = model.pk_list()
-    out = []
-    for pa in getattr(model, "pre_aggregations", None) or []:
-        if pa.type not in ("rollup", "rollup_join"):
-            continue  # lambda's fresh-union math targets aggregates
-        covered = True
-        for c in pks:
-            if not any(
-                d == c
-                or (
-                    (dim := model.dimension(d)) is not None
-                    and dim.expr == c
-                )
-                for d in pa.dimensions
-            ):
-                covered = False
-                break
-        if covered:
-            out.append(pa)
-    return out
-
-
 def _try_ungrouped_route(gen, r) -> str | None:
     """Ungrouped (drill-to-detail) routing: a rollup that stores the
-    model's full primary key has one row per base row, so the stored
-    sum/count/min/max partials ARE the per-row raw values — select them
-    directly with no GROUP BY and no re-aggregation (reference
+    model's full primary key (every pk column appears as a stored
+    dimension, matched by name or by the dimension's expression) has
+    one row per base row, so the stored sum/count/min/max partials ARE
+    the per-row raw values — select them directly with no GROUP BY and
+    no re-aggregation (reference
     tests/optimizations/test_pre_aggregations.py
     ``test_ungrouped_routes_to_pk_carrying_rollup`` and the bail cases:
     avg, approx_count_distinct, metric filters, partial composite pk,
@@ -231,57 +228,47 @@ def _try_ungrouped_route(gen, r) -> str | None:
     At 100 TB this serves drill-to-detail pages from the bucketed
     rollup instead of re-scanning the raw fact table."""
     model = gen.graph.get_model(r.base)
-    if not getattr(model, "pre_aggregations", None):
-        return None
     if model.primary_key is None:
         # an empty key set is not evidence that an aggregate rollup
         # preserves detail rows (ref test_ungrouped_keyless_model)
-        return None
+        return _refuse(r, "ungrouped query, model has no declared primary "
+                          "key for unique rows")
     for rm in r.metrics:
         m = rm.metric
-        if not m.is_simple or m.filters or m.non_additive_dimension:
-            return None
-        if m.agg not in ("sum", "count", "min", "max"):
-            # avg is not a per-row value from (sum, count) state under
-            # detail semantics; approx/count_distinct likewise bail
-            return None
-    dims = [(rd.name, rd.grain) for rd in r.dims]
+        # avg is not a per-row value from (sum, count) state under
+        # detail semantics; approx/count_distinct likewise bail
+        if (not m.is_simple or m.filters or m.non_additive_dimension
+                or m.agg not in ("sum", "count", "min", "max")):
+            return _refuse(r, f"ungrouped query: metric {m.name!r} has no "
+                              "per-row value in a rollup")
+    conjuncts = _conjuncts(r)
     known = set(gen.graph.models)
-    filter_dims: list = []
-    for f in r.spec.filters:
-        for conj in split_conjuncts(f):
-            refs = find_refs(conj, known)
-            time_count = sum(
-                1 for m_, fld, _g in refs
-                if m_ == r.base
-                and (d := model.dimension(fld)) is not None
-                and d.type == "time"
-            )
-            if time_count > 1:
-                return None
-            for m_, fld, g in refs:
-                if m_ != r.base:
-                    return None
-                if model.metric(fld) is not None:
-                    return None  # metric filters bail to raw (ref)
-                d = model.dimension(fld)
-                if d is not None and d.type == "time":
-                    filter_dims.append((fld, g, _aligned_grains(conj)))
-                else:
-                    filter_dims.append((fld, None, None))
-
-    from sidemantic_spark.preagg.matcher import _try_match
-
-    comp_names = [rm.metric.name for rm in r.metrics]
-    candidates = []
-    for pa in _pk_covering_rollups(model):
-        m = _try_match(model, pa, comp_names, dims, filter_dims, [])
-        if m is not None:
-            candidates.append(m)
-    if not candidates:
+    if any(model.metric(fld) is not None
+           for conj in conjuncts for _m, fld, _g in find_refs(conj, known)):
+        return _refuse(r, "ungrouped query: metric filters bail to raw")
+    filter_dims = _filter_dims(gen, r, model, conjuncts)
+    if filter_dims is None:
         return None
-    candidates.sort(key=lambda c: (c.specificity, c.preagg.name))
-    return _build_ungrouped_sql(gen, r, candidates[0])
+    pks = model.pk_list()
+    covering = [
+        pa for pa in model.pre_aggregations
+        # lambda's fresh-union math targets aggregates
+        if pa.type in ("rollup", "rollup_join") and all(
+            any(d == c or ((dim := model.dimension(d)) is not None and dim.expr == c)
+                for d in pa.dimensions)
+            for c in pks
+        )
+    ]
+    if not covering:
+        return _refuse(r, "ungrouped query: no rollup stores the model's "
+                          "full primary key")
+    dims = [(rd.name, rd.grain) for rd in r.dims]
+    r.route["eligible"] = True
+    match = match_preagg(
+        model, [rm.metric.name for rm in r.metrics], dims, filter_dims,
+        report=r.route["candidates"], rollups=covering,
+    )
+    return None if match is None else _build_ungrouped_sql(gen, r, match)
 
 
 def _build_ungrouped_sql(gen, r, match: PreAggMatch) -> str:
@@ -303,31 +290,13 @@ def _build_ungrouped_sql(gen, r, match: PreAggMatch) -> str:
         select.append(f"{expr} AS {rm.out}")
 
     known = set(gen.graph.models)
-
-    def rollup_col(m_: str, fld: str, grain: str | None) -> str:
-        col, _ = match.dim_map.get((fld, grain), (None, None))
-        if col is None:
-            dim = model.dimension(fld)
-            if dim is not None and dim.type == "time" and pa.time_dimension == fld:
-                col = f"{fld}__{pa.granularity}"
-            else:
-                col = fld
-        return f"DATE_TRUNC('{grain}', {col})" if grain else col
-
-    where = [
-        replace_refs(conj, known, rollup_col)
-        for f in r.spec.filters
-        for conj in split_conjuncts(f)
-    ]
+    rollup_col = _rollup_col(model, match)
+    where = [replace_refs(conj, known, rollup_col) for conj in _conjuncts(r)]
     sql = "SELECT\n    " + ",\n    ".join(select) + f"\nFROM {physical}"
     if where:
         sql += "\nWHERE " + "\n  AND ".join(f"({w})" for w in where)
     sql += gen._order_limit(r)
-    header = (
-        f"-- sidemantic_spark models={r.base} plan=preagg-ungrouped "
-        f"used_preagg={physical}"
-    )
-    return f"{header}\n{sql}"
+    return f"{_header(r, r.base, 'preagg-ungrouped', physical)}\n{sql}"
 
 
 def _try_join_route(gen, r) -> str | None:
@@ -344,14 +313,13 @@ def _try_join_route(gen, r) -> str | None:
     shuffle with a broadcast hash join over the rollup."""
     metric_models = {rm.model for rm in r.metrics}
     if len(metric_models) != 1:
-        return None
+        return _refuse(r, "join-key route needs metrics from one model")
     fact_name = next(iter(metric_models))
     fact = gen.graph.get_model(fact_name)
-    if not getattr(fact, "pre_aggregations", None):
-        return None
     remote_models = {rd.model for rd in r.dims} - {fact_name}
     if len(remote_models) != 1 or len(r.hops) != 1:
-        return None
+        return _refuse(r, "join-key route needs the dimensions of exactly "
+                          "one joined model, one join away")
     remote_name = next(iter(remote_models))
     remote = gen.graph.get_model(remote_name)
     rel = next(
@@ -363,11 +331,12 @@ def _try_join_route(gen, r) -> str | None:
         None,
     )
     if rel is None:
-        return None
+        return _refuse(r, f"join-key route needs a many_to_one relationship "
+                          f"{fact_name!r} -> {remote_name!r}")
     fks = rel.fk_list()
     pks = rel.pk_list(remote.pk_list())
     if not fks or len(fks) != len(pks):
-        return None
+        return _refuse(r, "join-key route needs matching foreign and primary keys")
 
     comp_names = _component_names(gen, r)
     if comp_names is None:
@@ -375,41 +344,32 @@ def _try_join_route(gen, r) -> str | None:
 
     local_dims = [(rd.name, rd.grain) for rd in r.dims if rd.model == fact_name]
     known = set(gen.graph.models)
-    local_filter_dims: list[str] = []
     local_filters: list[str] = []
     remote_filters: list[str] = []
     metric_filters: list[str] = []
-    for f in r.spec.filters:
-        for conj in split_conjuncts(f):
-            refs = find_refs(conj, known)
-            ref_models = {m for m, _f, _g in refs}
-            if any(fact.metric(fld) is not None for m, fld, _g in refs if m == fact_name):
-                metric_filters.append(conj)
-            elif ref_models <= {fact_name}:
-                local_filters.append(conj)
-                time_count = sum(
-                    1 for _m, fld, _g in refs
-                    if (d := fact.dimension(fld)) is not None
-                    and d.type == "time"
-                )
-                if time_count > 1:
-                    return None
-                for _m, fld, g in refs:
-                    d = fact.dimension(fld)
-                    if d is not None and d.type == "time":
-                        local_filter_dims.append(
-                            (fld, g, _aligned_grains(conj))
-                        )
-                    else:
-                        local_filter_dims.append((fld, None, None))
-            elif ref_models <= {remote_name}:
-                remote_filters.append(conj)
-            else:
-                return None  # mixed-model conjunct
-
-    match = match_preagg(fact, comp_names, local_dims, local_filter_dims, raw_columns=fks)
-    if match is None or match.preagg.type == "lambda":
+    for conj in _conjuncts(r):
+        refs = find_refs(conj, known)
+        ref_models = {m for m, _f, _g in refs}
+        if any(fact.metric(fld) is not None for m, fld, _g in refs if m == fact_name):
+            metric_filters.append(conj)
+        elif ref_models <= {fact_name}:
+            local_filters.append(conj)
+        elif ref_models <= {remote_name}:
+            remote_filters.append(conj)
+        else:
+            return _refuse(r, f"filter {conj!r} mixes models")
+    local_filter_dims = _filter_dims(gen, r, fact, local_filters)
+    if local_filter_dims is None:
         return None
+
+    r.route["eligible"] = True
+    match = match_preagg(fact, comp_names, local_dims, local_filter_dims,
+                         raw_columns=fks, report=r.route["candidates"])
+    if match is None:
+        return None
+    if match.preagg.type == "lambda":
+        return _refuse(r, f"best match {match.preagg.name!r} is a lambda "
+                          "rollup, which the join-key route does not serve")
     return _build_join_sql(
         gen, r, match, fact, remote, fks, pks,
         local_filters, remote_filters, metric_filters,
@@ -424,17 +384,7 @@ def _build_join_sql(
     physical = pa.physical_name(fact.name)
     remote_cte = f"{remote.name}_cte"
     rollup_cte = f"{fact.name}_rollup"
-
-    def rollup_col(m: str, fld: str, grain: str | None) -> str:
-        col, _ = match.dim_map.get((fld, grain), (None, None))
-        if col is None:
-            dim = fact.dimension(fld)
-            if dim is not None and dim.type == "time" and pa.time_dimension == fld:
-                col = f"{fld}__{pa.granularity}"
-            else:
-                col = fld
-        return f"DATE_TRUNC('{grain}', {col})" if grain else col
-
+    rollup_col = _rollup_col(fact, match)
     known = set(gen.graph.models)
 
     # remote CTE: project remote dim exprs + pk columns, apply remote
@@ -529,11 +479,7 @@ def _build_join_sql(
     if having:
         sql += "\nHAVING " + "\n  AND ".join(f"({h})" for h in having)
     sql += gen._order_limit(r)
-    header = (
-        f"-- sidemantic_spark models={','.join(r.models)} plan=preagg_join "
-        f"used_preagg={physical}"
-    )
-    return f"{header}\n{sql}"
+    return f"{_header(r, ','.join(r.models), 'preagg_join', physical)}\n{sql}"
 
 
 def _reagg(metric: Metric, exact_single_row: bool) -> str:
@@ -634,34 +580,23 @@ def _build_sql(gen, r, match: PreAggMatch) -> str:
         select.append(f"{_metric_reagg_sql(gen, r.base, rm.metric, exact)} AS {rm.out}")
 
     known = set(gen.graph.models)
-
-    def rollup_col(m: str, fld: str, grain: str | None) -> str:
-        col, _ = match.dim_map.get((fld, grain), (None, None))
-        if col is None:
-            dim = model.dimension(fld)
-            if dim is not None and dim.type == "time" and pa.time_dimension == fld:
-                col = f"{fld}__{pa.granularity}"
-            else:
-                col = fld
-        return f"DATE_TRUNC('{grain}', {col})" if grain else col
-
+    rollup_col = _rollup_col(model, match)
     where: list[str] = []
     having: list[str] = []
-    for f in r.spec.filters:
-        for conj in split_conjuncts(f):
-            refs = find_refs(conj, known)
-            if any(model.metric(fld) is not None for _m, fld, _g in refs):
-                having.append(
-                    replace_refs(
-                        conj,
-                        known,
-                        lambda m, fld, g: f"({_metric_reagg_sql(gen, r.base, model.metric(fld), exact)})"
-                        if model.metric(fld)
-                        else rollup_col(m, fld, g),
-                    )
+    for conj in _conjuncts(r):
+        refs = find_refs(conj, known)
+        if any(model.metric(fld) is not None for _m, fld, _g in refs):
+            having.append(
+                replace_refs(
+                    conj,
+                    known,
+                    lambda m, fld, g: f"({_metric_reagg_sql(gen, r.base, model.metric(fld), exact)})"
+                    if model.metric(fld)
+                    else rollup_col(m, fld, g),
                 )
-            else:
-                where.append(replace_refs(conj, known, rollup_col))
+            )
+        else:
+            where.append(replace_refs(conj, known, rollup_col))
 
     sql = "SELECT\n    " + ",\n    ".join(select) + f"\nFROM {physical}"
     if where:
@@ -671,76 +606,32 @@ def _build_sql(gen, r, match: PreAggMatch) -> str:
     if having:
         sql += "\nHAVING " + "\n  AND ".join(f"({h})" for h in having)
     sql += gen._order_limit(r)
-    header = (
-        f"-- sidemantic_spark models={r.base} plan=preagg used_preagg={physical_name}"
-        + (" lambda=true" if pa.type == "lambda" else "")
+    header = _header(r, r.base, "preagg", physical_name) + (
+        " lambda=true" if pa.type == "lambda" else ""
     )
     return f"{header}\n{sql}"
 
 
-def explain_route(gen, r) -> dict:
-    """Routing report for explain output: eligibility gates + the
-    per-candidate accept/reject reasons (reference QueryPlan preagg
-    candidates+checks, core/query_plan.py:43)."""
-    from sidemantic_spark.preagg.matcher import explain_candidates
+def _header(r, models: str, plan: str, physical: str) -> str:
+    """The routed SQL's instrumentation header; the rollup it names is
+    the route record's ``used``, so the two cannot disagree."""
+    r.route["used"] = physical
+    return f"-- sidemantic_spark models={models} plan={plan} used_preagg={physical}"
 
-    if r.spec.with_totals:
-        return {"eligible": False, "reason": "with_totals queries never route", "candidates": []}
-    if r.spec.ungrouped:
-        model = gen.graph.get_model(r.base)
-        if getattr(model, "primary_key", None) is None:
-            return {
-                "eligible": False,
-                "reason": "ungrouped query, model has no declared primary "
-                          "key for unique rows",
-                "candidates": [],
-            }
-        used = try_route(gen, r)
-        pk_rollups = [
-            pa.physical_name(model.name) for pa in _pk_covering_rollups(model)
-        ]
-        return {
-            "eligible": True,
-            "reason": "ungrouped query: pk-carrying rollup route",
-            "used": used is not None,
-            "candidates": [{"name": n, "ok": used is not None} for n in pk_rollups],
-        }
-    if r.hops:
-        used = _try_join_route(gen, r) is not None
-        return {
-            "eligible": True,
-            "reason": "multi-model query: join-key rollup route",
-            "used": used,
-            "candidates": [],
-        }
-    model = gen.graph.get_model(r.base)
-    if not getattr(model, "pre_aggregations", None):
-        return {"eligible": False, "reason": "model declares no pre-aggregations", "candidates": []}
-    comp_names = _component_names(gen, r)
-    if comp_names is None:
-        return {
-            "eligible": False,
-            "reason": "non-routable metric (windowed/filtered/semi-additive component)",
-            "candidates": [],
-        }
-    dims = [(rd.name, rd.grain) for rd in r.dims]
-    filter_dims: list[str] = []
-    known = set(gen.graph.models)
-    for f in r.spec.filters:
-        for m, fld, _g in find_refs(f, known):
-            if m == r.base and model.metric(fld) is None:
-                filter_dims.append(fld)
-            elif m != r.base:
-                return {
-                    "eligible": False,
-                    "reason": f"filter references joined model {m!r}",
-                    "candidates": [],
-                }
-    cands = explain_candidates(model, comp_names, dims, filter_dims)
-    chosen = None
-    ok = sorted(
-        (c for c in cands if c["ok"]), key=lambda c: (c["specificity"], c["name"])
-    )
-    if ok:
-        chosen = ok[0]["name"]
-    return {"eligible": True, "candidates": cands, "used": chosen}
+
+def _rollup_col(model, match: PreAggMatch):
+    """``replace_refs`` callback: a filter field of ``model`` as the
+    column of the rollup ``match`` scans, re-truncated to its grain."""
+    pa = match.preagg
+
+    def col(_m: str, fld: str, grain: str | None) -> str:
+        c, _ = match.dim_map.get((fld, grain), (None, None))
+        if c is None:
+            dim = model.dimension(fld)
+            if dim is not None and dim.type == "time" and pa.time_dimension == fld:
+                c = f"{fld}__{pa.granularity}"
+            else:
+                c = fld
+        return f"DATE_TRUNC('{grain}', {c})" if grain else c
+
+    return col

@@ -151,6 +151,9 @@ class Resolved:
     # per-model extra raw columns needed by outer/metric filters
     extra_cols: dict[str, set[str]]
     component_metrics: dict[str, list[tuple[str, Metric]]]  # model -> metrics needing raw cols
+    # the rollup router's decision, written by its one pass
+    # (preagg/router.py try_route); None when the compile never routed
+    route: dict | None = None
 
 
 # FIFO bound shared by the generator's and the semantic-SQL rewriter's
@@ -3449,6 +3452,19 @@ FROM __per_entity"""
 # ----------------------------------------------------------------------
 # helpers
 # ----------------------------------------------------------------------
+
+_HEADER_RE = re.compile(r"--\s*sidemantic_spark\s+(.+)")
+
+
+def read_header(sql: str) -> dict[str, str]:
+    """The ``key=value`` fields of the first ``-- sidemantic_spark``
+    instrumentation header in ``sql`` (``SqlGenerator._instrumentation``
+    writes it, a routed query's adds ``used_preagg``), or ``{}``."""
+    m = _HEADER_RE.search(sql)
+    if m is None:
+        return {}
+    return dict(tok.split("=", 1) for tok in m.group(1).split() if "=" in tok)
+
 
 _TZ_RE = re.compile(r"^[A-Za-z][A-Za-z0-9_+\-/]*$")
 

@@ -28,6 +28,7 @@ from sidemantic_spark.sql.generator import (
     QueryCompileError,
     QuerySpec,
     _key_part,
+    read_header,
 )
 
 _CLAUSES = ["WHERE", "GROUP BY", "HAVING", "QUALIFY", "ORDER BY", "LIMIT", "OFFSET"]
@@ -503,15 +504,8 @@ class SemanticSqlRewriter:
 
     def _explain_locked(self, sql: str) -> dict:
         compiled = self.rewrite(sql)
-        first = compiled.splitlines()[0] if compiled else ""
-        plan = "unknown"
-        models = ""
-        m = re.search(r"plan=(\S+)", first)
-        if m:
-            plan = m.group(1)
-        m = re.search(r"models=(\S+)", first)
-        if m:
-            models = m.group(1)
+        header = read_header(compiled.splitlines()[0] if compiled else "")
+        models = header.get("models", "")
         # post-process: a compiled island whose instrumentation header
         # sits INSIDE preserved outer SQL (wrapper/CTE kept) — the
         # reference's semantic_plus_postprocess route; a header at
@@ -523,9 +517,10 @@ class SemanticSqlRewriter:
         return {
             "input_sql": sql,
             "compiled_sql": compiled,
-            "plan": plan,
+            "plan": header.get("plan", "unknown"),
             "models": models.split(",") if models else [],
-            "used_preagg": "used_preagg=" in first,
+            # the rollup's physical name, as explain_plan reports it
+            "used_preagg": header.get("used_preagg"),
             "applied_rules": list(self._applied_rules),
             "rejected_rules": list(self._rejected_rules),
             # reference RewriteExplanation parity (r11): which outer

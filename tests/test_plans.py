@@ -209,9 +209,10 @@ def test_explain_plan_fanout_and_join_path(layer):
     assert ex["filters"]["pushdown"].get("orders")
 
 
-def test_explain_plan_fanout_follows_the_compiler(spark):
+def test_explain_plan_fanout_follows_the_compiler(spark, layer):
     """A one_to_one hop after a duplicated model carries the duplication
-    on: explain_plan reports the fan-out the compiler corrects for."""
+    on: explain_plan reports the fan-out the compiler corrects for, and
+    its strategy is the plan the compiler chose."""
     from sidemantic_spark.core.layer import SparkSemanticLayer
     from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
 
@@ -248,6 +249,124 @@ def test_explain_plan_fanout_follows_the_compiler(spark):
     assert ex["fanout"]["strategy"] == "auto_entity_grain_dedup"
     rows = {r["flag"]: r["total"] for r in lay.query(**kw).collect()}
     assert rows == {"A": 100, "B": 50}
+
+    # fan-out-safe metrics (max, count_distinct) over a duplicating join
+    # keep the plain grouped plan: detected, but no dedup strategy
+    ex = layer.explain_plan(
+        metrics=["orders.max_order_value", "orders.customer_count"],
+        dimensions=["lineitem.returnflag"],
+    )
+    assert " plan=grouped " in ex["compiled_sql"].split("\n", 1)[0]
+    assert ex["fanout"]["detected"]
+    assert ex["fanout"]["strategy"] is None
+
+
+def _two_rollup_layer(spark, sf_dir):
+    """The tpch layer with a day and a month rollup on orders (declared
+    only: explain_plan compiles, it runs nothing)."""
+    from sidemantic_spark.preagg.matcher import PreAggregation
+
+    lyr = build_layer(spark, sf_dir)
+    lyr.graph.get_model("orders").pre_aggregations = [
+        PreAggregation(
+            name="daily", measures=["revenue", "order_count"],
+            dimensions=["status"], time_dimension="order_date",
+            granularity="day",
+        ),
+        PreAggregation(
+            name="monthly", measures=["revenue"], dimensions=["status"],
+            time_dimension="order_date", granularity="month",
+        ),
+    ]
+    return lyr
+
+
+def test_explain_plan_preagg_is_the_routers_decision(spark, sf_dir):
+    """explain_plan's preagg block is the record of the route the
+    compiled SQL took: its ``used`` is the SQL's ``used_preagg``, and
+    every rejected candidate says why."""
+    from sidemantic_spark.core.layer import SparkSemanticLayer
+    from sidemantic_spark.core.model import Dimension, Metric, Model
+    from sidemantic_spark.preagg.matcher import PreAggregation
+
+    lyr = _two_rollup_layer(spark, sf_dir)
+    q = {"metrics": ["orders.revenue"],
+         "dimensions": ["orders.status", "orders.order_date__month"]}
+    cases = {
+        "routed": (lyr, dict(q)),
+        "use_preaggs_off": (lyr, dict(q, use_preaggs=False)),
+        "timezone": (lyr, dict(q, timezone="America/New_York")),
+        "two_time_refs": (lyr, dict(q, filters=[
+            "orders.order_date__year >= TIMESTAMP '1995-01-01' "
+            "OR orders.order_date__month < TIMESTAMP '1996-01-01'"])),
+        "unaligned_literal": (lyr, dict(q, filters=[
+            "orders.order_date >= '1995-01-15'"])),
+        "multi_fact": (lyr, {"metrics": ["orders.revenue", "lineitem.qty"],
+                             "dimensions": ["orders.status"]}),
+    }
+    spark.createDataFrame(
+        [("completed", 100.0)], "status string, amount double",
+    ).createOrReplaceTempView("xr_keyless")
+    keyless = SparkSemanticLayer(spark)
+    keyless.add_model(Model(
+        name="xr_keyless", table="xr_keyless", primary_key=None,
+        dimensions=[Dimension(name="status")],
+        metrics=[Metric(name="revenue", agg="sum", sql="amount")],
+        pre_aggregations=[PreAggregation(
+            name="by_status", measures=["revenue"], dimensions=["status"])],
+    ))
+    cases["ungrouped_keyless"] = (keyless, {
+        "metrics": ["xr_keyless.revenue"], "dimensions": ["xr_keyless.status"],
+        "ungrouped": True})
+
+    ex = {}
+    for name, (lay, kw) in cases.items():
+        ex[name] = lay.explain_plan(**kw)
+        pre = ex[name]["preagg"]
+        assert pre["used"] == ex[name]["used_preagg"], name
+        for c in pre["candidates"]:
+            assert c["ok"] or c["reasons"], (name, c)
+
+    assert ex["routed"]["used_preagg"] == "orders_preagg_monthly"
+    for name in ("use_preaggs_off", "timezone", "two_time_refs",
+                 "multi_fact", "ungrouped_keyless"):
+        assert ex[name]["used_preagg"] is None, name
+        assert not ex[name]["preagg"]["eligible"], name
+        assert ex[name]["preagg"]["reason"], name
+    assert "no declared primary key" in ex["ungrouped_keyless"]["preagg"]["reason"]
+    # the router rejects month buckets for a mid-month literal and
+    # serves the day rollup
+    unaligned = ex["unaligned_literal"]["preagg"]
+    assert unaligned["eligible"]
+    by_name = {c["name"]: c for c in unaligned["candidates"]}
+    assert not by_name["orders_preagg_monthly"]["ok"]
+    assert any("not aligned" in r for r in by_name["orders_preagg_monthly"]["reasons"])
+    assert by_name["orders_preagg_daily"]["ok"]
+    assert unaligned["used"] == "orders_preagg_daily"
+
+
+def test_explain_plan_routes_once(spark, sf_dir, monkeypatch):
+    """One explain_plan call matches each rollup once: the report is
+    filled by the compile's own routing pass, not by a second one."""
+    from collections import Counter
+
+    from sidemantic_spark.preagg import matcher
+
+    lyr = _two_rollup_layer(spark, sf_dir)
+    visits: Counter = Counter()
+    real = matcher._try_match
+
+    def spy(model, pa, *args, **kwargs):
+        visits[pa.name] += 1
+        return real(model, pa, *args, **kwargs)
+
+    monkeypatch.setattr(matcher, "_try_match", spy)
+    ex = lyr.explain_plan(
+        metrics=["orders.revenue"],
+        dimensions=["orders.status", "orders.order_date__month"],
+    )
+    assert ex["used_preagg"] == "orders_preagg_monthly"
+    assert visits == {"daily": 1, "monthly": 1}
 
 
 def test_explain_plan_agrees_with_compile(spark, sf_dir):

@@ -1370,7 +1370,8 @@ def test_preagg_routing_identity_fuzz(layer, spark):
     """Routing-identity fuzz: for random queries over rollup-covered
     and rollup-exceeding field combos, use_preaggs on/off must return
     identical rows — whether the router used the rollup or refused it
-    is an optimization detail, never a results change."""
+    is an optimization detail, never a results change. explain_plan
+    (compile only) reports the rollup each compiled SQL names."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -1398,6 +1399,10 @@ def test_preagg_routing_identity_fuzz(layer, spark):
         raw = sorted(map(tuple, layer.query(
             **kwargs, use_preaggs=False).collect()), key=repr)
         assert routed == raw, (ms, ds, f)
+        ex = layer.explain_plan(**kwargs)
+        assert ex["preagg"]["used"] == ex["used_preagg"], (ms, ds, f)
+        off = layer.explain_plan(**kwargs, use_preaggs=False)
+        assert off["preagg"]["used"] is None and off["used_preagg"] is None
 
     check()
 
