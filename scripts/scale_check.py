@@ -25,6 +25,13 @@ workload SHAPE scales instead of degenerating:
 
 Usage:
     python scripts/scale_check.py [--rebuild] [--repeats N] [--heavy-repeats N]
+    python scripts/scale_check.py --crossover [--repeats N]
+
+``--crossover`` runs only the driver-path crossover tier (see
+:func:`crossover`): the four operators with a driver path, each forced
+down both paths by patching ``gate.DRIVER_BYTES``, over growing slices
+of sf0.1 and sf1 plus a template-heavy corpus. It is the measurement
+behind ``gate.DRIVER_BYTES`` (SCALING.md "Driver path crossover").
 
 Prints one JSON line with per-operator sf0.1/sf1 wall times and the
 wall-time ratio per 10x rows; paste the table into SCALING.md.
@@ -384,6 +391,72 @@ def _timed(fn, spark, d, n: int) -> dict:
     }
 
 
+def crossover(spark, sf1: str, repeats: int) -> dict:
+    """Median seconds of each driver-path operator on both paths.
+
+    Rows: documents (and embeddings) sliced by id from sf0.1 (1k, 2k and
+    5k docs; 500, 1k and 2k vectors) and sf1 (50k docs, 20k vectors),
+    plus a template-heavy corpus (2k short docs from 20 templates, every
+    one a near duplicate of a hundred others: the candidate-pair-heavy
+    shape). Each record carries the operator's probed kernel-input
+    bytes (text, or id + vector + norm per row), the quantity the gate
+    compares with ``gate.DRIVER_BYTES``."""
+    from pyspark.sql import functions as F
+
+    from sidemantic_spark.operators import dedup, gate, pipeline, similarity
+
+    def docs_of(d, n):
+        return spark.read.parquet(f"{d}/documents.parquet").where(F.col("doc_id") % 10**9 < n) \
+            .select("doc_id", "text")
+
+    def embs_of(d, n):
+        return spark.read.parquet(f"{d}/embeddings.parquet").where(F.col("vec_id") % 10**9 < n)
+
+    # sf1 ids are sf0.1 ids + replica * 10^9: the 50k slice is every replica
+    slices = [(SF01, 1000, 500), (SF01, 2000, 1000), (SF01, 5000, 2000), (sf1, 5000, 2000)]
+    templates = spark.range(2000).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ", F.lit("the product page for item"), (F.col("id") % 20).cast("string"),
+            F.lit("lists the price shipping and returns of order"), (F.col("id") % 100).cast("string"),
+        ).alias("text"),
+    ).localCheckpoint()
+    ops = {
+        "minhash_lsh_pairs": lambda docs, embs: dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.4),
+        "ngram_jaccard_pairs+connected_components": lambda docs, embs: dedup.connected_components(
+            dedup.ngram_jaccard_pairs(docs, n=5, threshold=0.6)),
+        "semantic_dedup": lambda docs, embs: similarity.semantic_dedup(embs, min_cosine=0.4),
+        "decontaminate": lambda docs, embs: pipeline.decontaminate(
+            docs.where(F.col("doc_id") % 10**9 >= 50), docs.where(F.col("doc_id") % 10**9 < 50), n=8),
+    }
+    inputs = [
+        (f"{'sf1' if d == sf1 else 'sf0.1'}_docs{nd * (10 if d == sf1 else 1)}", docs_of(d, nd), embs_of(d, nv))
+        for d, nd, nv in slices
+    ] + [("template_heavy_docs2000", templates, None)]
+    saved = gate.DRIVER_BYTES
+    out: dict = {}
+    try:
+        for label, docs, embs in inputs:
+            text_bytes = docs.agg(F.sum(F.octet_length("text"))).first()[0]
+            rec: dict = {"text_bytes": text_bytes}
+            if embs is not None:
+                rec["vector_bytes"] = embs.count() * (8 + 8 * 64 + 8)
+            for op, fn in ops.items():
+                if embs is None and op == "semantic_dedup":
+                    continue
+                for path, bound in (("driver", 1 << 62), ("spark", 0)):
+                    gate.DRIVER_BYTES = bound
+                    _session_gc(spark)
+                    fn(docs, embs).count()  # untimed warmup
+                    rec[f"{op}.{path}"] = _timed(lambda s, d: fn(docs, embs), spark, None, repeats)
+                print(f"# crossover {label} {op}: driver {rec[op + '.driver']['sec']:.2f}s "
+                      f"spark {rec[op + '.spark']['sec']:.2f}s", file=sys.stderr)
+            out[label] = rec
+    finally:
+        gate.DRIVER_BYTES = saved
+    return out
+
+
 def main() -> None:
     rebuild = "--rebuild" in sys.argv
     repeats = 5
@@ -422,6 +495,13 @@ def main() -> None:
     queries = entry.queries()
 
     sf1 = build_sf1(spark, rebuild)
+    if "--crossover" in sys.argv:
+        from sidemantic_spark.operators import gate
+
+        print(json.dumps({"metric": "driver_path_crossover", "cpus": cpus,
+                          "driver_bytes": gate.DRIVER_BYTES, "rows": crossover(spark, sf1, repeats)}))
+        spark.stop()
+        return
     # --trio-only: just the heavy dedup trio across all three tiers
     # (fast iteration on the sf10 decade; skips the full matrix)
     ops = TRIO if "--trio-only" in sys.argv else OPS

@@ -20,6 +20,10 @@ Design notes for 100 TB scale:
 - SimHash is a per-row aggregate over token hashes (F.aggregate), one
   map stage; near-dup banding splits the 64-bit signature into 4
   16-bit chunks (Hamming distance <= 3 guarantee by pigeonhole).
+- Tiny inputs (``gate.Probe.tiny``) skip Spark's fixed cost: MinHash
+  and n-gram pairs fetch the normalized texts once and run the same
+  kernels, bucket keys, caps and collapse on the driver
+  (:func:`_driver_jaccard_pairs`), returning a local relation.
 """
 
 from __future__ import annotations
@@ -263,10 +267,10 @@ def _xxh64_windows(
     return out
 
 
-def _word_gram_hashes_udf(n: int):
-    """Arrow-vectorized word n-gram hashes: normalized text ->
-    sorted-distinct array<long> of ``xxhash64`` over the space-joined
-    grams (bit-identical to the engine expression
+def _word_grams(norms, n: int) -> list[np.ndarray]:
+    """Word n-gram hashes: normalized texts -> sorted-distinct int64
+    arrays of ``xxhash64`` over the space-joined grams (bit-identical to
+    the engine expression
     ``xxhash64(concat_ws(' ', slice(split(norm, ' '), i, n)))``).
 
     Space-joined grams are contiguous byte windows of the normalized
@@ -277,61 +281,59 @@ def _word_gram_hashes_udf(n: int):
     end-to-end on the ngram benchmark query). Docs shorter than ``n``
     words contribute their whole text as one gram.
     """
+    bufs = [s.encode("utf-8") for s in norms]
+    if not bufs:
+        return []
+    doc_lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
+    doc_off = np.zeros(len(bufs) + 1, dtype=np.int64)
+    np.cumsum(doc_lens, out=doc_off[1:])
+    data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    starts_all, lens_all, counts = [], [], []
+    for d in range(len(bufs)):
+        a, b = int(doc_off[d]), int(doc_off[d + 1])
+        arr = data[a:b]
+        sp = np.nonzero(arr == 32)[0]
+        tok_starts = np.empty(len(sp) + 1, dtype=np.int64)
+        tok_starts[0] = 0
+        tok_starts[1:] = sp + 1
+        tok_ends = np.empty(len(sp) + 1, dtype=np.int64)
+        tok_ends[:-1] = sp
+        tok_ends[-1] = b - a
+        t = len(tok_starts)
+        if t >= n:
+            ws = tok_starts[: t - n + 1]
+            we = tok_ends[n - 1:]
+        else:
+            ws, we = tok_starts[:1], tok_ends[-1:]
+        starts_all.append(ws + a)
+        lens_all.append(we - ws)
+        counts.append(len(ws))
+    h = _xxh64_windows(
+        data, np.concatenate(starts_all), np.concatenate(lens_all)
+    ).view(np.int64)
+    out, pos = [], 0
+    for c in counts:
+        out.append(np.unique(h[pos:pos + c]))
+        pos += c
+    return out
+
+
+def _word_gram_hashes_udf(n: int):
+    """:func:`_word_grams` as an Arrow UDF: normalized text ->
+    array<bigint>."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<bigint>")
     def grams(norm: pd.Series) -> pd.Series:
-        bufs = [s.encode("utf-8") for s in norm]
-        if not bufs:
-            return pd.Series([], dtype=object)
-        doc_lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
-        doc_off = np.zeros(len(bufs) + 1, dtype=np.int64)
-        np.cumsum(doc_lens, out=doc_off[1:])
-        data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-        starts_all, lens_all, counts = [], [], []
-        for d in range(len(bufs)):
-            a, b = int(doc_off[d]), int(doc_off[d + 1])
-            arr = data[a:b]
-            sp = np.nonzero(arr == 32)[0]
-            tok_starts = np.empty(len(sp) + 1, dtype=np.int64)
-            tok_starts[0] = 0
-            tok_starts[1:] = sp + 1
-            tok_ends = np.empty(len(sp) + 1, dtype=np.int64)
-            tok_ends[:-1] = sp
-            tok_ends[-1] = b - a
-            t = len(tok_starts)
-            if t >= n:
-                ws = tok_starts[: t - n + 1]
-                we = tok_ends[n - 1:]
-            else:
-                ws, we = tok_starts[:1], tok_ends[-1:]
-            starts_all.append(ws + a)
-            lens_all.append(we - ws)
-            counts.append(len(ws))
-        h = _xxh64_windows(
-            data, np.concatenate(starts_all), np.concatenate(lens_all)
-        ).view(np.int64)
-        out, pos = [], 0
-        for c in counts:
-            out.append(np.unique(h[pos:pos + c]))
-            pos += c
-        return pd.Series(out)
+        return pd.Series(_word_grams(norm, n), dtype=object)
 
     return grams
 
 
-def _sig_and_shingles_udf(num_hashes: int = 64, k: int = 5, pack_sh: bool = False):
-    """Arrow-vectorized shingle-hash + MinHash-signature kernel:
-    normalized text -> struct(sh: array<bigint>, sig: array<bigint>).
-
-    ``pack_sh=True`` emits ``sh`` as a PACKED little-endian int32 blob
-    (binary) instead of an array column — the bucket-local verify ships
-    each set once per band through the banding shuffle, and Spark's
-    unsafe array format plus the JVM<->Arrow nested-array conversions
-    cost ~2x the raw bytes; an opaque 4-byte-per-hash blob halves the
-    exchange and skips per-element handling (hashes are mod 2^31-1 by
-    construction, so int32 is lossless). The verify kernel
-    ``np.frombuffer``s it back for free.
+def _sig_and_shingles(norms, num_hashes: int = 64, k: int = 5) -> tuple[list, np.ndarray]:
+    """Shingle hashes and MinHash signatures of normalized texts:
+    (sorted-distinct int64 shingle-hash arrays, an n x ``num_hashes``
+    int64 signature matrix).
 
     Replaces the JVM higher-order-function shingle pipeline
     (transform/substr/xxhash64/array_distinct) for the bulk dedup path:
@@ -342,79 +344,93 @@ def _sig_and_shingles_udf(num_hashes: int = 64, k: int = 5, pack_sh: bool = Fals
     UTF-8 continuation-byte scan, hashed by the vectorized XXH64 above
     (bit-identical to the xxhash64 expression — parity-tested against
     the Column form in tests/test_operators.py), reduced mod 2^31-1,
-    uniqued per doc, and fed straight into the signature reduceat —
-    one Arrow round trip for both outputs. ``sh`` comes out sorted
-    (np.unique) where the Column form keeps first-occurrence order;
-    every consumer is order-insensitive (set ops, min)."""
-    from pyspark.sql.functions import pandas_udf
-
+    uniqued per doc, and fed straight into the signature reduceat.
+    The sets come out sorted (np.unique) where the Column form keeps
+    first-occurrence order; every consumer is order-insensitive (set
+    ops, min)."""
     consts = _perm_constants(num_hashes)
     A = np.array([a for a, _ in consts], dtype=np.int64)
     B = np.array([b for _, b in consts], dtype=np.int64)
+    n = len(norms)
+    if n == 0:
+        return [], np.empty((0, num_hashes), dtype=np.int64)
+    enc = [s.encode("utf-8") for s in norms]
+    blob = b"".join(enc)
+    data = (
+        np.frombuffer(blob, dtype=np.uint8)
+        if blob
+        else np.empty(0, dtype=np.uint8)
+    )
+    byte_lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=n)
+    doc_off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(byte_lens, out=doc_off[1:])
+    cs_all = (
+        np.flatnonzero((data & 0xC0) != 0x80)
+        if len(data)
+        else np.empty(0, dtype=np.int64)
+    )
+    lo = np.searchsorted(cs_all, doc_off[:-1], side="left")
+    hi = np.searchsorted(cs_all, doc_off[1:], side="left")
+    w_starts, w_lens = [], []
+    for i in range(n):
+        cs = cs_all[lo[i]:hi[i]]
+        n_chars = len(cs)
+        end = doc_off[i + 1]
+        if n_chars < k:
+            # whole (short) doc is the single shingle, "" included
+            w_starts.append(np.array([doc_off[i]], dtype=np.int64))
+            w_lens.append(np.array([end - doc_off[i]], dtype=np.int64))
+        else:
+            ws = cs[: n_chars - k + 1]
+            ends = np.concatenate([cs[k:], np.array([end], dtype=np.int64)])
+            w_starts.append(ws)
+            w_lens.append(ends - ws)
+    counts = np.fromiter((len(w) for w in w_starts), dtype=np.int64, count=n)
+    with np.errstate(over="ignore"):
+        hashes = _xxh64_windows(
+            data, np.concatenate(w_starts), np.concatenate(w_lens)
+        )
+    sh_mod = np.remainder(hashes.view(np.int64), _P)
+    bounds = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(counts, out=bounds[1:])
+    sh_list = [np.unique(sh_mod[bounds[i]:bounds[i + 1]]) for i in range(n)]
+    dlens = np.fromiter((len(a) for a in sh_list), dtype=np.int64, count=n)
+    hcat = np.concatenate(sh_list)
+    offs = np.zeros(n, dtype=np.int64)
+    np.cumsum(dlens[:-1], out=offs[1:])
+    sigs = np.empty((num_hashes, n), dtype=np.int64)
+    buf = np.empty_like(hcat)
+    for i in range(num_hashes):
+        np.multiply(hcat, A[i], out=buf)
+        np.add(buf, B[i], out=buf)
+        np.remainder(buf, _P, out=buf)
+        sigs[i] = np.minimum.reduceat(buf, offs)
+    return sh_list, np.ascontiguousarray(sigs.T)
+
+
+def _sig_and_shingles_udf(num_hashes: int = 64, k: int = 5, pack_sh: bool = False):
+    """:func:`_sig_and_shingles` as an Arrow UDF: normalized text ->
+    struct(sh: array<bigint>, sig: array<bigint>), one Arrow round trip
+    for both outputs.
+
+    ``pack_sh=True`` emits ``sh`` as a PACKED little-endian int32 blob
+    (binary) instead of an array column — the bucket-local verify ships
+    each set once per band through the banding shuffle, and Spark's
+    unsafe array format plus the JVM<->Arrow nested-array conversions
+    cost ~2x the raw bytes; an opaque 4-byte-per-hash blob halves the
+    exchange and skips per-element handling (hashes are mod 2^31-1 by
+    construction, so int32 is lossless). The verify kernel
+    ``np.frombuffer``s it back for free."""
+    from pyspark.sql.functions import pandas_udf
+
     sh_type = "binary" if pack_sh else "array<bigint>"
 
     @pandas_udf(f"struct<sh: {sh_type}, sig: array<bigint>>")
     def kern(norm: pd.Series) -> pd.DataFrame:
-        n = len(norm)
-        if n == 0:
-            return pd.DataFrame({"sh": [], "sig": []})
-        enc = [s.encode("utf-8") for s in norm]
-        blob = b"".join(enc)
-        data = (
-            np.frombuffer(blob, dtype=np.uint8)
-            if blob
-            else np.empty(0, dtype=np.uint8)
-        )
-        byte_lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=n)
-        doc_off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(byte_lens, out=doc_off[1:])
-        cs_all = (
-            np.flatnonzero((data & 0xC0) != 0x80)
-            if len(data)
-            else np.empty(0, dtype=np.int64)
-        )
-        lo = np.searchsorted(cs_all, doc_off[:-1], side="left")
-        hi = np.searchsorted(cs_all, doc_off[1:], side="left")
-        w_starts, w_lens = [], []
-        for i in range(n):
-            cs = cs_all[lo[i]:hi[i]]
-            n_chars = len(cs)
-            end = doc_off[i + 1]
-            if n_chars < k:
-                # whole (short) doc is the single shingle, "" included
-                w_starts.append(np.array([doc_off[i]], dtype=np.int64))
-                w_lens.append(np.array([end - doc_off[i]], dtype=np.int64))
-            else:
-                ws = cs[: n_chars - k + 1]
-                ends = np.concatenate([cs[k:], np.array([end], dtype=np.int64)])
-                w_starts.append(ws)
-                w_lens.append(ends - ws)
-        counts = np.fromiter((len(w) for w in w_starts), dtype=np.int64, count=n)
-        with np.errstate(over="ignore"):
-            hashes = _xxh64_windows(
-                data, np.concatenate(w_starts), np.concatenate(w_lens)
-            )
-        sh_mod = np.remainder(hashes.view(np.int64), _P)
-        bounds = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(counts, out=bounds[1:])
-        sh_list = [np.unique(sh_mod[bounds[i]:bounds[i + 1]]) for i in range(n)]
-        dlens = np.fromiter((len(a) for a in sh_list), dtype=np.int64, count=n)
-        hcat = np.concatenate(sh_list)
-        offs = np.zeros(n, dtype=np.int64)
-        np.cumsum(dlens[:-1], out=offs[1:])
-        sigs = np.empty((num_hashes, n), dtype=np.int64)
-        buf = np.empty_like(hcat)
-        for i in range(num_hashes):
-            np.multiply(hcat, A[i], out=buf)
-            np.add(buf, B[i], out=buf)
-            np.remainder(buf, _P, out=buf)
-            sigs[i] = np.minimum.reduceat(buf, offs)
-        cols = np.ascontiguousarray(sigs.T)
+        sh_list, sigs = _sig_and_shingles(norm, num_hashes, k)
         if pack_sh:
-            sh_out = [a.astype(np.int32).tobytes() for a in sh_list]
-        else:
-            sh_out = sh_list
-        return pd.DataFrame({"sh": sh_out, "sig": list(cols)})
+            sh_list = [a.astype(np.int32).tobytes() for a in sh_list]
+        return pd.DataFrame({"sh": sh_list, "sig": list(sigs)})
 
     return kern
 
@@ -880,6 +896,145 @@ def pair_sides(
     )
 
 
+def _bucket_pairs(
+    doc: np.ndarray, key: np.ndarray, cap: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The driver path's candidate generation: the distinct pairs
+    (ia < ib) of doc indices sharing a bucket. Doc indices are in id
+    order, rows (doc, key) group by key, and each group keeps its
+    ``cap`` lowest-id members — the same id-sorted cap prefix as
+    :func:`pairs_from_bucket_keys` and the bucket-local verify. A group
+    whose capped member list repeats (the same near-dup cluster in
+    every band) expands once."""
+    order = np.lexsort((doc, key))
+    doc, key = doc[order], key[order]
+    starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+    sizes = np.diff(np.r_[starts, len(key)])
+    seen, ia, ib = set(), [], []
+    for st, sz in zip(starts[sizes > 1], sizes[sizes > 1]):
+        members = doc[st:st + min(sz, cap)]
+        sig = members.tobytes()
+        if sig not in seen:
+            seen.add(sig)
+            iu, ju = np.triu_indices(len(members), 1)
+            ia.append(members[iu])
+            ib.append(members[ju])
+    if not ia:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    n = int(doc.max()) + 1
+    code = np.unique(np.concatenate(ia) * n + np.concatenate(ib))
+    return code // n, code % n
+
+
+def _set_overlaps(sets: list, ia: np.ndarray, ib: np.ndarray) -> np.ndarray:
+    """|A ∩ B| for each candidate pair of sorted-distinct int64 sets,
+    each pair verified once: pairs group by their first doc, whose set
+    is marked in a bitmap over the distinct elements, and the partners'
+    elements are counted against it in one gather per group."""
+    lens = np.fromiter((len(a) for a in sets), dtype=np.int64, count=len(sets))
+    _, inv = np.unique(np.concatenate(sets), return_inverse=True)
+    offs = np.zeros(len(sets) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    mark = np.zeros(int(inv.max()) + 1, dtype=bool)
+    order = np.argsort(ia, kind="stable")
+    starts = np.flatnonzero(np.r_[True, ia[order][1:] != ia[order][:-1]])
+    c = np.empty(len(ia), dtype=np.int64)
+    for p in np.split(order, starts[1:]):
+        a = inv[offs[ia[p[0]]]:offs[ia[p[0]] + 1]]
+        mark[a] = True
+        k = lens[ib[p]]
+        pair = np.repeat(np.arange(len(p)), k)
+        elem = np.arange(int(k.sum())) - np.repeat(np.cumsum(k) - k, k) + np.repeat(offs[ib[p]], k)
+        c[p] = np.bincount(pair, weights=mark[inv[elem]], minlength=len(p))
+        mark[a] = False
+    return c
+
+
+def _collapse(norms: np.ndarray, cap: int) -> list[np.ndarray]:
+    """The driver path's exact-duplicate groups (:func:`_collapse_groups`):
+    doc indices (id order) sharing one normalized text, each group's
+    ``cap`` lowest ids, groups ordered by their lowest id."""
+    if not len(norms):
+        return []
+    _, inv = np.unique(norms, return_inverse=True)
+    order = np.argsort(inv, kind="stable")
+    cuts = np.flatnonzero(np.diff(inv[order])) + 1
+    groups = [g[:cap] for g in np.split(order, cuts)]
+    groups.sort(key=lambda g: g[0])
+    return groups
+
+
+def _driver_jaccard_pairs(
+    spark,
+    table,
+    features,
+    threshold: float,
+    bucket_cap: int,
+    group_cap: int | None,
+) -> DataFrame:
+    """Exact-Jaccard near-dup pairs of a fetched (__id, __norm) table,
+    on the driver: the same candidates, caps and exact-dup collapse as
+    the distributed plan, then one Arrow-backed local relation whose
+    projection computes ROUND(c / u, 6) >= ``threshold`` in the JVM,
+    exactly as the distributed verify does.
+
+    ``features(norms)`` returns (sorted-distinct int64 sets, doc index
+    of each bucket-key row, bucket key of each row). ``group_cap`` is
+    None unless the corpus is duplicate-heavy (``Probe.dup_heavy``);
+    then identical texts collapse first, within-group pairs emit
+    c = u = 1 (1.0, as :func:`_within_group_pairs`) and verified group
+    pairs expand to their members' cross products."""
+    import pyarrow as pa
+
+    table = table.sort_by("__id")
+    norms = table.column("__norm").to_numpy(zero_copy_only=False)
+    if group_cap is None:
+        groups = None
+        reps = np.arange(len(norms))
+    else:
+        groups = _collapse(norms, group_cap)
+        reps = np.array([g[0] for g in groups], dtype=np.int64)
+    sets, doc, key = features(norms[reps])
+    ga, gb = _bucket_pairs(doc, key, bucket_cap)
+    c = _set_overlaps(sets, ga, gb) if len(ga) else np.empty(0, dtype=np.int64)
+    lens = np.fromiter((len(a) for a in sets), dtype=np.int64, count=len(sets))
+    u = lens[ga] + lens[gb] - c
+    # the bucket kernel's conservative prefilter; the JVM filter below
+    # stays authoritative
+    keep = c >= (threshold - 1e-9) * u
+    ga, gb, c, u = ga[keep], gb[keep], c[keep], u[keep]
+    if groups is None:
+        ia, ib = reps[ga], reps[gb]
+    else:
+        parts = [[], [], [], []]
+        for g in groups:
+            iu, ju = np.triu_indices(len(g), 1)
+            parts[0].append(g[iu])
+            parts[1].append(g[ju])
+            parts[2].append(np.ones(len(iu), dtype=np.int64))
+            parts[3].append(np.ones(len(iu), dtype=np.int64))
+        for x, y, cx, ux in zip(ga, gb, c, u):
+            ma, mb = groups[x], groups[y]
+            a, b = np.repeat(ma, len(mb)), np.tile(mb, len(ma))
+            parts[0].append(np.minimum(a, b))
+            parts[1].append(np.maximum(a, b))
+            parts[2].append(np.full(len(a), cx))
+            parts[3].append(np.full(len(a), ux))
+        ia, ib, c, u = (np.concatenate(p) if p else np.empty(0, dtype=np.int64) for p in parts)
+    ids = table.column("__id")
+    out = pa.table({
+        "id_a": ids.take(pa.array(ia, pa.int64())),
+        "id_b": ids.take(pa.array(ib, pa.int64())),
+        "c": pa.array(c, pa.int64()),
+        "u": pa.array(u, pa.int64()),
+    })
+    return spark.createDataFrame(out).select(
+        "id_a",
+        "id_b",
+        F.round(F.col("c").cast("double") / F.col("u").cast("double"), 6).alias("jaccard"),
+    ).where(F.col("jaccard") >= threshold)
+
+
 def _band_keys(sig: Column, bands: int, rows_per_band: int) -> Column:
     """``bk``: a MinHash signature's LSH bucket keys, one
     (band, bhash) struct per band, exploded to one row per band."""
@@ -939,20 +1094,46 @@ def minhash_lsh_pairs(
     strictly fewer true pairs to capping. Low-dup corpora skip the
     prepass and keep the single-wide-shuffle plan. Tests force either
     path by patching ``gate.Probe.dup_heavy``.
+
+    The same probe sizes the text: when it is at most
+    ``gate.DRIVER_BYTES`` (``Probe.tiny``) the documents are fetched
+    once and the operator runs on the driver
+    (:func:`_driver_jaccard_pairs`) with the same kernel, bucket keys,
+    caps and collapse, each distinct candidate pair verified once; its
+    local relation rounds and thresholds in the JVM like the plan
+    below. Tests force either path by patching ``gate.DRIVER_BYTES``.
     """
     # ONE full-scan probe feeds both gates: the collapse gate needs a
     # full map-side-combined aggregate anyway, so the exact row count
     # for the spread gate rides along (r12 measurement: a separate
     # bounded-count job was ~0.7 s of the ~2.7 s sf0.1 operator)
-    size = gate.probe(df, distinct=F.xxhash64(_norm(F.col(text_col))))
+    size = gate.probe(df, (text_col,), distinct=F.xxhash64(_norm(F.col(text_col))))
+    group_cap = 256 if size.dup_heavy else None
+    if size.tiny:
+        table = gate.fetch(_normed(df, id_col, text_col), ("__id", "__norm"), size)
+        if table is not None:
+            r = num_hashes // bands
+
+            def features(norms):
+                sets, sigs = _sig_and_shingles(norms, num_hashes, k)
+                # one row per (doc, band): the band index and its
+                # signature slice ARE the bucket (the distributed
+                # plan's xxhash64 of the slice names the same bucket)
+                rows = np.column_stack([
+                    np.tile(np.arange(bands), len(sets)),
+                    sigs[:, : bands * r].reshape(-1, r),
+                ])
+                _, key = np.unique(rows, axis=0, return_inverse=True)
+                return sets, np.repeat(np.arange(len(sets)), bands), key.ravel()
+
+            return _driver_jaccard_pairs(
+                df.sparkSession, table, features, jaccard_threshold, 256, group_cap
+            )
     df = gate.spread(df, size.rows)
     # normalize in its own projection (see _shingles note)
-    normed = df.select(
-        F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm")
-    )
+    normed = _normed(df, id_col, text_col)
     keep, members_col = ["__id"], None
-    if size.dup_heavy:
-        group_cap = 256
+    if group_cap is not None:
         groups = _collapse_groups(normed, group_cap)
         within = _within_group_pairs(groups, group_cap)
         normed = groups.select(
@@ -981,6 +1162,14 @@ def minhash_lsh_pairs(
     if members_col is None or jaccard_threshold > 1.0:
         return pairs
     return within.unionByName(pairs)
+
+
+def _normed(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(__id, __norm) of the documents that have text: a NULL text has
+    no shingles or grams, so it pairs with nothing."""
+    return df.select(
+        F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm")
+    ).where(F.col("__norm").isNotNull())
 
 
 def _collapse_groups(normed: DataFrame, group_cap: int) -> DataFrame:
@@ -1061,21 +1250,20 @@ def connected_components(
     """
     table = gate.fetch(pairs, (id_a, id_b))
     if table is not None:
-        # Arrow, not Rows: millions of pyspark Row objects would swamp
-        # the driver; Arrow columns iterate as plain scalars
-        id_type = dict(pairs.dtypes)[id_a]
-        labels = _union_find(zip(*(c.to_pylist() for c in table.columns)))
-        out = pairs.sparkSession.createDataFrame(
-            labels, f"doc_id {id_type}, cluster_id {id_type}"
-        )
-        # createDataFrame carries no size statistics, so a consumer's
-        # join (semantic_dedup's keep flags) would sort-merge a frame
-        # whose exact row count is known here: hint broadcast when it
-        # fits the gate. The distributed path's size is unknown.
-        width = 2 * gate.fixed_width(pairs, id_a)
-        if gate.Probe(len(labels), len(labels) * width).fits:
-            out = F.broadcast(out)
-        return out
+        import pyarrow as pa
+
+        # the labels go to Spark as Arrow columns built straight from
+        # the union-find arrays: no per-row Python objects
+        id_type = table.schema.field(0).type
+        ends = pa.chunked_array(table.column(0).chunks + table.column(1).chunks, id_type)
+        nodes, idx = np.unique(ends.to_numpy(zero_copy_only=False), return_inverse=True)
+        root = _union_find(idx[: table.num_rows], idx[table.num_rows:], len(nodes))
+        # an Arrow-backed local relation carries its size, so a
+        # consumer's join (semantic_dedup's keep flags) can broadcast it
+        return pairs.sparkSession.createDataFrame(pa.table({
+            "doc_id": pa.array(nodes, id_type),
+            "cluster_id": pa.array(nodes[root], id_type),
+        }))
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1105,13 +1293,15 @@ def connected_components(
     )
 
 
-def _union_find(edge_rows) -> list:
-    """Driver-side CC for the small-graph gate: union-find with path
+def _union_find(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Driver-side CC for the small-graph gate over nodes 0..n-1 (the
+    sorted distinct ids) and edges (a[i], b[i]): union-find with path
     compression, roots kept at the component minimum (when two roots
     merge, the larger attaches under the smaller, so every root is the
-    min id of its set by induction). Returns sorted
-    [(node, component_min)] matching the distributed loop's output."""
-    parent: dict = {}
+    min node of its set by induction). Returns each node's root, i.e.
+    the index of its component's smallest id, matching the distributed
+    loop's labels."""
+    parent = list(range(n))
 
     def find(x):
         root = x
@@ -1121,14 +1311,12 @@ def _union_find(edge_rows) -> list:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in edge_rows:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+    for x, y in zip(a.tolist(), b.tolist()):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            lo, hi = (rx, ry) if rx < ry else (ry, rx)
             parent[hi] = lo
-    return sorted((n, find(n)) for n in parent)
+    return np.fromiter((find(i) for i in range(n)), dtype=np.int64, count=n)
 
 
 def _cc_loop(edges, labels_init, max_iter: int) -> tuple:
@@ -1361,26 +1549,64 @@ def ngram_jaccard_pairs(
     Beyond the speedup, this REMOVES the documented exactness edge
     where 10-deep exact-dup cliques saturate cap-bound posting buckets:
     exact dups now occupy ONE posting each.
+
+    Text of at most ``gate.DRIVER_BYTES`` runs on the driver instead,
+    as :func:`minhash_lsh_pairs` does: the same gram kernel, prefix
+    postings, caps and collapse over one fetch, and a local relation
+    out.
     """
-    # ONE full-scan probe feeds all three gates (spread, collapse,
-    # small corpus): the collapse gate is a full map-side-combined
+    # ONE full-scan probe feeds all three gates (driver path, spread,
+    # collapse): the collapse gate is a full map-side-combined
     # aggregate anyway, so the row count and text bytes ride along
     # (guide §1.2)
     size = gate.probe(
         df, (text_col,), distinct=F.xxhash64(_norm(F.col(text_col)))
     )
+    prefix = prefix_filter and 0.0 < threshold <= 1.0
+    # prefix postings interact with the bucket cap: pre-filter, a pair
+    # meeting in a cap-saturated stop-gram bucket could still be found
+    # via a rarer shared gram; with only prefixes indexed those
+    # alternative routes shrink, so the cap is DOUBLED — prefix postings
+    # are ~(1-t) of full volume, so worst-case capped-bucket pair work
+    # stays comparable while the cap binds strictly less often than the
+    # full-posting 1024 did (r11 review finding). The r12 exact-dup
+    # collapse removes the main natural saturator (deep identical-content
+    # cliques — each content now posts ONCE); what remains cap-exposed
+    # is 2048+ DISTINCT near-identical contents sharing a prefix gram.
+    cap = 2048 if prefix else 1024
+    if size.tiny:
+        table = gate.fetch(_normed(df, id_col, text_col), ("__id", "__norm"), size)
+        if table is not None:
+
+            def features(norms):
+                sets = _word_grams(norms, n)
+                lens = np.fromiter((len(g) for g in sets), dtype=np.int64, count=len(sets))
+                # the plan's prefix length, in the same double arithmetic
+                plen = lens - np.ceil(float(threshold) * lens.astype(np.float64) - 1e-9).astype(np.int64) + 1 if prefix else lens
+                index = [g[:p] for g, p in zip(sets, plen)]
+                doc = np.repeat(np.arange(len(sets)), [len(g) for g in index])
+                key = np.concatenate(index) if index else np.empty(0, dtype=np.int64)
+                return sets, doc, key
+
+            return _driver_jaccard_pairs(
+                df.sparkSession, table, features, threshold, cap,
+                cap if size.dup_heavy else None,
+            )
     df = gate.spread(df, size.rows)
+    # above the driver path, a corpus within SMALL_ROWS and the byte
+    # budget still gets the single-pass plan with broadcast verify
+    # (measured faster there than the corpus plan: SCALING.md "Driver
+    # path crossover")
     small = size.small
     # gram hashes via the Arrow batch kernel (bit-identical to the
     # engine's xxhash64 over space-joined grams; the interpreted-HOF
     # per-gram string build it replaces was the operator's hottest
-    # stage — see _word_gram_hashes_udf)
-    normed = df.select(F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm"))
+    # stage — see _word_grams)
+    normed = _normed(df, id_col, text_col)
     members_map = None
     if size.dup_heavy:
-        group_cap = 2048 if (prefix_filter and 0.0 < threshold <= 1.0) else 1024
-        groups = _collapse_groups(normed, group_cap)
-        within = _within_group_pairs(groups, group_cap)
+        groups = _collapse_groups(normed, cap)
+        within = _within_group_pairs(groups, cap)
         members_map = groups.select(
             F.element_at("__members", 1).alias("__rep"), "__members"
         )
@@ -1404,33 +1630,20 @@ def ngram_jaccard_pairs(
     # AQE-proof repartition) shared with the LSH family. Posting lists
     # of stop-gram-like n-grams are capped the same way degenerate LSH
     # buckets are (cap high enough that sf-scale corpora stay exact).
-    if prefix_filter and 0.0 < threshold <= 1.0:
-        size = F.size("__grams")
+    if prefix:
+        gsize = F.size("__grams")
         # the -1e-9 epsilon guards float-UP noise in t*|g| (a ceil one
         # too high would shorten the prefix below the lemma's bound and
         # silently drop true pairs; one too LONG merely indexes an
         # extra gram and stays exact)
         plen = (
-            size
-            - F.ceil(F.lit(float(threshold)) * size.cast("double") - F.lit(1e-9)).cast("int")
+            gsize
+            - F.ceil(F.lit(float(threshold)) * gsize.cast("double") - F.lit(1e-9)).cast("int")
             + 1
         )
         index_grams = F.slice(F.col("__grams"), F.lit(1), plen)
-        # prefix postings interact with the bucket cap: pre-filter, a
-        # pair meeting in a cap-saturated stop-gram bucket could still
-        # be found via a rarer shared gram; with only prefixes indexed
-        # those alternative routes shrink, so the cap is DOUBLED here —
-        # prefix postings are ~(1-t) of full volume, so worst-case
-        # capped-bucket pair work stays comparable while the cap binds
-        # strictly less often than the full-posting 1024 did (r11
-        # review finding). The r12 exact-dup collapse removes the main
-        # natural saturator (deep identical-content cliques — each
-        # content now posts ONCE); what remains cap-exposed is 2048+
-        # DISTINCT near-identical contents sharing a prefix gram.
-        cap = 2048
     else:
         index_grams = F.col("__grams")
-        cap = 1024
     banded = docs.select(
         "__id", F.lit(0).alias("band"), F.explode(index_grams).alias("bhash")
     )

@@ -1,8 +1,8 @@
 """The one size gate of the data-pipeline operators: every choice between
 a small-input and a corpus-scale path (broadcast or shuffle, checkpoint
-or recompute, spread or pass through, collect to the driver or not)
-reads a :func:`probe` or a :func:`fetch` against the two constants
-below; tests reach the corpus paths by patching them."""
+or recompute, spread or pass through, run the kernels on the driver or
+not) reads a :func:`probe` or a :func:`fetch` against the three
+constants below; tests reach either path by patching them."""
 
 from __future__ import annotations
 
@@ -21,6 +21,15 @@ BUDGET_BYTES = 64 << 20
 # "Small corpus" row bound: alone it gates the spread choice (a
 # parallelism choice, not a memory one).
 SMALL_ROWS = 100_000
+# Most bytes of kernel input (the probed text, or id + vector + norm
+# per row) that a dedup operator fetches and runs its kernels on in
+# the driver process: below it Spark's fixed cost (jobs, shuffles,
+# Python-worker tasks) outweighs one single-threaded pass; above it the
+# kernel work and the candidate pairs grow past that cost, minhash
+# first (4 cores: the driver wins every operator at 1.5 MB of text,
+# minhash loses at 15 MB; SCALING.md "Driver path crossover", which
+# `scripts/scale_check.py --crossover` re-measures).
+DRIVER_BYTES = 2 << 20
 
 
 class Probe(NamedTuple):
@@ -41,6 +50,12 @@ class Probe(NamedTuple):
         return self.rows <= SMALL_ROWS and self.fits
 
     @property
+    def tiny(self) -> bool:
+        """The probed kernel input is small enough to fetch and run on
+        the driver (:data:`DRIVER_BYTES`, and within the budget)."""
+        return self.fits and self.bytes <= DRIVER_BYTES
+
+    @property
     def dup_heavy(self) -> bool:
         """>= 15% of rows repeat the ``distinct`` expression: the
         exact-duplicate collapse prepass pays for itself. The ~2% HLL
@@ -51,6 +66,11 @@ class Probe(NamedTuple):
 def fixed_width(df: DataFrame, col: str) -> int:
     """Spark's per-value size of ``col`` (``DataType.defaultSize``)."""
     return df._jdf.schema().apply(col).dataType().defaultSize()
+
+
+def _var_width(df: DataFrame, cols: tuple[str, ...]) -> list[str]:
+    """The string and binary columns of ``cols``: no fixed width."""
+    return [c for c in cols if isinstance(df.schema[c].dataType, (StringType, BinaryType))]
 
 
 def _row_limit(width: int) -> int:
@@ -78,7 +98,7 @@ def probe(
     probe is a full map-side-combined scan that also counts the
     approximate distinct values of that expression.
     """
-    var = [c for c in cols if isinstance(df.schema[c].dataType, (StringType, BinaryType))]
+    var = _var_width(df, cols)
     width = row_bytes + sum(fixed_width(df, c) for c in cols if c not in var)
     sums = [F.sum(F.octet_length(c)) for c in var]
     # collect()/count(), not first(): no CollectLimit over a one-row result
@@ -99,12 +119,26 @@ def probe(
     return Probe(rows, rows * width + var_bytes)
 
 
-def fetch(df: DataFrame, cols: tuple[str, ...]) -> pa.Table | None:
+def fetch(df: DataFrame, cols: tuple[str, ...], size: Probe | None = None) -> pa.Table | None:
     """``cols`` of ``df`` as one Arrow table on the driver, or None when
     they exceed :data:`BUDGET_BYTES`. ONE job shaped like the bounded
-    :func:`probe`: it stops after the rows of the columns' fixed width
-    (20 bytes a string) that fit, plus one; the table's bytes decide."""
-    limit = _row_limit(sum(fixed_width(df, c) for c in cols))
+    :func:`probe`: it stops after the rows that fit, plus one; the
+    table's bytes decide.
+
+    The rows that fit come from ``size``, the caller's probe of these
+    rows, when given (None when it does not fit: nothing is collected).
+    Without it they come from the columns' fixed widths, which a
+    string or binary column does not have: one over-long value per row
+    would collect many times the budget before the bytes are checked,
+    so such columns are probed here first (one more job)."""
+    if size is None and _var_width(df, cols):
+        size = probe(df, cols)
+    if size is None:
+        limit = _row_limit(sum(fixed_width(df, c) for c in cols))
+    elif size.fits:
+        limit = size.rows
+    else:
+        return None
     table = df.select(*cols).limit(limit + 1).toArrow()
     if table.num_rows > limit or table.nbytes > BUDGET_BYTES:
         return None

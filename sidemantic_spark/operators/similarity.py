@@ -174,34 +174,57 @@ def _hyperplane_band_buckets_udf(planes: list[list[float]], bands: int, bits_per
     """
     from pyspark.sql.functions import pandas_udf
 
-    P = np.array(planes, dtype=np.float64).T  # dim x nbits
-    weights = np.array([1 << i for i in range(bits_per_band)], dtype=np.int64)
-
     @pandas_udf("array<bigint>")
     def buckets(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype=object)
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        if V.shape[1] != P.shape[0]:
-            # hashing a prefix would silently lose near-dup pairs, and
-            # the caller's byte gate sized each row by ``dim``
-            raise ValueError(
-                f"embeddings have {V.shape[1]} dimensions but dim={P.shape[0]}; "
-                "pass the vectors' length as dim"
-            )
-        acc = np.zeros((V.shape[0], P.shape[1]), dtype=np.float64)
-        for d in range(P.shape[0]):
-            # dimension-ordered accumulation: same rounding as the
-            # sequential fold (never np.dot — pairwise summation would
-            # round differently and could flip a near-zero sign)
-            acc += V[:, d:d + 1] * P[d:d + 1, :]
-        bits = (acc >= 0).astype(np.int64)
-        out = np.empty((V.shape[0], bands), dtype=np.int64)
-        for j in range(bands):
-            out[:, j] = bits[:, j * bits_per_band:(j + 1) * bits_per_band] @ weights
-        return pd.Series(list(out))
+        return pd.Series(list(_hyperplane_bands(_stack(vs, len(planes[0])), planes, bands, bits_per_band)))
 
     return buckets.asNondeterministic()
+
+
+def _stack(vs, dim: int) -> np.ndarray:
+    """Embeddings as an n x ``dim`` float64 matrix; vectors of another
+    length raise instead of being hashed on a prefix (near-dup pairs
+    would be lost silently, and the byte gate sized each row by
+    ``dim``)."""
+    V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+    if V.shape[1] != dim:
+        raise ValueError(
+            f"embeddings have {V.shape[1]} dimensions but dim={dim}; "
+            "pass the vectors' length as dim"
+        )
+    return V
+
+
+def _hyperplane_bands(
+    V: np.ndarray, planes: list[list[float]], bands: int, bits_per_band: int
+) -> np.ndarray:
+    """The n x ``bands`` bucket ids of :func:`_hyperplane_band_buckets_udf`."""
+    P = np.array(planes, dtype=np.float64).T  # dim x nbits
+    weights = np.array([1 << i for i in range(bits_per_band)], dtype=np.int64)
+    acc = np.zeros((V.shape[0], P.shape[1]), dtype=np.float64)
+    for d in range(P.shape[0]):
+        # dimension-ordered accumulation: same rounding as the
+        # sequential fold (never np.dot — pairwise summation would
+        # round differently and could flip a near-zero sign)
+        acc += V[:, d:d + 1] * P[d:d + 1, :]
+    bits = (acc >= 0).astype(np.int64)
+    out = np.empty((V.shape[0], bands), dtype=np.int64)
+    for j in range(bands):
+        out[:, j] = bits[:, j * bits_per_band:(j + 1) * bits_per_band] @ weights
+    return out
+
+
+def _fold_dot(X: np.ndarray, Y: np.ndarray) -> np.ndarray:
+    """Row-wise dot products of two n x dim matrices in the JVM
+    fold's order (:func:`_dot`: ``acc = acc + x[d] * y[d]`` from 0.0,
+    dimension by dimension), so every value is bit-identical to the
+    engine's."""
+    acc = np.zeros(X.shape[0], dtype=np.float64)
+    for d in range(X.shape[1]):
+        acc += X[:, d] * Y[:, d]
+    return acc
 
 
 def _det_planes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
@@ -495,20 +518,27 @@ def embedding_near_dup_pairs(
     MinHash — one shuffle on (band, bucket), capped in-bucket pair
     expansion, verify at full parallelism.
 
-    The verify attaches both vector sides with
-    :func:`operators.dedup.pair_sides`, in the form one row-limited
-    probe picks (an EAGER Spark job at plan-construction time that
-    reads no column). When the vector side fits the operators' byte
-    budget (``operators.gate.BUDGET_BYTES``; a row is the id, ``dim``
-    doubles and the norm, so ~127k rows at dim=64), both sides
-    broadcast: two MAP-ONLY joins (r12: interleaved noop best 0.99 vs
-    1.17 s, the verify's explode + id-join + pair-groupBy exchanges
-    drop out of the plan). Above it the long-format verify runs — one
-    vector scan, no broadcast assumption, the only 100 TB-safe shape.
-    Both forms compute the identical JVM cosine fold on the identical
-    double arrays, so results are bit-identical (pinned in tests and
-    proven row-identical in the study of OPTIMIZATION_r12.md §18) —
-    PROVIDED ``id_col`` is unique. Tests reach either form by patching
+    One row-limited probe (an EAGER Spark job at plan-construction
+    time that reads no column; a row is the id, ``dim`` doubles and the
+    norm) picks the path. When the vector side is at most
+    ``operators.gate.DRIVER_BYTES``, the vectors are fetched once and
+    the whole operator runs on the driver (:func:`_near_dup_driver`):
+    the same banding kernel, the same id-sorted 256-member bucket caps,
+    each distinct candidate pair verified once, and a local relation
+    out. ``id_col`` must then be unique, and a repeated id raises
+    ``ValueError`` naming it. Above that bound the Spark plan attaches
+    both vector sides with :func:`operators.dedup.pair_sides`: when
+    they fit the operators' byte budget (``operators.gate.BUDGET_BYTES``,
+    ~127k rows at dim=64) both sides broadcast, two MAP-ONLY joins (r12:
+    interleaved noop best 0.99 vs 1.17 s, the verify's explode + id-join
+    + pair-groupBy exchanges drop out of the plan); above it the
+    long-format verify runs — one vector scan, no broadcast assumption,
+    the only 100 TB-safe shape. All three compute the identical cosine
+    on the identical double arrays, so results are bit-identical (pinned
+    in tests and proven row-identical in the study of OPTIMIZATION_r12.md
+    §18) — PROVIDED ``id_col`` is unique, which the Spark plan assumes
+    without checking (its two forms disagree on a repeated id). Tests
+    reach every path by patching ``gate.DRIVER_BYTES`` and
     ``gate.BUDGET_BYTES``.
 
     ``dim`` must be the vectors' length: it sizes the hyperplanes and
@@ -523,12 +553,24 @@ def embedding_near_dup_pairs(
     expansion re-materializes both full 64-double arrays per candidate
     pair, which dwarfs the join it removes; an Arrow-kernel expansion
     would change the cosine summation order vs the JVM fold the SQL
-    oracle replicates (ROUND(x,6) knife-edge risk). See
-    OPTIMIZATION_r12.md §17.
+    oracle replicates (ROUND(x,6) knife-edge risk) unless it keeps the
+    fold's order. The driver path does: :func:`_fold_dot` accumulates
+    ``acc = acc + x[d] * y[d]`` from 0.0 dimension by dimension (never
+    ``np.dot``, whose pairwise summation rounds differently), which is
+    bit-identical to ``_dot``/``_norm``, and leaves the division and
+    ROUND to the JVM. See OPTIMIZATION_r12.md §17.
     """
     from sidemantic_spark.operators.dedup import pair_sides, pairs_from_bucket_keys
 
     planes = _det_planes(dim, bands * bits_per_band)
+    # per-row bytes of the vector side: id + dim doubles + norm
+    size = gate.probe(df, row_bytes=gate.fixed_width(df, id_col) + 8 * dim + 8)
+    if size.tiny:
+        table = gate.fetch(df, (id_col, vec_col), size)
+        if table is not None:
+            return _near_dup_driver(
+                df.sparkSession, table, id_col, planes, bands, bits_per_band, min_cosine, dim
+            )
     emb = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     # banded sign-bit buckets via the Arrow kernel (bit-identical to
     # hyperplane_bucket; the per-row interpreted dot-product trees it
@@ -554,25 +596,72 @@ def embedding_near_dup_pairs(
     vecs = df.select(
         F.col(id_col).alias("__id"), emb.alias("__emb")
     ).withColumn("__nrm", _norm(F.col("__emb")))
-    # per-row bytes of one broadcast side: id + dim doubles + norm
-    row_bytes = gate.fixed_width(df, id_col) + 8 * dim + 8
-    both = pair_sides(
-        cand,
-        vecs,
-        ("__emb", "__nrm"),
-        broadcast=gate.probe(df, row_bytes=row_bytes).fits,
-    )
-    return (
+    both = pair_sides(cand, vecs, ("__emb", "__nrm"), broadcast=size.fits)
+    return _cosine_filter(
         both.select(
             "id_a",
             "id_b",
-            F.round(
-                _dot(F.col("__emb_a"), F.col("__emb_b"))
-                / (F.col("__nrm_a") * F.col("__nrm_b")),
-                6,
-            ).alias("cosine_sim"),
+            _dot(F.col("__emb_a"), F.col("__emb_b")).alias("__dot"),
+            "__nrm_a",
+            "__nrm_b",
+        ),
+        min_cosine,
+    )
+
+
+def _cosine_filter(parts: DataFrame, min_cosine: float) -> DataFrame:
+    """(id_a, id_b, cosine_sim >= ``min_cosine``) from each pair's dot
+    product and norms, divided and rounded in the JVM on both paths."""
+    return parts.select(
+        "id_a",
+        "id_b",
+        F.round(F.col("__dot") / (F.col("__nrm_a") * F.col("__nrm_b")), 6).alias("cosine_sim"),
+    ).where(F.col("cosine_sim") >= min_cosine)
+
+
+def _near_dup_driver(spark, table, id_col, planes, bands, bits_per_band, min_cosine, dim) -> DataFrame:
+    """:func:`embedding_near_dup_pairs` on a fetched (id, vector) table:
+    the same hyperplane buckets, 256-member id-sorted caps and JVM
+    cosine arithmetic — dot products and norms in the fold's order
+    (:func:`_fold_dot`), the division, ROUND and threshold in the JVM —
+    with every distinct candidate pair verified once."""
+    import pyarrow as pa
+
+    from sidemantic_spark.operators.dedup import _bucket_pairs
+
+    table = table.sort_by(table.column_names[0])
+    ids = table.column(0)
+    flat = ids.to_numpy(zero_copy_only=False)
+    dup = np.flatnonzero(flat[1:] == flat[:-1])
+    if len(dup):
+        raise ValueError(
+            f"embedding near-dup pairs need a unique {id_col}; "
+            f"{flat[dup[0]]!r} appears more than once"
         )
-        .where(F.col("cosine_sim") >= min_cosine)
+    V = _stack(table.column(1).to_numpy(zero_copy_only=False), dim) if table.num_rows else np.empty((0, dim))
+    keys = _hyperplane_bands(V, planes, bands, bits_per_band)
+    # bucket key = band * 2^bits + bucket id
+    key = (np.arange(bands) << bits_per_band) + keys
+    ia, ib = _bucket_pairs(np.repeat(np.arange(len(V)), bands), key.ravel(), 256)
+    nrm = np.sqrt(_fold_dot(V, V))
+    dot = np.concatenate([
+        _fold_dot(V[ia[i:i + 65536]], V[ib[i:i + 65536]])
+        for i in range(0, len(ia), 65536)
+    ]) if len(ia) else np.empty(0)
+    # conservative prefilter (ROUND moves a value by < 1e-6); a zero
+    # norm (NaN/inf) stays for the JVM division to judge
+    with np.errstate(divide="ignore", invalid="ignore"):
+        keep = ~(dot / (nrm[ia] * nrm[ib]) < min_cosine - 1e-6)
+    ia, ib = ia[keep], ib[keep]
+    return _cosine_filter(
+        spark.createDataFrame(pa.table({
+            "id_a": ids.take(pa.array(ia, pa.int64())),
+            "id_b": ids.take(pa.array(ib, pa.int64())),
+            "__dot": pa.array(dot[keep], pa.float64()),
+            "__nrm_a": pa.array(nrm[ia], pa.float64()),
+            "__nrm_b": pa.array(nrm[ib], pa.float64()),
+        })),
+        min_cosine,
     )
 
 

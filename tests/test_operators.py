@@ -283,10 +283,17 @@ def test_ngram_corpus_path_matches_small_path(docs, monkeypatch):
     kernel (the pruned verify pass reads the broadcast-filtered
     scan). The prune itself is byte-gated: string ids that exceed the
     budget skip it (same rows), and documents whose text exceeds the
-    budget take the corpus path below the row bound."""
+    budget take the corpus path below the row bound. A corpus this
+    small runs on the driver unless ``gate.DRIVER_BYTES`` is patched
+    down: that path is one local relation with the same rows."""
     from sidemantic_spark.operators import gate
 
     frame = docs.limit(300).select("doc_id", "text")
+    local = dedup.ngram_jaccard_pairs(frame, n=5, threshold=0.6)
+    lplan = local._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in lplan and "ArrowEvalPython" not in lplan, lplan
+    local_rows = sorted(map(tuple, local.collect()))
+    monkeypatch.setattr(gate, "DRIVER_BYTES", 0)
     # zero-padded ids sort like the numbers, so pairs map back 1:1;
     # 256 bytes each puts even the 18 verified ids over 8 * 300 bytes
     str_frame = frame.select(
@@ -296,6 +303,7 @@ def test_ngram_corpus_path_matches_small_path(docs, monkeypatch):
     small, splan = _ngram_rows_and_plan(frame)
     long_small, _ = _ngram_rows_and_plan(long_frame)
     assert small and long_small and not _is_corpus_path(splan)
+    assert small == local_rows
     # small path: the verify is two broadcast joins, and the gram
     # kernel runs once, inside the checkpoint that the index and both
     # verify sides read as scans
@@ -482,8 +490,17 @@ def test_embedding_near_dup_pairs_rejects_wrong_dim(spark):
             F.sequence(F.lit(1), F.lit(128)), lambda i: (i + F.col("id")).cast("float")
         ).alias("embedding"),
     )
-    with pytest.raises(PythonException, match=r"embeddings have 128 dimensions but dim=64"):
-        similarity.embedding_near_dup_pairs(vecs, min_cosine=0.5).collect()
+    from sidemantic_spark.operators import gate
+
+    msg = r"embeddings have 128 dimensions but dim=64"
+    # driver path: the kernel raises in this process, at call time
+    with pytest.raises(ValueError, match=msg):
+        similarity.embedding_near_dup_pairs(vecs, min_cosine=0.5)
+    # the Spark plan: the same error, from the Python worker
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(gate, "DRIVER_BYTES", 0)
+        with pytest.raises(PythonException, match=msg):
+            similarity.embedding_near_dup_pairs(vecs, min_cosine=0.5).collect()
 
 
 def test_multimodal_decode_plumbing(docs):

@@ -918,6 +918,8 @@ def test_minhash_bucket_local_verify_plan_and_adversarial_parity(spark, monkeypa
             (F.col("id") % 5).cast("string"),
         ).alias("text"),
     )
+    # the corpus plans (a corpus this small otherwise runs on the driver)
+    monkeypatch.setattr(gate, "DRIVER_BYTES", 0)
     force_collapse(False)
     plain = minhash_lsh_pairs(docs, jaccard_threshold=0.4)
     plan = plain._jdf.queryExecution().executedPlan().toString()
@@ -942,6 +944,15 @@ def test_minhash_bucket_local_verify_plan_and_adversarial_parity(spark, monkeypa
     a = sorted(map(tuple, plain.collect()))
     b = sorted(map(tuple, collapsed.collect()))
     assert len(a) == 320 * 319 // 2 and a == b
+    # the driver path: one local relation, no exchange and no Python
+    # evaluation in the plan, the same pairs with and without collapse
+    monkeypatch.setattr(gate, "DRIVER_BYTES", 1 << 20)
+    for flag in (False, True):
+        force_collapse(flag)
+        local = minhash_lsh_pairs(docs, jaccard_threshold=0.4)
+        lplan = local._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in lplan and "ArrowEvalPython" not in lplan, lplan
+        assert sorted(map(tuple, local.collect())) == a
 
 
 def test_embedding_verify_broadcast_gate_plan_and_parity(spark, monkeypatch):
@@ -973,12 +984,21 @@ def test_embedding_verify_broadcast_gate_plan_and_parity(spark, monkeypatch):
     # the gate sizes the vector side at id + 64 doubles + norm = 528
     # bytes a row: 300 rows fit a budget of exactly 300 * 528 bytes
     # (broadcast plan) and not one byte less (long plan), same rows
+    # (driver path off: 300 vectors are far below gate.DRIVER_BYTES)
+    monkeypatch.setattr(gate, "DRIVER_BYTES", 0)
     rows, plans = {}, {}
     for budget, broadcast in ((300 * 528, True), (300 * 528 - 1, False)):
         monkeypatch.setattr(gate, "BUDGET_BYTES", budget)
         out = embedding_near_dup_pairs(vecs, **kw)
         plans[broadcast] = out._jdf.queryExecution().executedPlan().toString()
         rows[broadcast] = sorted(map(tuple, out.collect()))
+    # the driver path at the same budget: one local relation, same rows
+    monkeypatch.setattr(gate, "DRIVER_BYTES", 300 * 528)
+    monkeypatch.setattr(gate, "BUDGET_BYTES", 300 * 528)
+    local = embedding_near_dup_pairs(vecs, **kw)
+    dplan = local._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in dplan and "ArrowEvalPython" not in dplan, dplan
+    assert sorted(map(tuple, local.collect())) == rows[True]
     bplan, lplan = plans[True], plans[False]
     # verify = two broadcast joins; no sort-merge/shuffled-hash join
     # and no pair-grain groupBy re-assembly anywhere in the plan
@@ -1006,12 +1026,12 @@ def test_embedding_verify_broadcast_gate_plan_and_parity(spark, monkeypatch):
 
 def test_semantic_dedup_keep_join_broadcasts_labels_that_fit(spark, monkeypatch):
     """semantic_dedup's keep-flag join broadcasts the driver-side
-    connected-component labels exactly when the gate says they fit the
-    byte budget (createDataFrame carries no statistics, so without the
-    hint the join is a sort-merge). 16 disjoint near-dup pairs are 16
-    (long, long) edges and 32 labels of 16 bytes: a budget of 512 bytes
-    fits the labels, one byte less does not, and both fit the edges, so
-    the union-find path runs on both sides with the same rows."""
+    connected-component labels: they come back as an Arrow-backed local
+    relation, whose size statistics let the planner broadcast them (the
+    former row-built frame carried none and needed a gate hint). 16
+    disjoint near-dup pairs are 16 (long, long) edges and 32 labels of
+    16 bytes: under a budget of 512 bytes and one byte less, the
+    union-find path runs and the join broadcasts with the same rows."""
     from pyspark.sql import functions as F
 
     from sidemantic_spark.operators import dedup, gate
@@ -1043,12 +1063,15 @@ def test_semantic_dedup_keep_join_broadcasts_labels_that_fit(spark, monkeypatch)
         ]
         rows[fits] = sorted(map(tuple, out.collect()))
     assert len(joins[True]) == 1 and "BroadcastHashJoin" in joins[True][0], joins
-    assert len(joins[False]) == 1 and "BroadcastHashJoin" not in joins[False][0], joins
+    assert len(joins[False]) == 1 and "BroadcastHashJoin" in joins[False][0], joins
     assert rows[True] == rows[False]
+    # at the default budget the pairs come from the driver path: same rows
+    monkeypatch.setattr(gate, "BUDGET_BYTES", 64 << 20)
+    assert sorted(map(tuple, semantic_dedup(vecs, min_cosine=0.95).collect())) == rows[True]
     assert [r for r in rows[True] if not r[2]] == [(i, i - 1, False) for i in range(2, 33, 2)]
 
 
-def test_ngram_prefix_filter_plan_pin(spark):
+def test_ngram_prefix_filter_plan_pin(spark, monkeypatch):
     """Round-11 scale fix (VERDICT r10 ask #1): the ngram inverted
     index must explode only the PREFIX slice of each doc's sorted gram
     array (posting rows per doc drop from |g| to (1-t)|g|+1, candidate
@@ -1058,8 +1081,11 @@ def test_ngram_prefix_filter_plan_pin(spark):
     (test_ngram_prefix_filter_bit_identical_to_full_posting)."""
     from pyspark.sql import functions as F
 
+    from sidemantic_spark.operators import gate
     from sidemantic_spark.operators.dedup import ngram_jaccard_pairs
 
+    # the corpus plan (64 docs otherwise run on the driver)
+    monkeypatch.setattr(gate, "DRIVER_BYTES", 0)
     docs = spark.range(64).select(
         F.col("id").alias("doc_id"),
         F.concat(
