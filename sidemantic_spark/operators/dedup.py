@@ -114,10 +114,10 @@ def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 64) -> Colum
     array-of-structs and an inner ``zip_with`` doing the num_hashes-way
     min update. a_i*h + b_i < 2^62 + 2^31 stays inside bigint under
     ANSI mode. Higher-order functions are evaluated interpreted (no
-    codegen), so for bulk corpora :func:`_minhash_sig_udf` — identical
-    arithmetic, Arrow/numpy — is ~50x faster; ``minhash_lsh_pairs``
-    uses that path. This one stays as the oracle for parity tests and
-    for contexts where a Python runner is unavailable.
+    codegen), so for bulk corpora :func:`_sig_and_shingles` — identical
+    arithmetic, numpy — is ~50x faster; ``minhash_lsh_pairs`` uses that
+    path. This one stays as the oracle for parity tests and for
+    contexts where a Python runner is unavailable.
     """
     consts = F.array(*[
         F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
@@ -133,51 +133,6 @@ def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 64) -> Colum
             lambda m, c: F.least(m, F.pmod(c["a"] * h + c["b"], F.lit(_P))),
         ),
     )
-
-
-def _minhash_sig_udf(num_hashes: int = 64):
-    """Arrow-vectorized MinHash signature: array<long> shingle hashes ->
-    array<long> signature.
-
-    Same arithmetic as :func:`minhash_signature_from_hashes` (so the two
-    paths produce identical signatures), but executed as one numpy
-    ``minimum.reduceat`` over the batch instead of an interpreted
-    per-element expression tree — measured ~30x faster. Products stay
-    < 2^62 (a, h < 2^31), inside int64.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    consts = _perm_constants(num_hashes)
-    A = np.array([a for a, _ in consts], dtype=np.int64)
-    B = np.array([b for _, b in consts], dtype=np.int64)
-
-    @pandas_udf("array<bigint>")
-    def sig(sh: pd.Series) -> pd.Series:
-        n = len(sh)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        arrs = [np.asarray(a, dtype=np.int64) for a in sh]
-        lens = np.array([len(a) for a in arrs], dtype=np.int64)
-        h = np.concatenate(arrs)
-        offsets = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        # one permutation at a time with a reused buffer: the working
-        # set stays L2-resident instead of allocating a
-        # (num_hashes x total_shingles) temporary — memory-bandwidth,
-        # not ALU, dominates this kernel (measured 15x)
-        sigs = np.empty((num_hashes, n), dtype=np.int64)
-        buf = np.empty_like(h)
-        for i in range(num_hashes):
-            np.multiply(h, A[i], out=buf)
-            np.add(buf, B[i], out=buf)
-            np.remainder(buf, _P, out=buf)
-            # reduceat: shingle arrays are never empty (min length 1),
-            # so every segment is well-formed
-            sigs[i] = np.minimum.reduceat(buf, offsets)
-        cols = np.ascontiguousarray(sigs.T)
-        return pd.Series(list(cols))
-
-    return sig
 
 
 # xxHash64 primes (public spec); numpy uint64 arithmetic wraps mod 2^64
@@ -546,7 +501,7 @@ def source_overlap_matrix(
     )
 
 
-def _bucket_verify_kernel(threshold: float = 0.0):
+def _bucket_verify_kernel(threshold: float = 0.0, id_type: str = "bigint"):
     """Arrow kernel: per capped LSH bucket, exact pairwise set
     intersection/union sizes for every (i < j) member pair, emitted as
     COLUMNAR arrays and pre-filtered by ``threshold``.
@@ -569,24 +524,29 @@ def _bucket_verify_kernel(threshold: float = 0.0):
     JVM filter (which still applies ``ROUND(c/u, 6) >= t`` downstream),
     so only the ~0.1% surviving pairs ever cross Arrow or ride the
     dedup shuffle. Sets arrive np.unique-sorted
-    (``_sig_and_shingles_udf``)."""
+    (``_sig_and_shingles_udf``).
+
+    Ids pass through as the bucket delivers them, so ``id_type`` (the
+    id column's DDL type) may be any ordered type: string ids compare
+    as Python strings, i.e. by code point, which is Spark's UTF-8 byte
+    order."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(
-        "struct<id_a:array<bigint>,id_b:array<bigint>,"
+        f"struct<id_a:array<{id_type}>,id_b:array<{id_type}>,"
         "c:array<int>,u:array<int>>"
     )
     def kern(ids: pd.Series, shs: pd.Series) -> pd.DataFrame:
         out_a, out_b, out_c, out_u = [], [], [], []
         for idl, sets in zip(ids, shs):
             k = len(sets)
+            idarr = np.asarray(idl)
             if k < 2:
-                out_a.append(np.empty(0, dtype=np.int64))
-                out_b.append(np.empty(0, dtype=np.int64))
+                out_a.append(idarr[:0])
+                out_b.append(idarr[:0])
                 out_c.append(np.empty(0, dtype=np.int32))
                 out_u.append(np.empty(0, dtype=np.int32))
                 continue
-            idarr = np.asarray(idl, dtype=np.int64)
             arrs = [
                 np.frombuffer(s, dtype=np.int32)
                 if isinstance(s, (bytes, bytearray))
@@ -607,8 +567,8 @@ def _bucket_verify_kernel(threshold: float = 0.0):
             else:
                 n_pairs = k * (k - 1) // 2
                 c = np.empty(n_pairs, dtype=np.int64)
-                ia = np.empty(n_pairs, dtype=np.int64)
-                ib = np.empty(n_pairs, dtype=np.int64)
+                ia = np.empty(n_pairs, dtype=idarr.dtype)
+                ib = np.empty(n_pairs, dtype=idarr.dtype)
                 su = np.empty(n_pairs, dtype=np.int64)
                 pos_out = 0
                 for i in range(k):
@@ -705,7 +665,9 @@ def bucket_local_jaccard_pairs(
     # returns columnar arrays; arrays_zip + explode rebuilds pair rows
     # JVM-side for the ~0.1% survivors, and the exact ROUND filter below
     # remains authoritative at the boundary
-    kern = _bucket_verify_kernel(threshold)
+    kern = _bucket_verify_kernel(
+        threshold, banded_sets.schema["__id"].dataType.simpleString()
+    )
     pair_struct = F.explode(
         F.arrays_zip(
             F.col("__r.id_a").alias("id_a"),
@@ -1166,10 +1128,12 @@ def minhash_lsh_pairs(
 
 def _normed(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(__id, __norm) of the documents that have text: a NULL text has
-    no shingles or grams, so it pairs with nothing."""
-    return df.select(
+    no shingles or grams, so it pairs with nothing. The filter tests the
+    raw text (its norm is NULL exactly when it is), so it reaches the
+    scan and the regex runs once a row, not again in a filter."""
+    return df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("__id"), _norm(F.col(text_col)).alias("__norm")
-    ).where(F.col("__norm").isNotNull())
+    )
 
 
 def _collapse_groups(normed: DataFrame, group_cap: int) -> DataFrame:
@@ -1581,8 +1545,10 @@ def ngram_jaccard_pairs(
             def features(norms):
                 sets = _word_grams(norms, n)
                 lens = np.fromiter((len(g) for g in sets), dtype=np.int64, count=len(sets))
-                # the plan's prefix length, in the same double arithmetic
-                plen = lens - np.ceil(float(threshold) * lens.astype(np.float64) - 1e-9).astype(np.int64) + 1 if prefix else lens
+                plen = lens
+                if prefix:
+                    # the plan's prefix length, in the same double arithmetic
+                    plen = lens - np.ceil(float(threshold) * lens.astype(np.float64) - 1e-9).astype(np.int64) + 1
                 index = [g[:p] for g, p in zip(sets, plen)]
                 doc = np.repeat(np.arange(len(sets)), [len(g) for g in index])
                 key = np.concatenate(index) if index else np.empty(0, dtype=np.int64)

@@ -21,8 +21,9 @@ BUDGET_BYTES = 64 << 20
 # "Small corpus" row bound: alone it gates the spread choice (a
 # parallelism choice, not a memory one).
 SMALL_ROWS = 100_000
-# Most bytes of kernel input (the probed text, or id + vector + norm
-# per row) that a dedup operator fetches and runs its kernels on in
+# Most bytes of kernel input (the probed text, with an id and a flag
+# per row for decontaminate, or id + vector + norm per row for
+# embeddings) that a dedup operator fetches and runs its kernels on in
 # the driver process: below it Spark's fixed cost (jobs, shuffles,
 # Python-worker tasks) outweighs one single-threaded pass; above it the
 # kernel work and the candidate pairs grow past that cost, minhash
@@ -91,26 +92,30 @@ def probe(
     fixed width of each fixed-width column in ``cols`` + the summed
     ``octet_length`` of each string or binary column in ``cols``.
 
-    Without ``distinct`` the scan stops after ``limit + 1`` rows
-    (CollectLimit short-circuits, so the probe costs O(limit) rows even
-    on a 100 TB input); ``limit`` defaults to the most rows of the
-    fixed width that fit :data:`BUDGET_BYTES`. With ``distinct`` the
-    probe is a full map-side-combined scan that also counts the
-    approximate distinct values of that expression.
+    Without ``distinct`` each partition's scan stops after ``limit + 1``
+    rows (a LocalLimit), and only those rows, strings as their lengths,
+    cross one single-partition exchange: the probe reads O(limit) rows
+    a partition, whatever the input's size; ``limit`` defaults to the
+    most rows of the fixed width that fit :data:`BUDGET_BYTES`. With
+    ``distinct`` the probe is a full map-side-combined scan that also
+    counts the approximate distinct values of that expression.
     """
     var = _var_width(df, cols)
     width = row_bytes + sum(fixed_width(df, c) for c in cols if c not in var)
-    sums = [F.sum(F.octet_length(c)) for c in var]
+    lens = [F.octet_length(c) for c in var]
     # collect()/count(), not first(): no CollectLimit over a one-row result
     if distinct is not None:
-        r = df.agg(F.count(F.lit(1)), F.approx_count_distinct(distinct), *sums).collect()[0]
+        r = df.agg(
+            F.count(F.lit(1)), F.approx_count_distinct(distinct), *[F.sum(n) for n in lens]
+        ).collect()[0]
         rows = int(r[0])
         return Probe(rows, rows * width + sum(v or 0 for v in r[2:]), int(r[1]))
     if limit is None:
         limit = _row_limit(width)
-    head = df.select(*(cols or [F.lit(1)])).limit(limit + 1)
-    if sums:
-        r = head.agg(F.count(F.lit(1)), *sums).collect()[0]
+    head = df.select(*([n.alias(f"__len{i}") for i, n in enumerate(lens)] or [F.lit(1)]))
+    head = head.limit(limit + 1)
+    if lens:
+        r = head.agg(F.count(F.lit(1)), *[F.sum(c) for c in head.columns]).collect()[0]
         rows, var_bytes = int(r[0]), sum(v or 0 for v in r[1:])
     else:
         rows, var_bytes = head.count(), 0

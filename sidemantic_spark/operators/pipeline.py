@@ -361,19 +361,25 @@ def decontaminate(
     This kernel is ~25x lighter per doc than minhash's, where the same
     spread measurably wins.
 
-    One bounded probe sizes both sides' text; at most
-    ``gate.DRIVER_BYTES`` of it is fetched in one job and counted on the
-    driver with the same gram kernel (a local relation out). Documents
-    with NULL text share no gram.
+    One bounded probe sizes both sides' rows (text, id and flag); at
+    most ``gate.DRIVER_BYTES`` of them is fetched in one job and counted
+    on the driver with the same gram kernel (a local relation out).
+    Documents with NULL text share no gram.
     """
     from sidemantic_spark.operators import gate
     from sidemantic_spark.operators.dedup import _normed
 
+    # a fetched row is its text plus an id and a flag: the scan stops
+    # at the rows whose fixed part alone is past Probe.tiny's bound,
+    # not at the byte budget's row bound (64M rows of text)
+    row_bytes = gate.fixed_width(train, id_col) + 1
     size = gate.probe(
         train.select(F.col(text_col).alias("__t")).unionByName(
             eval_df.select(F.col(text_col).alias("__t"))
         ),
         ("__t",),
+        row_bytes=row_bytes,
+        limit=min(gate.DRIVER_BYTES, gate.BUDGET_BYTES) // row_bytes,
     )
     if size.tiny:
         # eval rows carry a NULL id of the train id's type

@@ -115,12 +115,7 @@ TEXT_OPS = {
 }
 
 
-# minhash's Spark plan has no string-id form (its bucket kernel returns
-# bigint ids); test_minhash_string_ids_on_the_driver covers that pair
-@pytest.mark.parametrize(
-    "op,corpus",
-    [(o, c) for o in sorted(TEXT_OPS) for c in sorted(CORPORA) if (o, c) != ("minhash", "string_ids")],
-)
+@pytest.mark.parametrize("op,corpus", [(o, c) for o in sorted(TEXT_OPS) for c in sorted(CORPORA)])
 def test_text_operators_row_identity(spark, monkeypatch, op, corpus):
     df = CORPORA[corpus](spark).localCheckpoint()
     dup_heavy = (None, True, False) if corpus == "clique" and op != "decontaminate" else (None,)
@@ -132,17 +127,6 @@ def test_text_operators_row_identity(spark, monkeypatch, op, corpus):
         assert rows["driver"] == rows["spark"], (corpus, op, flag)
     if corpus in ("planted", "clique", "templates"):
         assert rows["driver"], (corpus, op)
-
-
-def test_minhash_string_ids_on_the_driver(spark, monkeypatch):
-    """String ids on the driver path pair exactly as their numbers do
-    on the Spark plan (the ids are zero-padded, so they sort alike)."""
-    monkeypatch.setattr(gate, "DRIVER_BYTES", 0)
-    want = sorted(map(tuple, dedup.minhash_lsh_pairs(_planted(spark), jaccard_threshold=0.4).collect()))
-    monkeypatch.setattr(gate, "DRIVER_BYTES", 1 << 40)
-    got = dedup.minhash_lsh_pairs(_planted(spark, string_ids=True), jaccard_threshold=0.4)
-    assert "LocalTableScan" in _plan(got)
-    assert sorted((int(a[1:]), int(b[1:]), j) for a, b, j in got.collect()) == want and want
 
 
 def test_minhash_caps_bind_in_a_300_copy_clique(spark, monkeypatch):
@@ -159,6 +143,27 @@ def test_minhash_caps_bind_in_a_300_copy_clique(spark, monkeypatch):
             assert ones == 256 * 255 // 2  # the group cap
         else:
             assert 0 < ones < 300 * 299 // 2  # the bucket caps
+
+
+def test_ngram_caps_bind_in_a_2100_copy_clique(spark, monkeypatch):
+    """2,100 copies of one one-gram text bind ngram's 2,048 caps: the
+    posting list without the collapse, the content group with it. Both
+    paths keep the 2,048 lowest ids; ~2.1M pairs, so rows compare by
+    count, largest id and an order-free hash sum taken in Spark."""
+    df = spark.range(2100).select(
+        F.col("id").alias("doc_id"), F.lit("one two three").alias("text")
+    ).localCheckpoint()
+    row_hash = F.pmod(F.xxhash64("id_a", "id_b", "jaccard"), F.lit(dedup._P))
+    for flag in (True, False):
+        monkeypatch.setattr(gate.Probe, "dup_heavy", property(lambda p, f=flag: f))
+        got = {}
+        for path, bound in (("driver", 1 << 40), ("spark", 0)):
+            monkeypatch.setattr(gate, "DRIVER_BYTES", bound)
+            out = dedup.ngram_jaccard_pairs(df, n=3, threshold=0.8)
+            assert ("Exchange" not in _plan(out)) == (path == "driver"), path
+            got[path] = tuple(out.agg(F.count(F.lit(1)), F.max("id_b"), F.sum(row_hash)).first())
+        assert got["driver"] == got["spark"], flag
+        assert got["driver"][:2] == (2048 * 2047 // 2, 2047), flag
 
 
 def _vectors(spark, kind):
