@@ -126,7 +126,7 @@ def xxh64_long_array(values: list[int], seed: int = 42) -> int:
 
 
 # ----------------------------------------------------------------------
-# text normalization / shingling (operators/dedup.py:_norm/_shingles)
+# text normalization / shingling (operators/dedup.py:_norm/_shingles_of_norm)
 # ----------------------------------------------------------------------
 
 # ASCII \s to match the JVM regex default (no Unicode whitespace)

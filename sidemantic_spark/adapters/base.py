@@ -5,6 +5,7 @@ from __future__ import annotations
 import re
 
 from sidemantic_spark.core.model import Metric
+from sidemantic_spark.sql.fragments import close_paren
 
 
 class AdapterError(Exception):
@@ -112,18 +113,7 @@ def split_simple_aggregate(expr: str) -> tuple[str, str] | None:
     # function name must close at the very end (a count-equality check
     # would wrongly accept close-then-open shapes like SUM(a) + SUM(b))
     s = expr.strip()
-    open_i = s.index("(")
-    depth = 0
-    close_i = -1
-    for i in range(open_i, len(s)):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                close_i = i
-                break
-    if close_i != len(s) - 1:
+    if close_paren(s, s.index("(")) != len(s) - 1:
         return None
     inner = m.group(3)
     agg = SQL_AGGS[m.group(1).upper()]

@@ -36,6 +36,7 @@ import warnings
 
 from sidemantic_spark.adapters.base import AGG_TYPES, BaseAdapter, inverse, split_simple_aggregate
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship, Segment
+from sidemantic_spark.sql.fragments import sub_code
 
 _BARE_COL_RE = re.compile(r"(?<![\w.'{])([A-Za-z_][A-Za-z0-9_]*)(?![\w.(}])(?!\s*\()")
 _SQL_WORDS = {
@@ -53,15 +54,9 @@ def _qualify_model_placeholder(expr: str) -> str:
     """Bare column refs -> ``{model}.col`` (Cortex filter expressions use
     bare names; our Segment contract resolves ``{model}`` to the model
     alias — ref ``adapters/snowflake.py:20-39``)."""
-    parts = []
-    for seg in re.split(r"('(?:[^']|'')*')", expr or ""):
-        if seg.startswith("'"):
-            parts.append(seg)
-            continue
-        parts.append(_BARE_COL_RE.sub(
-            lambda m: m.group(1) if m.group(1).lower() in _SQL_WORDS
-            else "{model}." + m.group(1), seg))
-    return "".join(parts)
+    return sub_code(expr or "", lambda seg: _BARE_COL_RE.sub(
+        lambda m: m.group(1) if m.group(1).lower() in _SQL_WORDS
+        else "{model}." + m.group(1), seg))
 
 
 class SnowflakeAdapter(BaseAdapter):

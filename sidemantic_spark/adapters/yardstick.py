@@ -14,6 +14,12 @@ import re
 
 from sidemantic_spark.adapters.base import BaseAdapter
 from sidemantic_spark.core.model import Dimension, Metric, Model
+from sidemantic_spark.sql.fragments import (
+    close_paren,
+    split_items,
+    split_top,
+    strip_comments,
+)
 
 _VIEW_HEAD_RE = re.compile(
     r"CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+(\w+)\s+AS\s+(?=WITH\b|SELECT\b)",
@@ -39,24 +45,9 @@ def _scan_view(text: str, start: int):
             m2 = re.match(r"\s*(\w+)\s+AS\s*\(", text[i:], re.I)
             if not m2:
                 break
-            j = i + m2.end() - 1  # at the CTE body's open paren
-            depth, in_str = 0, False
-            while j < len(text):
-                c = text[j]
-                if in_str:
-                    if c == "'":
-                        in_str = False
-                elif c == "'":
-                    in_str = True
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                    if depth == 0:
-                        j += 1
-                        break
-                j += 1
-            i = j
+            # past the paren closing the CTE body
+            j = close_paren(text, i + m2.end() - 1)
+            i = len(text) if j is None else j + 1
             cm = re.match(r"\s*,", text[i:])
             if not cm:
                 break
@@ -72,44 +63,16 @@ def _scan_view(text: str, start: int):
             return None
         start = start + sm.end()
     # statement body runs to the first top-level ';' (or EOF)
-    depth, in_str, i = 0, False, start
-    while i < len(text):
-        c = text[i]
-        if in_str:
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == ";" and depth == 0:
-            break
-        i += 1
-    body, end = text[start:i], i + 1
-    m = re.search(r"\bFROM\b", body, re.I)
-    # top-level FROM: re-scan for depth-0 occurrence
-    for fm in re.finditer(r"\bFROM\b", body, re.I):
-        pre = body[: fm.start()]
-        if pre.count("(") - pre.count(")") == 0:
-            m = fm
-            break
-    if m is None:
+    body = split_top(text[start:], ";", 1)[0]
+    end = start + len(body) + 1
+    parts = split_top(body, "FROM", 1)
+    if len(parts) < 2:
         return None
-    select_list = body[: m.start()].strip()
-    rest = body[m.end():].strip()
+    select_list = parts[0].strip()
+    rest = parts[1].strip()
     if rest.startswith("("):
-        depth, j = 0, 0
-        while j < len(rest):
-            if rest[j] == "(":
-                depth += 1
-            elif rest[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    j += 1
-                    break
-            j += 1
+        j = close_paren(rest)
+        j = len(rest) if j is None else j + 1
         # optional `AS alias(cols)` after the derived table
         am = re.match(r"\s*(?:AS\s+)?\w+\s*(\([^)]*\))?", rest[j:], re.I)
         k = j + (am.end() if am else 0)
@@ -124,16 +87,8 @@ def _scan_view(text: str, start: int):
             # `FROM generate_series(1, 5) AS t(x)`): DuckDB's inclusive
             # series maps to Spark's sequence() exploded in a derived
             # table, so the existing derived-table path takes over.
-            depth, j = 0, 0
-            while j < len(rest):
-                if rest[j] == "(":
-                    depth += 1
-                elif rest[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        j += 1
-                        break
-                j += 1
+            j = close_paren(rest)
+            j = len(rest) if j is None else j + 1
             args = rest[1:j - 1]
             tail2 = rest[j:].strip()
             col = "generate_series"
@@ -145,36 +100,14 @@ def _scan_view(text: str, start: int):
             rest = tail2
     where = None
     if re.match(r"WHERE\b", rest, re.I):
-        # trim every trailing clause (GROUP BY / ORDER BY / HAVING /
-        # QUALIFY / LIMIT / OFFSET) with a quote/paren-aware top-level
-        # scan: a lazy regex only trimmed GROUP BY, so `WHERE x ORDER
-        # BY y` stored `x ORDER BY y` as the row filter, and a
-        # 'GROUP BY' substring inside a string literal truncated it.
+        # trim every trailing clause at the top level: a lazy regex
+        # only trimmed GROUP BY, so `WHERE x ORDER BY y` stored
+        # `x ORDER BY y` as the row filter, and a 'GROUP BY' substring
+        # inside a string literal truncated it.
         tail = rest[len("WHERE"):]
-        clause_re = re.compile(
-            r"(?:GROUP\s+BY|ORDER\s+BY|HAVING|QUALIFY|LIMIT|OFFSET)\b",
-            re.I,
-        )
-        cut = len(tail)
-        depth, in_q, j = 0, False, 0
-        while j < len(tail):
-            c = tail[j]
-            if in_q:
-                if c == "'":
-                    in_q = False
-            elif c == "'":
-                in_q = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0 and (j == 0 or not (tail[j - 1].isalnum()
-                                                or tail[j - 1] == "_")):
-                if clause_re.match(tail, j):
-                    cut = j
-                    break
-            j += 1
-        where = tail[:cut].strip() or None
+        for kw in ("GROUP BY", "ORDER BY", "HAVING", "QUALIFY", "LIMIT", "OFFSET"):
+            tail = split_top(tail, kw, 1)[0]
+        where = tail.strip() or None
     return select_list, from_target, where, cte_prefix, end
 _MEASURE_RE = re.compile(r"^(.*?)\s+AS\s+MEASURE\s+(?:\"([^\"]+)\"|(\w+))\s*$", re.I | re.S)
 
@@ -199,24 +132,6 @@ def _spark_fn_spellings(expr: str) -> str:
 _ALIAS_RE = re.compile(r"^(.*?)\s+AS\s+(?:\"([^\"]+)\"|(\w+))\s*$", re.I | re.S)
 
 
-def _split_select(items: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in items:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        out.append(tail)
-    return out
-
-
 class YardstickAdapter(BaseAdapter):
     def parse_file(self, layer, path: str) -> None:
         import os
@@ -233,7 +148,7 @@ class YardstickAdapter(BaseAdapter):
         raise NotImplementedError("Yardstick models are SQL text, use parse_file/parse_text")
 
     def parse_text(self, layer, text: str) -> None:
-        text = re.sub(r"--[^\n]*", "", text)
+        text = strip_comments(text)
         for m in _VIEW_HEAD_RE.finditer(text):
             scanned = _scan_view(text, m.end())
             if scanned is None:
@@ -243,7 +158,7 @@ class YardstickAdapter(BaseAdapter):
             dims: list[Dimension] = []
             mets: list[Metric] = []
             measure_names: set[str] = set()
-            items = _split_select(select_list)
+            items = split_items(select_list)
             for item in items:
                 mm = _MEASURE_RE.match(item)
                 if mm:

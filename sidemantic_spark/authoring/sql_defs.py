@@ -14,6 +14,7 @@ from __future__ import annotations
 import re
 
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship, Segment
+from sidemantic_spark.sql.fragments import close_paren, split_items, split_top, strip_comments
 
 _STMT_RE = re.compile(
     r"(MODEL|DIMENSION|METRIC|SEGMENT|RELATIONSHIP|PRE_AGGREGATION|"
@@ -37,7 +38,7 @@ def load_sql_definitions(layer, text: str, *, source: str = "<sql>") -> None:
     # split frontmatter before comment-stripping: the `---` fences would
     # otherwise be eaten as `--` line comments
     front, rest = _split_frontmatter(text)
-    text = _strip_comments(text if front is None else rest)
+    text = strip_comments(text if front is None else rest)
     model: Model | None = None
     if front is not None:
         before = set(layer.graph.models)
@@ -199,9 +200,9 @@ def _list_value(v):
     if not (v.startswith("[") and v.endswith("]")):
         return [_unquote(v)]
     return [
-        _unquote(item.strip())
-        for item in _split_top_commas(v[1:-1])
-        if item.strip()
+        _unquote(item)
+        for item in split_items(v[1:-1])
+        if item
     ]
 
 
@@ -259,26 +260,6 @@ def _metric_from_fields(fields: dict) -> Metric:
 # low-level parsing
 # ---------------------------------------------------------------------
 
-def _strip_comments(text: str) -> str:
-    # quote-aware: a '--' inside a string literal is data, not a comment
-    out = []
-    i, n = 0, len(text)
-    in_quote = False
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            in_quote = not in_quote
-            out.append(ch)
-            i += 1
-        elif not in_quote and ch == "-" and text[i:i + 2] == "--":
-            while i < n and text[i] != "\n":
-                i += 1
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
-
-
 def _split_frontmatter(text: str) -> tuple[str | None, str]:
     m = re.match(r"\s*---\s*\n(.*?)\n---\s*\n?(.*)$", text, re.DOTALL)
     if m:
@@ -289,20 +270,10 @@ def _split_frontmatter(text: str) -> tuple[str | None, str]:
 def _read_balanced(text: str, open_paren: int) -> tuple[str, int]:
     """Return the contents of the paren group opening at
     ``text[open_paren]`` and the index just past its close."""
-    depth = 0
-    in_quote = False
-    for i in range(open_paren, len(text)):
-        ch = text[i]
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return text[open_paren + 1:i], i + 1
-    raise ValueError("unbalanced parens in semantic-SQL definition")
+    end = close_paren(text, open_paren)
+    if end is None:
+        raise ValueError("unbalanced parens in semantic-SQL definition")
+    return text[open_paren + 1:end], end + 1
 
 
 # long-form property spellings (ref core/dialect.py:24 PROPERTY_ALIASES)
@@ -317,8 +288,7 @@ def _parse_fields(body: str) -> dict[str, str]:
     """``name total_revenue, agg sum, sql amount`` -> dict. Values run to
     the next top-level comma and may contain quotes/parens/placeholders."""
     fields: dict[str, str] = {}
-    for item in _split_top_commas(body):
-        item = item.strip()
+    for item in split_items(body):
         if not item:
             continue
         m = re.match(r"^([A-Za-z_][A-Za-z0-9_]*)\s+(.+)$", item, re.DOTALL)
@@ -338,25 +308,6 @@ def _parse_fields(body: str) -> dict[str, str]:
     return fields
 
 
-def _split_top_commas(text: str) -> list[str]:
-    parts, depth, in_quote, buf = [], 0, False, []
-    for ch in text:
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch in "([{":
-                depth += 1
-            elif ch in ")]}":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append("".join(buf))
-                buf = []
-                continue
-        buf.append(ch)
-    parts.append("".join(buf))
-    return parts
-
-
 # ---------------------------------------------------------------------
 # compact form (ref compact_sql_model fixture)
 # ---------------------------------------------------------------------
@@ -372,7 +323,8 @@ def _parse_compact(text: str) -> list[Model]:
         body, pos = _read_balanced(text, m.end() - 1)
         model = Model(name=name, table=table)
         pending_derived: list[tuple[str, str]] = []
-        for line in _split_compact_items(body):
+        # parens keep a multi-line agg call together
+        for line in split_top(body, "\n"):
             line = line.strip()
             if not line:
                 continue
@@ -478,21 +430,3 @@ def _parse_compact(text: str) -> list[Model]:
                                                type="numeric"))
         models.append(model)
     return models
-
-
-def _split_compact_items(body: str) -> list[str]:
-    """Compact bodies separate items by newline; parens keep lines
-    together (an agg call may span lines)."""
-    items, depth, buf = [], 0, []
-    for ch in body:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "\n" and depth == 0:
-            items.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    items.append("".join(buf))
-    return items

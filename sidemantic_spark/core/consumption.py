@@ -22,6 +22,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from sidemantic_spark.sql.fragments import LITERALS, segments, subquery_spans
+
 
 class ContractError(Exception):
     pass
@@ -62,39 +64,6 @@ _DOTTED_RE = re.compile(
 )
 
 
-def _split_quoted(text: str) -> list[str]:
-    return re.split(r"('(?:[^']|'')*')", text)
-
-
-def _subquery_spans(text: str) -> list[tuple[int, int]]:
-    """Character spans of ``( SELECT ... )`` subqueries (quote-aware)."""
-    spans: list[tuple[int, int]] = []
-    in_q = False
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q and ch == "(" and re.match(r"\(\s*SELECT\b", text[i:], re.I):
-            depth = 0
-            q = False
-            for j in range(i, len(text)):
-                cj = text[j]
-                if cj == "'":
-                    q = not q
-                elif not q:
-                    if cj == "(":
-                        depth += 1
-                    elif cj == ")":
-                        depth -= 1
-                        if depth == 0:
-                            spans.append((i, j + 1))
-                            i = j
-                            break
-        i += 1
-    return spans
-
-
 def qualify_expression_fields(
     expressions: list[str],
     base_model: str,
@@ -109,15 +78,15 @@ def qualify_expression_fields(
         if known_fields is None:
             out.append(_qualify(expr, base_model))
             continue
-        spans = _subquery_spans(expr)
+        spans = subquery_spans(expr)
 
         def in_subquery(pos: int) -> bool:
             return any(s <= pos < e for s, e in spans)
 
         pieces: list[str] = []
         offset = 0
-        for seg in _split_quoted(expr):
-            if seg.startswith("'"):
+        for seg, literal in segments(expr, LITERALS):
+            if literal:
                 pieces.append(seg)
                 offset += len(seg)
                 continue
@@ -151,14 +120,14 @@ def expression_field_references(
     refs: set[str] = set()
     models = {base_model} | (graph_models or set())
     for expr in expressions:
-        spans = _subquery_spans(expr)
+        spans = subquery_spans(expr)
 
         def in_subquery(pos: int) -> bool:
             return any(s <= pos < e for s, e in spans)
 
         offset = 0
-        for seg in _split_quoted(expr):
-            if seg.startswith("'"):
+        for seg, literal in segments(expr, LITERALS):
+            if literal:
                 offset += len(seg)
                 continue
             for m in _DOTTED_RE.finditer(seg):
@@ -233,11 +202,11 @@ class Explore:
                 # field ref, while a COLUMN named `day`/`year` outside
                 # interval position still lints against the allowlist
                 f = _INTERVAL_RE.sub(" NULL ", f)
-                spans = _subquery_spans(f)
+                spans = subquery_spans(f)
                 fields: set[str] = set()
                 offset = 0
-                for seg in _split_quoted(f):
-                    if seg.startswith("'"):
+                for seg, literal in segments(f, LITERALS):
+                    if literal:
                         offset += len(seg)
                         continue
                     for m in _DOTTED_RE.finditer(seg):
@@ -345,7 +314,7 @@ class Explore:
             # over non-semantic tables (allowed-values lookups) pass.
             if graph_models:
                 for f in user_filters:
-                    for s, e in _subquery_spans(f):
+                    for s, e in subquery_spans(f):
                         body = f[s:e]
                         hit = next(
                             (m for m in graph_models if re.search(

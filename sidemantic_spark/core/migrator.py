@@ -26,6 +26,13 @@ from dataclasses import dataclass, field
 
 from sidemantic_spark.core.graph import SemanticGraphError
 from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
+from sidemantic_spark.sql.fragments import (
+    LITERALS,
+    close_paren,
+    segments,
+    split_items,
+    strip_comments,
+)
 
 _AGG_RE = re.compile(
     r"\b(SUM|COUNT|AVG|MIN|MAX|MEDIAN|STDDEV|VARIANCE)\s*\(\s*"
@@ -87,8 +94,8 @@ def _first_column(expr: str) -> str | None:
     """The first plain column reference inside an expression — the
     dimension a GROUP BY item like COALESCE(region, 'x') or
     UPPER(status) is really about."""
-    for seg in re.split(r"('(?:[^']|'')*')", expr):
-        if seg.startswith("'"):
+    for seg, literal in segments(expr, LITERALS):
+        if literal:
             continue
         for m in re.finditer(r"[A-Za-z_][\w.]*", seg):
             tok = m.group(0)
@@ -103,15 +110,8 @@ def _first_column(expr: str) -> str | None:
 
 def _balanced_end(text: str, open_i: int) -> int:
     """Index just past the ')' matching the '(' at ``open_i``."""
-    depth = 0
-    for i in range(open_i, len(text)):
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-    return len(text)
+    end = close_paren(text, open_i)
+    return len(text) if end is None else end + 1
 
 
 _AGG_START_RE = re.compile(
@@ -186,7 +186,7 @@ class Migrator:
 
     def analyze(self, sql: str) -> QueryAnalysis:
         qa = QueryAnalysis(sql=sql.strip())
-        text = _normalize_extract(_strip_comments(sql))
+        text = _normalize_extract(strip_comments(sql))
         if re.search(r"\b(UNION|INTERSECT|EXCEPT|WITH)\b", text, re.I):
             qa.reasons.append("set operations / CTEs: migrate branches separately")
             return qa
@@ -263,11 +263,10 @@ class Migrator:
                 qa.missing_metrics.append((mname, agg, bare))
 
         sel_dims: list[str] = []
-        select_items = [s.strip() for s in _split_commas(select_body)]
+        select_items = split_items(select_body)
         gm = _GROUP_RE.search(text)
         if gm:
-            for ref in _split_commas(gm.group(1)):
-                ref = ref.strip()
+            for ref in split_items(gm.group(1)):
                 if re.fullmatch(r"\d+", ref):
                     # ordinal: resolve to the Nth select item's expression
                     idx = int(ref) - 1
@@ -470,7 +469,7 @@ class Migrator:
         for sql in sqls:
             if not sql.strip():
                 continue
-            for branch in _UNION_RE.split(_strip_comments(sql)):
+            for branch in _UNION_RE.split(strip_comments(sql)):
                 self._generate_branch(_normalize_extract(branch), proposed)
         return proposed
 
@@ -550,7 +549,7 @@ class Migrator:
                 ))
             return name
 
-        for item in [s.strip() for s in _split_commas(body)]:
+        for item in split_items(body):
             item_calls = _agg_calls(item)
             if not item_calls:
                 continue
@@ -657,7 +656,7 @@ class Migrator:
                     ))
 
         # -- dimensions --------------------------------------------------
-        select_items = [s.strip() for s in _split_commas(body)]
+        select_items = split_items(body)
 
         def add_dim(expr: str) -> None:
             expr = re.sub(r"\s+AS\s+\w+\s*$", "", expr.strip(), flags=re.I)
@@ -693,8 +692,7 @@ class Migrator:
 
         gm = _GROUP_RE.search(text)
         if gm:
-            for ref in _split_commas(gm.group(1)):
-                ref = ref.strip()
+            for ref in split_items(gm.group(1)):
                 if re.fullmatch(r"\d+", ref):
                     idx = int(ref) - 1
                     if 0 <= idx < len(select_items):
@@ -751,29 +749,6 @@ class Migrator:
         for model in self.generate(sqls).values():
             graph.add_model(model)
         return export_yaml(graph)
-
-
-def _strip_comments(sql: str) -> str:
-    sql = re.sub(r"--[^\n]*", "", sql)
-    return re.sub(r"/\*.*?\*/", "", sql, flags=re.S)
-
-
-def _split_commas(s: str) -> list[str]:
-    """Top-level comma split (parens-aware)."""
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out
 
 
 def _model_has_column(model: Model, col: str) -> bool:

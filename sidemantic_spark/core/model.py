@@ -12,6 +12,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from sidemantic_spark.sql.fragments import close_paren
+
 
 SIMPLE_AGGS = {
     "sum",
@@ -298,18 +300,8 @@ class Metric:
 def _is_single_call(sql: str) -> bool:
     """True when the whole expression is one function call (not e.g.
     ``SUM(a)/SUM(b)``), so agg auto-extraction is safe."""
-    depth = 0
-    seen_close = False
-    for ch in sql.strip():
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                seen_close = True
-        elif seen_close and not ch.isspace():
-            return False
-    return seen_close
+    sql = sql.strip()
+    return "(" in sql and close_paren(sql, sql.index("(")) == len(sql) - 1
 
 
 @dataclass

@@ -293,9 +293,9 @@ def enforce_field_visibility(
             # not a reference). Grain suffixes strip before matching:
             # `created_at__month` must not sneak past a hidden
             # `created_at` (round-10 review finding)
-            from sidemantic_spark.sql.fragments import _split_quoted
+            from sidemantic_spark.sql.fragments import segments
 
-            for seg, opaque in _split_quoted(text):
+            for seg, opaque in segments(text):
                 if opaque:
                     continue
                 for tok in set(

@@ -47,19 +47,15 @@ def _norm(text: Column) -> Column:
     return F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
 
 
-def _shingles(text: Column, k: int = 5) -> Column:
-    """Character k-shingles of the normalized text.
-
-    NOTE: prefer :func:`_shingles_of_norm` over a *pre-materialized*
-    normalized column. Spark evaluates higher-order-function lambdas
-    interpreted, with no common-subexpression hoisting: referencing the
-    regexp_replace subtree inside the per-position lambda re-runs the
-    regex once per shingle position (measured ~10x the whole stage).
-    """
-    return _shingles_of_norm(_norm(text), k)
-
-
 def _shingles_of_norm(norm: Column, k: int = 5) -> Column:
+    """Character k-shingles of a normalized text column.
+
+    NOTE: pass a *pre-materialized* normalized column. Spark evaluates
+    higher-order-function lambdas interpreted, with no
+    common-subexpression hoisting: referencing the regexp_replace
+    subtree inside the per-position lambda re-runs the regex once per
+    shingle position (measured ~10x the whole stage).
+    """
     n = F.length(norm)
     return F.when(n < k, F.array(norm)).otherwise(
         F.array_distinct(
@@ -71,28 +67,14 @@ def _shingles_of_norm(norm: Column, k: int = 5) -> Column:
     )
 
 
-def _shingle_hashes(text: Column, k: int = 5) -> Column:
-    """Distinct non-negative 61-bit hashes of the char k-shingles."""
-    return _shingle_hashes_of_norm(_norm(text), k)
-
-
 def _shingle_hashes_of_norm(norm: Column, k: int = 5) -> Column:
+    """Distinct non-negative 61-bit hashes of the char k-shingles."""
     return F.array_distinct(
         F.transform(
             _shingles_of_norm(norm, k),
             lambda s: F.pmod(F.xxhash64(s), F.lit(_P)),
         )
     )
-
-
-def minhash_signature(text: Column, num_hashes: int = 64, k: int = 5) -> Column:
-    """MinHash signature as array<bigint> of length ``num_hashes``.
-
-    sig_i = min over shingles of (a_i * h + b_i mod p); the (a_i, b_i)
-    are fixed pseudo-random constants so signatures are deterministic
-    across runs and executors.
-    """
-    return minhash_signature_from_hashes(_shingle_hashes(text, k), num_hashes)
 
 
 def _perm_constants(num_hashes: int) -> list[tuple[int, int]]:
@@ -1092,7 +1074,7 @@ def minhash_lsh_pairs(
                 df.sparkSession, table, features, jaccard_threshold, 256, group_cap
             )
     df = gate.spread(df, size.rows)
-    # normalize in its own projection (see _shingles note)
+    # normalize in its own projection (see _shingles_of_norm note)
     normed = _normed(df, id_col, text_col)
     keep, members_col = ["__id"], None
     if group_cap is not None:
@@ -1346,47 +1328,13 @@ def _cc_loop(edges, labels_init, max_iter: int) -> tuple:
     return changed, labels
 
 
-def simhash(text: Column, bits: int = 64) -> Column:
-    """64-bit SimHash over whitespace tokens (bigint; may be negative
-    since the top bit lands in the sign)."""
-    tokens = F.split(F.regexp_replace(F.trim(F.lower(text)), r"\s+", " "), " ")
-    token_hashes = F.transform(F.array_distinct(tokens), lambda t: F.xxhash64(t))
-    # per-bit vote: +1 when bit set, -1 otherwise, summed over tokens
-    # (bit positions unrolled in Python: shift amounts must be literals)
-    votes = F.aggregate(
-        token_hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1)
-                    .otherwise(-1)
-                    .cast("long")
-                    for i in range(bits)
-                ]
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    # assemble signature: set bit i where vote_i > 0 (top bit is the
-    # long sign bit, hence the negative literal for i = bits-1)
-    sig = F.lit(0).cast("long")
-    for i in range(bits):
-        bit_val = -(1 << 63) if i == 63 else (1 << i)
-        sig = sig + F.when(F.element_at(votes, i + 1) > 0, F.lit(bit_val).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sig
-
-
 def _simhash_sig_udf():
     """Arrow-vectorized SimHash: array<long> token hashes -> bigint
-    signature. Same bit-vote arithmetic as :func:`simhash` (parity
-    tested); the pure-Column form unrolls 64 WHENs per token into an
-    expression tree big enough to OOM a 1 GiB driver during planning
-    when it appears in two plan branches — the UDF keeps the plan a
-    single opaque node."""
+    signature, bit i set where the tokens' votes on bit i sum above
+    zero (``scripts/ref_kernels.py`` holds the pure-Python oracle). A
+    pure-Column form unrolls 64 WHENs per token into an expression tree
+    big enough to OOM a 1 GiB driver during planning when it appears in
+    two plan branches; the UDF keeps the plan a single opaque node."""
     from pyspark.sql.functions import pandas_udf
 
     shifts = np.arange(64, dtype=np.uint64)

@@ -381,9 +381,10 @@ def decontaminate(
         row_bytes=row_bytes,
         limit=min(gate.DRIVER_BYTES, gate.BUDGET_BYTES) // row_bytes,
     )
+    # eval rows carry a NULL id of the train id's type on both paths:
+    # eval_df needs only text_col
+    eval_rows = eval_df.select(F.lit(None).cast(train.schema[id_col].dataType).alias(id_col), text_col)
     if size.tiny:
-        # eval rows carry a NULL id of the train id's type
-        eval_rows = eval_df.select(F.lit(None).cast(train.schema[id_col].dataType).alias(id_col), text_col)
         both = _normed(train, id_col, text_col).withColumn("__train", F.lit(True)).unionByName(
             _normed(eval_rows, id_col, text_col).withColumn("__train", F.lit(False))
         )
@@ -392,7 +393,7 @@ def decontaminate(
             return _decontaminate_driver(train.sparkSession, table, id_col, n)
     train_grams = _word_gram_hashes(train, text_col, id_col, n)
     eval_grams = (
-        _word_gram_hashes(eval_df, text_col, id_col, n)
+        _word_gram_hashes(eval_rows, text_col, id_col, n)
         .select("__gram")
         .distinct()
     )

@@ -205,7 +205,7 @@ def _local_metric_filter(f: str, model: Model) -> str:
     materialization runs: ``model.field`` refs become the dimension's
     expression (or the bare column); a ref to ANY other model is
     rejected — the rollup scans one table and cannot evaluate it."""
-    from sidemantic_spark.sql.fragments import replace_refs
+    from sidemantic_spark.sql.fragments import LITERALS, replace_refs, segments
 
     def sub(_m: str, fld: str, g: str | None) -> str:
         dim = model.dimension(fld)
@@ -213,8 +213,8 @@ def _local_metric_filter(f: str, model: Model) -> str:
         return f"DATE_TRUNC('{g}', {expr})" if g else expr
 
     out = replace_refs(f, {model.name}, sub)
-    for seg in re.split(r"('(?:[^']|'')*')", out):
-        if seg.startswith("'"):
+    for seg, literal in segments(out, LITERALS):
+        if literal:
             continue
         leftover = _DOTTED_REF_RE.search(seg)
         if leftover:

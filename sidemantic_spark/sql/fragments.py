@@ -1,17 +1,37 @@
-"""SQL-fragment string utilities.
+"""SQL text utilities: one tokenizer and the helpers built on it.
 
-The reference delegates fragment parsing to sqlglot
-(``sql/fragment.py:1-16``); sqlglot is not available here, so we
-implement the small surface the compiler needs: find/replace
-``model.field[__grain]`` references outside string literals, and split
-top-level AND conjuncts (reference
-``sql/generator.py:1640-1750`` filter classification needs both).
+The reference parses SQL with sqlglot (``sql/fragment.py:1-16``);
+sqlglot is not available here, so every module that reads SQL text goes
+through ``tokens``, one scan that knows the SQL token kinds:
+single-quoted string literals with ``''`` escapes, double-quoted and
+backtick-quoted identifiers with doubled-quote escapes, ``--`` line
+comments, ``/* */`` block comments, and bracket depth. On top of it:
+
+- ``split_top`` / ``split_items``: split at a top-level keyword or
+  comma;
+- ``close_paren``: the bracket that closes the one at a position;
+- ``split_alias``: split a select item's ``AS alias`` off;
+- ``strip_comments``: the text without its comments;
+- ``subquery_spans``: where the ``( SELECT ... )`` subqueries are;
+- ``segments`` / ``sub_code``: the runs of text outside literals,
+  for regexes that must not read inside them. A rewrite leaves quoted
+  identifiers as written (``OPAQUE``); a fail-closed check still reads
+  inside them (``LITERALS``);
+- ``find_refs`` / ``replace_refs`` / ``split_conjuncts``: the compiler's
+  ``model.field[__grain]`` references and top-level AND conjuncts
+  (reference ``sql/generator.py:1640-1750`` filter classification
+  needs both).
+
+Formats that quote differently (DAX ``'T'[col]``, Malloy, Tableau and
+LookML fields) keep their own scanners in their adapters.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 _GRAINS = "second|minute|hour|day|week|month|quarter|year"
 # the one canonical grain-word set — security scans and REF_RE both
@@ -21,65 +41,155 @@ REF_RE = re.compile(
     rf"\b([A-Za-z_][A-Za-z0-9_]*)\.([A-Za-z_][A-Za-z0-9_]*?)(?:__({_GRAINS}))?\b"
 )
 
+# an unterminated literal, identifier or block comment runs to the end
+_TOKEN_RE = re.compile(
+    r"'(?:[^']|'')*'?"
+    r'|"(?:[^"]|"")*"?'
+    r"|`(?:[^`]|``)*`?"
+    r"|--[^\n]*"
+    r"|/\*.*?(?:\*/|\Z)"
+    r"|[()\[\]{},]"
+    r"|[^'\"`()\[\]{},/-]+"
+    r"|[/-]",
+    re.S,
+)
+_KINDS = {"'": "string", '"': "ident", "`": "ident", "--": "comment",
+          "/*": "comment"}
+_OPEN, _CLOSE = "([{", ")]}"
+# what a text rewrite leaves verbatim: literals, comments and quoted
+# identifiers (Spark reads "x" as a string; `x` names exactly x) ...
+OPAQUE = frozenset({"string", "ident", "comment"})
+# ... and what a fail-closed check skips: it still reads quoted names
+LITERALS = frozenset({"string", "comment"})
+_QUOTED_NAME_RE = re.compile(r'"(?:[^"]|"")+"|`(?:[^`]|``)+`')
 
-def _split_quoted(sql: str) -> list[tuple[str, bool]]:
-    """Split into (segment, is_opaque) parts. Opaque = text a
-    classifier/rewriter must never read refs from: single-quoted string
-    literals (with '' escapes), double-quoted and backtick-quoted
-    identifiers (a quoted identifier literally named "model.metric" is
-    a COLUMN, not a metric reference), ``--`` line comments, and
-    ``/* */`` block comments (reference filter classification via
-    sqlglot never sees those tokens either —
-    tests/metrics/test_filters.py:359-410)."""
+
+def tokens(sql: str) -> Iterator[tuple[str, str, int]]:
+    """Yield ``(text, kind, depth)`` for consecutive tokens covering
+    ``sql``. ``kind`` is ``"string"``, ``"ident"`` (quoted identifier),
+    ``"comment"`` or ``"code"``; every bracket and comma is a code token
+    of its own. ``depth`` counts the brackets around the token, so an
+    opening bracket and its closer carry the same depth."""
+    depth = 0
+    for m in _TOKEN_RE.finditer(sql):
+        text = m.group()
+        if text in _CLOSE:
+            depth -= 1
+        yield text, _KINDS.get(text[:2]) or _KINDS.get(text[0], "code"), depth
+        if text in _OPEN:
+            depth += 1
+
+
+def segments(sql: str, opaque: frozenset = OPAQUE) -> list[tuple[str, bool]]:
+    """``sql`` as ``(text, is_opaque)`` runs: each token of an ``opaque``
+    kind on its own, everything between them merged into one run."""
     parts: list[tuple[str, bool]] = []
     buf: list[str] = []
-    i, n = 0, len(sql)
-
-    def flush() -> None:
+    for text, kind, _depth in tokens(sql):
+        if kind not in opaque:
+            buf.append(text)
+            continue
         if buf:
             parts.append(("".join(buf), False))
             buf.clear()
-
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            flush()
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            parts.append((sql[i:min(j + 1, n)], True))
-            i = j + 1
-            continue
-        if ch in ('"', "`"):
-            flush()
-            j = sql.find(ch, i + 1)
-            j = n - 1 if j == -1 else j
-            parts.append((sql[i:j + 1], True))
-            i = j + 1
-            continue
-        if ch == "-" and i + 1 < n and sql[i + 1] == "-":
-            flush()
-            j = sql.find("\n", i)
-            j = n if j == -1 else j
-            parts.append((sql[i:j], True))
-            i = j
-            continue
-        if ch == "/" and i + 1 < n and sql[i + 1] == "*":
-            flush()
-            j = sql.find("*/", i + 2)
-            j = n if j == -1 else j + 2
-            parts.append((sql[i:j], True))
-            i = j
-            continue
-        buf.append(ch)
-        i += 1
-    flush()
+        parts.append((text, True))
+    if buf:
+        parts.append(("".join(buf), False))
     return parts
+
+
+def sub_code(
+    sql: str, fn: Callable[[str], str], opaque: frozenset = OPAQUE
+) -> str:
+    """Apply ``fn`` to every run of ``sql`` outside the ``opaque`` token
+    kinds, leaving those verbatim."""
+    return "".join(t if o else fn(t) for t, o in segments(sql, opaque))
+
+
+@functools.lru_cache(maxsize=64)
+def _sep_re(sep: str) -> re.Pattern:
+    if not sep[0].isalpha():
+        return re.compile(re.escape(sep))
+    words = r"\s+".join(map(re.escape, sep.split()))
+    return re.compile(rf"(?<!\w){words}(?!\w)", re.I)
+
+
+@functools.lru_cache(maxsize=256)
+def _top_code(sql: str) -> str:
+    """``sql`` with all but its top-level code blanked to NULs (a
+    clause split asks the same text for each clause keyword)."""
+    return "".join(
+        text if kind == "code" and depth == 0 else "\0" * len(text)
+        for text, kind, depth in tokens(sql)
+    )
+
+
+def _top_spans(sql: str, sep: str, maxsplit: int = -1) -> list[tuple[int, int]]:
+    found = _sep_re(sep).finditer(_top_code(sql))
+    if maxsplit >= 0:
+        found = itertools.islice(found, maxsplit)
+    return [m.span() for m in found]
+
+
+def split_top(sql: str, sep: str, maxsplit: int = -1) -> list[str]:
+    """Split ``sql`` at ``sep`` outside literals, identifiers, comments
+    and brackets, like ``str.split``. A word ``sep`` (``FROM``,
+    ``GROUP BY``) matches case-insensitively on word boundaries, with
+    any whitespace between its words; any other ``sep`` matches as
+    written."""
+    parts, last = [], 0
+    for s, e in _top_spans(sql, sep, maxsplit):
+        parts.append(sql[last:s])
+        last = e
+    parts.append(sql[last:])
+    return parts
+
+
+def split_items(text: str) -> list[str]:
+    """A select or order list's items: split at top-level commas,
+    stripped; an empty last item is dropped."""
+    items = [p.strip() for p in split_top(text, ",")]
+    return items[:-1] if items and not items[-1] else items
+
+
+def close_paren(sql: str, start: int = 0) -> int | None:
+    """Index of the bracket closing the one at ``sql[start]``, or None
+    when it is never closed."""
+    pos = start
+    for text, kind, depth in tokens(sql[start:]):
+        if kind == "code" and depth == 0 and text in _CLOSE:
+            return pos
+        pos += len(text)
+    return None
+
+
+def strip_comments(sql: str) -> str:
+    """``sql`` without its comments; a block comment leaves a space."""
+    return "".join(
+        (" " if text[:2] == "/*" else "") if kind == "comment" else text
+        for text, kind, _depth in tokens(sql)
+    )
+
+
+def split_alias(item: str) -> tuple[str, str | None]:
+    """``expr AS alias`` -> ``(expr, alias)``; ``(item, None)`` without
+    one. A quoted alias (``"rev, total"``, or in backticks) comes back
+    as the backtick-quoted name Spark reads, embedded backticks
+    doubled."""
+    item = item.strip()
+    last = list(tokens(item))[-1][0] if item.endswith(('"', "`")) else ""
+    if _QUOTED_NAME_RE.fullmatch(last):
+        q = last[0]
+        alias = "`" + last[1:-1].replace(q * 2, q).replace("`", "``") + "`"
+    else:
+        m = re.search(r"(?<!\w)[A-Za-z_][A-Za-z0-9_]*$", item)
+        if m is None:
+            return item, None
+        last = alias = m.group()
+    m = re.match(r"(.*?)\s+AS\s+$", item[: len(item) - len(last)], re.I | re.S)
+    if m is None:
+        return item, None
+    return m.group(1).strip(), alias
 
 
 _ALIAS_RE = re.compile(r"\bAS\s+[\"`]?([A-Za-z_][A-Za-z0-9_]*)[\"`]?", re.I)
@@ -89,12 +199,23 @@ def _scan_text(sql: str) -> str:
     """Same-length copy with literals/comments blanked and quote chars
     of quoted identifiers spaced (``AS "ORDERS"`` scans as an alias)."""
     scan: list[str] = []
-    for seg, opaque in _split_quoted(sql):
+    for seg, opaque in segments(sql):
         if not opaque or seg[:1] in ('"', "`"):
             scan.append(seg.replace('"', " ").replace("`", " "))
         else:
             scan.append(" " * len(seg))
     return "".join(scan)
+
+
+def subquery_spans(sql: str) -> list[tuple[int, int]]:
+    """``(start, end)`` of every ``( SELECT ... )`` subquery outside
+    literals and comments, nested ones included; an unclosed one runs
+    to the end of ``sql``."""
+    spans = []
+    for m in re.finditer(r"\(\s*SELECT\b", _scan_text(sql), re.I):
+        end = close_paren(sql, m.start())
+        spans.append((m.start(), len(sql) if end is None else end + 1))
+    return spans
 
 
 def _shadow_spans(
@@ -112,20 +233,7 @@ def _shadow_spans(
     enforcement; round-10 review finding)."""
     scan = _scan_text(sql)
     known_lower = {m.lower(): m for m in known_models}
-    bounds: list[tuple[int, int]] = []
-    for m in re.finditer(r"\(\s*SELECT\b", scan, re.I):
-        start = m.start()
-        depth = 0
-        end = None
-        for j in range(start, len(scan)):
-            if scan[j] == "(":
-                depth += 1
-            elif scan[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    end = j + 1
-                    break
-        bounds.append((start, end if end is not None else len(scan)))
+    bounds = subquery_spans(sql)
     # attribute each alias to the INNERMOST span containing it: an alias
     # declared in a nested subquery must not shadow the enclosing
     # subquery's correlated refs (round-10 review #2). An alias OUTSIDE
@@ -183,7 +291,7 @@ def find_refs(
     spans = _shadow_spans(sql, known_models) if shadowing else []
     out: list[tuple[str, str, str | None]] = []
     offset = 0
-    for seg, quoted in _split_quoted(sql):
+    for seg, quoted in segments(sql):
         if quoted:
             offset += len(seg)
             continue
@@ -209,7 +317,7 @@ def replace_refs(
     spans = _shadow_spans(sql, known_models)
     parts = []
     offset = 0
-    for seg, quoted in _split_quoted(sql):
+    for seg, quoted in segments(sql):
         if quoted:
             parts.append(seg)
             offset += len(seg)
@@ -229,99 +337,32 @@ def replace_refs(
 
 
 def split_conjuncts(sql: str) -> list[str]:
-    """Split on top-level AND (outside parens and string literals),
+    """Split on top-level AND (outside brackets and literals),
     preserving OR groupings (reference AND-flattening with OR-paren
     preservation, ``sql/generator.py:1640-1750``).
 
     An UNPARENTHESIZED top-level OR makes the whole expression one
     unit: "a OR b AND c" means a OR (b AND c) in SQL, and splitting on
     the AND would re-associate it as (a OR b) AND c."""
-    if _toplevel_or(sql):
+    if _top_spans(sql, "OR", 1):
         stripped = sql.strip()
         return [stripped] if stripped else []
     parts: list[str] = []
-    depth = 0
-    in_quote = False
-    token = []
-    i = 0
-    upper = sql.upper()
     # a top-level BETWEEN's connector AND is part of the predicate, not
     # a conjunction boundary ("x BETWEEN a AND b AND y = 1" splits only
     # at the SECOND AND) — r11 planner-parity port exposed the naive
     # split emitting "(x BETWEEN a)" into a CTE WHERE
     between_pending = 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":
-            if in_quote and i + 1 < len(sql) and sql[i + 1] == "'":
-                # SQL '' escape: consume both so state stays in-quote
-                token.append("''")
-                i += 2
-                continue
-            in_quote = not in_quote
-        if not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and upper.startswith("BETWEEN", i)
-                and (i == 0 or not sql[i - 1].isalnum() and sql[i - 1] != "_")
-                and (
-                    i + 7 >= len(sql)
-                    or not sql[i + 7].isalnum() and sql[i + 7] != "_"
-                )
-            ):
-                between_pending += 1
-            elif (
-                depth == 0
-                and upper.startswith("AND", i)
-                and (i == 0 or not sql[i - 1].isalnum() and sql[i - 1] != "_")
-                and (i + 3 >= len(sql) or not sql[i + 3].isalnum() and sql[i + 3] != "_")
-            ):
-                if between_pending:
-                    between_pending -= 1
-                else:
-                    parts.append("".join(token).strip())
-                    token = []
-                    i += 3
-                    continue
-        token.append(ch)
-        i += 1
-    last = "".join(token).strip()
-    if last:
-        parts.append(last)
-    return [p for p in parts if p]
-
-
-def _toplevel_or(sql: str) -> bool:
-    """True when an OR exists at paren/quote depth 0."""
-    depth = 0
-    in_quote = False
-    upper = sql.upper()
-    for i, ch in enumerate(sql):
-        if ch == "'":
-            # toggling on EVERY quote keeps state exact across the SQL
-            # '' escape (close+reopen with nothing between)
-            in_quote = not in_quote
-        if in_quote:
+    start = last = 0
+    for s, e in _top_spans(sql, "AND") + [(len(sql), len(sql))]:
+        between_pending += len(_top_spans(sql[last:s], "BETWEEN"))
+        last = e
+        if between_pending and s < len(sql):
+            between_pending -= 1
             continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and upper.startswith("OR", i)
-            and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-            and (
-                i + 2 >= len(sql)
-                or not (sql[i + 2].isalnum() or sql[i + 2] == "_")
-            )
-        ):
-            return True
-    return False
+        parts.append(sql[start:s].strip())
+        start = e
+    return [p for p in parts if p]
 
 
 _INTERVAL_RE = re.compile(r"^\s*(\d+)\s+(second|minute|hour|day|week|month|quarter|year)s?\s*$", re.I)

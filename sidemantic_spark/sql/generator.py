@@ -51,7 +51,10 @@ from sidemantic_spark.sql.fragments import (
     find_refs,
     interval_sql,
     replace_refs,
+    segments,
+    split_alias,
     split_conjuncts,
+    sub_code,
 )
 
 
@@ -117,7 +120,6 @@ def _key_part(value):
     return value
 
 
-_AS_RE = re.compile(r"^(.*?)\s+[Aa][Ss]\s+([A-Za-z_][A-Za-z0-9_]*)\s*$")
 _DESC_RE = re.compile(r"^(.*?)\s+(asc|desc)\s*$", re.IGNORECASE)
 
 
@@ -467,7 +469,7 @@ class SqlGenerator:
         that model (reference ``sql/generator.py:720-760,1016``)."""
         models_with_time: set[str] = set()
         for ref in spec.dimensions:
-            ref, _alias = _split_alias(ref)
+            ref, _alias = split_alias(ref)
             try:
                 model_name, dim_name, _g = self._parse_ref(ref)
             except QueryCompileError:
@@ -479,7 +481,7 @@ class SqlGenerator:
         added: list[str] = []
         seen: set[str] = set()
         for mref in spec.metrics:
-            mref, _alias = _split_alias(mref)
+            mref, _alias = split_alias(mref)
             try:
                 model_name, _metric = self._lookup_metric(mref)
             except QueryCompileError:
@@ -516,7 +518,7 @@ class SqlGenerator:
         used_outs: set[str] = set()
 
         for ref in spec.dimensions:
-            ref, alias = _split_alias(ref)
+            ref, alias = split_alias(ref)
             model_name, dim_name, grain = self._parse_ref(ref)
             model = self.graph.get_model(model_name)
             dim = model.dimension(dim_name)
@@ -593,7 +595,7 @@ class SqlGenerator:
 
         metrics: list[RMetric] = []
         for ref in spec.metrics:
-            ref, alias = _split_alias(ref)
+            ref, alias = split_alias(ref)
             model_name, metric = self._lookup_metric(ref)
             # dotted graph-metric names alias to their last segment
             out = alias or metric.name.rsplit(".", 1)[-1]
@@ -873,7 +875,7 @@ class SqlGenerator:
 
         try:
             for ref in list(metrics or []):
-                ref, _alias = _split_alias(ref)
+                ref, _alias = split_alias(ref)
                 model_name, metric = self._lookup_metric(ref)
                 _add(model_name)
                 # child refs of expression/derived metrics pull their
@@ -884,7 +886,7 @@ class SqlGenerator:
                         for m2, _f, _g in find_refs(text, known):
                             _add(m2)
             for ref in list(dimensions or []):
-                ref, _alias = _split_alias(ref)
+                ref, _alias = split_alias(ref)
                 model_name, _dim, _grain = self._parse_ref(ref)
                 if model_name not in known:
                     return None
@@ -3486,13 +3488,6 @@ def _needs_parens(expr: str) -> bool:
     return bool(re.search(r"[\s+\-*/]", expr))
 
 
-def _split_alias(ref: str) -> tuple[str, str | None]:
-    m = _AS_RE.match(ref.strip())
-    if m:
-        return m.group(1).strip(), m.group(2)
-    return ref.strip(), None
-
-
 def _qualify(name: str | None, default_model: str) -> str:
     if name is None:
         raise QueryCompileError("missing metric reference")
@@ -3561,8 +3556,8 @@ def _lambda_params(sql: str) -> set[str]:
 def _complete_sql_columns(sql: str) -> list[str]:
     params = _lambda_params(sql)
     out = []
-    for seg in re.split(r"('(?:[^']|'')*')", sql or ""):
-        if seg.startswith("'"):
+    for seg, opaque in segments(sql or ""):
+        if opaque:
             continue
         for m in _COMPLETE_COL_RE.finditer(seg):
             tok = m.group(1)
@@ -3575,36 +3570,20 @@ def _rename_complete_sql_cols(sql: str, rename) -> str:
     """Rewrite every bare column reference in an opaque complete-SQL
     measure via ``rename(col)`` (dedup scope: ``col -> __flt_col``)."""
     cols = set(_complete_sql_columns(sql))
-    out_parts = []
-    for seg in re.split(r"('(?:[^']|'')*')", sql or ""):
-        if seg.startswith("'"):
-            out_parts.append(seg)
-            continue
-        out_parts.append(
-            _COMPLETE_COL_RE.sub(
-                lambda m: rename(m.group(1)) if m.group(1) in cols else m.group(1),
-                seg,
-            )
-        )
-    return "".join(out_parts)
+    return sub_code(sql or "", lambda seg: _COMPLETE_COL_RE.sub(
+        lambda m: rename(m.group(1)) if m.group(1) in cols else m.group(1),
+        seg,
+    ))
 
 
 def _qualify_complete_sql(sql: str, scope: str) -> str:
     """Prefix every bare column reference with ``scope.`` so the opaque
     SQL evaluates against the model's CTE in the joined select."""
     cols = set(_complete_sql_columns(sql))
-    out_parts = []
-    for seg in re.split(r"('(?:[^']|'')*')", sql or ""):
-        if seg.startswith("'"):
-            out_parts.append(seg)
-            continue
-        out_parts.append(
-            _COMPLETE_COL_RE.sub(
-                lambda m: f"{scope}.{m.group(1)}" if m.group(1) in cols else m.group(1),
-                seg,
-            )
-        )
-    return "".join(out_parts)
+    return sub_code(sql or "", lambda seg: _COMPLETE_COL_RE.sub(
+        lambda m: f"{scope}.{m.group(1)}" if m.group(1) in cols else m.group(1),
+        seg,
+    ))
 
 
 def _identifiers(expr: str) -> list[str]:

@@ -22,6 +22,15 @@ import re
 from dataclasses import dataclass, field
 
 from sidemantic_spark.preagg.matcher import grain_derivable
+from sidemantic_spark.sql.fragments import (
+    LITERALS,
+    close_paren,
+    split_alias,
+    split_items,
+    split_top,
+    strip_comments,
+    sub_code,
+)
 from sidemantic_spark.sql.generator import (
     _SQL_KEYWORDS,
     CompileCache,
@@ -40,114 +49,20 @@ _JOIN_KEYWORDS = ("ON", "JOIN", "LEFT", "RIGHT", "INNER", "FULL", "OUTER",
 
 
 def _strip(sql: str) -> str:
-    """Remove ``--`` line comments and ``/* */`` block comments with a
-    single linear scan tracking in-string state. A quote-split approach
-    breaks on apostrophes INSIDE comments (``/* don't */`` flips the
-    parity and the comment survives), so comment text must be consumed
-    before quote state is considered."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    quote = ""  # "'" or '"' while inside a literal/quoted identifier
-    while i < n:
-        ch = sql[i]
-        if quote:
-            out.append(ch)
-            if ch == quote:
-                if quote == "'" and i + 1 < n and sql[i + 1] == "'":
-                    out.append("'")  # '' escape stays inside the literal
-                    i += 2
-                    continue
-                quote = ""
-            i += 1
-        elif ch in ("'", '"'):
-            quote = ch
-            out.append(ch)
-            i += 1
-        elif ch == "-" and sql.startswith("--", i):
-            while i < n and sql[i] != "\n":
-                i += 1
-        elif ch == "/" and sql.startswith("/*", i):
-            end = sql.find("*/", i + 2)
-            i = n if end == -1 else end + 2
-            out.append(" ")
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out).strip().rstrip(";").strip()
+    """Remove comments and a trailing ``;``. Comments are tokens, so an
+    apostrophe inside one (``/* don't */``) opens no literal."""
+    return strip_comments(sql).strip().rstrip(";").strip()
 
 
 def _normalize_compound_keywords(sql: str) -> str:
     """Collapse internal whitespace in two-word clause keywords
-    (``GROUP   BY`` -> ``GROUP BY``) outside string literals — the
-    clause splitter matches exact keyword text (ref corpus
+    (``GROUP   BY`` -> ``GROUP BY``) outside literals and quoted names —
+    clause values are keyed by the one spelling (ref corpus
     tests/fixtures/sql/yardstick/measures.test 'extra spaces' case)."""
-    parts = sql.split("'")
-    for i in range(0, len(parts), 2):  # even segments are outside quotes
-        parts[i] = re.sub(r"\bGROUP\s+BY\b", "GROUP BY", parts[i], flags=re.I)
-        parts[i] = re.sub(r"\bORDER\s+BY\b", "ORDER BY", parts[i], flags=re.I)
-    return "'".join(parts)
-
-
-def _top_level_split(sql: str, keyword: str) -> list[str]:
-    """Split on a keyword at paren/quote depth 0 (case-insensitive,
-    word-bounded)."""
-    parts = []
-    depth = 0
-    in_quote = False
-    i = 0
-    last = 0
-    upper = sql.upper()
-    kw = keyword.upper()
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and upper.startswith(kw, i)
-                and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-                and (
-                    i + len(kw) >= len(sql)
-                    or not (sql[i + len(kw)].isalnum() or sql[i + len(kw)] == "_")
-                )
-            ):
-                parts.append(sql[last:i])
-                last = i + len(kw)
-                i += len(kw)
-                continue
-        i += 1
-    parts.append(sql[last:])
-    return parts
-
-
-def _split_items(text: str) -> list[str]:
-    """Split a select/order list on top-level commas."""
-    items = []
-    depth = 0
-    in_quote = False
-    buf = []
-    for ch in text:
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                items.append("".join(buf).strip())
-                buf = []
-                continue
-        buf.append(ch)
-    tail = "".join(buf).strip()
-    if tail:
-        items.append(tail)
-    return items
+    return sub_code(sql, lambda t: re.sub(
+        r"\b(GROUP|ORDER)\s+BY\b", lambda m: f"{m.group(1).upper()} BY",
+        t, flags=re.I,
+    ))
 
 
 _AGGREGATE_REF_RE = re.compile(r"\bAGGREGATE\s*\(\s*(\"[^\"]+\"|[\w.]+)\s*\)", re.I)
@@ -158,17 +73,12 @@ def _normalize_cast_types(sql: str) -> str:
     in postfix casts (``x::VARCHAR`` -> ``x::STRING``) and CAST calls.
     Spark parses ``::`` natively (3.4+); only the bare length-less
     VARCHAR/TEXT type names fail (ref corpus measures.test ::VARCHAR
-    family). Quote-aware: even segments of a quote split are outside
-    string literals."""
-    parts = sql.split("'")
-    for i in range(0, len(parts), 2):
-        # postfix form only: `AS VARCHAR` inside CAST() can't be told
-        # apart from a column alias literally named "varchar" by regex
-        parts[i] = re.sub(
-            r"(::\s*)(?:VARCHAR|TEXT)\b(?!\s*\()",
-            r"\1STRING", parts[i], flags=re.I,
-        )
-    return "'".join(parts)
+    family). Literals and quoted names are left as written."""
+    # postfix form only: `AS VARCHAR` inside CAST() can't be told apart
+    # from a column alias literally named "varchar" by regex
+    return sub_code(sql, lambda t: re.sub(
+        r"(::\s*)(?:VARCHAR|TEXT)\b(?!\s*\()", r"\1STRING", t, flags=re.I,
+    ))
 
 
 def _yardstick_normalize(sql: str) -> str:
@@ -184,14 +94,11 @@ def _yardstick_normalize(sql: str) -> str:
     # function (ref test_yardstick_schema_qualified_aggregate_function)
     sql = re.sub(r"\b\w+\.(AGGREGATE\s*\()", r"\1", sql, flags=re.I)
     # curly measure refs `{revenue}` -> bare refs; `{{ param }}` Jinja
-    # braces are untouched (inner braces are brace-adjacent). Quote-
-    # aware: a literal like WHERE tag = '{code}' must survive intact
-    # (even segments of a quote split are outside string literals,
-    # same convention as _normalize_cast_types)
-    parts = sql.split("'")
-    for i in range(0, len(parts), 2):
-        parts[i] = re.sub(r"(?<!\{)\{\s*(\w+)\s*\}(?!\})", r"\1", parts[i])
-    sql = "'".join(parts)
+    # braces are untouched (inner braces are brace-adjacent). A literal
+    # like WHERE tag = '{code}' must survive intact
+    sql = sub_code(
+        sql, lambda t: re.sub(r"(?<!\{)\{\s*(\w+)\s*\}(?!\})", r"\1", t)
+    )
     # AGGREGATE() wrappers are PRESERVED here: the wrapper carries the
     # visibility default (AGGREGATE(m) sees the query WHERE, a bare
     # measure ref on a measure view ignores it — ref
@@ -233,7 +140,7 @@ def _parse_at_item(item: str):
     ``measure AT (mod)...`` (ref ``sql/query_rewriter.py:3630-3760``).
     Returns ``(measure_ref, is_aggregate_form, [modifier, ...], alias)``
     or None if the item is not an AT call."""
-    expr, alias = _split_item_alias(item)
+    expr, alias = split_alias(item)
     m = _AT_HEAD_RE.match(expr.strip())
     if not m:
         return None
@@ -247,23 +154,11 @@ def _parse_at_item(item: str):
         if not mm:
             break
         j = i + mm.end()
-        depth, k, in_str = 1, j, False
-        while k < len(rest) and depth:
-            c = rest[k]
-            if in_str:
-                if c == "'":
-                    in_str = False
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            k += 1
-        if depth:
+        k = close_paren(rest, j - 1)
+        if k is None:
             raise QueryCompileError(f"unclosed AT (...) modifier: {item!r}")
-        mods.append(rest[j : k - 1].strip())
-        i = k
+        mods.append(rest[j:k].strip())
+        i = k + 1
     if rest[i:].strip() or not mods:
         return None
     return ref, is_agg, mods, alias
@@ -287,24 +182,11 @@ def _scan_aggregate_terms(expr: str):
                 am = re.match(r"\s*AT\s*\(", expr[j:], re.I)
                 if not am:
                     break
-                k = j + am.end()
-                depth, in_str = 1, False
-                while k < len(expr) and depth:
-                    c = expr[k]
-                    if in_str:
-                        if c == "'":
-                            in_str = False
-                    elif c == "'":
-                        in_str = True
-                    elif c == "(":
-                        depth += 1
-                    elif c == ")":
-                        depth -= 1
-                    k += 1
-                if depth:
+                k = close_paren(expr, j + am.end() - 1)
+                if k is None:
                     raise QueryCompileError(f"unclosed AT (...) in {expr!r}")
-                mods.append(expr[j + am.end() : k - 1].strip())
-                j = k
+                mods.append(expr[j + am.end() : k].strip())
+                j = k + 1
             out.append(f"\x00T{len(terms)}\x00")
             terms.append((ref, mods))
             i = j
@@ -346,25 +228,6 @@ def _out_name(kind: str, full_ref: str, alias: str | None) -> str:
     if alias:
         return alias
     return full_ref.split(".", 1)[1]
-
-
-
-def _find_balanced_paren(text: str) -> int | None:
-    """Index of the ``)`` closing the paren at text[0] (quote-aware),
-    or None when unbalanced. ``text`` must start at the open paren."""
-    depth = 0
-    in_q = False
-    for j, ch in enumerate(text):
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return j
-    return None
 
 
 class SemanticSqlRewriter:
@@ -569,7 +432,7 @@ class SemanticSqlRewriter:
         # probe: the literal arm used to be forced through
         # _rewrite_select and die on "needs a FROM clause")
         for op in _SET_OPS:
-            parts = _top_level_split(sql, op)
+            parts = split_top(sql, op)
             if len(parts) > 1:
                 branches = [
                     self._rewrite_node(p.strip())
@@ -599,7 +462,7 @@ class SemanticSqlRewriter:
         m = re.match(r"^\s*SELECT\b", sql, re.IGNORECASE)
         if not m:
             return False
-        parts = _top_level_split(sql, "FROM")
+        parts = split_top(sql, "FROM")
         if len(parts) < 2:
             return False
         tail = parts[1].strip()
@@ -626,17 +489,17 @@ class SemanticSqlRewriter:
         if self._is_semantic(text, shadowed=shadowed):
             return True
         for op in _SET_OPS:
-            parts = _top_level_split(text, op)
+            parts = split_top(text, op)
             if len(parts) > 1:
                 return any(
                     self._has_semantic_island(p.strip(), shadowed)
                     for p in parts
                 )
-        parts = _top_level_split(text, "FROM")
+        parts = split_top(text, "FROM")
         if len(parts) > 1:
             tail = parts[1].lstrip()
             if tail.startswith("("):
-                end = _find_balanced_paren(tail)
+                end = close_paren(tail)
                 if end is not None:
                     return self._has_semantic_island(
                         tail[1:end].strip(), shadowed
@@ -669,21 +532,7 @@ class SemanticSqlRewriter:
                     f"unsupported CTE item: {body[pos:pos + 60]!r}"
                 )
             start = pos + m.end() - 1
-            depth = 0
-            in_q = False
-            end = None
-            for j in range(start, len(body)):
-                ch = body[j]
-                if ch == "'":
-                    in_q = not in_q
-                elif not in_q:
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                        if depth == 0:
-                            end = j
-                            break
+            end = close_paren(body, start)
             if end is None:
                 raise QueryCompileError("unbalanced parens in WITH clause")
             ctes.append(
@@ -759,13 +608,13 @@ class SemanticSqlRewriter:
         """SELECT ... FROM (<semantic select>) alias ... — rewrite the
         island, keep the wrapper verbatim (Catalyst optimizes the
         wrapper; ref keeps wrapper micro-opts we delegate, SURVEY §4)."""
-        parts = _top_level_split(sql, "FROM")
+        parts = split_top(sql, "FROM")
         if len(parts) < 2:
             return None
         tail = parts[1].lstrip()
         if not tail.startswith("("):
             return None
-        end = _find_balanced_paren(tail)
+        end = close_paren(tail)
         if end is None:
             return None
         inner = tail[1:end].strip()
@@ -802,14 +651,14 @@ class SemanticSqlRewriter:
         if not m:
             return None
         distinct = bool(m.group(1))
-        from_parts = _top_level_split(m.group(2), "FROM")
+        from_parts = split_top(m.group(2), "FROM")
         if len(from_parts) != 2:
             return None
         select_list = from_parts[0].strip()
         clause_vals: dict[str, str] = {}
         cur = from_parts[1]
         for kw in reversed(_CLAUSES):
-            parts = _top_level_split(cur, kw)
+            parts = split_top(cur, kw)
             if len(parts) > 1:
                 clause_vals[kw] = parts[-1].strip()
                 cur = parts[0]
@@ -822,8 +671,8 @@ class SemanticSqlRewriter:
             return None
         out = _InnerParse(base=base, clause_vals=clause_vals, distinct=distinct)
         seen: set[str] = set()
-        for item in _split_items(select_list):
-            ref, alias = _split_item_alias(item)
+        for item in split_items(select_list):
+            ref, alias = split_alias(item)
             wm = _ROWNUM_RE.match(ref)
             if wm is not None:
                 if out.rn is not None or alias is None:
@@ -853,14 +702,14 @@ class SemanticSqlRewriter:
         m = re.match(r"^\s*SELECT\s+(DISTINCT\s+)?(.*)$", sql, re.I | re.S)
         if not m or m.group(1):
             return None
-        from_parts = _top_level_split(m.group(2), "FROM")
+        from_parts = split_top(m.group(2), "FROM")
         if len(from_parts) != 2:
             return None
         select_list = from_parts[0].strip()
         tail = from_parts[1].lstrip()
         if not tail.startswith("("):
             return None
-        end = _find_balanced_paren(tail)
+        end = close_paren(tail)
         if end is None:
             return None
         # the middle level may carry nothing beyond an optional alias:
@@ -876,8 +725,8 @@ class SemanticSqlRewriter:
         outs = {o for o, _k, _r, _a in inner.entries}
         seen: set[str] = set()
         rn = None
-        for item in _split_items(select_list):
-            ref, alias = _split_item_alias(item)
+        for item in split_items(select_list):
+            ref, alias = split_alias(item)
             wm = _ROWNUM_RE.match(ref)
             if wm is not None:
                 if rn is not None or alias is None:
@@ -899,14 +748,14 @@ class SemanticSqlRewriter:
         if not m:
             return None
         outer_distinct = bool(m.group(1))
-        from_parts = _top_level_split(m.group(2), "FROM")
+        from_parts = split_top(m.group(2), "FROM")
         if len(from_parts) != 2:
             return None
         outer_list = from_parts[0].strip()
         tail = from_parts[1].lstrip()
         if not tail.startswith("("):
             return None
-        end = _find_balanced_paren(tail)
+        end = close_paren(tail)
         if end is None:
             return None
         inner_sql = tail[1:end].strip()
@@ -914,7 +763,7 @@ class SemanticSqlRewriter:
         clause_vals: dict[str, str] = {}
         cur = remainder
         for kw in reversed(_CLAUSES):
-            parts = _top_level_split(cur, kw)
+            parts = split_top(cur, kw)
             if len(parts) > 1:
                 clause_vals[kw] = parts[-1].strip()
                 cur = parts[0]
@@ -956,17 +805,11 @@ class SemanticSqlRewriter:
                 )
 
                 def _dequalify(text: str) -> str:
-                    out = []
-                    for seg in re.split(r"('(?:[^']|'')*')", text):
-                        out.append(
-                            seg if seg.startswith("'")
-                            else dq_re.sub(
-                                lambda m: m.group(1) or m.group(2)
-                                or m.group(3),
-                                seg,
-                            )
-                        )
-                    return "".join(out)
+                    # reads quoted names: the alias may be one (`"_"`)
+                    return sub_code(text, lambda seg: dq_re.sub(
+                        lambda m: m.group(1) or m.group(2) or m.group(3),
+                        seg,
+                    ), LITERALS)
 
                 outer_list = _dequalify(outer_list)
                 clause_vals = {
@@ -992,7 +835,7 @@ class SemanticSqlRewriter:
             if qm is None:
                 return None
             over_open = qm.end() - 1
-            end_rel = _find_balanced_paren(qv[over_open:])
+            end_rel = close_paren(qv[over_open:])
             if end_rel is None:
                 return None
             rest = qv[over_open + end_rel + 1:].strip()
@@ -1015,7 +858,7 @@ class SemanticSqlRewriter:
                 f"__qualify_rn {qualify_rn[1]} {qualify_rn[2]}"
             )
 
-        outer_items = [_split_item_alias(i) for i in _split_items(outer_list)]
+        outer_items = [split_alias(i) for i in split_items(outer_list)]
 
         if inner.rn is not None:
             out = self._rule_rownum_topn(
@@ -1044,19 +887,11 @@ class SemanticSqlRewriter:
             hit = colmap.get(tok)
             return hit[1] if hit else tok
 
-        out = []
-        for seg in re.split(r"('(?:[^']|'')*')", text):
-            if seg.startswith("'"):
-                out.append(seg)
-                continue
-            out.append(
-                re.sub(
-                    r"(?<![\w.])[A-Za-z_][A-Za-z0-9_]*(?:__[a-z]+)?(?!\s*\()(?![\w.])",
-                    sub,
-                    seg,
-                )
-            )
-        return "".join(out)
+        return sub_code(text, lambda seg: re.sub(
+            r"(?<![\w.])[A-Za-z_][A-Za-z0-9_]*(?:__[a-z]+)?(?!\s*\()(?![\w.])",
+            sub,
+            seg,
+        ))
 
     def _inner_filters(self, inner: _InnerParse) -> list[str]:
         filters = []
@@ -1078,7 +913,7 @@ class SemanticSqlRewriter:
         if "ORDER BY" not in clause_vals:
             return []
         out = []
-        for o in _split_items(clause_vals["ORDER BY"]):
+        for o in split_items(clause_vals["ORDER BY"]):
             if not re.fullmatch(
                 r"\s*[A-Za-z_][A-Za-z0-9_]*(?:__[a-z]+)?"
                 r"(?:\s+(?:ASC|DESC))?\s*",
@@ -1152,7 +987,7 @@ class SemanticSqlRewriter:
         filters = self._inner_filters(inner)
 
         win_order = [
-            self._map_out_cols(o, inner).strip() for o in _split_items(order)
+            self._map_out_cols(o, inner).strip() for o in split_items(order)
         ]
         # an outer ORDER BY that restates the window's order is implied
         # by the plan's own ORDER BY and does not block the fast path
@@ -1162,7 +997,7 @@ class SemanticSqlRewriter:
         if "ORDER BY" in clause_vals:
             outer_order = [
                 self._map_out_cols(o, inner).strip()
-                for o in _split_items(clause_vals["ORDER BY"])
+                for o in split_items(clause_vals["ORDER BY"])
             ]
 
             def _norm(items: list[str]) -> list[str]:
@@ -1430,7 +1265,7 @@ class SemanticSqlRewriter:
         elif "ORDER BY" in inner.clause_vals:
             order_by = [
                 self._qualify_bare(o, inner.base)
-                for o in _split_items(inner.clause_vals["ORDER BY"])
+                for o in split_items(inner.clause_vals["ORDER BY"])
             ]
         limit = int(clause_vals["LIMIT"]) if "LIMIT" in clause_vals else None
         offset = int(clause_vals["OFFSET"]) if "OFFSET" in clause_vals else None
@@ -1477,7 +1312,7 @@ class SemanticSqlRewriter:
         tail_parts: list[str] = []
         cur = body
         for kw in ("OFFSET", "LIMIT", "ORDER BY"):
-            parts = _top_level_split(cur, kw)
+            parts = split_top(cur, kw)
             if len(parts) > 1:
                 tail_parts.insert(0, f"{kw} {parts[-1].strip()}")
                 cur = parts[0]
@@ -1495,13 +1330,13 @@ class SemanticSqlRewriter:
         references a model; plain-SQL islands and literals pass
         through. Returns None when an item is neither, so the caller's
         needs-a-FROM error still fires for genuinely malformed SQL."""
-        items = _split_items(select_body)
+        items = split_items(select_body)
         out_items: list[str] = []
         for i, item in enumerate(items):
-            expr, alias = _split_item_alias(item)
+            expr, alias = split_alias(item)
             expr = expr.strip()
             if expr.startswith("(") and re.match(r"\(\s*SELECT\b", expr, re.I):
-                end = _find_balanced_paren(expr)
+                end = close_paren(expr)
                 if end == len(expr) - 1:
                     inner = expr[1:end].strip()
                     from sidemantic_spark.core.graph import SemanticGraphError
@@ -1533,7 +1368,7 @@ class SemanticSqlRewriter:
         if not m:
             raise QueryCompileError(f"semantic SQL must start with SELECT: {sql[:80]!r}")
         rest = m.group(1)
-        from_parts = _top_level_split(rest, "FROM")
+        from_parts = split_top(rest, "FROM")
         if len(from_parts) < 2:
             fromless = self._rewrite_fromless(rest)
             if fromless is not None:
@@ -1547,7 +1382,7 @@ class SemanticSqlRewriter:
         # peel clauses right-to-left so earlier splits don't eat later
         # keywords
         for kw in reversed(_CLAUSES):
-            parts = _top_level_split(cur, kw)
+            parts = split_top(cur, kw)
             if len(parts) > 1:
                 clause_vals[kw] = parts[-1].strip()
                 cur = parts[0]
@@ -1643,7 +1478,7 @@ class SemanticSqlRewriter:
         else:
             base_model = from_clause
         graph = self.layer.graph
-        items = _split_items(select_list)
+        items = split_items(select_list)
         if base_model not in graph.models and base_model.lower() == "metrics":
             # `FROM metrics` virtual catalog table (reference
             # sql/query_rewriter.py from-metrics route)
@@ -1675,7 +1510,7 @@ class SemanticSqlRewriter:
         # test_ad_hoc_count_aggregation); registered once, hidden name
         out_items: list[str] = []
         for it in items:
-            ref, alias = _split_item_alias(it)
+            ref, alias = split_alias(it)
             if re.fullmatch(r"COUNT\s*\(\s*\*\s*\)", ref.strip(), re.IGNORECASE):
                 if model.metric("__adhoc_count") is None:
                     from sidemantic_spark.core.model import Metric as _Metric
@@ -1797,14 +1632,14 @@ class SemanticSqlRewriter:
         select_list2, clause_vals = self._register_expr_dims(
             ", ".join(items), clause_vals, base_model, model
         )
-        items = _split_items(select_list2)
+        items = split_items(select_list2)
 
         def _has_at_term(it: str) -> bool:
             if _parse_at_item(it) is not None:
                 return True
             # expression items embedding AGGREGATE(...) AT (...) terms
             # (ref corpus measures.test pct-of-total / yoy arithmetic)
-            ref, _a = _split_item_alias(it)
+            ref, _a = split_alias(it)
             try:
                 _t, terms = _scan_aggregate_terms(ref)
             except QueryCompileError:
@@ -1831,7 +1666,7 @@ class SemanticSqlRewriter:
         if getattr(model, "measure_view", False) and "WHERE" in clause_vals:
 
             def _is_bare_metric(it: str) -> bool:
-                ref0, _a0 = _split_item_alias(it)
+                ref0, _a0 = split_alias(it)
                 t0 = self._classify_ref(ref0, base_model)
                 return bool(
                     t0 and t0[0] == "metric" and ".__adhoc_" not in t0[1]
@@ -1850,7 +1685,7 @@ class SemanticSqlRewriter:
         classified: list[tuple[str, str, str | None]] = []
         has_expression = False
         for item in items:
-            ref, alias = _split_item_alias(item)
+            ref, alias = split_alias(item)
             target = self._classify_ref(ref, base_model)
             if target is None:
                 has_expression = True
@@ -1868,7 +1703,7 @@ class SemanticSqlRewriter:
         order_by = []
         if "ORDER BY" in clause_vals:
             order_by = [
-                self._qualify_bare(o, base_model) for o in _split_items(clause_vals["ORDER BY"])
+                self._qualify_bare(o, base_model) for o in split_items(clause_vals["ORDER BY"])
             ]
         limit = int(clause_vals["LIMIT"]) if "LIMIT" in clause_vals else None
         offset = int(clause_vals["OFFSET"]) if "OFFSET" in clause_vals else None
@@ -1926,7 +1761,7 @@ class SemanticSqlRewriter:
         metrics: list[str] = []
         dimensions: list[str] = []
         for item in items:
-            ref, alias = _split_item_alias(item)
+            ref, alias = split_alias(item)
             ref = ref.strip()
             if ref == "*":
                 raise QueryCompileError(
@@ -1951,7 +1786,7 @@ class SemanticSqlRewriter:
         if "HAVING" in clause_vals:
             filters.append(clause_vals["HAVING"])
         order_by = (
-            _split_items(clause_vals["ORDER BY"])
+            split_items(clause_vals["ORDER BY"])
             if "ORDER BY" in clause_vals else []
         )
         spec = QuerySpec(
@@ -1995,7 +1830,7 @@ class SemanticSqlRewriter:
             and spec.offset is None
         ):
             spec.order_by = [
-                self._qualify_bare(o, base_model) for o in _split_items(order)
+                self._qualify_bare(o, base_model) for o in split_items(order)
             ]
             spec.limit = k if spec.limit is None else min(spec.limit, k)
             self._applied_rules.append("qualify_topn_limit")
@@ -2048,7 +1883,7 @@ class SemanticSqlRewriter:
         supported shape — one measure-AT conjunct whose modifier is a
         correlated equality on a dimension — so the caller's normal
         routes (and their precise errors) still apply."""
-        conjs = [c.strip() for c in _top_level_split(
+        conjs = [c.strip() for c in split_top(
             clause_vals["WHERE"], "AND") if c.strip()]
         at_conj, others = None, []
         for c in conjs:
@@ -2066,7 +1901,7 @@ class SemanticSqlRewriter:
             return None
         lhs, op, mref = m.group(1), m.group(2), m.group(3)
         mod_start = m.end() - 1
-        mod_end = _find_balanced_paren(at_conj[mod_start:])
+        mod_end = close_paren(at_conj[mod_start:])
         if mod_end is None or at_conj[mod_start + mod_end + 1:].strip():
             return None
         mod = at_conj[mod_start + 1: mod_start + mod_end]
@@ -2095,7 +1930,7 @@ class SemanticSqlRewriter:
 
         sel: list[tuple[str, str | None]] = []
         for item in items:
-            ref2, alias = _split_item_alias(item)
+            ref2, alias = split_alias(item)
             t = self._classify_ref(ref2, base_model)
             if t is None or t[0] != "dim":
                 return None
@@ -2103,22 +1938,17 @@ class SemanticSqlRewriter:
 
         def to_det(text: str) -> tuple[str, set[str]]:
             used: set[str] = set()
-            out = []
-            for seg in re.split(r"('(?:[^']|'')*')", text):
-                if seg.startswith("'"):
-                    out.append(seg)
-                    continue
 
-                def repl(mt: re.Match) -> str:
-                    t = self._classify_ref(mt.group(0), base_model)
-                    if t and t[0] == "dim":
-                        short = t[1].split(".", 1)[1]
-                        used.add(t[1])
-                        return f"__det.{short}"
-                    return mt.group(0)
+            def repl(mt: re.Match) -> str:
+                t = self._classify_ref(mt.group(0), base_model)
+                if t and t[0] == "dim":
+                    short = t[1].split(".", 1)[1]
+                    used.add(t[1])
+                    return f"__det.{short}"
+                return mt.group(0)
 
-                out.append(re.sub(r"[A-Za-z_][\w.]*", repl, seg))
-            return "".join(out), used
+            out = sub_code(text, lambda seg: re.sub(r"[A-Za-z_][\w.]*", repl, seg))
+            return out, used
 
         lhs_det, det_refs = to_det(lhs.strip())
         other_det: list[str] = []
@@ -2226,7 +2056,7 @@ class SemanticSqlRewriter:
                 render.append(("at", len(at_calls), alias))
                 at_calls.append((ref, is_agg, mods, alias, True))
                 continue
-            ref, alias = _split_item_alias(item)
+            ref, alias = split_alias(item)
             target = self._classify_ref(ref, base_model)
             if target is not None:
                 kind, full = target
@@ -2374,7 +2204,7 @@ class SemanticSqlRewriter:
             flat: list[str] = []
             for mod in mods:
                 prev_kw = None
-                for part in _split_items(mod):
+                for part in split_items(mod):
                     head = part.split(None, 1)
                     kw = head[0].upper() if head else ""
                     if kw == "SET":
@@ -2419,7 +2249,7 @@ class SemanticSqlRewriter:
                     # targets split on commas OR bare whitespace
                     # (`AT (ALL year region)` — ref corpus measures.test)
                     targets = [
-                        t2 for t in _split_items(rest)
+                        t2 for t in split_items(rest)
                         for t2 in t.strip().split()
                     ]
                     for t in targets:
@@ -2681,28 +2511,23 @@ class SemanticSqlRewriter:
         )
 
         def sub_refs(text: str) -> tuple[str, bool]:
-            out = []
             matched = False
-            for seg in re.split(r"('(?:[^']|'')*')", text):
-                if seg.startswith("'"):
-                    out.append(seg)
-                    continue
 
-                def repl(m: re.Match) -> str:
-                    nonlocal matched
-                    tok = m.group(0)
-                    target = self._classify_ref(tok, base_model)
-                    if target is None:
-                        return tok
-                    matched = True
-                    return note(*target)
+            def repl(m: re.Match) -> str:
+                nonlocal matched
+                tok = m.group(0)
+                target = self._classify_ref(tok, base_model)
+                if target is None:
+                    return tok
+                matched = True
+                return note(*target)
 
-                out.append(token_re.sub(repl, seg))
-            return "".join(out), matched
+            out = sub_code(text, lambda seg: token_re.sub(repl, seg))
+            return out, matched
 
         outer_items = []
         for i, item in enumerate(items):
-            ref, alias = _split_item_alias(item)
+            ref, alias = split_alias(item)
             target = self._classify_ref(ref, base_model)
             if target is not None:
                 name = note(*target)
@@ -2734,7 +2559,7 @@ class SemanticSqlRewriter:
             sub_refs(clause_vals["HAVING"])[0] if "HAVING" in clause_vals else None
         )
         order_raw = (
-            _split_items(clause_vals["ORDER BY"]) if "ORDER BY" in clause_vals else []
+            split_items(clause_vals["ORDER BY"]) if "ORDER BY" in clause_vals else []
         )
         order = [sub_refs(o)[0] for o in order_raw]
 
@@ -2819,27 +2644,11 @@ class SemanticSqlRewriter:
             target, cond = m.group(1), m.group(2).strip()
             graph.get_model(target)
             # a fully parenthesized predicate is the same condition (ref
-            # test_sql_rewriter.py:281 `ON (a.x = b.y)`); strip balanced
-            # outer parens before splitting conjuncts
-            while (
-                cond.startswith("(") and cond.endswith(")")
-                and cond.count("(") == cond.count(")")
-            ):
-                inner = cond[1:-1].strip()
-                # only strip when the parens actually enclose the whole
-                # text (not `(a) AND (b)`) — re-balance check
-                depth, ok = 0, True
-                for ch in inner:
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                        if depth < 0:
-                            ok = False
-                            break
-                if not ok:
-                    break
-                cond = inner
+            # test_sql_rewriter.py:281 `ON (a.x = b.y)`); strip outer
+            # parens that enclose the whole text (not `(a) AND (b)`)
+            # before splitting conjuncts
+            while cond.startswith("(") and close_paren(cond) == len(cond) - 1:
+                cond = cond[1:-1].strip()
             pairs = []
             for conj in re.split(r"\bAND\b", cond, flags=re.I):
                 em = re.match(r"^\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*$", conj.strip())
@@ -2991,23 +2800,8 @@ class SemanticSqlRewriter:
         )
         exprs: list[str] = []
         for m in pat.finditer(text):
-            start = m.start()
-            depth, j, in_str = 0, m.end() - 1, False
-            while j < len(text):
-                c = text[j]
-                if in_str:
-                    if c == "'":
-                        in_str = False
-                elif c == "'":
-                    in_str = True
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            expr = text[start : j + 1]
+            end = close_paren(text, m.end() - 1)
+            expr = text[m.start() : None if end is None else end + 1]
             # every identifier inside must be a dimension of the model
             # (or a nested allowed function / string literal)
             ok = True
@@ -3099,29 +2893,9 @@ class SemanticSqlRewriter:
                 return f"{base_model}.{tok}"
             return tok
 
-        out = []
-        depth_quote = False
-        for seg in re.split(r"('(?:[^']|'')*')", text):
-            if seg.startswith("'"):
-                out.append(seg)
-                continue
-            # don't double-qualify model.field references
-            seg = re.sub(
-                r"(?<![\w.])[A-Za-z_][A-Za-z0-9_]*(?:__[a-z]+)?(?!\s*\()(?![\w.])",
-                sub,
-                seg,
-            )
-            out.append(seg)
-        return "".join(out)
-
-
-def _split_item_alias(item: str) -> tuple[str, str | None]:
-    # re.S: select items may span lines (e.g. a multi-column OVER())
-    m = re.match(
-        r"^(.*?)\s+[Aa][Ss]\s+([A-Za-z_][A-Za-z0-9_]*)\s*$", item.strip(), re.S
-    )
-    if m:
-        return m.group(1).strip(), m.group(2)
-    return item.strip(), None
-
-
+        # don't double-qualify model.field references
+        return sub_code(text, lambda seg: re.sub(
+            r"(?<![\w.])[A-Za-z_][A-Za-z0-9_]*(?:__[a-z]+)?(?!\s*\()(?![\w.])",
+            sub,
+            seg,
+        ))

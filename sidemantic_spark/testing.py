@@ -30,6 +30,8 @@ from dataclasses import dataclass, field
 
 import yaml
 
+from sidemantic_spark.sql.fragments import LITERALS, segments
+
 
 @dataclass
 class TestResult:
@@ -138,8 +140,8 @@ def _referenced_columns(expression: str) -> set[str]:
     if _IDENT_ONLY_RE.match(expr):
         return {expr}
     out: set[str] = set()
-    for seg in re.split(r"('(?:[^']|'')*')", expr):
-        if seg.startswith("'"):
+    for seg, literal in segments(expr, LITERALS):
+        if literal:
             continue
         for m in _COL_TOKEN_RE.finditer(seg):
             tok = m.group(0)

@@ -4062,6 +4062,8 @@ def test_adapter_review_regressions(spark):
     assert split_simple_aggregate("SUM(a) + SUM(b)") is None
     assert split_simple_aggregate("AVG(a) + AVG(b)") is None
     assert split_simple_aggregate("SUM(COALESCE(a, 0))") == ("sum", "COALESCE(a, 0)")
+    assert split_simple_aggregate("SUM(CASE WHEN s = ')' THEN 1 END)") == \
+        ("sum", "CASE WHEN s = ')' THEN 1 END")
     assert split_simple_aggregate("COUNT(DISTINCT user_id)") == \
         ("count_distinct", "user_id")
 

@@ -4,18 +4,23 @@ sqlglot."""
 
 from __future__ import annotations
 
+from sidemantic_spark.core.consumption import qualify_expression_fields
 from sidemantic_spark.sql.fragments import (
-    _toplevel_or,
+    close_paren,
     find_refs,
+    split_alias,
     split_conjuncts,
+    split_items,
+    split_top,
+    tokens,
 )
 
 
 def test_doubled_quote_keeps_state_for_toplevel_or():
     # 'a''b' is ONE literal (a'b); the OR after it IS top-level
-    assert _toplevel_or("x = 'a''b' OR y = 1")
+    assert len(split_top("x = 'a''b' OR y = 1", "OR")) == 2
     # ... and an OR *inside* a literal containing '' is NOT
-    assert not _toplevel_or("x = 'a'' OR ''b' AND y = 1")
+    assert len(split_top("x = 'a'' OR ''b' AND y = 1", "OR")) == 1
 
 
 def test_split_conjuncts_after_doubled_quote_literal():
@@ -76,3 +81,32 @@ def test_double_paren_derived_table_alias_still_shadows():
         "CAST(f(x) AS INT) AS orders WHERE orders.revenue > 10", {"orders"}
     )
     assert ("orders", "revenue", None) in refs2
+
+
+def test_quoted_names_are_single_tokens():
+    # an AND inside a quoted name is no conjunction boundary
+    assert split_conjuncts('"a and b" = 1 AND c = 2') == ['"a and b" = 1', "c = 2"]
+    # a paren inside a quoted name does not end the subquery: `t` is the
+    # subquery's table, not the model's field
+    assert qualify_expression_fields(
+        ['x IN (SELECT "a)b" FROM t) AND t = 1'], "orders", {"t"}
+    ) == ['x IN (SELECT "a)b" FROM t) AND orders.t = 1']
+    sql = "f('a)b', \"c)\", `d)`) -- e)\n, g /* h, */ FROM x"
+    assert close_paren(sql, 1) == sql.index(") --")
+    assert split_items(sql) == [sql[: sql.index("\n,")], "g /* h, */ FROM x"]
+    assert split_top(sql, "FROM") == [sql[: sql.index("FROM")], " x"]
+    assert "".join(t for t, _k, _d in tokens(sql)) == sql
+    assert [k for _t, k, _d in tokens("'it''s'\"a\"\"b\"`c``d`")] == [
+        "string", "ident", "ident",
+    ]
+
+
+def test_split_alias_carries_quoted_names_as_backticks():
+    assert split_alias("orders.revenue AS rev") == ("orders.revenue", "rev")
+    assert split_alias('x AS "rev, total"') == ("x", "`rev, total`")
+    assert split_alias("x as `order by`") == ("x", "`order by`")
+    assert split_alias('x AS "a""b`c"') == ("x", '`a"b``c`')
+    assert split_alias("x AS `a``b`") == ("x", "`a``b`")
+    # no alias: a string literal, a cast's type, an implicit alias
+    for item in ("x AS 'y'", "CAST(x AS INT)", 'x "y"', "x AS 1y"):
+        assert split_alias(item) == (item, None)

@@ -53,6 +53,10 @@ def test_nested_call_is_single():
     # nested parens inside ONE call are still a single call
     assert _is_single_call("SUM(COALESCE(a, 0))")
     assert not _is_single_call("SUM(a) / NULLIF(SUM(b), 0)")
+    # a paren inside a string literal is data, not a call boundary
+    assert _is_single_call("SUM(CASE WHEN s = ')' THEN 1 END)")
+    m = Metric(name="m", sql="SUM(CASE WHEN s = ')' THEN 1 END)")
+    assert m.agg == "sum" and m.sql == "CASE WHEN s = ')' THEN 1 END"
 
 
 def test_plain_column_not_extracted():

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from sidemantic_spark.core.graph import SemanticGraph
 from sidemantic_spark.core.migrator import Migrator
+from sidemantic_spark.core.model import Dimension, Metric, Model
 
 
 class _BareLayer:
@@ -172,6 +173,39 @@ def test_analyze_handles_comments_and_empty():
     qa = mig.analyze("-- comment\nSELECT status, COUNT(*) FROM orders GROUP BY status")
     assert qa.tables == ["orders"]
     assert _migrator().generate(["   ", ""]) == {}
+
+
+
+def _orders_migrator() -> Migrator:
+    layer = _BareLayer()
+    layer.graph.add_model(Model(
+        name="orders", table="orders", primary_key="o_orderkey",
+        dimensions=[Dimension(name="status", sql="o_orderstatus"),
+                    Dimension(name="comment", sql="o_comment")],
+        metrics=[Metric(name="revenue", agg="sum", sql="o_totalprice")],
+    ))
+    return Migrator(layer)
+
+
+def test_literals_hide_comment_markers_and_commas():
+    """A `--` or a comma inside a string literal is data: the comment
+    strip must not cut the query at `'a--b'` (which lost the GROUP BY),
+    and the select split must not cut `'x,y'` (which shifted the
+    ordinal GROUP BY onto the wrong item)."""
+    mig = _orders_migrator()
+    qa = mig.analyze(
+        "SELECT o_orderstatus, SUM(o_totalprice) FROM orders "
+        "WHERE o_comment = 'a--b' GROUP BY 1"
+    )
+    assert qa.matched_dimensions == ["orders.status"]
+    assert qa.missing_dimensions == []
+    assert qa.rewritten.endswith("WHERE orders.comment = 'a--b'")
+    qa = mig.analyze(
+        "SELECT 'x,y' AS tag, o_orderstatus, SUM(o_totalprice) "
+        "FROM orders GROUP BY 2"
+    )
+    assert qa.matched_dimensions == ["orders.status"]
+    assert qa.can_rewrite
 
 
 # round 8, second sweep: mined from reference tests/test_migrator_generation.py
