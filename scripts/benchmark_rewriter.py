@@ -112,15 +112,14 @@ def main() -> None:
     from sidemantic_spark.models.tpch import build_layer
 
     layer = build_layer(spark, args.sf_dir)
-    layer.rewrite("SELECT orders.revenue FROM orders")  # instantiate
     rw = layer._rewriter
 
     results: dict = {}
     rules: dict = {}
     for name, sql in CASES.items():
         rw.wrapper_rules_enabled = True
-        opt_sql = rw.rewrite(sql)
-        rules[name] = list(rw._applied_rules)
+        plan = layer.explain_sql(sql)
+        opt_sql, rules[name] = plan["compiled_sql"], plan["applied_rules"]
         rw.wrapper_rules_enabled = False
         naive_sql = rw.rewrite(sql)
         rw.wrapper_rules_enabled = True

@@ -48,6 +48,9 @@ class SparkSemanticLayer:
         self._flight_lock = _threading.Lock()
         self._inflight: dict[str, dict] = {}
         self.query_log: list[str] = []  # instrumentation headers, recommender input
+        from sidemantic_spark.sql.rewriter import SemanticSqlRewriter
+
+        self._rewriter = SemanticSqlRewriter(self)
 
     @property
     def enforce_visibility(self) -> bool:
@@ -222,10 +225,6 @@ class SparkSemanticLayer:
     def rewrite(self, semantic_sql: str, user: dict | None = None,
                 use_preaggs: bool = True, preagg_strict: bool = False) -> str:
         """Semantic SQL text -> Spark SQL under the per-request modes."""
-        from sidemantic_spark.sql.rewriter import SemanticSqlRewriter
-
-        if not hasattr(self, "_rewriter"):
-            self._rewriter = SemanticSqlRewriter(self)
         return self._rewriter.rewrite(
             semantic_sql, user=user, use_preaggs=use_preaggs,
             preagg_strict=preagg_strict)
@@ -237,18 +236,12 @@ class SparkSemanticLayer:
         constraints with referenced table/column mapping."""
         from sidemantic_spark.server.catalog import get_catalog_metadata
 
-        rewriter = getattr(self, "_rewriter", None)
         return get_catalog_metadata(
             self.graph, schema=schema,
             enforce_visibility=getattr(self, "enforce_visibility", False),
-            lock=rewriter._compile_lock if rewriter is not None else None,
         )
 
     def explain_sql(self, semantic_sql: str) -> dict:
-        from sidemantic_spark.sql.rewriter import SemanticSqlRewriter
-
-        if not hasattr(self, "_rewriter"):
-            self._rewriter = SemanticSqlRewriter(self)
         return self._rewriter.explain(semantic_sql)
 
     def add_explore(self, explore):
@@ -451,12 +444,11 @@ class SparkSemanticLayer:
             # `name` or `schema`.`name`, as the SQL wrote it
             rel = (exc.getMessageParameters() or {}).get("relationName", "")
             # physical_name's format, unvalidated: a model name it rejects
-            # names no table, and must not replace this error; a snapshot,
-            # since the rewriter adds and pops models on other threads
+            # names no table, and must not replace this error
             if exc.getCondition() != "TABLE_OR_VIEW_NOT_FOUND" or (
                 rel.rsplit(".", 1)[-1].strip("`").lower() not in {
                     f"{m.name}_preagg_{pa.name}".lower()
-                    for m in list(self.graph.models.values())
+                    for m in self.graph.models.values()
                     for pa in m.pre_aggregations
                 }
             ):

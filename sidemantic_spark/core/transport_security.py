@@ -8,17 +8,20 @@ source the rewriter does not control would bypass row filters and
 visibility. Unrecognized sources are refused before execution;
 projection-only queries (``SELECT 1``) stay available.
 
-The reference resolves sources with sqlglot scopes; this environment
-has none, so sources are extracted with a conservative lexer: every
+The reference resolves sources with sqlglot scopes; sqlglot is not
+available here, so sources are read conservatively off the text as
+``sql/fragments.tokens`` lexes it (literals and comments blanked): every
 ``FROM``/``JOIN`` target identifier anywhere in the query (including
 inside derived tables — the global scan naturally covers nested
-scopes), minus declared CTE names. Anything that defeats the lexer
+scopes), minus declared CTE names. Anything that defeats the scan
 (quoted identifiers, table functions) fails closed.
 """
 
 from __future__ import annotations
 
 import re
+
+from sidemantic_spark.sql.fragments import tokens
 
 
 class TransportSecurityError(Exception):
@@ -53,8 +56,6 @@ def controls_are_active(layer) -> bool:
     return has_declared_security(layer) or has_enforced_column_restrictions(layer)
 
 
-_STRING_RE = re.compile(r"'(?:[^'\\]|\\.)*'")
-_COMMENT_RE = re.compile(r"--[^\n]*|/\*.*?\*/", re.S)
 # NB: the comma alternative must not carry a leading \b — after a
 # closing paren (`), cnt AS (`) there is no word boundary before the
 # comma, so `\b(?:WITH|,)` silently missed every CTE after the first
@@ -67,8 +68,8 @@ def unrecognized_sources(sql: str, layer) -> list[str]:
     """Source tables that are neither semantic models nor local CTEs.
     Returns ``['<unparseable SQL>']`` when the query defeats the lexer
     (fail closed)."""
-    text = _COMMENT_RE.sub(" ", sql)
-    text = _STRING_RE.sub("''", text)
+    text = "".join({"string": "''", "comment": " "}.get(kind, t)
+                   for t, kind, _depth in tokens(sql))
     ctes = {m.group(1).lower() for m in _CTE_RE.finditer(text)}
     allowed = {n.lower() for n in layer.graph.models} | ctes | {"metrics"}
     out: set[str] = set()

@@ -37,23 +37,10 @@ def pg_type_for_metric(agg: str | None) -> str:
 
 def get_catalog_metadata(
     graph, schema: str = "public", enforce_visibility: bool = False,
-    lock=None,
 ) -> dict:
     """Export the graph as information_schema-shaped row dicts
     (ref ``core/catalog.py:69``): ``tables``, ``columns``,
-    ``constraints``, ``key_column_usage``.
-
-    ``lock``: the owning rewriter's compile lock, when available — a
-    catalog export that races a mid-rewrite compile must not observe
-    ephemeral ad-hoc bridge models. Per-query ``__adhoc_*`` metrics and
-    ``expr_dim_*`` dimensions are filtered unconditionally (the once-
-    registered ``__adhoc_count`` persists on the model by design but is
-    never a user-facing column)."""
-    if lock is not None:
-        with lock:
-            return get_catalog_metadata(
-                graph, schema=schema, enforce_visibility=enforce_visibility
-            )
+    ``constraints``, ``key_column_usage``."""
     tables: list[dict] = []
     columns: list[dict] = []
     constraints: list[dict] = []
@@ -126,8 +113,6 @@ def get_catalog_metadata(
             })
 
         for dim in model.dimensions:
-            if dim.name.startswith(("__adhoc_", "expr_dim_")):
-                continue
             if enforce_visibility and not dim.public:
                 continue
             add_col(
@@ -138,8 +123,6 @@ def get_catalog_metadata(
                 label=dim.label,
             )
         for metric in model.metrics:
-            if metric.name.startswith(("__adhoc_", "expr_dim_")):
-                continue
             if enforce_visibility and not metric.public:
                 continue
             add_col(

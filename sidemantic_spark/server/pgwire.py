@@ -234,11 +234,9 @@ class PgWireServer:
         from sidemantic_spark.server.catalog import get_catalog_metadata
 
         con = duckdb.connect(":memory:")
-        _rw = getattr(self.layer, "_rewriter", None)
         meta = get_catalog_metadata(
             self.layer.graph,
             enforce_visibility=getattr(self.layer, "enforce_visibility", True),
-            lock=_rw._compile_lock if _rw is not None else None,
         )
         con.execute("CREATE SCHEMA meta")
         for name, rows in meta.items():

@@ -2,9 +2,10 @@
 
 The reference parses SQL with sqlglot (``sql/fragment.py:1-16``);
 sqlglot is not available here, so every module that reads SQL text goes
-through ``tokens``, one scan that knows the SQL token kinds:
-single-quoted string literals with ``''`` escapes, double-quoted and
-backtick-quoted identifiers with doubled-quote escapes, ``--`` line
+through ``tokens``, one scan that knows the SQL token kinds as Spark
+reads them: single-quoted string literals and double-quoted names with
+doubled-quote and backslash escapes (``'it\\'s'`` is one literal),
+backtick-quoted identifiers with doubled-backtick escapes, ``--`` line
 comments, ``/* */`` block comments, and bracket depth. On top of it:
 
 - ``split_top`` / ``split_items``: split at a top-level keyword or
@@ -43,8 +44,8 @@ REF_RE = re.compile(
 
 # an unterminated literal, identifier or block comment runs to the end
 _TOKEN_RE = re.compile(
-    r"'(?:[^']|'')*'?"
-    r'|"(?:[^"]|"")*"?'
+    r"'(?:[^'\\]|\\.?|'')*'?"
+    r'|"(?:[^"\\]|\\.?|"")*"?'
     r"|`(?:[^`]|``)*`?"
     r"|--[^\n]*"
     r"|/\*.*?(?:\*/|\Z)"

@@ -165,10 +165,9 @@ COMPILE_CACHE_MAX = 512
 
 
 class CompileCache(dict):
-    """FIFO-bounded compile cache. Every key starts with
-    ``SqlGenerator.state_key()``, so its first element is the graph
-    generation the entry was compiled at. Writes take a lock: server
-    threads compile concurrently, and eviction is check-then-act."""
+    """FIFO-bounded compile cache; every key starts with
+    ``SqlGenerator.state_key()``. Writes take a lock: server threads
+    compile concurrently, and eviction is check-then-act."""
 
     def __init__(self) -> None:
         super().__init__()
@@ -180,12 +179,6 @@ class CompileCache(dict):
                 del self[next(iter(self))]
             self[key] = value
         return value
-
-    def drop_after(self, generation: int) -> None:
-        """Drop the entries compiled at a generation above ``generation``."""
-        with self._lock:
-            for k in [k for k in self if k[0] > generation]:
-                del self[k]
 
 
 class SqlGenerator:
@@ -264,14 +257,6 @@ class SqlGenerator:
             self.allow_non_additive_unsafe,
             self.enforce_visibility,
         )
-
-    def rewind_generation(self, generation: int) -> None:
-        """Set the graph generation back to ``generation`` after a burst
-        of graph edits that left the graph as it was, dropping the cache
-        entries compiled in between: their generation numbers will be
-        reused for different graph states."""
-        self._cache.drop_after(generation)
-        self.graph.generation = generation
 
     def _cache_key(self, spec: QuerySpec):
         # every spec field, so a new field can never be left out

@@ -13,14 +13,22 @@ sqlglot is unavailable here, so parsing is a quote/paren-aware clause
 splitter over the supported semantic-SQL surface. Unsupported SQL
 raises with a pointer to the structured API; arbitrary warehouse SQL
 should go straight to ``spark.sql``.
+
+A rewrite is request-scoped, so concurrent clients can share one
+rewriter. Each call compiles on its own copy of the rewriter. Fields the
+query needs but the graph lacks (``COUNT(*)``, an aggregate over a raw
+column, a function of a dimension, a raw table in a JOIN) go into a
+request-local fork of the graph, never into the shared one.
 """
 
 from __future__ import annotations
 
+import copy
 import dataclasses
 import re
 from dataclasses import dataclass, field
 
+from sidemantic_spark.core.model import Dimension, Metric, Model, Relationship
 from sidemantic_spark.preagg.matcher import grain_derivable
 from sidemantic_spark.sql.fragments import (
     LITERALS,
@@ -224,6 +232,45 @@ class _InnerParse:
         return {out: (kind, ref) for out, kind, ref, _a in self.entries}
 
 
+# an ORDER BY item that is one double-quoted name, with its direction
+_QUOTED_ORDER_RE = re.compile(
+    r'("(?:[^"\\]|\\.|"")+")(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?',
+    re.I,
+)
+
+
+def _peel_clauses(select_list: str, tail: str) -> tuple[str, dict[str, str]]:
+    """Split the text after FROM into what precedes its clauses and
+    ``{keyword: clause text}``, peeled right-to-left so earlier splits
+    don't eat later keywords. A double-quoted ORDER BY item names an
+    output column of ``select_list``, as DuckDB and Postgres read it
+    (Spark would sort by a string constant); one that names none
+    raises."""
+    clause_vals: dict[str, str] = {}
+    for kw in reversed(_CLAUSES):
+        parts = split_top(tail, kw)
+        if len(parts) > 1:
+            clause_vals[kw] = parts[-1].strip()
+            tail = parts[0]
+    order = split_items(clause_vals.get("ORDER BY", ""))
+    quoted = [_QUOTED_ORDER_RE.fullmatch(o) for o in order]
+    if any(quoted):
+        names = {}
+        for item in split_items(select_list):
+            expr, alias = split_alias(item)
+            name = alias or expr.rpartition(".")[2]
+            names[name.strip("`").replace("``", "`").lower()] = name
+        for i, m in enumerate(quoted):
+            if m:
+                name = names.get(m.group(1)[1:-1].replace('""', '"').lower())
+                if name is None:
+                    raise QueryCompileError(
+                        f"ORDER BY {m.group(1)} names no output column")
+                order[i] = name + order[i][m.end(1):]
+        clause_vals["ORDER BY"] = ", ".join(order)
+    return tail, clause_vals
+
+
 def _out_name(kind: str, full_ref: str, alias: str | None) -> str:
     if alias:
         return alias
@@ -234,37 +281,10 @@ class SemanticSqlRewriter:
     def __init__(self, layer) -> None:
         self.layer = layer
         self._cache = CompileCache()
-        # generation bumps caused by ephemeral register/cleanup this
-        # compile; cancelled in rewrite()'s finally so the compile
-        # caches stay hot across ad-hoc/expr-dim queries
-        self._eph_gen_bumps = 0
-        self._applied_rules: list[str] = []
-        self._rejected_rules: list[str] = []
-        self._pushed_filters: list[str] = []
         # benchmark/debug escape hatch: False keeps wrapper queries on
         # the naive island-only rewrite (wrapper executed verbatim), the
         # baseline the reference's planner benchmark compares against
         self.wrapper_rules_enabled = True
-        # the request's user and modes, stamped onto every
-        # compiled QuerySpec so transport SQL (pgwire/HTTP/MCP) gets the
-        # row policies of the structured API (ref tests/test_mcp_security.py)
-        self._request: dict = {}
-        # one compile at a time: the threaded HTTP/pgwire servers share
-        # this rewriter, and _request is per-compile state — without the
-        # lock, thread B's user could be stamped onto thread A's spec
-        # (cross-user row scoping) and cached under A's key forever
-        import threading
-
-        self._compile_lock = threading.RLock()
-        # (model, dim_name) pairs registered by _register_expr_dims
-        # during the current rewrite(); removed in its finally block
-        self._ephemeral_dims: list = []
-        # ad-hoc models auto-registered for plain catalog tables named
-        # in explicit joins; removed in rewrite()'s finally block
-        self._ephemeral_models: list[str] = []
-        # (model, metric_name) ad-hoc aggregate metrics registered for
-        # the current rewrite(); removed in its finally block
-        self._ephemeral_metrics: list = []
 
     # -- public -------------------------------------------------------
 
@@ -272,101 +292,47 @@ class SemanticSqlRewriter:
                 use_preaggs: bool = True, preagg_strict: bool = False) -> str:
         """Semantic SQL text -> executable Spark SQL, every semantic
         island compiled with ``user`` and the per-request modes."""
+        return self._rewrite(sql, user, use_preaggs, preagg_strict)[0]
+
+    def _rewrite(self, sql: str, user: dict | None = None,
+                 use_preaggs: bool = True, preagg_strict: bool = False) -> tuple:
+        """``(compiled SQL, applied rules, rejected rules, pushed
+        filters)`` of one request. The request compiles on its own
+        shallow copy of this rewriter, which shares only the cache: its
+        user, modes, rule lists and graph are its own, so concurrent
+        clients never see each other's state."""
         request = dict(user=user, use_preaggs=use_preaggs,
                        preagg_strict=preagg_strict)
-        gen = self.layer.generator
-        with self._compile_lock:
-            key = gen.state_key() + (self.wrapper_rules_enabled, sql,
-                                     *map(_key_part, request.values()))
-            self._request = request
-            self._eph_gen_bumps = 0
-            gen0 = self.layer.graph.generation
-            try:
-                hit = self._cache.get(key)
-                if hit is not None:
-                    (out, self._applied_rules, self._rejected_rules,
-                     self._pushed_filters) = hit
-                    return out
-                self._applied_rules = []
-                self._rejected_rules = []
-                self._pushed_filters = []
-                out = self._rewrite_node(
-                    _yardstick_normalize(
-                        _normalize_cast_types(
-                            _normalize_compound_keywords(_strip(sql))
-                        )
-                    )
+        key = self.layer.generator.state_key() + (
+            self.wrapper_rules_enabled, sql, *map(_key_part, request.values()))
+        hit = self._cache.get(key)
+        if hit is not None:
+            return hit
+        req = copy.copy(self)
+        # the user and modes are stamped onto every compiled QuerySpec,
+        # so transport SQL (pgwire/HTTP/MCP) gets the row policies of the
+        # structured API (ref tests/test_mcp_security.py)
+        req._request = request
+        # the shared graph until the first ad-hoc field forks it (_own)
+        req.graph, req.generator = self.layer.graph, self.layer.generator
+        req._applied_rules, req._rejected_rules, req._pushed_filters = [], [], []
+        req._inner_join_models, req._extra_scope = [], []
+        out = req._rewrite_node(
+            _yardstick_normalize(
+                _normalize_cast_types(
+                    _normalize_compound_keywords(_strip(sql))
                 )
-                self._cache.put(key, (
-                    out, list(self._applied_rules),
-                    list(self._rejected_rules),
-                    list(self._pushed_filters),
-                ))
-                return out
-            finally:
-                self._request = {}
-                if self._ephemeral_models:
-                    for name in self._ephemeral_models:
-                        self.layer.graph.models.pop(name, None)
-                    self._ephemeral_models = []
-                    self.layer.graph._invalidate()
-                    self._eph_gen_bumps += 1
-                if self._ephemeral_metrics:
-                    for model, name in self._ephemeral_metrics:
-                        mobj = model.metric(name)
-                        if mobj is not None:
-                            model.metrics.remove(mobj)
-                            model.reindex()
-                    self._ephemeral_metrics = []
-                    self.layer.graph._invalidate()
-                    self._eph_gen_bumps += 1
-                if self._ephemeral_dims:
-                    # drop the ad-hoc expression dimensions registered
-                    # during this compile: they must not outlive the
-                    # query (SELECT * expansion, adapter export)
-                    touched = set()
-                    for model, name in self._ephemeral_dims:
-                        d = model.dimension(name)
-                        if d is not None:
-                            model.dimensions.remove(d)
-                            touched.add(id(model))
-                            model.reindex()
-                    self._ephemeral_dims = []
-                    if touched:
-                        self.layer.graph._invalidate()
-                        self._eph_gen_bumps += 1
-                if self._eph_gen_bumps:
-                    # ephemeral register+cleanup is a net no-op on graph
-                    # state, so its generation bumps must not outlive the
-                    # compile: otherwise every expr-dim/ad-hoc query
-                    # permanently shifts the generation and the compile
-                    # caches (keyed on it) never hit again. RESTORE (to
-                    # the snapshot) only when the whole delta is
-                    # ephemeral: generation value gen0 is then reused for
-                    # the IDENTICAL graph state. If a persistent mutation
-                    # interleaved (__adhoc_count, inferred m2m bridge),
-                    # leave the counter alone — decrementing would land a
-                    # DIFFERENT state on a previously-cached generation
-                    # value (ABA; round-10 review finding). The rare
-                    # persistent-mutation compile costs one cache
-                    # generation, which is correct.
-                    if (
-                        self.layer.graph.generation - gen0
-                        == self._eph_gen_bumps
-                    ):
-                        gen.rewind_generation(gen0)
-                    self._eph_gen_bumps = 0
+            )
+        )
+        return self._cache.put(key, (
+            out, tuple(req._applied_rules), tuple(req._rejected_rules),
+            tuple(req._pushed_filters),
+        ))
 
     def explain(self, sql: str) -> dict:
         """Rewrite plan summary (reference's RewriteExplanation:
         chosen plan + applied/rejected optimization rules)."""
-        with self._compile_lock:
-            # hold the lock across compile + rule-list read so a
-            # concurrent transport compile can't swap the rule lists
-            return self._explain_locked(sql)
-
-    def _explain_locked(self, sql: str) -> dict:
-        compiled = self.rewrite(sql)
+        compiled, applied, rejected, pushed = self._rewrite(sql)
         header = read_header(compiled.splitlines()[0] if compiled else "")
         models = header.get("models", "")
         # post-process: a compiled island whose instrumentation header
@@ -384,12 +350,12 @@ class SemanticSqlRewriter:
             "models": models.split(",") if models else [],
             # the rollup's physical name, as explain_plan reports it
             "used_preagg": header.get("used_preagg"),
-            "applied_rules": list(self._applied_rules),
-            "rejected_rules": list(self._rejected_rules),
+            "applied_rules": list(applied),
+            "rejected_rules": list(rejected),
             # reference RewriteExplanation parity (r11): which outer
             # predicates were folded into the semantic spec, whether a
             # wrapper survives as post-process, and the FROM source
-            "pushed_filters": list(self._pushed_filters),
+            "pushed_filters": list(pushed),
             "post_process": post_process,
             "source_kind": (
                 "metrics"
@@ -403,8 +369,36 @@ class SemanticSqlRewriter:
     def _generate(self, spec):
         # stamp the request onto every compiled spec so access checks,
         # row policies and modes apply exactly as in layer.query(...)
-        return self.layer.generator.generate(dataclasses.replace(spec, **self._request))
+        return self.generator.generate(dataclasses.replace(spec, **self._request))
 
+    def _own(self, model: Model) -> None:
+        """Put ``model`` (an ad-hoc model, or a request copy of a model
+        gaining an ad-hoc field) into this request's graph. The first
+        call forks the shared graph: a new ``models`` dict and join-path
+        caches, compiled by a copy of the shared generator (its flags)
+        with an empty cache. The shared graph is never written."""
+        if self.graph is self.layer.graph:
+            graph = copy.copy(self.graph)
+            graph.models, graph._path_cache = dict(graph.models), {}
+            gen = copy.copy(self.generator)
+            gen.graph, gen._cache = graph, CompileCache()
+            self.graph, self.generator = graph, gen
+        self.graph.models[model.name] = model
+        self.graph._invalidate()
+
+    def _add_field(self, model_name: str, kind: str, item) -> None:
+        """Add ``item`` to the ``kind`` list (``metrics``, ``dimensions``
+        or ``relationships``) of this request's copy of ``model_name``,
+        unless a field of that name is already there."""
+        model = copy.copy(self.graph.get_model(model_name))
+        if all(x.name != item.name for x in getattr(model, kind)):
+            setattr(model, kind, [*getattr(model, kind), item])
+            model.reindex()
+            self._own(model)
+
+    def _adhoc_models(self) -> set:
+        """Models this request added: raw tables named in explicit joins."""
+        return self.graph.models.keys() - self.layer.graph.models.keys()
 
     def _rewrite_node(self, sql: str) -> str:
         # CTAS / INSERT ... SELECT: the DDL/DML prefix passes through and
@@ -476,7 +470,7 @@ class SemanticSqlRewriter:
         # island sat inside a CTE body and shipped to Spark raw)
         if m.group(1).lower() == "metrics":
             return True
-        return m.group(1) in self.layer.graph.models
+        return m.group(1) in self.graph.models
 
     def _has_semantic_island(
         self, text: str, shadowed: set[str] | None = None
@@ -655,19 +649,13 @@ class SemanticSqlRewriter:
         if len(from_parts) != 2:
             return None
         select_list = from_parts[0].strip()
-        clause_vals: dict[str, str] = {}
-        cur = from_parts[1]
-        for kw in reversed(_CLAUSES):
-            parts = split_top(cur, kw)
-            if len(parts) > 1:
-                clause_vals[kw] = parts[-1].strip()
-                cur = parts[0]
+        cur, clause_vals = _peel_clauses(select_list, from_parts[1])
         base = cur.strip()
         if "QUALIFY" in clause_vals:
             return None
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", base):
             return None
-        if base not in self.layer.graph.models:
+        if base not in self.graph.models:
             return None
         out = _InnerParse(base=base, clause_vals=clause_vals, distinct=distinct)
         seen: set[str] = set()
@@ -759,14 +747,7 @@ class SemanticSqlRewriter:
         if end is None:
             return None
         inner_sql = tail[1:end].strip()
-        remainder = tail[end + 1 :]
-        clause_vals: dict[str, str] = {}
-        cur = remainder
-        for kw in reversed(_CLAUSES):
-            parts = split_top(cur, kw)
-            if len(parts) > 1:
-                clause_vals[kw] = parts[-1].strip()
-                cur = parts[0]
+        cur, clause_vals = _peel_clauses(outer_list, tail[end + 1:])
         between = cur.strip()
         # only an optional subquery alias may sit between ) and clauses
         # (quoted forms included: PowerQuery emits `AS "_"`)
@@ -795,7 +776,7 @@ class SemanticSqlRewriter:
         # / `ORDER BY sq.total_revenue`)
         if alias_m is not None:
             alias = next(g for g in alias_m.groups() if g)
-            known = {m.lower() for m in self.layer.graph.models}
+            known = {m.lower() for m in self.graph.models}
             if alias.lower() not in known:
                 dq_re = re.compile(
                     r'(?<![\w.])["`]?%s["`]?\s*\.\s*'
@@ -1143,7 +1124,7 @@ class SemanticSqlRewriter:
         if inner.clause_vals.get("LIMIT") or inner.clause_vals.get("OFFSET"):
             return None
         colmap = inner.colmap
-        graph = self.layer.graph
+        graph = self.graph
         dims: list[str] = []
         metrics: list[str] = []
         saw_agg = False
@@ -1375,17 +1356,7 @@ class SemanticSqlRewriter:
                 return fromless
             raise QueryCompileError("semantic SQL needs a FROM clause")
         select_list = from_parts[0].strip()
-        tail = "FROM".join(from_parts[1:]) if False else from_parts[1]
-
-        clause_vals: dict[str, str] = {}
-        cur = tail
-        # peel clauses right-to-left so earlier splits don't eat later
-        # keywords
-        for kw in reversed(_CLAUSES):
-            parts = split_top(cur, kw)
-            if len(parts) > 1:
-                clause_vals[kw] = parts[-1].strip()
-                cur = parts[0]
+        cur, clause_vals = _peel_clauses(select_list, from_parts[1])
         from_clause = cur.strip()
 
         if re.search(r"\bJOIN\b", from_clause, re.I):
@@ -1425,9 +1396,9 @@ class SemanticSqlRewriter:
 
             def strip_alias(m: re.Match) -> str:
                 prefix, model_name, alias_name = m.group(1), m.group(2), m.group(3)
-                if (model_name in self.layer.graph.models
+                if (model_name in self.graph.models
                         and alias_name.upper() not in _JOIN_KEYWORDS
-                        and alias_name not in self.layer.graph.models):
+                        and alias_name not in self.graph.models):
                     alias_map[alias_name] = model_name
                     return prefix + model_name
                 return m.group(0)
@@ -1460,7 +1431,7 @@ class SemanticSqlRewriter:
         elif (am := re.fullmatch(
             r"([A-Za-z_][A-Za-z0-9_]*)\s+(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)",
             from_clause, re.I,
-        )) and am.group(1) in self.layer.graph.models:
+        )) and am.group(1) in self.graph.models:
             # FROM model [AS] alias: alias-qualified refs rebind to the
             # model (ref corpus measures.test table-alias family)
             base_model, alias_name = am.group(1), am.group(2)
@@ -1477,7 +1448,7 @@ class SemanticSqlRewriter:
             )
         else:
             base_model = from_clause
-        graph = self.layer.graph
+        graph = self.graph
         items = split_items(select_list)
         if base_model not in graph.models and base_model.lower() == "metrics":
             # `FROM metrics` virtual catalog table (reference
@@ -1507,17 +1478,13 @@ class SemanticSqlRewriter:
             items = expanded
 
         # ad-hoc COUNT(*) = a count metric of the base model (reference
-        # test_ad_hoc_count_aggregation); registered once, hidden name
+        # test_ad_hoc_count_aggregation), hidden name
         out_items: list[str] = []
         for it in items:
             ref, alias = split_alias(it)
             if re.fullmatch(r"COUNT\s*\(\s*\*\s*\)", ref.strip(), re.IGNORECASE):
-                if model.metric("__adhoc_count") is None:
-                    from sidemantic_spark.core.model import Metric as _Metric
-
-                    model.metrics.append(_Metric(name="__adhoc_count", agg="count"))
-                    model.reindex()
-                    graph._invalidate()
+                self._add_field(base_model, "metrics",
+                                Metric(name="__adhoc_count", agg="count"))
                 out_items.append(f"{base_model}.__adhoc_count AS {alias or 'count'}")
                 continue
             # ad-hoc aggregate over a dimension column (`AVG(c.custAge)`
@@ -1534,8 +1501,8 @@ class SemanticSqlRewriter:
                 if tgt is None:
                     # ad hoc aggregate over a RAW (undeclared) column —
                     # `SUM(orders.amount)` without a predefined metric
-                    # (ref test_sql_rewriter.py:661): register an
-                    # ephemeral metric on the BASE model. Targeting a
+                    # (ref test_sql_rewriter.py:661): a request-local
+                    # metric on the BASE model. Targeting a
                     # joined model fails early (ref :689) — its CTE
                     # would not carry the raw column.
                     inner = am.group(2)
@@ -1586,18 +1553,8 @@ class SemanticSqlRewriter:
                                 )
                         fn = am.group(1).lower()
                         mname = f"__adhoc_{fn}_{col}"
-                        if model.metric(mname) is None:
-                            from sidemantic_spark.core.model import (
-                                Metric as _Metric,
-                            )
-
-                            model.metrics.append(
-                                _Metric(name=mname, agg=fn, sql=col)
-                            )
-                            model.reindex()
-                            graph._invalidate()
-                            self._eph_gen_bumps += 1
-                            self._ephemeral_metrics.append((model, mname))
+                        self._add_field(base_model, "metrics",
+                                        Metric(name=mname, agg=fn, sql=col))
                         out_items.append(
                             f"{base_model}.{mname} AS {alias or f'{fn}_{col}'}"
                         )
@@ -1607,19 +1564,11 @@ class SemanticSqlRewriter:
                     dfield = dfield.split("__", 1)[0]
                     fn = am.group(1).lower()
                     mname = f"__adhoc_{fn}_{dfield}"
-                    owner = graph.get_model(dmodel)
-                    if owner.metric(mname) is None:
-                        from sidemantic_spark.core.model import Metric as _Metric
-
-                        dim_obj = owner.dimension(dfield)
-                        owner.metrics.append(_Metric(
-                            name=mname, agg=fn,
-                            sql=(dim_obj.sql or dfield) if dim_obj else dfield,
-                        ))
-                        owner.reindex()
-                        graph._invalidate()
-                        self._eph_gen_bumps += 1
-                        self._ephemeral_metrics.append((owner, mname))
+                    dim_obj = graph.get_model(dmodel).dimension(dfield)
+                    self._add_field(dmodel, "metrics", Metric(
+                        name=mname, agg=fn,
+                        sql=(dim_obj.sql or dfield) if dim_obj else dfield,
+                    ))
                     out_items.append(
                         f"{dmodel}.{mname} AS {alias or f'{fn}_{dfield}'}"
                     )
@@ -1757,7 +1706,7 @@ class SemanticSqlRewriter:
         model-qualified name, plus graph-level metrics by bare name.
         SELECT * and bare field names are rejected — no base model
         scopes them."""
-        graph = self.layer.graph
+        graph = self.graph
         metrics: list[str] = []
         dimensions: list[str] = []
         for item in items:
@@ -2356,16 +2305,14 @@ class SemanticSqlRewriter:
             # corpus measures.test cross-view join): the measure's
             # context grain is what its fact can express; the join back
             # then repeats the value across the private dim's values.
-            # Ephemeral ad-hoc join tables don't count as reach — a
+            # Ad-hoc join tables don't count as reach — a
             # measure view joined through a plain table keeps its OWN
             # context (the paper Listing-9 semantics: avgAge is the
             # same for every prodName group), it does not inherit the
             # bridge's grouping.
             mm_model = full_metric.split(".", 1)[0]
-            reach = self.layer.generator._reachable_from(mm_model) - set(
-                self._ephemeral_models
-            )
-            mm_obj = self.layer.graph.get_model(mm_model)
+            reach = self.generator._reachable_from(mm_model) - self._adhoc_models()
+            mm_obj = self.graph.get_model(mm_model)
 
             def _ctx_ok(full_dim: str) -> bool:
                 dmodel, dfield = dim_base(full_dim).split(".", 1)
@@ -2492,7 +2439,7 @@ class SemanticSqlRewriter:
                 "QUALIFY is not supported on expression selects; move the "
                 "expression into a wrapper query"
             )
-        graph = self.layer.graph
+        graph = self.graph
         inner_metrics: list[str] = []
         inner_dims: list[str] = []
         seen: set[str] = set()
@@ -2579,19 +2526,17 @@ class SemanticSqlRewriter:
         return out
 
     def _register_adhoc_join_tables(self, from_clause: str) -> None:
-        """Plain catalog tables named in an explicit JOIN become
-        ephemeral ad-hoc models (every column a dimension) so a query
-        can join a raw table against a measure view (ref corpus
-        measures.test qualified-join family). The model lives only for
-        this compile — rewrite()'s finally block removes it."""
+        """Plain catalog tables named in an explicit JOIN become ad-hoc
+        models of this request's graph (every column a dimension) so a
+        query can join a raw table against a measure view (ref corpus
+        measures.test qualified-join family)."""
         spark = getattr(self.layer, "spark", None)
         if spark is None:
             return
-        graph = self.layer.graph
         for t in re.findall(
             r"(?:^\s*|\bJOIN\s+)([A-Za-z_]\w*)", from_clause, re.I
         ):
-            if t in graph.models or t.upper() in _JOIN_KEYWORDS:
+            if t in self.graph.models or t.upper() in _JOIN_KEYWORDS:
                 continue
             from pyspark.errors import AnalysisException, ParseException
 
@@ -2599,15 +2544,18 @@ class SemanticSqlRewriter:
                 cols = spark.sql(f"SELECT * FROM {t} WHERE 1=0").columns
             except (AnalysisException, ParseException):
                 continue  # not a readable table: let validation raise
-            from sidemantic_spark.core.model import Dimension as _D
-            from sidemantic_spark.core.model import Model as _M
-
-            self.layer.add_model(_M(
-                name=t, table=t, primary_key=cols[0],
-                dimensions=[_D(name=c) for c in cols],
-            ))
-            self._ephemeral_models.append(t)
-            self._eph_gen_bumps += 1  # add_model invalidated once
+            # built around Model.__post_init__: inside `with layer:` it
+            # registers every new Model on the shared graph
+            model = object.__new__(Model)
+            for f in dataclasses.fields(Model):
+                setattr(model, f.name, f.default
+                        if f.default_factory is dataclasses.MISSING
+                        else f.default_factory())
+            model.name = model.table = t
+            model.primary_key = cols[0]
+            model.dimensions = [Dimension(name=c) for c in cols]
+            model.reindex()
+            self._own(model)
 
     def _validate_explicit_joins(self, from_clause: str) -> str:
         """``model [LEFT|INNER] JOIN other ON a.x = b.y [...]`` — every ON
@@ -2615,7 +2563,7 @@ class SemanticSqlRewriter:
         explicit-join validation ``sql/query_rewriter.py:5568-5707``).
         Returns the base model name; the generator rebuilds the joins
         from the graph, so validation is the only job here."""
-        graph = self.layer.graph
+        graph = self.graph
         joins = list(re.finditer(
             r"\b(LEFT\s+(?:OUTER\s+)?|INNER\s+|FULL\s+(?:OUTER\s+)?)?JOIN\b",
             from_clause, flags=re.I,
@@ -2669,7 +2617,7 @@ class SemanticSqlRewriter:
                     and tgt_model.dimension(b_col) is not None
                     for a_m, a_col, _b_m, b_col in pairs
                 )
-                # an ephemeral ad-hoc bridge beats the conformed
+                # an ad-hoc table bridge beats the conformed
                 # interpretation: a plain table carries no measures, so
                 # a multi-fact FULL OUTER split has nothing to split —
                 # the graph join (entity-grain fan-out handling) is the
@@ -2685,17 +2633,17 @@ class SemanticSqlRewriter:
         return base_model
 
     def _hook_adhoc_bridge(self, pairs: list, target: str) -> bool:
-        """When one side of an unmatched explicit join is an ephemeral
-        ad-hoc table model, wire a many_to_one relationship from the
-        bridge onto the measure view's pk for this compile — the
+        """When one side of an unmatched explicit join is an ad-hoc
+        table model, wire a many_to_one relationship from the bridge
+        onto the measure view's pk for this request — the
         graph's fan-out machinery then evaluates the view's measures at
         entity grain (AVG over DISTINCT joined entities, the reference
         corpus qualified-join semantics), not over duplicated join
         rows."""
-        eph = set(self._ephemeral_models)
+        eph = self._adhoc_models()
         if not pairs or not eph:
             return False
-        graph = self.layer.graph
+        graph = self.graph
         sides = {m for a_m, _ac, b_m, _bc in pairs for m in (a_m, b_m)}
         bridges = sides & eph
         others = sides - eph
@@ -2714,18 +2662,14 @@ class SemanticSqlRewriter:
                 return False
         if pks != graph.get_model(other).pk_list():
             return False
-        from sidemantic_spark.core.model import Relationship as _R
-
-        bridge_model = graph.get_model(bridge)
-        bridge_model.relationships.append(_R(
+        self._add_field(bridge, "relationships", Relationship(
             name=other, type="many_to_one",
             foreign_key=fks[0] if len(fks) == 1 else fks,
         ))
-        graph._invalidate()
         return True
 
     def _join_matches_graph(self, seen: set, target: str, pairs: list) -> bool:
-        graph = self.layer.graph
+        graph = self.graph
         for src in seen:
             src_model = graph.get_model(src)
             tgt_model = graph.get_model(target)
@@ -2793,8 +2737,6 @@ class SemanticSqlRewriter:
         same dimension."""
         import hashlib
 
-        from sidemantic_spark.core.model import Dimension as _Dim
-
         pat = re.compile(
             r"\b(" + "|".join(self._EXPR_DIM_FNS) + r")\s*\(", re.I
         )
@@ -2821,16 +2763,8 @@ class SemanticSqlRewriter:
             sql_expr = re.sub(r"\bARRAY_LENGTH\s*\(", "size(", expr, flags=re.I)
             # no "__" in the name: the grain-suffix convention splits on it
             name = "expr_dim_" + hashlib.md5(expr.encode()).hexdigest()[:8]
-            if model.dimension(name) is None:
-                model.dimensions.append(_Dim(name=name, sql=sql_expr))
-                model.reindex()
-                self.layer.graph._invalidate()
-                self._eph_gen_bumps += 1
-                # per-query scope: rewrite() removes these after compile
-                # so a later SELECT * / export never sees the synthetic
-                # dimension (the compiled SQL inlines the expression and
-                # is self-contained)
-                self._ephemeral_dims.append((model, name))
+            self._add_field(base_model, "dimensions",
+                            Dimension(name=name, sql=sql_expr))
             mapping[expr] = name
         if not mapping:
             return text, clause_vals
@@ -2846,7 +2780,7 @@ class SemanticSqlRewriter:
 
     def _classify_ref(self, ref: str, base_model: str | None) -> tuple[str, str] | None:
         ref = ref.strip()
-        graph = self.layer.graph
+        graph = self.graph
         m = re.fullmatch(
             r"([A-Za-z_][A-Za-z0-9_]*)\.([A-Za-z_][A-Za-z0-9_]*?)(?:__([a-z]+))?",
             ref,
@@ -2867,7 +2801,7 @@ class SemanticSqlRewriter:
             # bare column: resolve against the base model, then any
             # explicitly-joined models (set by _validate_explicit_joins)
             base = ref.split("__", 1)[0]
-            for scope in [base_model] + list(getattr(self, "_extra_scope", [])):
+            for scope in [base_model, *self._extra_scope]:
                 model = graph.get_model(scope)
                 if model.metric(base) is not None:
                     return ("metric", f"{scope}.{ref}")
@@ -2883,7 +2817,7 @@ class SemanticSqlRewriter:
     def _qualify_bare(self, text: str, base_model: str) -> str:
         """Qualify bare field names with the base model so the
         generator's reference machinery sees them."""
-        model = self.layer.graph.get_model(base_model)
+        model = self.graph.get_model(base_model)
         known_fields = {d.name for d in model.dimensions} | {m.name for m in model.metrics}
 
         def sub(m: re.Match) -> str:

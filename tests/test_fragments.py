@@ -35,6 +35,19 @@ def test_split_conjuncts_after_doubled_quote_literal():
     ]
 
 
+def test_backslash_escaped_quote_stays_inside_the_literal():
+    # Spark reads \' as an escaped quote: the literal runs on to the
+    # next quote, so what follows it is code
+    assert [k for _t, k, _d in tokens("s = 'x\\'' OR b")] == [
+        "code", "string", "code",
+    ]
+    assert split_top(
+        "SELECT a FROM t WHERE s = 'it\\'s' ORDER BY a", "ORDER BY"
+    ) == ["SELECT a FROM t WHERE s = 'it\\'s' ", " a"]
+    # an escaped backslash does not escape the closing quote
+    assert split_top("s = 'a\\\\' OR b", "OR") == ["s = 'a\\\\' ", " b"]
+
+
 def test_find_refs_ignores_refs_inside_escaped_literal():
     refs = find_refs(
         "orders.status = 'it''s orders.fake' AND orders.priority = 1",

@@ -452,6 +452,14 @@ def test_transport_gate_recognizes_second_cte(spark):
     assert unrecognized_sources(sql, layer) == []
     assert unrecognized_sources(
         "SELECT * FROM raw_table", layer) == ["raw_table"]
+    # the scan reads literals as Spark does and fails closed on a
+    # quoted table name
+    assert unrecognized_sources(
+        "SELECT 'x\\' FROM raw_table' AS a FROM orders", layer) == []
+    assert unrecognized_sources(
+        "SELECT \"it's\" AS a FROM raw_table", layer) == ["raw_table"]
+    assert unrecognized_sources(
+        'SELECT * FROM "raw_table"', layer) == ["<unparseable SQL>"]
 
 
 def test_row_filter_values_render_as_safe_literals():
@@ -825,6 +833,11 @@ def test_explore_qualifies_relative_filter_and_order_expressions(layer, duck):
         ["EXISTS (SELECT 1 FROM allowed a WHERE a.status = orders.status)"],
         "orders", known,
     ) == {"orders.status"}
+    # Spark reads \' as an escaped quote, so `secret = 1` runs as code
+    # and the allowlist scan must see it
+    assert expression_field_references(
+        ["status = 'x\\'' OR secret = 1 --'"], "orders", {"status", "secret"}
+    ) == {"orders.status", "orders.secret"}
 
     layer.graph.explores.pop("gov_relative", None)
     layer.add_explore(Explore(

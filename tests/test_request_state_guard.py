@@ -8,6 +8,10 @@
 - Session conf writes (``conf.set`` / ``conf.unset``) in the library
   happen only at the set-up sites below. Anything else changes the
   session for every concurrent request.
+- The compiler writes no graph: in the rewriter and the generator,
+  nothing calls ``_invalidate()``, assigns ``.generation`` or appends to
+  or removes from a model's ``metrics`` / ``dimensions`` /
+  ``relationships``, apart from the sites below.
 """
 
 import ast
@@ -30,6 +34,18 @@ CONF_WRITES_ALLOWED = {
     ("sidemantic_spark/streaming/stream_layer.py", "to_memory_sink"):
         "pins the replay's state-store width: Spark has no per-query "
         "width for state stores",
+}
+
+
+COMPILER = ("sidemantic_spark/sql/rewriter.py",
+            "sidemantic_spark/sql/generator.py")
+FIELD_LISTS = {"metrics", "dimensions", "relationships"}
+
+# (file, enclosing function) -> why that site may write a graph
+GRAPH_WRITES_ALLOWED = {
+    ("sidemantic_spark/sql/rewriter.py", "_own"):
+        "writes only the request's fork of the graph, made in the same "
+        "function: ad-hoc fields never reach the shared graph",
 }
 
 
@@ -84,6 +100,55 @@ def _conf_writes(rel: str) -> list[tuple[str, int]]:
 
     visit(_tree(rel), "<module>")
     return out
+
+
+def _graph_writes(rel: str) -> list[tuple[str, int, str]]:
+    """(enclosing function, line, what) of every graph write: an
+    ``_invalidate()`` call, a ``.generation`` assignment, or a list
+    edit on ``<x>.metrics`` / ``.dimensions`` / ``.relationships``."""
+    out = []
+
+    def visit(node, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                f = child.func
+                if f.attr == "_invalidate":
+                    out.append((func, child.lineno, "_invalidate()"))
+                elif (f.attr in ("append", "remove", "insert", "extend", "pop", "clear")
+                        and isinstance(f.value, ast.Attribute)
+                        and f.value.attr in FIELD_LISTS):
+                    out.append((func, child.lineno, f".{f.value.attr}.{f.attr}()"))
+            targets = (child.targets if isinstance(child, ast.Assign)
+                       else [child.target]
+                       if isinstance(child, (ast.AugAssign, ast.AnnAssign))
+                       else [])
+            for t in targets:
+                for sub in ast.walk(t):
+                    if isinstance(sub, ast.Attribute) and sub.attr == "generation":
+                        out.append((func, child.lineno, ".generation ="))
+            visit(child, func)
+
+    visit(_tree(rel), "<module>")
+    return out
+
+
+def test_compiler_writes_no_graph():
+    bad = [
+        f"{rel}:{line} {what} in {func}()"
+        for rel in COMPILER
+        for func, line, what in _graph_writes(rel)
+        if (rel, func) not in GRAPH_WRITES_ALLOWED
+    ]
+    assert bad == []
+
+
+def test_graph_write_allow_list_has_no_stale_entries():
+    live = {(rel, func) for rel in COMPILER
+            for func, _line, _what in _graph_writes(rel)}
+    assert set(GRAPH_WRITES_ALLOWED) <= live
 
 
 def test_no_attribute_assignment_of_request_modes():

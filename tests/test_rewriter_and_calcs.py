@@ -1617,20 +1617,24 @@ def test_rewrite_cache_survives_ephemeral_queries(spark, sf_dir):
         rw._rewrite_node = broken
 
 
-def test_rewrite_persistent_mutations_keep_their_bump(spark, sf_dir):
-    """__adhoc_count is registered once and persists — its generation
-    bump must survive the ephemeral-bump cancellation."""
+def test_count_star_rewrite_leaves_graph_unchanged(spark, sf_dir):
+    """COUNT(*) compiles through a request-local ``__adhoc_count``: the
+    shared model and the graph generation never change, on the first
+    rewrite or a later one."""
     from sidemantic_spark.models.tpch import build_layer
     from sidemantic_spark.sql.rewriter import SemanticSqlRewriter
 
     lyr = build_layer(spark, sf_dir)
     rw = SemanticSqlRewriter(lyr)
-    gen0 = lyr.graph.generation
-    rw.rewrite("SELECT orders.status, COUNT(*) FROM orders")
-    gen1 = lyr.graph.generation
-    assert gen1 == gen0 + 1  # one persistent __adhoc_count registration
-    rw.rewrite("SELECT orders.status, COUNT(*) FROM orders")
-    assert lyr.graph.generation == gen1  # already registered: no drift
+    orders = lyr.graph.get_model("orders")
+    gen0, metrics = lyr.graph.generation, list(orders.metrics)
+    for tail in ("", " LIMIT 5"):
+        out = rw.rewrite("SELECT orders.status, COUNT(*) FROM orders" + tail)
+        assert "__adhoc_count" in out
+        assert lyr.graph.generation == gen0
+        assert lyr.graph.get_model("orders") is orders
+        assert orders.metrics == metrics
+        assert orders.metric("__adhoc_count") is None
 
 
 def test_rewrite_cache_is_bounded(spark, sf_dir, monkeypatch):
@@ -1672,8 +1676,7 @@ def test_generator_cache_is_bounded(spark, sf_dir, monkeypatch):
 
 def test_compile_cache_concurrent_writes_stay_bounded(monkeypatch):
     """Server threads share the compile caches: concurrent puts past the
-    bound and generation rewinds never raise and never leave more
-    entries than the bound."""
+    bound never raise and never leave more entries than the bound."""
     import sys
     import threading
 
@@ -1687,8 +1690,6 @@ def test_compile_cache_concurrent_writes_stay_bounded(monkeypatch):
         try:
             for i in range(2000):
                 cache.put((i % 5, worker, i), i)
-                if worker == 0 and i % 50 == 0:
-                    cache.drop_after(2)
         except Exception as exc:  # noqa: BLE001 - any raise is the failure
             errors.append(exc)
 
@@ -1775,13 +1776,13 @@ def test_curly_refs_in_string_literals_preserved():
 
 def test_catalog_hides_adhoc_artifacts(spark, sf_dir):
     """ADVICE r9: catalog export must never list __adhoc_* metrics or
-    expr_dim_* dimensions (including the persistent __adhoc_count)."""
+    expr_dim_* dimensions."""
     from sidemantic_spark.models.tpch import build_layer
 
     lyr = build_layer(spark, sf_dir)
-    # force the persistent __adhoc_count onto the orders model
+    # the COUNT(*) compile's __adhoc_count lives in its request only
     lyr.sql("SELECT orders.status, COUNT(*) FROM orders").collect()
-    assert lyr.graph.get_model("orders").metric("__adhoc_count") is not None
+    assert lyr.graph.get_model("orders").metric("__adhoc_count") is None
     meta = lyr.get_catalog_metadata()
     names = [c["column_name"] for c in meta["columns"]]
     assert not any(n.startswith("__adhoc_") for n in names)
@@ -1831,25 +1832,29 @@ def test_alias_shadowing_is_span_scoped():
     assert ("orders", "x", None) in refs_all
 
 
-def test_generation_restore_skips_persistent_mutations(spark, sf_dir):
-    """If a persistent mutation interleaves with ephemeral
-    registrations, the generation counter must NOT rewind (ABA guard);
-    ephemeral-only compiles still restore, purging transient generator
-    cache entries."""
+def test_adhoc_rewrites_never_move_the_generation(spark, sf_dir):
+    """An expression dimension alone, or with COUNT(*) in the same
+    query: the generation never moves, the orders model never changes,
+    and the shared generator caches nothing compiled over the request's
+    graph."""
     from sidemantic_spark.models.tpch import build_layer
     from sidemantic_spark.sql.rewriter import SemanticSqlRewriter
 
     lyr = build_layer(spark, sf_dir)
     rw = SemanticSqlRewriter(lyr)
-    gen0 = lyr.graph.generation
-    rw.rewrite("SELECT MONTH(orders.order_date) AS m, orders.revenue FROM orders")
-    assert lyr.graph.generation == gen0
-    # no generator-cache entry may survive keyed beyond the live counter
-    assert not [k for k in lyr.generator._cache if k[0] > lyr.graph.generation]
-    # persistent mutation interleaved (COUNT(*) registers __adhoc_count)
-    # alongside an ephemeral expr-dim: no rewind below the new state
-    rw.rewrite("SELECT MONTH(orders.order_date) AS m2, COUNT(*) FROM orders")
-    assert lyr.graph.generation > gen0
+    orders = lyr.graph.get_model("orders")
+
+    def state():
+        return (lyr.graph.generation, list(orders.dimensions),
+                list(orders.metrics), dict(lyr.generator._cache))
+
+    before = state()
+    out = rw.rewrite("SELECT MONTH(order_date) AS m, orders.revenue FROM orders")
+    assert "expr_dim_" in out
+    assert state() == before
+    out = rw.rewrite("SELECT MONTH(order_date) AS m2, COUNT(*) FROM orders")
+    assert "expr_dim_" in out and "__adhoc_count" in out
+    assert state() == before
 
 
 def test_alias_shadowing_nested_and_toplevel_scopes():
@@ -2077,3 +2082,149 @@ def test_quoted_alias_property(layer, duck, name, quote, field):
         f"SELECT {cols[field]} AS {duck_alias}, {cols[other]} AS {other} "
         "FROM orders GROUP BY o_orderstatus",
     )
+
+
+# -- a rewrite writes nothing shared -----------------------------------
+
+
+@pytest.fixture()
+def adhoc_layer(spark, sf_dir):
+    """The TPC-H layer plus a measure view and a raw table to join it
+    through, so each kind of request-local field has a query."""
+    from sidemantic_spark.adapters.yardstick import YardstickAdapter
+
+    spark.sql(
+        "SELECT * FROM VALUES ('Happy','Alice'),('Whizz','Carol') "
+        "AS t(prodName, custName)"
+    ).createOrReplaceTempView("rq_order_customers")
+    spark.sql(
+        "SELECT * FROM VALUES ('Alice',30),('Carol',40) AS t(custName, custAge)"
+    ).createOrReplaceTempView("rq_customers")
+    lyr = build_layer(spark, sf_dir)
+    YardstickAdapter().parse_text(lyr, """
+CREATE VIEW rq_customers_v AS
+SELECT *, AVG(custAge) AS MEASURE avgAge
+FROM rq_customers;
+""")
+    return lyr
+
+
+# each needs a request-local field: an expression dimension, COUNT(*),
+# an aggregate over a raw column, and a raw table joined to a measure
+# view (an ad-hoc model, its bridge relationship and an AVG metric)
+_ADHOC_QUERIES = (
+    "SELECT MONTH(order_date) AS m, orders.revenue FROM orders",
+    "SELECT orders.status, COUNT(*) AS n FROM orders",
+    "SELECT orders.status, SUM(o_totalprice) AS s FROM orders",
+    "SELECT o.prodName, AVG(c.custAge) AS age FROM rq_order_customers o "
+    "JOIN rq_customers_v c USING (custName) GROUP BY o.prodName",
+)
+_ADHOC_NAMES = ("__adhoc_", "expr_dim_", "rq_order_customers")
+
+
+def _adhoc_names_in(names) -> list:
+    return [n for n in names if any(a in n for a in _ADHOC_NAMES)]
+
+
+def test_concurrent_adhoc_rewrites_write_nothing_shared(adhoc_layer):
+    """Two threads rewrite distinct ad-hoc queries while a third reads
+    the shared models, the catalog and the YAML export: the reader never
+    sees a request-local field or model, the generation never moves, and
+    every output equals the same rewrite run alone."""
+    import sys
+    import threading
+
+    from sidemantic_spark.authoring.yaml_io import export_yaml
+    from sidemantic_spark.sql.rewriter import SemanticSqlRewriter
+
+    lyr = adhoc_layer
+    graph = lyr.graph
+    models0, gen0 = set(graph.models), graph.generation
+    watched = [graph.get_model("orders"), graph.get_model("rq_customers_v")]
+    outputs: dict = {}
+    seen: list = []
+    errors: list = []
+    done = threading.Event()
+    reads = 0
+
+    def write(worker):
+        try:
+            for i in range(12):
+                for q in _ADHOC_QUERIES:
+                    sql = f"{q} LIMIT {2 * i + worker + 1}"
+                    outputs[sql] = lyr.rewrite(sql)
+        except Exception as exc:  # noqa: BLE001 - any raise is the failure
+            errors.append(exc)
+
+    def read():
+        nonlocal reads
+        try:
+            while not done.is_set():
+                names = [f.name for m in watched
+                         for f in (*m.metrics, *m.dimensions)]
+                if reads % 20 == 0:  # the slow readers, now and then
+                    names += [c["column_name"]
+                              for c in lyr.get_catalog_metadata()["columns"]]
+                    names.append(export_yaml(graph))
+                seen.extend(_adhoc_names_in(names))
+                if set(graph.models) != models0 or graph.generation != gen0:
+                    seen.append((set(graph.models) ^ models0, graph.generation))
+                reads += 1
+        except Exception as exc:  # noqa: BLE001 - any raise is the failure
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        reader = threading.Thread(target=read)
+        writers = [threading.Thread(target=write, args=(w,)) for w in (0, 1)]
+        reader.start()
+        for t in writers:
+            t.start()
+        for t in writers:
+            t.join(timeout=300)
+        done.set()
+        reader.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors, errors[:3]
+    assert reads > 0 and seen == []
+    assert len(outputs) == 2 * 12 * len(_ADHOC_QUERIES)
+    assert all(any(a in out for a in _ADHOC_NAMES) for out in outputs.values())
+    serial = SemanticSqlRewriter(lyr)
+    assert {sql: serial.rewrite(sql) for sql in outputs} == outputs
+    assert graph.generation == gen0 and set(graph.models) == models0
+
+
+def test_count_star_leaves_select_star_unchanged(adhoc_layer):
+    """A COUNT(*) rewrite leaves no ``__adhoc_count`` behind for a later
+    ``SELECT *`` to expand, and a raw-table join registers no model, also
+    inside ``with layer:`` (where every new Model registers itself)."""
+    lyr = adhoc_layer
+    star = "SELECT * FROM orders"
+    before, models0 = lyr.rewrite(star), set(lyr.graph.models)
+    lyr.rewrite("SELECT orders.status, COUNT(*) FROM orders")
+    assert lyr.rewrite(star + " ") == before
+    with lyr:
+        lyr.rewrite("SELECT orders.status, COUNT(*) AS c FROM orders")
+        lyr.rewrite(_ADHOC_QUERIES[3])
+        assert lyr.rewrite(star + "  ") == before
+    assert set(lyr.graph.models) == models0
+
+
+def test_order_by_double_quoted_output_name(layer, duck):
+    """A double-quoted ORDER BY item names an output column, as in
+    DuckDB (Spark alone sorts by the string constant, leaving the rows
+    unordered); a quoted name no output column has raises."""
+    for order in ('"Rev" DESC', '"rev"', '"status" DESC'):
+        sql = ('SELECT orders.status, orders.revenue AS "Rev" FROM orders '
+               f"ORDER BY {order}")
+        got = [tuple(r) for r in layer.sql(sql).collect()]
+        want = duck.execute(
+            'SELECT o_orderstatus AS status, '
+            'SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS "Rev" '
+            f"FROM orders GROUP BY 1 ORDER BY {order}"
+        ).fetchall()
+        assert got == want, order
+    with pytest.raises(QueryCompileError, match="names no output column"):
+        layer.rewrite('SELECT orders.status FROM orders ORDER BY "nope"')
